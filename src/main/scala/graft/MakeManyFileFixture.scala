@@ -11,6 +11,11 @@ package graft
   */
 object MakeManyFileFixture {
   def main(args: Array[String]): Unit = {
+    if (args.length != 2) {
+      System.err.println(
+        "usage: graft.MakeManyFileFixture <srcDir> <outDir>")
+      sys.exit(2)
+    }
     val Array(src, out) = args
     val spark = Bench.buildSession(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
@@ -24,8 +29,21 @@ object MakeManyFileFixture {
         spark.read.parquet(srcP.toString).repartition(64)
           .write.mode("overwrite").parquet(dstP.toString)
       else if (!java.nio.file.Files.exists(dstP))
-        java.nio.file.Files.copy(srcP, dstP)
+        copyTree(srcP, dstP)
     }
     spark.stop()
+  }
+
+  /** copy a table as it is: a single parquet file, or a directory of
+    * part files (Files.copy alone would copy only the empty directory) */
+  private def copyTree(src: java.nio.file.Path,
+      dst: java.nio.file.Path): Unit = {
+    val all = java.nio.file.Files.walk(src)
+    try all.forEach { p =>
+      val t = dst.resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p))
+        java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+    } finally all.close()
   }
 }

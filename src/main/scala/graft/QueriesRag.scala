@@ -53,10 +53,15 @@ object QueriesRag {
     // longer clones the per-doc aggregate (the old st-FROM-dl shape
     // ran the corpus-sized doc_id aggregate twice, plan-verified).
     // Both stay map-side-combining aggregates; no global window.
+    // count(DISTINCT doc_id) skips NULL while GROUP BY keeps a NULL
+    // group, so ndl equals dl's row count only without NULL doc_ids:
+    // both CTEs drop NULL-doc_id postings (no document owns them, and
+    // the dl join never matches them), so the identity holds on any
+    // postings relation, not just on today's NULL-free ones.
     s"""WITH dl AS (SELECT doc_id, sum(cnt) AS dl FROM $rel
-       |        GROUP BY doc_id),
+       |        WHERE doc_id IS NOT NULL GROUP BY doc_id),
        |st AS (SELECT sum(cnt) AS sdl, count(DISTINCT doc_id) AS ndl
-       |  FROM $rel),
+       |  FROM $rel WHERE doc_id IS NOT NULL),
        |n AS (SELECT count(*) AS n FROM documents),
        |qt AS (SELECT DISTINCT term FROM $rel WHERE doc_id = 5),
        |df AS (SELECT /*+ BROADCAST(qt) */ t.term, count(*) AS df

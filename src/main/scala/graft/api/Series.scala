@@ -901,12 +901,12 @@ class Series(val collection: Collection, val label: String) {
   // under their own); pre-clone files simply lack the added columns.
   // One read-time projection resolves both: rename physical → target,
   // and added columns fall back to their default where a file has no
-  // stored value (post-clone writes' stored values win).
+  // stored value (post-clone writes' stored values win). Every column
+  // reads as nullable, as Spark's own file sources read them.
   private def readSchemaStruct: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(
       schema.cols.map(c => org.apache.spark.sql.types.StructField(
-        collection.physOf(c.name), c.dtype.sparkType,
-        nullable = !c.idx || collection.defaults.contains(c.name))))
+        collection.physOf(c.name), c.dtype.sparkType)))
 
   private def readProjection: Seq[Column] =
     schema.cols.map { c =>
@@ -917,28 +917,58 @@ class Series(val collection: Collection, val label: String) {
       }
     }
 
-  private def scanFiles(files: Seq[String]): DataFrame =
-    try spark.read.schema(readSchemaStruct)
-      .parquet(files.map(store.uri): _*)
-      .select(readProjection: _*)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        // gc-buried fallback (reference lakota/commit.py:549-557): a
-        // referenced file soft-deleted by a racing gc still exists
-        // under its hextime suffix — resurrect and retry once
-        val missing = files.filterNot(store.exists)
-        if (missing.isEmpty) throw e
-        missing.foreach { f =>
-          val slash = f.lastIndexOf('/')
-          val (dir, name) = (f.take(slash), f.drop(slash + 1))
-          store.ls(dir).find(_.startsWith(name + ".t")).foreach { b =>
-            store.mvQuiet(s"$dir/$b", f) // racer may have resurrected
-          }
-        }
-        spark.read.schema(readSchemaStruct)
-          .parquet(files.map(store.uri): _*)
-          .select(readProjection: _*)
+  /** One parquet relation over segment files, built from file statuses
+    * looked up here on the driver. The manifest names every file and a
+    * content-addressed file never changes, so Spark gets the statuses
+    * through the index's status cache: it never globs or lists the
+    * paths, and never launches its parallel listing job (which it
+    * would for more than 32 paths). The lookups run on parallel driver
+    * threads: on an object store each one is a round trip. */
+  private def scanFiles(files: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources._
+    import scala.jdk.CollectionConverters._
+    val hconf = spark.sessionState.newHadoopConf()
+    val statuses = files.distinct.asJava.parallelStream()
+      .map[org.apache.hadoop.fs.FileStatus](segmentStatus(_, hconf))
+      .collect(java.util.stream.Collectors.toList[
+        org.apache.hadoop.fs.FileStatus]).asScala.toSeq
+    val seeded = statuses.map(st => st.getPath -> Array(st)).toMap
+    val known = new FileStatusCache {
+      override def getLeafFiles(p: org.apache.hadoop.fs.Path) = seeded.get(p)
+      def putLeafFiles(p: org.apache.hadoop.fs.Path,
+          st: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
     }
+    val index = new InMemoryFileIndex(spark, statuses.map(_.getPath),
+      Map.empty, None, known, Some(PartitionSpec.emptySpec))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      org.apache.spark.sql.types.StructType(Nil), readSchemaStruct, None,
+      new parquet.ParquetFileFormat, Map.empty)(spark))
+      .select(readProjection: _*)
+  }
+
+  /** Status of one segment file. A file a racing gc soft-deleted still
+    * exists under its hextime suffix (reference
+    * lakota/commit.py:549-557): it is renamed back before the scan is
+    * built. A file with no buried copy either fails the read here. */
+  private def segmentStatus(f: String,
+      hconf: org.apache.hadoop.conf.Configuration)
+      : org.apache.hadoop.fs.FileStatus = {
+    def stat(): Option[org.apache.hadoop.fs.FileStatus] =
+      try {
+        val p = new org.apache.hadoop.fs.Path(store.uri(f))
+        Some(p.getFileSystem(hconf).getFileStatus(p))
+      } catch { case _: java.io.FileNotFoundException => None }
+    stat().getOrElse {
+      val slash = f.lastIndexOf('/')
+      val (dir, name) = (f.take(slash), f.drop(slash + 1))
+      store.ls(dir).find(_.startsWith(name + ".t")).foreach { b =>
+        store.mvQuiet(s"$dir/$b", f) // a racer may have resurrected it
+      }
+      stat().getOrElse(throw new java.io.FileNotFoundException(
+        s"segment file $f is missing and has no gc-buried copy"))
+    }
+  }
 
   /** a segment needs no residual filter when its visible range still
     * covers the data range recorded at write time (the common case:
@@ -1006,24 +1036,76 @@ class Series(val collection: Collection, val label: String) {
       .filter(SparkVals.rangePredicate(schema.idx, idxCols, s.start,
         s.stop, s.closed))
 
-  /** rows visible through this segment read: straight from the
-    * manifest when untruncated, one count for the rare clipped one */
-  private def visibleLen(s: SegmentRead): Long =
-    if (coversData(s)) s.meta.length else segDf(s).count()
+  /** Rows visible through each segment read: straight from the
+    * manifest when untruncated, and ONE query for all the clipped ones
+    * — their scans unioned, each row tagged with its segment's
+    * position, grouped and counted together. */
+  private def visibleLens(segs: IndexedSeq[SegmentRead]): IndexedSeq[Long] = {
+    val clipped = segs.indices.filterNot(i => coversData(segs(i)))
+    val counted =
+      if (clipped.isEmpty) Map.empty[Int, Long]
+      else clipped.map(i => segDf(segs(i)).select(lit(i).as("_seg")))
+        .reduce(_ union _).groupBy("_seg").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    segs.indices.map(i =>
+      if (coversData(segs(i))) segs(i).meta.length
+      else counted.getOrElse(i, 0L))
+  }
+
+  /** Visible row offsets over `segs` (in walk order), resolved on
+    * demand: `cum(k)` is the number of rows before `segs(k)`.
+    *
+    * A clipped segment's stored length bounds its visible rows from
+    * above, so the manifest alone names the candidates that `n` rows
+    * can reach, and ONE [[visibleLens]] query counts them. Two widenings
+    * keep that bound from falling short in the usual shapes: one
+    * look-ahead segment covers a first segment the read's own bound
+    * cut, and a segment an overlay split in two is counted with all
+    * its parts (they share its files, so its stored length bounds
+    * them together, once). Another query runs only if the exact sum
+    * still falls short; none runs while every candidate is
+    * untruncated. */
+  private final class RowCursor(segs: IndexedSeq[SegmentRead]) {
+    val cum = scala.collection.mutable.ArrayBuffer(0L)
+    def resolved: Int = cum.length - 1
+    def rows: Long = cum.last
+
+    private def stored(i: Int): AnyRef =
+      if (segs(i).meta.files.nonEmpty) segs(i).meta.files
+      else segs(i).meta.inline
+    private def clippedIn(from: Int, until: Int): Seq[Int] =
+      (from until until).filterNot(i => coversData(segs(i)))
+    private lazy val lastPart: Map[AnyRef, Int] =
+      clippedIn(0, segs.length).map(i => stored(i) -> i).toMap
+    private val bounded = scala.collection.mutable.HashSet.empty[AnyRef]
+
+    /** resolve segments until `n` rows are covered or none is left */
+    def reach(n: Long): Unit =
+      while (rows < n && resolved < segs.length) {
+        var end = resolved
+        var bound = rows
+        while (bound < n && end < segs.length) {
+          if (coversData(segs(end)) || bounded.add(stored(end)))
+            bound += segs(end).meta.length
+          end += 1
+        }
+        if (clippedIn(resolved, end).nonEmpty) {
+          end = math.min(end + 1, segs.length)
+          end = clippedIn(resolved, end).map(i => lastPart(stored(i)) + 1)
+            .foldLeft(end)(math.max)
+        }
+        visibleLens(segs.slice(resolved, end)).foreach(l => cum += rows + l)
+      }
+  }
 
   /** shortest prefix of `segs` covering `need` rows (manifest order =
     * index order, so limit/offset never have to scan past it) */
   private def prefixCovering(segs: Seq[SegmentRead], need: Long)
       : Seq[SegmentRead] = {
-    val out = Seq.newBuilder[SegmentRead]
-    var cum = 0L
-    val it = segs.iterator
-    while (cum < need && it.hasNext) {
-      val s = it.next()
-      out += s
-      cum += visibleLen(s)
-    }
-    out.result()
+    val c = new RowCursor(segs.toIndexedSeq)
+    c.reach(need)
+    val k = c.cum.indexWhere(_ >= need)
+    segs.take(if (k < 0) c.resolved else k)
   }
 
   /** Output dtype mapping styles (reference lakota/schema.py:25-38
@@ -1126,10 +1208,11 @@ class Series(val collection: Collection, val label: String) {
   }
 
   /** Fixed-size pages in index order, driven by the manifest cursor:
-    * per-segment lengths come straight from the manifest (a count job
-    * only for the rare overlay-clipped segment), and each page scans +
-    * sorts ONLY the 1-2 segments it overlaps — no per-page global sort
-    * (reference lakota/series.py:396-447 Paginate.loop).
+    * per-segment lengths come straight from the manifest, resolved page
+    * by page (one batched count only when the page reaches
+    * overlay-clipped segments), and each page scans + sorts ONLY the
+    * 1-2 segments it overlaps — no per-page global sort (reference
+    * lakota/series.py:396-447 Paginate.loop).
     */
   def paginate(step: Long = 500000L, start: Any = null, stop: Any = null,
       beforeMs: Option[Long] = None,
@@ -1137,23 +1220,30 @@ class Series(val collection: Collection, val label: String) {
     require(step > 0 && step <= Int.MaxValue,
       s"step must be in [1, ${Int.MaxValue}], got $step")
     val segs = segments(start, stop, beforeMs, closed)
-      .filter(_.meta.hasData)
-    val lens = segs.map(visibleLen)
-    val cum = lens.scanLeft(0L)(_ + _)
-    val total = cum.lastOption.getOrElse(0L)
-    Iterator.range(0L, total, step).map { off =>
-      val hi = math.min(off + step, total)
-      val i0 = cum.indexWhere(_ > off) - 1
-      val i1 = cum.indexWhere(_ >= hi) - 1
-      // a duplicated index key straddling a segment boundary must keep
-      // segment order under the page sort (the cum-based offsets assume
-      // it), so the segment ordinal joins the sort key as a tiebreaker
-      val page = segs.slice(i0, i1 + 1).zipWithIndex
-        .map { case (s, k) => segDf(s).withColumn("_seg", lit(k)) }
-        .reduce(_ union _)
-        .orderBy(idxCols :+ col("_seg"): _*)
-      page.offset((off - cum(i0)).toInt).limit((hi - off).toInt)
-        .drop("_seg")
+      .filter(_.meta.hasData).toIndexedSeq
+    val cursor = new RowCursor(segs)
+    new Iterator[DataFrame] {
+      private var off = 0L
+      def hasNext: Boolean = { cursor.reach(off + step); cursor.rows > off }
+      def next(): DataFrame = {
+        if (!hasNext) throw new NoSuchElementException("no more pages")
+        val cum = cursor.cum
+        val hi = math.min(off + step, cursor.rows)
+        val i0 = cum.indexWhere(_ > off) - 1
+        val i1 = cum.indexWhere(_ >= hi) - 1
+        // a duplicated index key straddling a segment boundary must keep
+        // segment order under the page sort (the cum-based offsets
+        // assume it), so the segment ordinal joins the sort key as a
+        // tiebreaker
+        val page = segs.slice(i0, i1 + 1).zipWithIndex
+          .map { case (s, k) => segDf(s).withColumn("_seg", lit(k)) }
+          .reduce(_ union _)
+          .orderBy(idxCols :+ col("_seg"): _*)
+        val out = page.offset((off - cum(i0)).toInt)
+          .limit((hi - off).toInt).drop("_seg")
+        off = hi
+        out
+      }
     }
   }
 
@@ -1236,9 +1326,10 @@ class Series(val collection: Collection, val label: String) {
   }
 
   /** Row count from the manifest: per-segment lengths are metadata for
-    * untruncated segments; only overlay-clipped ones cost a count. */
+    * untruncated segments; the overlay-clipped ones cost one batched
+    * count. */
   def length(): Long =
-    segments().filter(_.meta.hasData).map(visibleLen).sum
+    visibleLens(segments().filter(_.meta.hasData).toIndexedSeq).sum
 
   // ------------------------------------------------------------------
   // bulk import/export (reference Repo.import_/export_ series,

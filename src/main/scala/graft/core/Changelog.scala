@@ -246,10 +246,18 @@ final class Changelog(val store: Store, val dir: String) {
       .sortBy(_.child)
 
   /** Payload of a revision, sha1-verified with bounded retry (guards
-    * against a concurrent writer mid-flight). */
+    * against a concurrent writer mid-flight). A revision a racing
+    * squash deleted may live on under another name: squash re-roots
+    * the leaf's manifest unchanged, and any file whose id carries the
+    * same digest holds the same bytes. */
   def payload(rev: Revision): Array[Byte] =
     Hash.readVerified(rev.digest, s"revision ${rev.path}")(
-      store.read(s"$dir/${rev.path}"))
+      try store.read(s"$dir/${rev.path}")
+      catch {
+        case e: java.io.FileNotFoundException =>
+          store.ls(dir).find(_.endsWith(s"-${rev.digest}"))
+            .map(twin => store.read(s"$dir/$twin")).getOrElse(throw e)
+      })
 
   /** Copy missing revision files from a remote changelog. */
   def pull(remote: Changelog, shallow: Boolean = false): Seq[String] = {

@@ -164,7 +164,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val sr = repo.collection("c").get.series("s")
     val filesBefore = sr.segments().flatMap(_.meta.files).toSet
     // range delete: closed/open bounds honored, no data job
-    val jobs = jobCountQuiet {
+    val (_, jobs, _) = TestSpark.work {
       spark.sql(s"DELETE FROM $cat.c.s WHERE ts >= 100 AND ts < 200")
     }
     assert(jobs == 0, s"metadata delete ran $jobs Spark jobs")
@@ -199,26 +199,6 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(spark.sql(
       s"SELECT count(*) FROM $cat.c.s TIMESTAMP AS OF '$cut'")
       .collect()(0).getLong(0) == 796L)
-  }
-
-  private def jobCountQuiet(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var last = -1
-      var spins = 0
-      while (n.get() != last && spins < 40) {
-        last = n.get(); Thread.sleep(50); spins += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
   }
 
   test("CALL procedures: defrag/squash/gc/archive through SQL") {

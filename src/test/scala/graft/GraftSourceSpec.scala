@@ -579,33 +579,12 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(left.length == 7, s"expected 7 surviving files: $left")
   }
 
-  private def jobCount(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener events post asynchronously — wait until stable
-      var last = -1
-      var spins = 0
-      while (n.get() != last && spins < 40) {
-        last = n.get(); Thread.sleep(50); spins += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
-
   test("connector append: one job, no read-back, engine-visible") {
     val (_, s, root) = fixture()
     import spark.implicits._
     val add = spark.range(80000, 90000, 1, 2)
       .select($"id".as("ts"), lit(7.0).as("value"))
-    val jobs = jobCount {
+    val (_, jobs, _) = TestSpark.work {
       add.write.format("graft")
         .option("path", root).option("collection", "c")
         .option("series", "_").option("presorted", "true")

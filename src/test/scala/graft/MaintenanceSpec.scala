@@ -152,6 +152,20 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(rows(s.frame()) == Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)))
   }
 
+  test("a leaf a racing squash re-rooted still decodes") {
+    val repo = freshRepo()
+    val clct = repo.createCollection(schema, "c")
+    clct.series("_").write(TestSpark.frame(Seq(1L, 2L), Seq(1.0, 2.0)))
+    Thread.sleep(3)
+    clct.squash()
+    val stale = clct.changelog.leaf().get // what a writer just read
+    Thread.sleep(3)
+    clct.squash() // same manifest under a new root; `stale` is deleted
+    assert(!repo.store.exists(s"${clct.changelog.dir}/${stale.path}"))
+    Collection.clearManifestCache()
+    assert(clct.decodeCached(stale).rows == clct.manifest().get.rows)
+  }
+
   test("trim drops old revisions but keeps current data") {
     val repo = freshRepo()
     val clct = repo.createCollection(schema, "c")
@@ -229,6 +243,29 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(rows(s.frame()) == Seq((1L, 1.0), (2L, 2.0)))
     // resurrected in place
     assert(seg.forall(repo.store.exists))
+
+    // more than 32 files (Spark's distributed-listing threshold) and an
+    // overlay-clipped segment: the frame, and the clipped-segment
+    // counts of a limited read and of length(), resurrect what they scan
+    (1 until 40).foreach(i => s.write(TestSpark.frame(
+      Seq(10L * i, 10L * i + 1, 10L * i + 2),
+      Seq(i * 1.0, i + 0.1, i + 0.2))))
+    s.write(TestSpark.frame(Seq(11L), Seq(-1.0))) // clips segment i = 1
+    val want = Seq((1L, 1.0), (2L, 2.0)) ++ (1 until 40).flatMap(i =>
+      Seq((10L * i, i * 1.0),
+        (10L * i + 1, if (i == 1) -1.0 else i + 0.1),
+        (10L * i + 2, i + 0.2)))
+    val many = repo.store.walk("seg").filter(_.endsWith(".parquet"))
+    assert(many.length == 41)
+    def buryAll(): Unit = many.filter(repo.store.exists)
+      .foreach(f => repo.store.mv(f, s"$f.t${Hash.hextime()}"))
+    buryAll()
+    assert(rows(s.frame()) == want)
+    assert(many.forall(repo.store.exists))
+    buryAll()
+    assert(rows(s.frame(limit = Some(6L))) == want.take(6))
+    buryAll()
+    assert(s.length() == want.length.toLong)
   }
 
   test("push/pull syncs data between repos") {

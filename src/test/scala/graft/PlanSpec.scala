@@ -59,6 +59,28 @@ class PlanSpec extends AnyFunSuite {
     assert(s.frame().count() == 10L)
   }
 
+  test("a frame over more than 32 segment files runs no listing job") {
+    val root = Files.createTempDirectory("graft-plan5").toString
+    val repo = new Repo(root, spark)
+    val schema = GSchema("timestamp" -> "int*", "value" -> "float")
+    val clct = repo.createCollection(schema, "c")
+    clct.embedMaxSize = 0L // one segment file per append
+    val s = clct.series("_")
+    (0 until 40).foreach(i => s.write(TestSpark.frame(
+      Seq(10L * i, 10L * i + 1), Seq(i * 1.0, i + 0.5))))
+    assert(repo.store.walk("seg").count(_.endsWith(".parquet")) == 40)
+    // Spark lists more than 32 paths with a distributed job; the
+    // segment scan takes its file statuses from graft instead
+    val (df, jobs, _) = TestSpark.work(s.frame())
+    assert(jobs == 0, s"$jobs jobs while building the frame")
+    assert("Scan parquet".r.findAllIn(
+      df.queryExecution.executedPlan.toString).length == 1)
+    assert(df.orderBy("timestamp").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
+      (0 until 40).flatMap(i => Seq((10L * i, i * 1.0),
+        (10L * i + 1, i + 0.5))))
+  }
+
   test("tail compiles to TakeOrdered (no full sort)") {
     val root = Files.createTempDirectory("graft-plan2").toString
     val repo = new Repo(root, spark)

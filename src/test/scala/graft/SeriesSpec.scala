@@ -340,6 +340,56 @@ abstract class SeriesSpecBase(embedOn: Boolean) extends AnyFunSuite {
       start = 9999999999L, stop = 9999999999L).isEmpty)
   }
 
+  test("read verbs over overlay-clipped segments plan with at most one " +
+      "batched count") {
+    val root = Files.createTempDirectory("graft-clip").toString
+    val s = tuned(new Repo(root, spark).createCollection(schema, "-"))
+      .series("_")
+    // six 30-row segments, then single-point overlays inside three of
+    // them: each overlay splits its segment into two clipped parts
+    (0 until 6).foreach { k =>
+      val ids = (30L * k until 30L * k + 30).map(_ + 1000000L)
+      s.write(TestSpark.frame(ids, ids.map(_ * 0.5)))
+    }
+    Seq(15L, 75L, 135L).foreach(i =>
+      s.write(TestSpark.frame(Seq(1000000L + i), Seq(-1.0))))
+    val split = s.segments().groupBy(r =>
+      if (r.meta.files.nonEmpty) r.meta.files else r.meta.inline)
+    assert(split.count(_._2.size == 2) == 3, "three split segments")
+    val all = rows(s.frame())
+    assert(all.length == 180)
+
+    // planning runs at most one count query: one SQL execution, two jobs
+    def planned[T](what: String)(body: => T): T = {
+      val (out, jobs, queries) = TestSpark.work(body)
+      assert(queries <= 1 && jobs <= 2,
+        s"$what: $queries queries, $jobs jobs while planning")
+      out
+    }
+    val (pages, j0, q0) = TestSpark.work(s.paginate(step = 25))
+    assert(j0 == 0 && q0 == 0, "paginate plans lazily, page by page")
+    var k = 0
+    var page = planned("page 0")(pages.nextOption())
+    while (page.isDefined) {
+      assert(rows(page.get) == all.slice(25 * k, 25 * k + 25), s"page $k")
+      k += 1
+      page = planned(s"page $k")(pages.nextOption())
+    }
+    assert(k == 8)
+    Seq(10L, 45L, 60L, 100L, 179L, 500L).foreach { n =>
+      assert(rows(planned(s"tail($n)")(s.tail(n))) ==
+        all.takeRight(n.toInt), s"tail($n)")
+    }
+    Seq((10L, 0L), (30L, 20L), (50L, 100L), (100L, 75L), (200L, 0L))
+      .foreach { case (l, o) =>
+        val df = planned(s"limit $l offset $o")(
+          s.frame(limit = Some(l), offset = Some(o)))
+        assert(rows(df) == all.slice(o.toInt, (o + l).toInt),
+          s"limit $l offset $o")
+      }
+    assert(planned("length")(s.length()) == 180L)
+  }
+
   test("null non-index values round-trip in both storage modes") {
     val root = Files.createTempDirectory("graft-null").toString
     val repo = new Repo(root, spark)

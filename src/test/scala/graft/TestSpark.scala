@@ -21,4 +21,34 @@ object TestSpark {
     import s.implicits._
     ts.zip(vals).toDF("timestamp", "value")
   }
+
+  /** `body`'s result with the number of Spark jobs and of SQL queries
+    * it started, counted by a listener on the shared session */
+  def work[T](body: => T): (T, Int, Int) = {
+    import org.apache.spark.scheduler._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val queries = new java.util.concurrent.atomic.AtomicInteger
+    val t0 = System.currentTimeMillis()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.time >= t0) jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case q: org.apache.spark.sql.execution.ui
+            .SparkListenerSQLExecutionStart if q.time >= t0 =>
+          queries.incrementAndGet()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      // listener events post asynchronously — wait until stable
+      var last = -1
+      var spins = 0
+      while (jobs.get() + queries.get() != last && spins < 40) {
+        last = jobs.get() + queries.get(); Thread.sleep(50); spins += 1
+      }
+      (out, jobs.get(), queries.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
