@@ -34,40 +34,34 @@ object Tables {
     * job. Conservative packing estimate: ceil(totalPaddedBytes /
     * maxSplitBytes). Views that do not bottom out in a file relation
     * (LogicalRDD checkpoints, in-memory fixtures) report 1 — the
-    * can't-tell case keeps today's behavior (hint emitted). */
-  private val splitsMemo = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Int]])
-  private[graft] def scanTasks(spark: SparkSession, name: String): Int = {
-    val memo = splitsMemo.computeIfAbsent(spark,
-      _ => scala.collection.mutable.Map.empty[String, Int])
-    memo.synchronized {
-      memo.getOrElseUpdate(name, try {
-        val rels = spark.table(name).queryExecution.analyzed.collect {
-          case l: org.apache.spark.sql.execution.datasources
-              .LogicalRelation =>
-            l.relation
-        }.collect {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h
-        }
-        if (rels.isEmpty) 1
-        else {
-          val conf = spark.sessionState.conf
-          val openCost = conf.filesOpenCostInBytes
-          val minPN = conf.filesMinPartitionNum
-            .getOrElse(spark.sparkContext.defaultParallelism)
-          val nFiles = rels.map(_.location.inputFiles.length.toLong).sum
-          val total = rels.map(_.location.sizeInBytes).sum +
-            nFiles * openCost
-          val maxSplit = math.min(conf.filesMaxPartitionBytes,
-            math.max(openCost, total / math.max(1, minPN)))
-          math.max(1L, (total + maxSplit - 1) / math.max(1L, maxSplit))
-            .min(Int.MaxValue).toInt
-        }
-      } catch { case _: Throwable => 1 })
-    }
-  }
+    * can't-tell case keeps today's behavior (hint emitted). Nothing
+    * is cached: each call re-analyzes the view, so a `registerAll`
+    * that re-points a view name is seen by the next call. */
+  private[graft] def scanTasks(spark: SparkSession, name: String): Int =
+    try {
+      val rels = spark.table(name).queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.datasources
+            .LogicalRelation =>
+          l.relation
+      }.collect {
+        case h: org.apache.spark.sql.execution.datasources
+            .HadoopFsRelation => h
+      }
+      if (rels.isEmpty) 1
+      else {
+        val conf = spark.sessionState.conf
+        val openCost = conf.filesOpenCostInBytes
+        val minPN = conf.filesMinPartitionNum
+          .getOrElse(spark.sparkContext.defaultParallelism)
+        val nFiles = rels.map(_.location.inputFiles.length.toLong).sum
+        val total = rels.map(_.location.sizeInBytes).sum +
+          nFiles * openCost
+        val maxSplit = math.min(conf.filesMaxPartitionBytes,
+          math.max(openCost, total / math.max(1, minPN)))
+        math.max(1L, (total + maxSplit - 1) / math.max(1L, maxSplit))
+          .min(Int.MaxValue).toInt
+      }
+    } catch { case scala.util.control.NonFatal(_) => 1 }
 
   /** Scan-parallelism REPARTITION hint for CPU-heavy kernel
     * projections over raw `table` rows (text, embeddings): emitted

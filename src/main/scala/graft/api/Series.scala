@@ -929,7 +929,8 @@ class Series(val collection: Collection, val label: String) {
     import scala.jdk.CollectionConverters._
     val hconf = spark.sessionState.newHadoopConf()
     val statuses = files.distinct.asJava.parallelStream()
-      .map[org.apache.hadoop.fs.FileStatus](segmentStatus(_, hconf))
+      .map[org.apache.hadoop.fs.FileStatus](f =>
+        graft.core.Store.statOrResurrect(store.uri(f), hconf))
       .collect(java.util.stream.Collectors.toList[
         org.apache.hadoop.fs.FileStatus]).asScala.toSeq
     val seeded = statuses.map(st => st.getPath -> Array(st)).toMap
@@ -945,29 +946,6 @@ class Series(val collection: Collection, val label: String) {
       org.apache.spark.sql.types.StructType(Nil), readSchemaStruct, None,
       new parquet.ParquetFileFormat, Map.empty)(spark))
       .select(readProjection: _*)
-  }
-
-  /** Status of one segment file. A file a racing gc soft-deleted still
-    * exists under its hextime suffix (reference
-    * lakota/commit.py:549-557): it is renamed back before the scan is
-    * built. A file with no buried copy either fails the read here. */
-  private def segmentStatus(f: String,
-      hconf: org.apache.hadoop.conf.Configuration)
-      : org.apache.hadoop.fs.FileStatus = {
-    def stat(): Option[org.apache.hadoop.fs.FileStatus] =
-      try {
-        val p = new org.apache.hadoop.fs.Path(store.uri(f))
-        Some(p.getFileSystem(hconf).getFileStatus(p))
-      } catch { case _: java.io.FileNotFoundException => None }
-    stat().getOrElse {
-      val slash = f.lastIndexOf('/')
-      val (dir, name) = (f.take(slash), f.drop(slash + 1))
-      store.ls(dir).find(_.startsWith(name + ".t")).foreach { b =>
-        store.mvQuiet(s"$dir/$b", f) // a racer may have resurrected it
-      }
-      stat().getOrElse(throw new java.io.FileNotFoundException(
-        s"segment file $f is missing and has no gc-buried copy"))
-    }
   }
 
   /** a segment needs no residual filter when its visible range still
@@ -1021,7 +999,8 @@ class Series(val collection: Collection, val label: String) {
     * parquet source has no BYTE_STREAM_SPLIT decoder and no
     * per-relation row-mode toggle, so BSS-hinted collections route
     * frame() scans through the connector's own partitions + reader
-    * (whose parquet-mr fallback decodes every encoding). Clip,
+    * (which decodes a file's BSS chunks with its own page decoder,
+    * chosen from the footer). Clip,
     * clone renames and defaults are baked into the partitions. */
   private def internalScanDf(segs: Seq[SegmentRead]): DataFrame =
     graft.sources.GraftPlanning.internalScanTable(spark, this,

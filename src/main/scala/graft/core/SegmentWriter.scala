@@ -238,11 +238,11 @@ object SegmentWriter {
     // float column 39.9 -> 30.1 MB under zstd (-25%). NOT the default:
     // Spark 4.1's vectorized parquet reader has no BSS decoder (its
     // encoding switch covers PLAIN/RLE/DELTA_* only — verified against
-    // VectorizedColumnReader.getValuesReader), so reads of BSS files
-    // take the parquet-mr row fallback (GraftFileReader flips over on
-    // the first-batch encoding failure) at ~2-3x the full-scan decode
-    // cost. Right trade for cold/archival series where storage
-    // dominates; wrong default for the read-hot path.
+    // VectorizedColumnReader.getValuesReader), so the connector reads
+    // files whose footer lists BSS chunks with its own parquet-mr page
+    // decoder (GraftColumnarScan) at ~2-3x the full-scan decode cost.
+    // Right trade for cold/archival series where storage dominates;
+    // wrong default for the read-hot path.
     val bss = codec.toLowerCase(java.util.Locale.ROOT).endsWith("+bss")
     val base = if (bss) codec.substring(0, codec.length - 4) else codec
     val b = new RowWriterBuilder(
@@ -260,10 +260,10 @@ object SegmentWriter {
       .withByteStreamSplitEncoding(bss)
     if (bss)
       // keep BSS chunks PURE: with dictionary on, parquet writes
-      // dict pages first and falls back to BSS mid-chunk, so a
-      // reader could decode early pages and fail later — the
-      // first-batch fallback flip in GraftFileReader relies on the
-      // failure being deterministic at batch one
+      // dict pages first and falls back to BSS only once the
+      // dictionary overflows, so each chunk's first pages would miss
+      // the byte-stream split (near-unique doubles overflow it anyway:
+      // the dictionary build is wasted work)
       cols.zip(physNames).foreach { case (c, pn) =>
         if (c.dtype == GType.FloatT) b.withDictionaryEncoding(pn, false)
       }

@@ -36,6 +36,31 @@ trait Store extends Serializable {
 }
 
 object Store {
+  /** Status of one segment file by URI. A file a racing gc soft-deleted
+    * still exists under its hextime suffix (reference
+    * lakota/commit.py:549-557) and is renamed back first. A rename
+    * that finds nothing to move lost the race to another resurrector:
+    * the second stat decides. Any other I/O error propagates. Shared by
+    * `Series.scanFiles` and the connector's segment readers. */
+  def statOrResurrect(uri: String, conf: Configuration)
+      : org.apache.hadoop.fs.FileStatus = {
+    val path = new Path(uri)
+    val fs = path.getFileSystem(conf)
+    def stat(): Option[org.apache.hadoop.fs.FileStatus] =
+      try Some(fs.getFileStatus(path))
+      catch { case _: FileNotFoundException => None }
+    stat().getOrElse {
+      fs.listStatus(path.getParent).map(_.getPath)
+        .find(_.getName.startsWith(path.getName + ".t"))
+        .foreach { buried =>
+          try fs.rename(buried, path)
+          catch { case _: FileNotFoundException => false }
+        }
+      stat().getOrElse(throw new FileNotFoundException(
+        s"segment file $uri is missing and has no gc-buried copy"))
+    }
+  }
+
   /** Which of `shas` are absent from the chunk directory `dir`
     * (where a chunk lives as plain `<sha>` or gc-buried
     * `<sha>.t<ts>`, the latter resurrectable). Small sets probe each

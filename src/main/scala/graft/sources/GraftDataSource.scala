@@ -5,11 +5,15 @@ import java.util
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter,
-  PrimitiveConverter, RecordMaterializer}
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.SeekableInputStream
+import org.apache.parquet.io.api.{Converter, GroupConverter,
+  PrimitiveConverter}
 import org.apache.parquet.schema.{MessageType, Types}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -17,6 +21,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.execution.datasources.parquet
+  .VectorizedParquetRecordReader
 import org.apache.spark.sql.connector.read.{Batch, InputPartition,
   PartitionReader, PartitionReaderFactory, Scan, ScanBuilder,
   Statistics, SupportsPushDownFilters,
@@ -24,6 +30,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition,
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Closed, ColDef, GType, GSchema, IndexKey,
@@ -396,10 +403,10 @@ object GraftScanProbe {
   @volatile var lastCowTinySkip: Boolean = false
   /** segments dropped by VALUE-column stats in the LAST planned scan */
   @volatile var lastStatSkipped: Int = -1
-  /** decode-path counters (local-mode visible; diagnostics only) */
+  /** segment files opened per decode tier (local-mode visible;
+    * diagnostics only) */
   val vectorizedOpens = new java.util.concurrent.atomic.AtomicLong
-  val columnarFallbackOpens = new java.util.concurrent.atomic.AtomicLong
-  val fallbackOpens = new java.util.concurrent.atomic.AtomicLong
+  val columnarOpens = new java.util.concurrent.atomic.AtomicLong
 }
 
 class GraftScanBuilder(table: GraftTable, beforeMs: Option[Long],
@@ -894,11 +901,11 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
   override def createReaderFactory(): PartitionReaderFactory = {
     // COLUMNAR whenever every partition is a plain full-file decode
     // (no clip/defaults/projection/inline/agg work): whole
-    // ColumnarBatches flow from the vectorized reader (or the
-    // engine's page decoder for BSS files — the factory adapts per
-    // file) into codegen's ColumnarToRow, skipping the per-row DSv2
-    // iterator tax. Anything needing per-row work — boundary-clipped
-    // range scans, clone defaults, `_file` — keeps the row path.
+    // ColumnarBatches flow from the decode tier each file's footer
+    // picks (GraftRead.open) into codegen's ColumnarToRow, skipping
+    // the per-row DSv2 iterator tax. Anything needing per-row work —
+    // boundary-clipped range scans, clone defaults, `_file` — keeps
+    // the row path.
     val parts = plannedParts
     if (parts != null && GraftPlanning.columnarEligible(parts))
       GraftPlanning.columnarReaderFactory()
@@ -1335,26 +1342,26 @@ private[graft] object GraftPlanning {
   }
 
   /** DataFrame over engine partitions decoded by the connector's own
-    * readers ([[GraftFileReader]]/[[GraftInlineReader]]) — the scan
-    * [[graft.api.Series.frame]] routes BSS-mode segments through:
-    * Spark's builtin parquet source cannot decode BYTE_STREAM_SPLIT
-    * pages (no vectorized BSS reader, no per-relation row-mode
-    * toggle), while GraftFileReader flips to its parquet-mr row
-    * fallback on the first-batch encoding failure. Rows arrive in
-    * `schema` order (partitionsFor bakes clip/renames/defaults). */
+    * readers ([[GraftFileReader]]/[[GraftInlineReader]]). Spark's
+    * builtin parquet source cannot decode BYTE_STREAM_SPLIT pages (no
+    * vectorized BSS reader, no per-relation row-mode toggle), while
+    * GraftFileReader picks each file's decode tier from its footer
+    * ([[GraftRead.open]]). Rows arrive in `schema` order
+    * (partitionsFor bakes clip/renames/defaults). */
   def internalScan(spark: SparkSession, parts: Seq[InputPartition],
       schema: StructType): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.GraftBridge.internalDf(spark,
       new GraftFileRDD(spark.sparkContext, parts, readerFactory()),
       schema)
 
-  /** DataFrame over the engine readers as an ANONYMOUS DSv2 relation
-    * — unlike [[internalScan]]'s LogicalRDD, this participates in
-    * Catalyst column pruning: an aggregate over one column of a
+  /** DataFrame over the engine readers as an ANONYMOUS DSv2 relation,
+    * the scan [[graft.api.Series.frame]] routes BSS-mode segments
+    * through. Unlike [[internalScan]]'s LogicalRDD, this participates
+    * in Catalyst column pruning: an aggregate over one column of a
     * BSS-mode frame() decodes one column, not the whole schema
-    * (partitions are re-planned with the pruned name set, so the
-    * page-level decode itself narrows, same as the builtin parquet
-    * source's ReadSchema). */
+    * (partitions are re-planned with the pruned name set, so both the
+    * footer's tier choice and the page-level decode itself narrow,
+    * same as the builtin parquet source's ReadSchema). */
   def internalScanTable(spark: SparkSession, s: graft.api.Series,
       gs: GSchema, segs: Seq[SegmentRead])
       : org.apache.spark.sql.DataFrame =
@@ -1865,100 +1872,85 @@ private object GraftRead {
     GType.all.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"bad dtype $name"))
 
-  /** Files whose pages the vectorized reader has ALREADY failed to
-    * decode (BYTE_STREAM_SPLIT): the probe open + first-batch throw
-    * costs a footer parse and reader init per attempt, so repeat
-    * reads skip straight to the engine's page decoder. Sound because
-    * segment files are content-addressed — a URI's bytes never
-    * change. Cleared wholesale if it ever grows past bound (a JVM
-    * reading a million distinct BSS files). */
-  private val knownBssUris =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  def isKnownBss(uri: String): Boolean = knownBssUris.contains(uri)
-  def markBssUri(uri: String): Unit = {
-    if (knownBssUris.size() > 1000000) knownBssUris.clear()
-    knownBssUris.add(uri)
-    ()
+  /** Page encodings Spark 4.1's vectorized parquet reader cannot decode
+    * (its value-reader switch covers PLAIN, RLE and DELTA_* only, see
+    * VectorizedColumnReader.getValuesReader): `<codec>+bss` segments
+    * carry BYTE_STREAM_SPLIT float chunks. */
+  val vectorizedUnsupported: Set[Encoding] = Set(Encoding.BYTE_STREAM_SPLIT)
+
+  /** Open one segment file for decoding. The file is stat'ed once
+    * (resurrecting a gc-buried copy) and its footer parsed once; the
+    * decode tier follows from the requested column chunks' encodings:
+    * [[GraftColumnarScan]] when any of them uses an encoding in
+    * [[vectorizedUnsupported]], Spark's VectorizedParquetRecordReader
+    * otherwise. The chosen reader takes over the footer and the open
+    * stream. */
+  def open(uri: String, physNames: Seq[String], dtypes: Array[GType],
+      conf: Configuration): SegmentBatches = {
+    val status = graft.core.Store.statOrResurrect(uri, conf)
+    val input = HadoopInputFile.fromStatus(status, conf)
+    val options = HadoopReadOptions.builder(conf, status.getPath).build()
+    val stream = input.newStream()
+    var opened: SegmentBatches = null
+    try {
+      val footer = ParquetFileReader.readFooter(input, options, stream)
+      val wanted = physNames.toSet
+      val columnar = footer.getBlocks.asScala.exists(_.getColumns.asScala
+        .exists(c => wanted(c.getPath.toDotString) &&
+          c.getEncodings.asScala.exists(vectorizedUnsupported)))
+      opened =
+        if (columnar) {
+          GraftScanProbe.columnarOpens.incrementAndGet()
+          new GraftColumnarScan(
+            new ParquetFileReader(input, footer, options, stream),
+            physNames, dtypes)
+        } else {
+          GraftScanProbe.vectorizedOpens.incrementAndGet()
+          vectorized(status, input, stream, footer, physNames, dtypes,
+            conf)
+        }
+      opened
+    } finally if (opened == null) stream.close()
   }
 
-  /** Open Spark's VectorizedParquetRecordReader over one segment
-    * file, or null when the file can't open that way (exotic store
-    * streams). `batches = true` flips it to whole-ColumnarBatch
-    * output (enableReturningBatches) for the columnar factory;
-    * `false` keeps row iteration for [[GraftFileReader]]. An
-    * unsupported page ENCODING (BYTE_STREAM_SPLIT) opens fine here
-    * and only fails on the first read — callers handle that flip. */
-  def openVectorized(uri: String, physNames: Seq[String],
-      dtypes: Array[GType],
-      hconf: org.apache.hadoop.conf.Configuration, batches: Boolean)
-      : org.apache.spark.sql.execution.datasources.parquet
-        .VectorizedParquetRecordReader =
-    try {
-      val c = new org.apache.hadoop.conf.Configuration(hconf)
-      val reqStruct = org.apache.spark.sql.types.StructType(
-        physNames.zip(dtypes).map { case (n, dt) =>
-          org.apache.spark.sql.types.StructField(n, dt.sparkType,
-            nullable = true) })
-      // the conf keys ParquetReadSupport/SpecificParquetRecordReaderBase
-      // consult when initialized from an InputSplit
-      c.set("org.apache.spark.sql.parquet.row.requested_schema",
-        reqStruct.json)
-      c.set("parquet.read.support.class",
-        "org.apache.spark.sql.execution.datasources.parquet" +
-          ".ParquetReadSupport")
-      c.setBoolean("spark.sql.parquet.binaryAsString", false)
-      c.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
-      c.setBoolean("spark.sql.caseSensitive", false)
-      val path = new Path(uri)
-      val len = path.getFileSystem(c).getFileStatus(path).getLen
-      // NOTE: Spark's SpecificParquetRecordReaderBase casts to the
-      // OLD mapred FileSplit, not the mapreduce one
-      val split = new org.apache.hadoop.mapred.FileSplit(
-        path, 0, len, Array.empty[String])
-      val ctx = new org.apache.hadoop.mapreduce.task
-        .TaskAttemptContextImpl(c,
-          new org.apache.hadoop.mapreduce.TaskAttemptID())
-      // engine files store proleptic INT64 micros (CORRECTED); the
-      // INT96 branch only matters for pre-round-8 files of modern
-      // timestamps, where CORRECTED and LEGACY agree
-      val r = new org.apache.spark.sql.execution.datasources.parquet
-        .VectorizedParquetRecordReader(null, "CORRECTED", "UTC",
-          "CORRECTED", "UTC", false, 4096)
-      r.initialize(split, ctx)
-      r.initBatch(org.apache.spark.sql.types.StructType(Nil),
-        InternalRow.empty)
-      if (batches) r.enableReturningBatches()
-      GraftScanProbe.vectorizedOpens.incrementAndGet()
-      r
-    } catch { case scala.util.control.NonFatal(e) =>
-      if (sys.env.contains("GRAFT_DEBUG_VEC")) e.printStackTrace()
-      null }
-
-  /** Task-side gc-buried resurrect (segment parity with
-    * [[graft.api.Series]]'s scanFiles): a referenced file
-    * soft-deleted by a racing gc still exists under its hextime
-    * suffix — rename it back before any read tier opens. Without
-    * this, engine-reader scans (BSS-mode collections, CDC file
-    * batches) lacked the self-heal the builtin-reader path has, and
-    * the concurrent-ingest gates failed under gc races (found by
-    * the zstd+bss full-oracle pass, q207/q208). Quiet on every
-    * miss: true absence is the readers' error to report, and a
-    * racing resurrector's rename is a win, not a failure. */
-  def ensurePresent(uri: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit =
-    try {
-      val path = new Path(uri)
-      val fs = path.getFileSystem(conf)
-      if (!fs.exists(path)) {
-        val name = path.getName
-        fs.listStatus(path.getParent).map(_.getPath.getName)
-          .find(_.startsWith(name + ".t"))
-          .foreach { b =>
-            try { fs.rename(new Path(path.getParent, b), path); () }
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
+  private def vectorized(status: org.apache.hadoop.fs.FileStatus,
+      input: HadoopInputFile, stream: SeekableInputStream,
+      footer: ParquetMetadata, physNames: Seq[String],
+      dtypes: Array[GType], conf: Configuration): SegmentBatches = {
+    val c = new Configuration(conf)
+    val reqStruct = StructType(physNames.zip(dtypes).map { case (n, dt) =>
+      org.apache.spark.sql.types.StructField(n, dt.sparkType,
+        nullable = true) })
+    // the conf keys ParquetReadSupport/SpecificParquetRecordReaderBase
+    // consult when initialized from an InputSplit
+    c.set("org.apache.spark.sql.parquet.row.requested_schema",
+      reqStruct.json)
+    c.set("parquet.read.support.class",
+      "org.apache.spark.sql.execution.datasources.parquet" +
+        ".ParquetReadSupport")
+    c.setBoolean("spark.sql.parquet.binaryAsString", false)
+    c.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
+    c.setBoolean("spark.sql.caseSensitive", false)
+    // NOTE: Spark's SpecificParquetRecordReaderBase casts to the
+    // OLD mapred FileSplit, not the mapreduce one
+    val split = new org.apache.hadoop.mapred.FileSplit(
+      status.getPath, 0, status.getLen, Array.empty[String])
+    val ctx = new org.apache.hadoop.mapreduce.task
+      .TaskAttemptContextImpl(c,
+        new org.apache.hadoop.mapreduce.TaskAttemptID())
+    // engine files store proleptic INT64 micros (CORRECTED); the
+    // INT96 branch only matters for pre-round-8 files of modern
+    // timestamps, where CORRECTED and LEGACY agree
+    val r = new VectorizedParquetRecordReader(null, "CORRECTED", "UTC",
+      "CORRECTED", "UTC", false, 4096)
+    r.initialize(split, ctx, Some(input), Some(stream), Some(footer))
+    r.initBatch(StructType(Nil), InternalRow.empty)
+    new SegmentBatches {
+      def nextBatch(): ColumnarBatch =
+        if (r.nextBatch()) r.resultBatch() else null
+      def close(): Unit = r.close()
+    }
+  }
 
   /** kernel scalar -> InternalRow slot value for a dtype */
   def kernelToInternal(dt: GType, v: Any): Any =
@@ -2015,49 +2007,36 @@ private object GraftRead {
   }
 }
 
-/** Segment-file reader for the connector. The PRIMARY decode path is
-  * Spark's own VectorizedParquetRecordReader (columnar batch decode,
-  * iterated as rows) over a FileSplit with the session's Hadoop conf
-  * — the same machinery `Series.frame()`'s scans use, so an
-  * unfiltered SQL view scan pays vectorized-decode cost, not per-value
-  * converter callbacks. Missing columns (pre-clone files) come back
-  * as null vectors, which the shared default-injection fills. When
-  * the vectorized reader cannot open the file (exotic store streams),
-  * a parquet-mr row materializer takes over — it also handles
-  * legacy INT96 timestamps explicitly. Rows pass through the shared
-  * clip/defaults/projection step only when the partition needs one;
-  * the common unclipped, no-defaults, no-extra-columns case emits
-  * the reader's row views untouched. */
-/** Column-at-a-time decode over parquet-mr's page machinery — the
-  * MIDDLE read tier for files Spark's vectorized reader cannot decode
-  * (BYTE_STREAM_SPLIT pages from the `<codec>+bss` storage mode).
-  * parquet-mr's [[org.apache.parquet.column.ColumnReader]] dispatches
-  * every page encoding (its ByteStreamSplitValuesReader included), and
-  * filling one [[OnHeapColumnVector]] per column in a tight typed loop
-  * keeps the batch shape — no record assembly, no per-row
-  * materializer callbacks, no slot boxing. Rows are served as batch
-  * row VIEWS (the RDD copies on emit, same contract as the vectorized
-  * tier). The parquet-mr row materializer remains the last-resort
-  * tier beneath this one. */
-private final class GraftColumnarScan(uri: String,
-    physNames: Vector[String], dtypes: Array[GType],
-    hconf: org.apache.hadoop.conf.Configuration) {
-  import org.apache.parquet.column.impl.ColumnReadStoreImpl
-  import org.apache.parquet.io.api.PrimitiveConverter
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+/** A segment file opened by [[GraftRead.open]]: its rows as column
+  * batches in the requested (physNames) order. A batch stays valid
+  * until the next call (the DSv2 buffer-reuse contract). */
+private abstract class SegmentBatches {
+  /** the next batch, or null at the end of the file */
+  def nextBatch(): ColumnarBatch
+  def close(): Unit
+}
 
-  private val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-    org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new Path(uri), hconf))
+/** Column-at-a-time decode over parquet-mr's page machinery, for files
+  * Spark's vectorized reader cannot decode (BYTE_STREAM_SPLIT pages
+  * from the `<codec>+bss` storage mode; [[GraftRead.open]] picks it
+  * from the footer). parquet-mr's
+  * [[org.apache.parquet.column.ColumnReader]] dispatches every page
+  * encoding (its ByteStreamSplitValuesReader included), and filling
+  * one [[OnHeapColumnVector]] per column in a tight typed loop keeps
+  * the batch shape: no record assembly, no per-row converter
+  * callbacks, no slot boxing. Requested columns absent from the file
+  * (pre-clone segments) serve null vectors. */
+private final class GraftColumnarScan(reader: ParquetFileReader,
+    physNames: Seq[String], dtypes: Array[GType]) extends SegmentBatches {
+  import org.apache.parquet.column.impl.ColumnReadStoreImpl
+  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+
   private val fileMeta = reader.getFooter.getFileMetaData
   private val fileSchema = fileMeta.getSchema
   private val byName = fileSchema.getFields.asScala
     .map(f => f.getName -> f).toMap
   // projected schema: requested columns present in the file, in
-  // request order; absent columns (pre-clone files) serve null
-  // vectors. A zero-column projection (count(*)) serves empty rows
-  // straight off the row-group counts — no column IO at all.
+  // request order
   private val presentIdx: Array[Int] = {
     var k = -1
     physNames.map(n =>
@@ -2080,33 +2059,28 @@ private final class GraftColumnarScan(uri: String,
     override def start(): Unit = ()
     override def end(): Unit = ()
   }
+  // no requested column in the file (a zero-column request, or a
+  // pre-clone segment): the footer's row counts size all-null batches
+  // of physNames.length columns, with no page IO at all
+  private val rowCounts: Iterator[Long] =
+    reader.getRowGroups.asScala.iterator.map(_.getRowCount)
 
   private var batch: ColumnarBatch = null
   private var vecs: Array[OnHeapColumnVector] = null
   private var vecCap: Int = 0
-  private var rowIt: java.util.Iterator[InternalRow] = null
 
-  // every requested column absent from this file (pre-clone/ALTER
-  // segment): serve null-filled batches of physNames.length columns
-  // sized straight off the footer's row-group counts — no page IO
-  // (readNextRowGroup with no requested schema would decode EVERY
-  // file column), and the row arity stays physNames.length so the
-  // shared default-injection downstream can fill the slots
-  private var nullOnlyBlocks: Iterator[Long] =
-    if (physNames.nonEmpty && proj.getFieldCount == 0)
-      reader.getFooter.getBlocks.asScala.iterator.map(_.getRowCount)
-    else null
-
-  private def loadNextRowGroup(): Boolean = {
-    if (nullOnlyBlocks != null) return loadNullOnlyGroup()
-    val rg = reader.readNextRowGroup() // zero-col case never gets here
-    if (rg == null) return false
-    val n = rg.getRowCount
+  def nextBatch(): ColumnarBatch = {
+    val pages = if (descs.isEmpty) null else reader.readNextRowGroup()
+    val n =
+      if (pages != null) pages.getRowCount
+      else if (descs.isEmpty && rowCounts.hasNext) rowCounts.next()
+      else return null
     require(n <= Int.MaxValue, s"row group of $n rows")
     val rows = n.toInt
     ensureBatch(rows)
-    val crs = new ColumnReadStoreImpl(rg, dummyConverter, proj,
-      fileMeta.getCreatedBy)
+    val crs = if (pages == null) null
+      else new ColumnReadStoreImpl(pages, dummyConverter, proj,
+        fileMeta.getCreatedBy)
     var i = 0
     while (i < physNames.length) {
       val v = vecs(i)
@@ -2116,32 +2090,13 @@ private final class GraftColumnarScan(uri: String,
       i += 1
     }
     batch.setNumRows(rows)
-    rowIt = batch.rowIterator()
-    true
-  }
-
-  private def loadNullOnlyGroup(): Boolean = {
-    if (!nullOnlyBlocks.hasNext) return false
-    val n = nullOnlyBlocks.next()
-    require(n <= Int.MaxValue, s"row group of $n rows")
-    val rows = n.toInt
-    ensureBatch(rows)
-    var i = 0
-    while (i < physNames.length) {
-      vecs(i).reset()
-      vecs(i).putNulls(0, rows)
-      i += 1
-    }
-    batch.setNumRows(rows)
-    rowIt = batch.rowIterator()
-    true
+    batch
   }
 
   /** REUSE vectors across row groups (downstream consumes each batch
-    * before the next load — the DSv2 buffer-reuse contract): a
-    * fresh-allocation-per-group scan churned ~8 MB of vector garbage
-    * per 500k-row group and showed up as GC tax inside the full
-    * bench suite. */
+    * before the next load): a fresh-allocation-per-group scan churned
+    * ~8 MB of vector garbage per 500k-row group and showed up as GC
+    * tax inside the full bench suite. */
   private def ensureBatch(rows: Int): Unit =
     if (vecs == null || rows > vecCap) {
       if (batch != null) batch.close()
@@ -2159,25 +2114,12 @@ private final class GraftColumnarScan(uri: String,
       rows: Int): Unit = {
     val cr = crs.getColumnReader(cd)
     val maxDef = cd.getMaxDefinitionLevel
-    val int96 = cd.getPrimitiveType.getPrimitiveTypeName ==
-      org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96
     var r = 0
     while (r < rows) {
       if (cr.getCurrentDefinitionLevel < maxDef) v.putNull(r)
       else dt match {
         case GType.FloatT => v.putDouble(r, cr.getDouble)
-        case GType.IntT => v.putLong(r, cr.getLong)
-        case GType.TimestampT =>
-          if (int96) {
-            // legacy INT96: 8 B nanos-of-day LE + 4 B julian day LE
-            val buf = cr.getBinary.toByteBuffer
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            val base = buf.position()
-            val nanos = buf.getLong(base)
-            val julian = buf.getInt(base + 8)
-            v.putLong(r,
-              (julian - 2440588L) * 86400000000L + nanos / 1000L)
-          } else v.putLong(r, cr.getLong)
+        case GType.IntT | GType.TimestampT => v.putLong(r, cr.getLong)
         case GType.DateT => v.putInt(r, cr.getInteger)
         case GType.StrT =>
           val b = cr.getBinary.getBytes
@@ -2188,94 +2130,24 @@ private final class GraftColumnarScan(uri: String,
     }
   }
 
-  // zero-column REQUEST (count(*)): serve empty row views off row
-  // counts. Distinct from the null-only case above — there columns
-  // WERE requested, so the served arity must stay physNames.length
-  private var emptyLeft: Long =
-    if (physNames.isEmpty)
-      reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    else -1L
-  private val emptyRow = new GenericInternalRow(0)
-
-  /** next decoded row-group batch, or null at EOF (columnar serving:
-    * empty-projection files have no batch form — callers route those
-    * through [[nextRow]]) */
-  def nextBatch(): ColumnarBatch =
-    if (loadNextRowGroup()) batch else null
-
-  /** next row VIEW in physNames order, or null at EOF */
-  def nextRow(): InternalRow = {
-    if (emptyLeft >= 0) {
-      if (emptyLeft == 0) return null
-      emptyLeft -= 1
-      return emptyRow
-    }
-    while (rowIt == null || !rowIt.hasNext) {
-      if (!loadNextRowGroup()) return null
-    }
-    rowIt.next()
-  }
-
   def close(): Unit = {
     if (batch != null) batch.close()
     reader.close()
   }
 }
 
-/** Columnar partition reader over [[GraftColumnarScan]] — row-group
-  * batches flow straight into Spark's codegen'd ColumnarToRow, so
-  * the per-row DSv2 iterator tax disappears. Only planned for
-  * partitions with no clip/defaults/projection work (the
-  * [[GraftSegmentsTable]] eligibility check). */
+/** Columnar partition reader: decoded batches flow straight into
+  * Spark's codegen'd ColumnarToRow, so the per-row DSv2 iterator tax
+  * disappears. Only planned for partitions with no
+  * clip/defaults/projection work ([[GraftPlanning.columnarEligible]]). */
 private final class GraftColumnarFileReader(p: GraftFilePartition,
-    conf: SegmentWriter.SerConf)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  GraftRead.ensurePresent(p.uri, conf.value)
-  private val dtypes = p.dtypeNames.map(GraftRead.dtypeOf).toArray
-  // same per-FILE adaptivity as the row path: Spark's vectorized
-  // reader in whole-batch mode first (plain-codec files in a
-  // BSS-hinted collection keep their fastest decode), flipping to
-  // the engine's page decoder on the first-batch encoding failure
-  private var vec =
-    if (GraftRead.isKnownBss(p.uri)) null
-    else GraftRead.openVectorized(p.uri, p.physNames, dtypes,
-      conf.value, batches = true)
-  private var scan: GraftColumnarScan =
-    if (vec != null) null else openScan()
-  private def openScan(): GraftColumnarScan = {
-    GraftScanProbe.columnarFallbackOpens.incrementAndGet()
-    new GraftColumnarScan(p.uri, p.physNames, dtypes, conf.value)
-  }
-  private var emitted = false
-  private var cur: org.apache.spark.sql.vectorized.ColumnarBatch = _
-  override def next(): Boolean = {
-    if (vec != null) {
-      val has =
-        try vec.nextKeyValue()
-        catch {
-          case scala.util.control.NonFatal(e) if !emitted =>
-            if (sys.env.contains("GRAFT_DEBUG_VEC")) e.printStackTrace()
-            vec.close(); vec = null
-            GraftRead.markBssUri(p.uri)
-            scan = openScan()
-            return next()
-        }
-      if (has) {
-        emitted = true
-        cur = vec.getCurrentValue
-          .asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch]
-      }
-      has
-    } else {
-      cur = scan.nextBatch()
-      cur != null
-    }
-  }
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = cur
-  override def close(): Unit = {
-    if (vec != null) vec.close()
-    if (scan != null) scan.close()
-  }
+    conf: SegmentWriter.SerConf) extends PartitionReader[ColumnarBatch] {
+  private val file = GraftRead.open(p.uri, p.physNames,
+    p.dtypeNames.map(GraftRead.dtypeOf).toArray, conf.value)
+  private var cur: ColumnarBatch = _
+  override def next(): Boolean = { cur = file.nextBatch(); cur != null }
+  override def get(): ColumnarBatch = cur
+  override def close(): Unit = file.close()
 }
 
 private final class GraftColumnarReaderFactory(
@@ -2286,10 +2158,16 @@ private final class GraftColumnarReaderFactory(
     throw new IllegalStateException(
       "graft columnar factory: row reads not planned here")
   override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+      : PartitionReader[ColumnarBatch] =
     new GraftColumnarFileReader(p.asInstanceOf[GraftFilePartition], conf)
 }
 
+/** Row partition reader for one segment file: the batches of
+  * [[GraftRead.open]] iterated as row views. Rows pass through the
+  * shared clip/defaults/projection step only when the partition needs
+  * one; the common unclipped, no-defaults, no-extra-columns case emits
+  * the batch's row views untouched. Missing columns (pre-clone files)
+  * arrive as nulls, which the default injection fills. */
 class GraftFileReader(p: GraftFilePartition, conf: SegmentWriter.SerConf)
     extends PartitionReader[InternalRow] {
   import GraftRead._
@@ -2306,106 +2184,9 @@ class GraftFileReader(p: GraftFilePartition, conf: SegmentWriter.SerConf)
     p.outPos.length == p.readNames.length &&
     p.outPos.indices.forall(i => p.outPos(i) == i)
 
-  // ---- primary: vectorized columnar decode -------------------------
-  // var, not val: a file whose pages use an encoding the vectorized
-  // reader lacks (BYTE_STREAM_SPLIT segments written with the
-  // `<codec>+bss` storage mode) opens fine but throws on the FIRST
-  // read batch — next() then closes this and flips to the parquet-mr
-  // fallback, which decodes every parquet encoding
-  private var vec: org.apache.spark.sql.execution.datasources.parquet
-      .VectorizedParquetRecordReader = {
-    GraftRead.ensurePresent(p.uri, conf.value)
-    if (GraftRead.isKnownBss(p.uri)) null // straight to the mid tier
-    else {
-      val r = GraftRead.openVectorized(p.uri, p.physNames, dtypes,
-        conf.value, batches = false)
-      if (r == null) GraftScanProbe.fallbackOpens.incrementAndGet()
-      r
-    }
-  }
-
-  // ---- fallback: parquet-mr row materializer -----------------------
-  private lazy val support = new ReadSupport[Array[Any]] {
-    override def init(ctx: InitContext): ReadSupport.ReadContext = {
-      val fileSchema = ctx.getFileSchema
-      val byName = fileSchema.getFields.asScala.map(f =>
-        f.getName -> f).toMap
-      val b = Types.buildMessage()
-      p.physNames.foreach(n => byName.get(n).foreach(b.addField))
-      // parquet forbids empty group types: a zero-column projection
-      // (count(*) over a clipped snapshot) reads the first file
-      // column and discards it (slotOf maps it to no output slot)
-      if (p.physNames.isEmpty)
-        fileSchema.getFields.asScala.headOption.foreach(b.addField)
-      new ReadSupport.ReadContext(b.named(fileSchema.getName))
-    }
-    override def prepareForRead(c: org.apache.hadoop.conf.Configuration,
-        meta: util.Map[String, String], fileSchema: MessageType,
-        ctx: ReadSupport.ReadContext): RecordMaterializer[Array[Any]] = {
-      val requested = ctx.getRequestedSchema
-      // requested field i -> slot index
-      val slotOf = requested.getFields.asScala.map(f =>
-        p.physNames.indexOf(f.getName)).toArray
-      new RecordMaterializer[Array[Any]] {
-        private val root: GroupConverter = new GroupConverter {
-          override def getConverter(fieldIndex: Int): Converter = {
-            val slot = slotOf(fieldIndex)
-            if (slot < 0) // the empty-projection placeholder column
-              return new PrimitiveConverter {
-                override def addLong(v: Long): Unit = ()
-                override def addInt(v: Int): Unit = ()
-                override def addDouble(v: Double): Unit = ()
-                override def addFloat(v: Float): Unit = ()
-                override def addBoolean(v: Boolean): Unit = ()
-                override def addBinary(v: Binary): Unit = ()
-              }
-            val dt = dtypes(slot)
-            val prim = requested.getType(fieldIndex).asPrimitiveType()
-              .getPrimitiveTypeName
-            new PrimitiveConverter {
-              override def addLong(v: Long): Unit = slots(slot) = v
-              override def addInt(v: Int): Unit = slots(slot) =
-                if (dt == GType.DateT) v else v.toLong
-              override def addDouble(v: Double): Unit = slots(slot) = v
-              override def addFloat(v: Float): Unit =
-                slots(slot) = v.toDouble
-              override def addBinary(v: Binary): Unit =
-                if (prim == org.apache.parquet.schema.PrimitiveType
-                    .PrimitiveTypeName.INT96) {
-                  // legacy INT96 timestamp: 8 B nanos-of-day LE +
-                  // 4 B julian day LE -> epoch micros. toByteBuffer
-                  // may wrap a larger backing array with position>0 —
-                  // index RELATIVE to position, never absolute 0
-                  val buf = v.toByteBuffer
-                    .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-                  val base = buf.position()
-                  val nanos = buf.getLong(base)
-                  val julian = buf.getInt(base + 8)
-                  slots(slot) =
-                    (julian - 2440588L) * 86400000000L + nanos / 1000L
-                } else slots(slot) =
-                  UTF8String.fromBytes(v.getBytes)
-            }
-          }
-          override def start(): Unit = {
-            java.util.Arrays.fill(
-              slots.asInstanceOf[Array[AnyRef]], null)
-          }
-          override def end(): Unit = ()
-        }
-        override def getRootConverter: GroupConverter = root
-        override def getCurrentRecord: Array[Any] = slots
-      }
-    }
-  }
-
-  private var readerOpened = false
-  private lazy val reader: ParquetReader[Array[Any]] = {
-    readerOpened = true
-    ParquetReader.builder(support, new Path(p.uri))
-      .withConf(conf.value).build()
-  }
-
+  private val file = open(p.uri, p.physNames, dtypes, conf.value)
+  private var rows: java.util.Iterator[InternalRow] =
+    java.util.Collections.emptyIterator()
   private var current: InternalRow = _
 
   /** defaults + clip + projection over a row in readNames layout */
@@ -2439,100 +2220,22 @@ class GraftFileReader(p: GraftFilePartition, conf: SegmentWriter.SerConf)
     }
   }
 
-  // middle tier: column-at-a-time decode (BYTE_STREAM_SPLIT pages);
-  // opened after the vectorized first-batch failure — or immediately
-  // when the URI is already KNOWN to hold BSS pages (skips the doomed
-  // probe open's footer parse on every repeat read)
-  private var mid: GraftColumnarScan =
-    if (vec != null || !GraftRead.isKnownBss(p.uri)) null
-    else try {
-      GraftScanProbe.columnarFallbackOpens.incrementAndGet()
-      new GraftColumnarScan(p.uri, p.physNames, dtypes, conf.value)
-    } catch { case scala.util.control.NonFatal(e) =>
-      if (sys.env.contains("GRAFT_DEBUG_VEC")) e.printStackTrace()
-      GraftScanProbe.fallbackOpens.incrementAndGet()
-      null
-    }
-
-  private var emitted = false
   override def next(): Boolean = {
-    if (vec != null) {
-      // unsupported-encoding pages surface on the FIRST batch, before
-      // any row is emitted — flip to the columnar fallback then (and
-      // ONLY then: a mid-file failure after emitted rows must
-      // propagate, or a fallback would re-serve rows already returned)
-      val first =
-        try vec.nextKeyValue()
-        catch {
-          case scala.util.control.NonFatal(e) if !emitted =>
-            if (sys.env.contains("GRAFT_DEBUG_VEC")) e.printStackTrace()
-            vec.close(); vec = null
-            GraftRead.markBssUri(p.uri)
-            try {
-              mid = new GraftColumnarScan(p.uri, p.physNames, dtypes,
-                conf.value)
-              GraftScanProbe.columnarFallbackOpens.incrementAndGet()
-            } catch { case scala.util.control.NonFatal(e2) =>
-              if (sys.env.contains("GRAFT_DEBUG_VEC")) e2.printStackTrace()
-              mid = null
-              GraftScanProbe.fallbackOpens.incrementAndGet()
-            }
-            return next()
-        }
-      if (first) {
-        emitted = true
-        var has = true
-        while (has) {
-          val row = vec.getCurrentValue.asInstanceOf[InternalRow]
-          if (identityOut) { current = row; return true }
-          fillSlots(row)
-          if (finish()) return true
-          has = vec.nextKeyValue()
-        }
+    while (true) {
+      while (!rows.hasNext) {
+        val b = file.nextBatch()
+        if (b == null) return false
+        rows = b.rowIterator()
       }
-      false
-    } else if (mid != null) {
-      // same contract as the vectorized tier: a failure before any
-      // emitted row demotes to the parquet-mr row materializer.
-      // emitted flips only once a fully-assembled row is about to be
-      // RETURNED — a throw while projecting the first row (or while
-      // rows were read but all clipped out) still demotes, since the
-      // consumer has received nothing that a fresh reader would
-      // re-serve
-      try {
-        while (true) {
-          val row = mid.nextRow()
-          if (row == null) return false
-          if (identityOut) { current = row; emitted = true; return true }
-          fillSlots(row)
-          if (finish()) { emitted = true; return true }
-        }
-        false
-      } catch {
-        case scala.util.control.NonFatal(e) if !emitted =>
-          if (sys.env.contains("GRAFT_DEBUG_VEC")) e.printStackTrace()
-          try mid.close() catch { case _: Throwable => () }
-          mid = null
-          GraftScanProbe.fallbackOpens.incrementAndGet()
-          next()
-      }
-    } else {
-      while (true) {
-        val rec = reader.read()
-        if (rec == null) return false
-        if (finish()) return true
-      }
-      false
+      val row = rows.next()
+      if (identityOut) { current = row; return true }
+      fillSlots(row)
+      if (finish()) return true
     }
+    false
   }
   override def get(): InternalRow = current
-  override def close(): Unit =
-    if (vec != null) vec.close()
-    else if (mid != null) mid.close()
-    // never FORCE the lazy fallback reader during cleanup: that would
-    // open the file (which may be the unreadable file that put us on
-    // this path) just to close it, masking the original failure
-    else if (readerOpened) reader.close()
+  override def close(): Unit = file.close()
 }
 
 class GraftInlineReader(p: GraftInlinePartition)

