@@ -3,20 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{CosineSimilarity, DotProduct, MinHashSig,
-  ShingleHashes, SortedIntersectSize, TermCounts, TopKLong}
 
-/** SparkSessionExtensions entry point: enable the engine's native
-  * Catalyst expressions in any session by configuration —
-  *
-  * {{{
-  *   spark.sql.extensions=graft.GraftExtensions
-  * }}}
-  *
-  * — the same injection mechanism extension libraries such as Delta
-  * use, so `graft_cosine`/`graft_dot` are available in pure SQL
-  * without any imperative registration call.
-  */
 /** Explicit opt-in for the engine's optimizer rules on an ALREADY
   * RUNNING session (the configuration path above only applies at
   * session build time). Deliberately separate from
@@ -32,73 +19,26 @@ object GraftOptimizations {
         spark.experimental.extraOptimizations :+ graft.plans.RankToArgMin
 }
 
+/** SparkSessionExtensions entry point: enable the engine's native
+  * Catalyst expressions in any session by configuration —
+  *
+  * {{{
+  *   spark.sql.extensions=graft.GraftExtensions
+  * }}}
+  *
+  * — the same injection mechanism extension libraries such as Delta
+  * use, so every function of `VectorFunctions.sqlFunctions` is
+  * available in pure SQL without any imperative registration call.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // keep-one-per-group: row_number()=1 filters rewrite to a
     // map-side-combining min_by aggregate (graft.plans.RankToArgMin)
     ext.injectOptimizerRule(_ => graft.plans.RankToArgMin)
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName,
-        "graft_cosine"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-        => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-        => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKLong].getName, "graft_topk"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-        => TopKLong.fromExprs(exprs).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-        => MinHashSig(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleHashes].getName,
-        "graft_shingles"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-        => ShingleHashes(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_isect"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName,
-        "graft_isect"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-        => SortedIntersectSize(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_termcounts"),
-      new ExpressionInfo(classOf[TermCounts].getName,
-        "graft_termcounts"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-        => TermCounts(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate].getName, "graft_bloom_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-        => (exprs match {
-          case Seq(c) =>
-            new org.apache.spark.sql.catalyst.expressions.aggregate
-              .BloomFilterAggregate(c)
-          case Seq(c, n) =>
-            new org.apache.spark.sql.catalyst.expressions.aggregate
-              .BloomFilterAggregate(c, n)
-          case _ => throw new IllegalArgumentException(
-            "graft_bloom_agg(xxhash64_col[, est_items])")
-        }).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain].getName, "graft_might_contain"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-        => org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs(0), exprs(1))))
+    graft.functions.VectorFunctions.sqlFunctions.foreach {
+      case (name, cls, build) =>
+        ext.injectFunction((FunctionIdentifier(name),
+          new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

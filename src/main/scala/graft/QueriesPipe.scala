@@ -132,50 +132,45 @@ object QueriesPipe {
     * join+groupBy (the standard large-graph CC shape: O(diameter)
     * rounds, and near-dup clusters are shallow), nothing ever
     * collects to the driver. The component id is the minimum doc_id
-    * of the cluster, i.e. the canonical document.
+    * of the cluster, i.e. the canonical document. Memoized per
+    * (session, dir) in QueriesSim's session cache: q55 reuses q54's
+    * fixpoint instead of re-running the whole iterative loop.
     */
-  /** memoized per (session, dir): q55 reuses q54's fixpoint instead of
-    * re-running the whole iterative loop (same pattern as
-    * QueriesSim.matCache) */
-  private val compCache = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), DataFrame]
-
   def q54_neardup_components(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val cached = compCache.getOrElseUpdate(
-      (System.identityHashCode(s), dir), {
-        val pairs = QueriesSim.q23_lsh_pairs(s, dir)
-          .filter(col("jaccard") >= 0.3)
-          .select(col("doc_a").as("a"), col("doc_b").as("b"))
-        val edgeCount = pairs.count()
-        if (edgeCount <= MaxDriverEdges) {
-          // The LSH pair graph is orders of magnitude smaller than the
-          // corpus (it IS the point of banding); when it fits on the
-          // driver, union-find beats O(diameter) distributed rounds —
-          // the same small-side cutoff reasoning as a broadcast join.
-          // Past the cutoff (billions of edges) the distributed
-          // propagation loop below is the design.
-          val es = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
-          val parent = scala.collection.mutable.LongMap.empty[Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent(r)
-            var c = x // path compression
-            while (parent.getOrElse(c, c) != c) {
-              val nxt = parent(c); parent(c) = r; c = nxt
-            }
-            r
+    val cached = QueriesSim.memo(s, dir, CompMemo) {
+      val pairs = QueriesSim.q23_lsh_pairs(s, dir)
+        .filter(col("jaccard") >= 0.3)
+        .select(col("doc_a").as("a"), col("doc_b").as("b"))
+      val edgeCount = pairs.count()
+      if (edgeCount <= MaxDriverEdges) {
+        // The LSH pair graph is orders of magnitude smaller than the
+        // corpus (it IS the point of banding); when it fits on the
+        // driver, union-find beats O(diameter) distributed rounds —
+        // the same small-side cutoff reasoning as a broadcast join.
+        // Past the cutoff (billions of edges) the distributed
+        // propagation loop below is the design.
+        val es = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent(r)
+          var c = x // path compression
+          while (parent.getOrElse(c, c) != c) {
+            val nxt = parent(c); parent(c) = r; c = nxt
           }
-          es.foreach { case (a, b) =>
-            parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-            val (ra, rb) = (find(a), find(b))
-            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-          }
-          val labels = parent.keys.toArray.map(id => (id, find(id)))
-          import s.implicits._
-          labels.toSeq.toDF("id", "comp")
-        } else distributedComponents(pairs)
-      })
+          r
+        }
+        es.foreach { case (a, b) =>
+          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        val labels = parent.keys.toArray.map(id => (id, find(id)))
+        import s.implicits._
+        labels.toSeq.toDF("id", "comp")
+      } else distributedComponents(pairs)
+    }
     cached.select(col("id").as("doc_id"), col("comp").as("component"))
       .orderBy(col("doc_id"))
   }
@@ -189,7 +184,9 @@ object QueriesPipe {
 
   /** test hook: drop memoized component fixpoints (e.g. after flipping
     * `graft.maxDriverEdges`) so q54 recomputes through the other branch */
-  private[graft] def clearComponentCache(): Unit = compCache.clear()
+  private[graft] def clearComponentCache(): Unit =
+    QueriesSim.forget(CompMemo)
+  private val CompMemo = "q54_components"
 
   private def distributedComponents(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._

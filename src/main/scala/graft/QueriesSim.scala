@@ -75,6 +75,27 @@ object QueriesSim {
     }
   }
 
+  /** Per-session memo of a whole result under `(name, dir)`: built at
+    * most once per live session, under the per-session lock (so two
+    * racing callers never both run `build`), with no checkpoint and no
+    * temp view — `build` decides its own durability. */
+  private[graft] def memo(s: SparkSession, dir: String, name: String)(
+      build: => DataFrame): DataFrame = {
+    val cache = sessionCache(s)
+    cache.synchronized(cache.getOrElseUpdate((name, dir), build))
+  }
+
+  /** Drop every session's [[memo]] entries under `name`. */
+  private[graft] def forget(name: String): Unit = {
+    // snapshot, then lock each session alone: a memo build holds its
+    // session lock while it reaches for matCache's
+    val caches = matCache.synchronized(
+      new java.util.ArrayList(matCache.values()))
+    caches.forEach(c => c.synchronized {
+      c.keys.filter(_._1 == name).foreach(c.remove)
+    })
+  }
+
   private[graft] def materialize(s: SparkSession, dir: String, sql: String,
       view: String): Unit =
     materializeDf(s, dir, view)(s.sql(sql))

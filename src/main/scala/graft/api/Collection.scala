@@ -129,16 +129,23 @@ class Collection(val repo: Repo, val label: String, val path: String,
   def kvSeries(name: String): KVSeries = new KVSeries(this, name)
 
   /** Decoded-manifest lookup through the JVM-wide content-addressed
-    * cache ([[Collection.decodeManifestCached]]). Revision ids are
+    * cache ([[Collection.manifestCache]]). Revision ids are
     * `hextime-sha1(payload)` — equal id implies equal payload implies
     * equal decode — so a cached decode can never go stale; only the
     * LEAF lookup (cheap) consults the store per read. The cache being
     * JVM-wide (not instance-local) is what makes the SQL door's
     * fresh-handle-per-statement pattern O(1) in manifest size: a
     * fresh Collection on an unchanged leaf decodes nothing. */
-  private[graft] def decodeCached(r: graft.core.Revision): Manifest =
-    Collection.decodeManifestCached(r.child,
-      () => decodePayload(changelog.payload(r)))
+  private[graft] def decodeCached(r: Revision): Manifest =
+    Collection.manifestCache.getOrLoad(r.child) {
+      val m = decodePayload(changelog.payload(r))
+      // frozen from here on: other handles read the layout fields
+      // without synchronization once it is inserted
+      // ([[Manifest.stampLayout]]'s debug guard enforces that no
+      // further stamps land on this object)
+      m.cacheShared = true
+      m
+    }
 
   /** Decode a revision payload of either format: plain v1 single-doc
     * or chunked v2 ([[ManifestCodec]] — chunks live under
@@ -287,15 +294,15 @@ class Collection(val repo: Repo, val label: String, val path: String,
     * The single copy of the scaffold every pruned read shares. */
   private def overRoot[A](rev: Revision)(whole: Manifest => A)(
       chunked: ManifestCodec.Root => A): A =
-    Collection.peekManifestCache(rev.child) match {
+    Collection.manifestCache.peek(rev.child) match {
       case Some(m) => whole(m)
       case None =>
-        Collection.rootCached(rev.child, () => {
+        Collection.rootCache.getOrLoad(rev.child) {
           val bytes = changelog.payload(rev)
           if (ManifestCodec.isChunked(bytes))
             Some(ManifestCodec.parseRoot(bytes))
           else None
-        }) match {
+        } match {
           case Some(r) => chunked(r)
           case None => whole(decodeCached(rev))
         }
@@ -904,90 +911,23 @@ class Collection(val repo: Repo, val label: String, val path: String,
   * this cache the per-statement driver cost is O(1) in manifest size
   * once any handle in the JVM has decoded the leaf.
   *
-  * Bounded by TOTAL cached segment rows (`graft.manifestCacheRows`
-  * system property, default 2e6 ≈ two 1e6-segment manifests — a few
-  * GB worst case, sized for a 100 TB driver heap) with access-ordered
-  * eviction of the coldest leaves first, so a hot leaf is never
-  * evicted by a time-travel sweep over many historical revisions.
+  * A [[graft.core.BoundedCache]] bounded by TOTAL cached segment
+  * rows: 2e6 ≈ two 1e6-segment manifests, a few GB worst case. A hot
+  * leaf is never evicted by a time-travel sweep over many historical
+  * revisions. Its miss count is the number of payload decodes: a
+  * second fresh handle on an unchanged leaf must not move it.
   */
 object Collection {
-  private val cacheRowBudget: Long =
-    java.lang.Long.getLong("graft.manifestCacheRows", 2000000L)
-  private val manifestCache =
-    new java.util.LinkedHashMap[String, Manifest](64, 0.75f, true)
-  private var cachedRows: Long = 0L
-  /** Count of actual payload decodes — observability for the cache
-    * spec: a second fresh handle on an unchanged leaf must not move
-    * this counter. */
-  private[graft] val manifestDecodes =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val manifestCache =
+    new BoundedCache[String, Manifest](2000000L, _.size)
 
-  private[graft] def decodeManifestCached(revId: String,
-      decode: () => Manifest): Manifest = {
-    manifestCache.synchronized {
-      val hit = manifestCache.get(revId) // get() also refreshes LRU order
-      if (hit != null) return hit
-    }
-    // Decode OUTSIDE the lock: concurrent misses on different
-    // revisions must not serialize behind one global decode (a 1e5-
-    // segment decode is ~1 s). Two racing misses on the SAME revision
-    // may both decode; the second insert discards its copy — cheaper
-    // than holding a global lock across every decode.
-    manifestDecodes.incrementAndGet()
-    val m = decode()
-    manifestCache.synchronized {
-      val prev = manifestCache.get(revId)
-      if (prev != null) prev
-      else {
-        // frozen from here on: other handles may now read the layout
-        // fields without synchronization ([[Manifest.stampLayout]]'s
-        // debug guard enforces no further stamps land on this object)
-        m.cacheShared = true
-        manifestCache.put(revId, m)
-        cachedRows += m.size
-        val it = manifestCache.entrySet().iterator()
-        while (cachedRows > cacheRowBudget && manifestCache.size() > 1 &&
-            it.hasNext) {
-          val e = it.next()
-          if (e.getKey != revId) { cachedRows -= e.getValue.size; it.remove() }
-        }
-        m
-      }
-    }
-  }
-
-  /** Test hook: drop all cached decodes (counter keeps its value). */
+  /** Test hook: drop all cached decodes (miss counts keep their value). */
   private[graft] def clearManifestCache(): Unit = {
-    manifestCache.synchronized {
-      manifestCache.clear(); cachedRows = 0L
-    }
-    rootCache.synchronized { rootCache.clear() }
+    manifestCache.clear(); rootCache.clear()
   }
-
-  /** cache PEEK (no decode on miss) — the lazy pruned-read path only
-    * uses a full manifest when one is already materialized */
-  private[graft] def peekManifestCache(revId: String): Option[Manifest] =
-    manifestCache.synchronized { Option(manifestCache.get(revId)) }
 
   // parsed v2 roots by revision id (None = that revision is plain).
-  // Roots are tiny (~120 B/chunk); entry-count LRU is plenty.
-  private val rootCache = new java.util.LinkedHashMap[
-      String, Option[graft.core.ManifestCodec.Root]](64, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        String, Option[graft.core.ManifestCodec.Root]]): Boolean =
-      size() > 512
-  }
-
-  private[graft] def rootCached(revId: String,
-      parse: () => Option[graft.core.ManifestCodec.Root])
-      : Option[graft.core.ManifestCodec.Root] = {
-    rootCache.synchronized {
-      if (rootCache.containsKey(revId)) return rootCache.get(revId)
-    }
-    val r = parse() // payload read + root parse outside the lock
-    rootCache.synchronized {
-      if (!rootCache.containsKey(revId)) rootCache.put(revId, r)
-      rootCache.get(revId)
-    }
-  }
+  // Roots are tiny (~120 B/chunk); an entry-count bound is plenty.
+  private val rootCache =
+    new BoundedCache[String, Option[ManifestCodec.Root]](512)
 }

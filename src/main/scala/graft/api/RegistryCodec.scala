@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.core.{Hash, Json}
+import graft.core.{BoundedCache, Hash, Json}
 import java.util.concurrent.atomic.AtomicLong
 
 /** Chunked REGISTRY payloads — the [[graft.core.ManifestCodec]] recipe
@@ -50,8 +50,6 @@ private[graft] object RegistryCodec {
   // ---- observability (specs pin O(touched) via these) ----
   /** chunks serialized fresh by encode (reused refs don't count) */
   private[graft] val chunkEncodes = new AtomicLong(0L)
-  /** chunk cache misses: store fetch + JSON parse of one chunk */
-  private[graft] val chunkParses = new AtomicLong(0L)
 
   /** (sha, entry-count, first-key, last-key) of one chunk object */
   final case class ChunkRef(sha: String, n: Int, k0: String, k1: String)
@@ -245,47 +243,23 @@ private[graft] object RegistryCodec {
   // ---- JVM-wide content-addressed chunk entry cache ----
   // Keyed by sha: chunk bytes are content-addressed and the parse fn
   // is deterministic per bytes (one registry entry schema JVM-wide).
-  // Entry-budget LRU like the manifest chunk cache's row budget.
-  private val cacheEntryBudget: Long =
-    java.lang.Long.getLong("graft.registryChunkCacheEntries", 400000L)
-  private val cache =
-    new java.util.LinkedHashMap[String, Map[String, Any]](64, 0.75f, true)
-  private var cachedEntries: Long = 0L
+  // Bounded by 4e5 cached entries; a miss is one store fetch + JSON
+  // parse of one chunk.
+  private[graft] val chunkCache =
+    new BoundedCache[String, Map[String, Any]](400000L, _.size)
 
   private def chunkEntries(ref: ChunkRef, fetch: String => Array[Byte],
-      parse: Map[String, Any] => Map[String, _]): Map[String, _] = {
-    cache.synchronized {
-      val hit = cache.get(ref.sha)
-      if (hit != null) return hit
+      parse: Map[String, Any] => Map[String, _]): Map[String, _] =
+    chunkCache.getOrLoad(ref.sha) {
+      val bytes = Hash.readVerified(ref.sha,
+        s"registry chunk ${ref.sha}")(fetch(ref.sha))
+      val parsed = parse(Json.parse(new String(bytes, "UTF-8"))
+        .asInstanceOf[Map[String, Any]]).asInstanceOf[Map[String, Any]]
+      require(parsed.size == ref.n,
+        s"registry chunk ${ref.sha}: ${parsed.size} entries, root says ${ref.n}")
+      parsed
     }
-    chunkParses.incrementAndGet()
-    val bytes = Hash.readVerified(ref.sha,
-      s"registry chunk ${ref.sha}")(fetch(ref.sha))
-    val parsed = parse(Json.parse(new String(bytes, "UTF-8"))
-      .asInstanceOf[Map[String, Any]]).asInstanceOf[Map[String, Any]]
-    require(parsed.size == ref.n,
-      s"registry chunk ${ref.sha}: ${parsed.size} entries, root says ${ref.n}")
-    cache.synchronized {
-      val prev = cache.get(ref.sha)
-      if (prev != null) prev
-      else {
-        cache.put(ref.sha, parsed)
-        cachedEntries += parsed.size
-        val it = cache.entrySet().iterator()
-        while (cachedEntries > cacheEntryBudget && cache.size() > 1 &&
-            it.hasNext) {
-          val e = it.next()
-          if (e.getKey != ref.sha) {
-            cachedEntries -= e.getValue.size; it.remove()
-          }
-        }
-        parsed
-      }
-    }
-  }
 
   /** Test hook, mirroring ManifestCodec.clearChunkCache. */
-  private[graft] def clearChunkCache(): Unit = cache.synchronized {
-    cache.clear(); cachedEntries = 0L
-  }
+  private[graft] def clearChunkCache(): Unit = chunkCache.clear()
 }

@@ -80,7 +80,7 @@ class Repo(val rootUri: String, val spark: SparkSession,
 
   private def regStateSingle(leaf: Option[Revision])
       : Map[String, RegEntry] = leaf.map { r =>
-    val hit = Repo.regDecodeCache.get(rootUri)
+    val hit = Repo.regDecodeCache.peek(rootUri).orNull
     // serve the cache when it matches the handle's leaf OR is a
     // strictly NEWER leaf COMMITTED BY THIS JVM (noteLeaf; in-JVM
     // commit ids share one clock, so hextime string order is commit
@@ -99,11 +99,8 @@ class Repo(val rootUri: String, val spark: SparkSession,
       // (reads, SQL statements) never pay a sort. Put atomically:
       // never replace an entry a concurrent commit installed after
       // our get (it is newer than this decode).
-      Repo.regDecodeCache.synchronized {
-        if (Repo.regDecodeCache.get(rootUri) eq hit)
-          Repo.regDecodeCache.put(rootUri,
-            Repo.RegCached(r.child, m, refs, null, null)) // LRU
-      }
+      Repo.regDecodeCache.replace(rootUri, hit,
+        Repo.RegCached(r.child, m, refs, null, null))
       m
     }
   }.getOrElse(Map.empty)
@@ -121,7 +118,7 @@ class Repo(val rootUri: String, val spark: SparkSession,
     val st = regState()
     val noted = Repo.notedLeaf(rootUri)
     if (noted == null) return st
-    val hit = Repo.regDecodeCache.get(rootUri)
+    val hit = Repo.regDecodeCache.peek(rootUri).orNull
     if (hit != null && (hit.state eq st) &&
         (hit.leaf == noted || hit.leaf > noted)) st
     else {
@@ -203,7 +200,7 @@ class Repo(val rootUri: String, val spark: SparkSession,
       put: Seq[(String, RegEntry)], del: Seq[String]): Unit = {
     val localParent =
       registry.leaf().map(_.child).getOrElse(Changelog.Phi)
-    val hit = Repo.regDecodeCache.get(rootUri)
+    val hit = Repo.regDecodeCache.peek(rootUri).orNull
     // parent onto the newest leaf COMMITTED BY THIS JVM (noteLeaf;
     // one clock, so hextime string order is commit order — a leaf
     // that merely string-compares newer is NOT trusted, see
@@ -267,21 +264,18 @@ class Repo(val rootUri: String, val spark: SparkSession,
     * leaf, then maintained O(touched) by [[writeRegDelta]]; building
     * it per-DDL was the last O(registry) scan on the DDL path. */
   private def takenPaths(state: Map[String, RegEntry]): Set[String] = {
-    val hit = Repo.regDecodeCache.get(rootUri)
+    val hit = Repo.regDecodeCache.peek(rootUri).orNull
     if (hit != null && (hit.state eq state) && hit.paths != null)
       hit.paths
     else {
       val p = state.valuesIterator.map(_.path).toSet
-      // atomic re-check under the map's own monitor: between the get
-      // above and this put a concurrent commitReg can install a NEWER
-      // leaf's entry, and blindly putting would overwrite it with the
-      // older leaf's cache (ADVICE r14 low: next regState regresses
-      // to a cold decode and the incremental layout is dropped)
+      // compare-and-set: between the peek above and this put a
+      // concurrent commitReg can install a NEWER leaf's entry, and
+      // blindly putting would overwrite it with the older leaf's
+      // cache (ADVICE r14 low: next regState regresses to a cold
+      // decode and the incremental layout is dropped)
       if (hit != null && (hit.state eq state))
-        Repo.regDecodeCache.synchronized {
-          if (Repo.regDecodeCache.get(rootUri) eq hit)
-            Repo.regDecodeCache.put(rootUri, hit.copy(paths = p))
-        }
+        Repo.regDecodeCache.replace(rootUri, hit, hit.copy(paths = p))
       p
     }
   }
@@ -305,7 +299,7 @@ class Repo(val rootUri: String, val spark: SparkSession,
     var prevRefs: Vector[RegistryCodec.ChunkRef] = null
     var changed: Set[String] = null
     if (parents.length == 1 && parents.head != Changelog.Phi) {
-      val hit = Repo.regDecodeCache.get(rootUri)
+      val hit = Repo.regDecodeCache.peek(rootUri).orNull
       if (hit != null && hit.leaf == parents.head && hit.refs != null) {
         prevRefs = hit.refs
         val prev = hit.state
@@ -841,18 +835,11 @@ object Repo {
     * size instead of re-parsing a 10^5-collection JSON per statement.
     * One entry per ROOT (the newest leaf — only it can ever hit
     * again), so memory is O(#open repos), not O(#registry commits);
-    * bounded by a true LRU at 256 roots (temp repos in test suites
-    * would otherwise accumulate) — access-ordered eviction of ONLY the
-    * eldest entry, so hot repos never lose their slot to a cold temp
-    * repo churning the bound, and the bound holds under concurrent
-    * repos (all access goes through the map's own lock). */
-  private[api] val regDecodeCache: java.util.Map[String, RegCached] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, RegCached](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, RegCached]): Boolean =
-          size() > 256
-      })
+    * a [[graft.core.BoundedCache]] of 256 roots (temp repos in test
+    * suites would otherwise accumulate), so hot repos never lose their
+    * slot to a cold temp repo churning the bound. */
+  private[api] val regDecodeCache =
+    new graft.core.BoundedCache[String, RegCached](256)
 
   /** One cached registry decode/commit: the leaf revision it belongs
     * to, the entry state, the chunk layout (null for v1 payloads),

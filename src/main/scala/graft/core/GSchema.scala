@@ -195,20 +195,11 @@ object GSchema {
 
   // Registry decode calls fromJson once per ENTRY and a 1e5-
   // collection repo holds ~a handful of distinct schema strings —
-  // memoize the parse (schemas are immutable values). Entry-count
-  // LRU; a schema string is ~100 B so the bound is a few MB worst
-  // case.
-  private val parseCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, GSchema](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, GSchema]): Boolean =
-          size() > 4096
-      })
+  // memoize the parse (schemas are immutable values). A schema string
+  // is ~100 B, so the 4096-entry bound is a few MB worst case.
+  private val parseCache = new BoundedCache[String, GSchema](4096)
 
-  def fromJson(j: String): GSchema = {
-    val hit = parseCache.get(j)
-    if (hit != null) return hit
+  def fromJson(j: String): GSchema = parseCache.getOrLoad(j) {
     val m = Json.parse(j).asInstanceOf[Map[String, Any]]
     val kv = m.get("kind").contains("kv")
     val cols = m("columns").asInstanceOf[List[Any]].map { o =>
@@ -217,8 +208,6 @@ object GSchema {
         GType.parse(cm("dt").asInstanceOf[String]),
         cm("idx").asInstanceOf[Boolean])
     }
-    val s = GSchema(cols, kv)
-    parseCache.put(j, s)
-    s
+    GSchema(cols, kv)
   }
 }

@@ -89,7 +89,7 @@ final case class Manifest(schema: GSchema, rows: Vector[SegmentMeta]) {
     * a future edit could silently publish unsynchronized writes onto
     * a shared object): the decoding/constructing thread owns the
     * fields; once the object enters the JVM-wide manifest cache
-    * ([[graft.api.Collection.decodeManifestCached]] flips
+    * ([[graft.api.Collection.decodeCached]] flips
     * `cacheShared`) they are frozen. */
   @transient private[graft] val ownerThread: Long =
     Thread.currentThread().getId

@@ -62,8 +62,6 @@ object ManifestCodec {
   // ---- observability (specs pin O(touched) via these) ----
   /** chunks serialized fresh by encode (reused chunks don't count) */
   private[graft] val chunkEncodes = new AtomicLong(0L)
-  /** chunk cache misses: store fetch + JSON parse of one chunk */
-  private[graft] val chunkParses = new AtomicLong(0L)
 
   /** Result of [[encode]]: the root payload (what the changelog
     * commits), the chunk objects that must exist in the store before
@@ -427,48 +425,24 @@ object ManifestCodec {
   // ---- JVM-wide content-addressed chunk row cache ----
   // Keyed by (sha, schema): the bytes are unique per sha, but parsing
   // is schema-directed (dtypes), so the same bytes under two schemas
-  // must not share a decode. Row-budget LRU like the manifest cache.
-  private val cacheRowBudget: Long =
-    java.lang.Long.getLong("graft.manifestChunkCacheRows", 4000000L)
-  private val cache = new java.util.LinkedHashMap[
-    (String, GSchema), Vector[SegmentMeta]](256, 0.75f, true)
-  private var cachedRows: Long = 0L
+  // must not share a decode. Bounded by 4e6 cached rows; a miss is one
+  // store fetch + JSON parse of one chunk.
+  private[graft] val chunkCache =
+    new BoundedCache[(String, GSchema), Vector[SegmentMeta]](
+      4000000L, _.length)
 
   private[graft] def chunkRows(schema: GSchema, ref: ChunkRef,
-      fetch: String => Array[Byte]): Vector[SegmentMeta] = {
-    val key = (ref.sha, schema)
-    cache.synchronized {
-      val hit = cache.get(key)
-      if (hit != null) return hit
+      fetch: String => Array[Byte]): Vector[SegmentMeta] =
+    chunkCache.getOrLoad((ref.sha, schema)) {
+      val bytes = Hash.readVerified(ref.sha,
+        s"manifest chunk ${ref.sha}")(fetch(ref.sha))
+      val parsed = Json.parse(new String(bytes, "UTF-8"))
+        .asInstanceOf[List[Any]]
+        .map(Manifest.rowFromParsed(schema, _)).toVector
+      require(parsed.length == ref.n,
+        s"manifest chunk ${ref.sha}: ${parsed.length} rows, root says ${ref.n}")
+      parsed
     }
-    // fetch + verify outside the lock (decode of a cold 1e6-row
-    // manifest fans many chunk parses; they must not serialize)
-    chunkParses.incrementAndGet()
-    val bytes = Hash.readVerified(ref.sha,
-      s"manifest chunk ${ref.sha}")(fetch(ref.sha))
-    val parsed = Json.parse(new String(bytes, "UTF-8"))
-      .asInstanceOf[List[Any]]
-      .map(Manifest.rowFromParsed(schema, _)).toVector
-    require(parsed.length == ref.n,
-      s"manifest chunk ${ref.sha}: ${parsed.length} rows, root says ${ref.n}")
-    cache.synchronized {
-      val prev = cache.get(key)
-      if (prev != null) prev
-      else {
-        cache.put(key, parsed)
-        cachedRows += parsed.length
-        val it = cache.entrySet().iterator()
-        while (cachedRows > cacheRowBudget && cache.size() > 1 &&
-            it.hasNext) {
-          val e = it.next()
-          if (e.getKey != key) {
-            cachedRows -= e.getValue.length; it.remove()
-          }
-        }
-        parsed
-      }
-    }
-  }
 
   /** O(touched) manifest-row count for `label`: chunks whose label
     * range sits strictly inside the label contribute their recorded
@@ -493,7 +467,5 @@ object ManifestCodec {
   }
 
   /** Test hook: drop cached chunk decodes (counters keep values). */
-  private[graft] def clearChunkCache(): Unit = cache.synchronized {
-    cache.clear(); cachedRows = 0L
-  }
+  private[graft] def clearChunkCache(): Unit = chunkCache.clear()
 }

@@ -175,45 +175,47 @@ object VectorFunctions {
     GraftBridge.column(DotProduct(
       GraftBridge.expression(a), GraftBridge.expression(b)))
 
-  /** register for SQL use: graft_cosine(a, b), graft_dot(a, b),
-    * graft_topk(x, k) */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    // NOTE: registers FUNCTIONS only. The RankToArgMin optimizer rule
-    // is a query-semantics-level extension — activate it explicitly
-    // via `spark.sql.extensions=graft.GraftExtensions` or
-    // `graft.GraftOptimizations.install(spark)`, never as a side
-    // effect of function registration.
-    GraftBridge.registerFunction(spark, "graft_cosine",
-      exprs => CosineSimilarity(exprs(0), exprs(1)))
-    GraftBridge.registerFunction(spark, "graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)))
-    GraftBridge.registerFunction(spark, "graft_topk",
-      exprs => TopKLong.fromExprs(exprs).toAggregateExpression())
-    GraftBridge.registerFunction(spark, "graft_minhash",
-      exprs => MinHashSig(exprs(0)))
-    GraftBridge.registerFunction(spark, "graft_shingles",
-      exprs => ShingleHashes(exprs(0)))
-    GraftBridge.registerFunction(spark, "graft_isect",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)))
-    GraftBridge.registerFunction(spark, "graft_termcounts",
-      exprs => TermCounts(exprs(0)))
-    GraftBridge.registerFunction(spark, "graft_simhash",
-      exprs => SimHash(exprs(0)))
+  /** Every graft SQL function: its name, the expression class its
+    * `ExpressionInfo` names, and its builder. [[register]] and
+    * [[graft.GraftExtensions]] both install exactly this list. */
+  val sqlFunctions
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_cosine", classOf[CosineSimilarity],
+      e => CosineSimilarity(e(0), e(1))),
+    ("graft_dot", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("graft_topk", classOf[TopKLong],
+      e => TopKLong.fromExprs(e).toAggregateExpression()),
+    ("graft_minhash", classOf[MinHashSig], e => MinHashSig(e(0))),
+    ("graft_shingles", classOf[ShingleHashes], e => ShingleHashes(e(0))),
+    ("graft_isect", classOf[SortedIntersectSize],
+      e => SortedIntersectSize(e(0), e(1))),
+    ("graft_termcounts", classOf[TermCounts], e => TermCounts(e(0))),
+    ("graft_simhash", classOf[SimHash], e => SimHash(e(0))),
     // Spark's own bloom-filter sketch expressions (the machinery behind
     // runtime row-group filters), surfaced as SQL functions so queries
     // can build a set-membership sketch over one relation and probe it
     // from another without a shuffle join: the aggregate emits a binary
     // sketch, the probe is a scan-side scalar — the classic "dedup the
     // new batch against a 100 TB corpus" shape.
-    GraftBridge.registerFunction(spark, "graft_bloom_agg", {
+    ("graft_bloom_agg", classOf[aggregate.BloomFilterAggregate], {
       case Seq(child) =>
         new aggregate.BloomFilterAggregate(child).toAggregateExpression()
       case Seq(child, n) =>
         new aggregate.BloomFilterAggregate(child, n).toAggregateExpression()
       case exprs => throw new IllegalArgumentException(
         s"graft_bloom_agg(xxhash64_col[, est_items]): got ${exprs.length} args")
-    })
-    GraftBridge.registerFunction(spark, "graft_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)))
-  }
+    }),
+    ("graft_might_contain", classOf[BloomFilterMightContain],
+      e => BloomFilterMightContain(e(0), e(1))))
+
+  /** register [[sqlFunctions]] for SQL use in a running session */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    // NOTE: registers FUNCTIONS only. The RankToArgMin optimizer rule
+    // is a query-semantics-level extension — activate it explicitly
+    // via `spark.sql.extensions=graft.GraftExtensions` or
+    // `graft.GraftOptimizations.install(spark)`, never as a side
+    // effect of function registration.
+    sqlFunctions.foreach { case (name, _, build) =>
+      GraftBridge.registerFunction(spark, name, build)
+    }
 }

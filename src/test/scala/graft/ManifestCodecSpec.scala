@@ -247,14 +247,14 @@ class ManifestCodecSpec extends AnyFunSuite {
       assert(new graft.api.Repo(root, spark).collection("cc").get
         .manifest().get.size == 2000)
       val s = new graft.api.Repo(root, spark).collection("cc").get
-      val parses0 = ManifestCodec.chunkParses.get()
+      val parses0 = ManifestCodec.chunkCache.misses
       s.commitManifest(Manifest.spliceWrite(s.manifest().get,
         Seq(SegmentMeta("big", IndexKey(Vector(55000L)),
           IndexKey(Vector(55100L)), Closed.Left, 100L,
           Vector("seg/cc/dd/new.parquet")))), Seq(leaf1.child))
       val c2 = new graft.api.Repo(root, spark).collection("cc").get
       assert(c2.manifest().get.size == 2000)
-      val parsesMoved = ManifestCodec.chunkParses.get() - parses0
+      val parsesMoved = ManifestCodec.chunkCache.misses - parses0
       assert(parsesMoved <= 4,
         s"decode of a 1-splice-moved leaf parsed $parsesMoved chunks")
 
@@ -262,11 +262,11 @@ class ManifestCodecSpec extends AnyFunSuite {
       // the covering chunks (+1 straddle) are parsed, not all ~32
       graft.api.Collection.clearManifestCache()
       ManifestCodec.clearChunkCache()
-      val p0 = ManifestCodec.chunkParses.get()
+      val p0 = ManifestCodec.chunkCache.misses
       val got = new graft.api.Repo(root, spark).collection("cc").get
         .series("big").segments(start = 100000L, stop = 100300L)
       assert(got.length >= 3 && got.length <= 4)
-      val lazyParses = ManifestCodec.chunkParses.get() - p0
+      val lazyParses = ManifestCodec.chunkCache.misses - p0
       assert(lazyParses <= 3,
         s"cold point query parsed $lazyParses chunks (expected <= 3)")
 
@@ -276,7 +276,7 @@ class ManifestCodecSpec extends AnyFunSuite {
       c2.restore(leaf1.child)
       val c3 = new graft.api.Repo(root, spark).collection("cc").get
       assert(c3.manifest().get.rows ==
-        graft.api.Collection.peekManifestCache(leaf1.child)
+        graft.api.Collection.manifestCache.peek(leaf1.child)
           .map(_.rows).getOrElse(c3.decodeCached(leaf1).rows))
       val nRevs = c3.changelog.log().length
       c3.restore(c3.changelog.leaf().get.child) // no-op

@@ -172,23 +172,23 @@ class ManifestScaleSpec extends AnyFunSuite {
 
     // a fresh statement on the MOVED leaf re-parses only those chunks
     graft.api.Collection.clearManifestCache() // chunk cache stays warm
-    val p0 = ManifestCodec.chunkParses.get()
+    val p0 = ManifestCodec.chunkCache.misses
     val c2 = new graft.api.Repo(root, spark).collection("cc").get
     assert(c2.manifest().get.size == big.size)
-    val reparsed = ManifestCodec.chunkParses.get() - p0
+    val reparsed = ManifestCodec.chunkCache.misses - p0
     assert(reparsed <= 3,
       s"moved-leaf decode re-parsed $reparsed chunks (expected <= 3)")
 
     // stone-cold point query: root + covering chunks only
     graft.api.Collection.clearManifestCache()
     ManifestCodec.clearChunkCache()
-    val q0 = ManifestCodec.chunkParses.get()
+    val q0 = ManifestCodec.chunkCache.misses
     val t1 = System.nanoTime()
     val got = new graft.api.Repo(root, spark).collection("cc").get
       .series("_").segments(start = 7000000L, stop = 7000300L)
     val coldMs = (System.nanoTime() - t1) / 1e6
     assert(got.length >= 3 && got.length <= 4)
-    val coldParses = ManifestCodec.chunkParses.get() - q0
+    val coldParses = ManifestCodec.chunkCache.misses - q0
     assert(coldParses <= 3,
       s"cold point query parsed $coldParses of ~25 chunks")
     // full cold decode is ~4 s here; the pruned path is ~50 ms
@@ -213,23 +213,23 @@ class ManifestScaleSpec extends AnyFunSuite {
     graft.api.Collection.clearManifestCache()
     val r1 = new graft.api.Repo(root, spark)
     assert(r1.collection("c").get.series("s").frame().count() == 2)
-    val afterFirst = graft.api.Collection.manifestDecodes.get()
+    val afterFirst = graft.api.Collection.manifestCache.misses
     // the SQL-door pattern: a SECOND fresh Repo+Collection handle on
     // the unchanged leaf must decode NOTHING (JVM-wide content-
     // addressed hit) — per-statement driver cost O(1) in manifest size
     val r2 = new graft.api.Repo(root, spark)
     assert(r2.collection("c").get.series("s").frame().count() == 2)
-    assert(graft.api.Collection.manifestDecodes.get() == afterFirst,
+    assert(graft.api.Collection.manifestCache.misses == afterFirst,
       "fresh handle on an unchanged leaf must not re-decode the manifest")
     // a commit through ANY handle moves the leaf: the next fresh
     // handle sees the new data at once (leaf listing is never cached)
     // and pays exactly one new decode for the new revision id
     new graft.api.Repo(root, spark).collection("c").get
       .series("s").write(Seq((3L, 3.0)).toDF("ts", "v"))
-    val afterWrite = graft.api.Collection.manifestDecodes.get()
+    val afterWrite = graft.api.Collection.manifestCache.misses
     val r3 = new graft.api.Repo(root, spark)
     assert(r3.collection("c").get.series("s").frame().count() == 3)
-    assert(graft.api.Collection.manifestDecodes.get() > afterWrite,
+    assert(graft.api.Collection.manifestCache.misses > afterWrite,
       "a changed leaf must be decoded fresh (new revision id)")
   }
 
@@ -281,23 +281,23 @@ class ManifestScaleSpec extends AnyFunSuite {
 
     // fresh statement on the moved leaf: O(touched) re-parse
     graft.api.Collection.clearManifestCache() // chunk cache stays warm
-    val p0 = ManifestCodec.chunkParses.get()
+    val p0 = ManifestCodec.chunkCache.misses
     assert(new graft.api.Repo(root, spark).collection("cc").get
       .manifest().get.size == n10)
-    val reparsed = ManifestCodec.chunkParses.get() - p0
+    val reparsed = ManifestCodec.chunkCache.misses - p0
     assert(reparsed <= 3,
       s"moved-leaf decode re-parsed $reparsed of ~245 chunks")
 
     // stone-cold bounded read: covering chunks + straddle only
     graft.api.Collection.clearManifestCache()
     ManifestCodec.clearChunkCache()
-    val q0 = ManifestCodec.chunkParses.get()
+    val q0 = ManifestCodec.chunkCache.misses
     val t1 = System.nanoTime()
     val got = new graft.api.Repo(root, spark).collection("cc").get
       .series("_").segments(start = 70000000L, stop = 70000300L)
     val coldMs = (System.nanoTime() - t1) / 1e6
     assert(got.length >= 3 && got.length <= 4)
-    val coldParses = ManifestCodec.chunkParses.get() - q0
+    val coldParses = ManifestCodec.chunkCache.misses - q0
     assert(coldParses <= 3,
       s"cold point query parsed $coldParses of ~245 chunks")
     assert(coldMs < 2500, f"cold pruned point query took $coldMs%.0f ms")
@@ -307,11 +307,11 @@ class ManifestScaleSpec extends AnyFunSuite {
     // (+ none to spare), so the walk stops immediately
     graft.api.Collection.clearManifestCache()
     ManifestCodec.clearChunkCache()
-    val tq0 = ManifestCodec.chunkParses.get()
+    val tq0 = ManifestCodec.chunkCache.misses
     val tailSegs = new graft.api.Repo(root, spark).collection("cc").get
       .prunedTailSegments("_", None, None, graft.core.Closed.Left,
         None, need = 500L)
-    val tailParses = ManifestCodec.chunkParses.get() - tq0
+    val tailParses = ManifestCodec.chunkCache.misses - tq0
     assert(tailSegs.nonEmpty)
     assert(tailSegs.last.stop == IndexKey(Vector(100000000L)))
     assert(tailParses <= 2,
@@ -321,11 +321,11 @@ class ManifestScaleSpec extends AnyFunSuite {
     // bound probe — it used to decode the WHOLE manifest)
     graft.api.Collection.clearManifestCache()
     ManifestCodec.clearChunkCache()
-    val hq0 = ManifestCodec.chunkParses.get()
+    val hq0 = ManifestCodec.chunkCache.misses
     val headSegs = new graft.api.Repo(root, spark).collection("cc").get
       .prunedHeadSegments("_", None, None, graft.core.Closed.Left,
         None, need = 1L)
-    val headParses = ManifestCodec.chunkParses.get() - hq0
+    val headParses = ManifestCodec.chunkCache.misses - hq0
     assert(headSegs.nonEmpty)
     assert(headSegs.head.start == IndexKey(Vector(0L)))
     assert(headParses <= 2,
@@ -384,12 +384,12 @@ class ManifestScaleSpec extends AnyFunSuite {
     // a second DDL through the seeded cache stays O(touched),
     // decodes nothing (the SQL door's fresh-statement pattern) and
     // pays NO full key sort (the cached sorted-key array splices)
-    val parses0 = graft.api.RegistryCodec.chunkParses.get()
+    val parses0 = graft.api.RegistryCodec.chunkCache.misses
     val enc0 = graft.api.RegistryCodec.chunkEncodes.get()
     val sorts0 = graft.api.Repo.regFullSorts.get()
     repo.createCollection(schema, "zz-two-more")
     assert(graft.api.RegistryCodec.chunkEncodes.get() - enc0 <= 3)
-    assert(graft.api.RegistryCodec.chunkParses.get() - parses0 == 0,
+    assert(graft.api.RegistryCodec.chunkCache.misses - parses0 == 0,
       "warm DDL must not re-decode any chunk")
     assert(graft.api.Repo.regFullSorts.get() == sorts0,
       "warm DDL must not re-sort the key space")
@@ -448,7 +448,7 @@ class ManifestScaleSpec extends AnyFunSuite {
     graft.api.Collection.clearManifestCache()
     ManifestCodec.clearChunkCache()
     graft.api.Repo.clearRegDecodeCache()
-    val p0 = ManifestCodec.chunkParses.get()
+    val p0 = ManifestCodec.chunkCache.misses
     val t0 = System.nanoTime()
     val df = spark.sql(
       s"""SELECT sum(v) AS sv, count(*) AS n FROM $cat.cc.`_`
@@ -468,7 +468,7 @@ class ManifestScaleSpec extends AnyFunSuite {
       s"scan opened $scanned of $n10 segments")
     assert(graft.sources.GraftScanProbe.lastSegmentsTotal == n10)
     // planning parsed only the covering manifest chunks, not ~245
-    val parses = ManifestCodec.chunkParses.get() - p0
+    val parses = ManifestCodec.chunkCache.misses - p0
     assert(parses <= 3,
       s"cold SQL planning parsed $parses manifest chunks")
     assert(planMs < 5000,
@@ -498,7 +498,7 @@ class ManifestScaleSpec extends AnyFunSuite {
     // fresh chunks, and a wall-clock ceiling with slack for CI noise
     repo.createCollection(schema, "zz-warm")
     val sorts0 = graft.api.Repo.regFullSorts.get()
-    val parses0 = graft.api.RegistryCodec.chunkParses.get()
+    val parses0 = graft.api.RegistryCodec.chunkCache.misses
     val enc0 = graft.api.RegistryCodec.chunkEncodes.get()
     val t1 = System.nanoTime()
     repo.createCollection(schema, "zz-one-more")
@@ -507,7 +507,7 @@ class ManifestScaleSpec extends AnyFunSuite {
       f"freshChunks=${graft.api.RegistryCodec.chunkEncodes.get() - enc0}")
     assert(graft.api.Repo.regFullSorts.get() == sorts0,
       "a warm DDL at 1e6 entries must not sort the key space")
-    assert(graft.api.RegistryCodec.chunkParses.get() - parses0 == 0)
+    assert(graft.api.RegistryCodec.chunkCache.misses - parses0 == 0)
     assert(graft.api.RegistryCodec.chunkEncodes.get() - enc0 <= 3)
     // same one-retry noise policy as the 1e5 pin (round 16): the
     // counter pins above are unconditional; only the wall clock gets

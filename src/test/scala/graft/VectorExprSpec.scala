@@ -299,6 +299,11 @@ class VectorExprSpec extends AnyFunSuite {
           .stripMargin)
         .collect()(0).getDouble(0)
       assert(math.abs(out - 1.0) < 1e-9)
+      // every function of the one table resolves through the extension
+      // alone (s2 never ran VectorFunctions.register)
+      val missing = graft.functions.VectorFunctions.sqlFunctions
+        .map(_._1).filterNot(s2.catalog.functionExists)
+      assert(missing.isEmpty, s"not injected: $missing")
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)
