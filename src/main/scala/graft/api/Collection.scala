@@ -77,7 +77,6 @@ class Collection(val repo: Repo, val label: String, val path: String,
     require(colMap.isEmpty && defaults.isEmpty,
       "ingestGrouped targets non-cloned collections (bulk ingest " +
         "belongs in the source collection; clones share its segments)")
-    val store = repo.store
     val idxCols = schema.idxNames.map(col)
     val data = df.select(col(byCol).cast("string").as("_graft_label") +:
       schema.cols.map(c =>
@@ -86,44 +85,69 @@ class Collection(val repo: Repo, val label: String, val path: String,
     val sorted = data.repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
 
+    val writes = staged(labeled = true) { p =>
+      val stats =
+        try SegmentWriter.writeJob(sorted, p)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            // task-side validation (null labels) keeps its API-level
+            // exception type instead of Spark's job-failure wrapper
+            Iterator.iterate(e.getCause)(_.getCause)
+              .takeWhile(_ != null).take(8)
+              .collectFirst { case ia: IllegalArgumentException =>
+                throw new IllegalArgumentException(
+                  s"${ia.getMessage} (group column '$byCol')") }
+            throw e
+        }
+      stats.groupBy(_._1).toSeq.sortBy(_._1).map { case (lbl, st) =>
+        lbl -> new Series(this, lbl).sealSegments(st.map(_._2),
+          null, null, Closed.Both)
+      }
+    }
+    if (writes.nonEmpty) synchronized {
+      val rows = writes.map(_._2)
+      if (batch != null) batch ++= rows else commitBatch(rows)
+    }
+    writes.map(_._1)
+  }
+
+  /** Staging for one write, shared by every write tier.
+    *
+    * The at-rest codec is `spark.graft.segment.codec` (default zstd):
+    * a 100 TB corpus is storage- and scan-IO-bound, and zstd buys ~2x
+    * the ratio of snappy at comparable decode speed — the reference
+    * makes the same call with blosc(zstd) per column
+    * (lakota/schema.py). Reads are codec-agnostic (parquet footers
+    * name the codec per column chunk) EXCEPT for the `+bss` encoding
+    * mode (BYTE_STREAM_SPLIT float pages), which Spark's vectorized
+    * reader cannot decode: a `+bss` codec flips the collection's
+    * sticky registry hint so every frame() read routes through the
+    * engine's row-capable reader — BEFORE anything is written, so a
+    * failure is pessimistic, never a crash-on-read.
+    *
+    * The staging dir is a fresh `tmp/<hextime>-<uuid>`: the hextime
+    * prefix is its creation time, which gc's staging sweep
+    * ([[Repo.gc]]) ages out when a writer dies before commit. */
+  private[graft] def taskParams(verifySorted: Boolean = false,
+      labeled: Boolean = false): SegmentWriter.TaskParams = {
+    val codec = repo.spark.conf.get("spark.graft.segment.codec", "zstd")
+    if (codec.toLowerCase(java.util.Locale.ROOT).endsWith("+bss"))
+      enableBss()
     val tmpRel = s"tmp/${Hash.hextime()}-" +
       java.util.UUID.randomUUID().toString.take(12)
-    val stats =
-      try graft.core.SegmentWriter.writeJobGrouped(sorted, schema,
-        schema.names, tmpRel, store.uri(tmpRel), pageLen,
-        {
-          val codec =
-            repo.spark.conf.get("spark.graft.segment.codec", "zstd")
-          if (codec.toLowerCase(java.util.Locale.ROOT).endsWith("+bss"))
-            enableBss() // sticky read-routing hint (see Series.segmentCodec)
-          codec
-        })
-      catch {
-        case e: Throwable =>
-          store.rm(tmpRel, recursive = true)
-          // task-side validation (null labels) keeps its API-level
-          // exception type instead of Spark's job-failure wrapper
-          Iterator.iterate(e.getCause)(_.getCause)
-            .takeWhile(_ != null).take(8)
-            .collectFirst { case ia: IllegalArgumentException =>
-              throw new IllegalArgumentException(
-                s"${ia.getMessage} (group column '$byCol')") }
-          throw e
-      }
-    val byLabel = stats.groupBy(_._1)
-    val labels = byLabel.keys.toSeq.sorted
-    val writes =
-      try labels.map { lbl =>
-        new Series(this, lbl).sealSegments(byLabel(lbl).map(_._2),
-          null, null, Closed.Both)
-      } catch {
-        case e: Throwable => store.rm(tmpRel, recursive = true); throw e
-      }
-    store.rm(tmpRel, recursive = true)
-    if (writes.nonEmpty) synchronized {
-      if (batch != null) batch ++= writes else commitBatch(writes)
-    }
-    labels
+    SegmentWriter.TaskParams(schema,
+      schema.names.map(physOf).toIndexedSeq, tmpRel,
+      repo.store.uri(tmpRel), pageLen, codec, verifySorted, labeled)
+  }
+
+  /** `body` over fresh [[taskParams]], with the staging dir removed on
+    * every path: sealing moved the files `body` kept, and a failed
+    * write (a rejected presorted declaration, a failed task or chunk)
+    * leaves nothing behind for gc to age out. */
+  private[graft] def staged[T](verifySorted: Boolean = false,
+      labeled: Boolean = false)(body: SegmentWriter.TaskParams => T): T = {
+    val p = taskParams(verifySorted, labeled)
+    try body(p) finally repo.store.rm(p.tmpRel, recursive = true)
   }
 
   def kvSeries(name: String): KVSeries = new KVSeries(this, name)

@@ -26,26 +26,6 @@ class Series(val collection: Collection, val label: String) {
   /** rows per segment parquet file (reference page_len=500_000) */
   def pageLen: Long = collection.pageLen
 
-  /** At-rest parquet codec for segment files (spark.graft.segment.codec,
-    * default zstd): a 100 TB corpus is storage- and scan-IO-bound, and
-    * zstd buys ~2x the ratio of snappy at comparable decode speed — the
-    * reference makes the same call with blosc(zstd) per column
-    * (lakota/schema.py). Read path is codec-agnostic (parquet footers
-    * name the codec per column chunk), so mixed-codec series stay
-    * readable after a config change — EXCEPT the `+bss` ENCODING mode
-    * (BYTE_STREAM_SPLIT float pages), which Spark's vectorized reader
-    * cannot decode: the first `+bss` write flips the collection's
-    * sticky registry hint so every frame() read (this handle and
-    * fresh ones alike) routes through the engine's row-capable
-    * reader. Flipped BEFORE the write: pessimistic on failure, never
-    * a crash-on-read. */
-  private def segmentCodec: String = {
-    val codec = spark.conf.get("spark.graft.segment.codec", "zstd")
-    if (codec.toLowerCase(java.util.Locale.ROOT).endsWith("+bss"))
-      collection.enableBss()
-    codec
-  }
-
   // ------------------------------------------------------------------
   // bounds helpers
   // ------------------------------------------------------------------
@@ -136,14 +116,19 @@ class Series(val collection: Collection, val label: String) {
       def tinyWrite(probe: Array[Row]): Unit = {
         if (collection.embedMaxSize > 0 && collection.defaults.isEmpty &&
             writeInline(probe, startK, stopK, closed, root)) ()
-        else if (probe.nonEmpty)
+        else if (probe.nonEmpty) {
+          val toCatalyst = org.apache.spark.sql.catalyst
+            .CatalystTypeConverters
+            .createToCatalystConverter(schema.sparkSchema)
           // NOT verifySorted: the probe collect flattens partitions in
           // pid order, and the presorted contract is per-partition
           // order + range disjointness, not pid order — sorting a
           // <=256-row frame costs nothing and accepts every valid
           // declaration the distributed tier accepts
-          writeSmallFile(probe, startK, stopK, closed, root)
-        else {
+          writeSmallRows(Array(probe.map(r => toCatalyst(r)
+            .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])),
+            startK, stopK, closed, root, verifySorted = false)
+        } else {
           // empty frame: tombstone (same contract as the parquet path)
           require(startK != null && stopK != null,
             "empty write needs explicit start/stop bounds")
@@ -158,12 +143,12 @@ class Series(val collection: Collection, val label: String) {
       // one thread finishes in tens of ms — the reference's
       // bulk_write-at-100k regime. Gate on the OPTIMIZER'S size
       // estimate so big inputs never pay a wasted probe: only plans
-      // estimated under driverWriteBytes (cached relations report
+      // estimated under DriverWriteBytes (cached relations report
       // measured cache size, file scans their on-disk bytes) are
       // probed — with ONE incremental CollectLimit of InternalRows
-      // that subsumes the tiny probe. Digest + parquet format are
-      // identical to the bulk path, so content addresses still dedupe
-      // across tiers. At cluster scale this is strictly the right
+      // that subsumes the tiny probe. Both tiers write through
+      // SegmentWriter.TaskSegmentWriter, so content addresses still
+      // dedupe across them. At cluster scale this is strictly the right
       // trade: a sub-segment write was never parallel work.
       val driverRows = math.min(pageLen, spark.conf
         .get("spark.graft.driverWriteRows", "250000").toLong)
@@ -172,8 +157,7 @@ class Series(val collection: Collection, val label: String) {
           try data.queryExecution.optimizedPlan.stats.sizeInBytes
           catch { case scala.util.control.NonFatal(_) =>
             BigInt(Long.MaxValue) }
-        estBytes <= spark.conf
-          .get("spark.graft.driverWriteBytes", "33554432").toLong
+        estBytes <= Series.DriverWriteBytes
       }
 
       val probeOpt: Option[Array[Row]] = localInputRows(df).orElse {
@@ -195,7 +179,6 @@ class Series(val collection: Collection, val label: String) {
         // bounds the data. A misestimate falls through to the
         // distributed path below, cost bounded by the per-partition
         // cap.
-        val tColl = System.nanoTime()
         val cap = driverRows.toInt + 1
         val rdd = data.queryExecution.toRdd
         val parts = Array.fill(math.max(rdd.getNumPartitions, 1))(
@@ -210,10 +193,6 @@ class Series(val collection: Collection, val label: String) {
                 res: Array[org.apache.spark.sql.catalyst.InternalRow]) =>
               parts(pid) = res)
         val irows = parts.flatten
-        if (sys.env.contains("GRAFT_SMALLWRITE_PROF"))
-          System.err.println(f"[smallwrite] collect " +
-            f"${(System.nanoTime() - tColl) / 1e6}%.1f ms " +
-            f"(${irows.length} rows)")
         if (irows.length <= collection.embedProbeRows) {
           // tiny after all — rejoin the embed/inline path
           val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -244,7 +223,7 @@ class Series(val collection: Collection, val label: String) {
     // CAPPED by an input-size estimate (round 17, ADVICE): a write
     // just over the ~32 MB driver gate must not fan out to a
     // production session's thousands of shuffle partitions — one
-    // near-empty segment file per task. ceil(est/writeTaskBytes)
+    // near-empty segment file per task. ceil(est/WriteTaskBytes)
     // keeps small writes at a sane file count while a 2 MB-per-task
     // target can never re-create the serialized-encode failure the
     // pin exists to prevent (4 MB measured a 15-30% encode-width
@@ -265,8 +244,7 @@ class Series(val collection: Collection, val label: String) {
            try data.queryExecution.optimizedPlan.stats.sizeInBytes
            catch { case scala.util.control.NonFatal(_) =>
              BigInt(Long.MaxValue) }
-         val target = data.sparkSession.conf
-           .get("spark.graft.writeTaskBytes", (2L << 20).toString).toLong
+         val target = Series.WriteTaskBytes
          val width = ((estBytes + target - 1) / target)
            .min(BigInt(math.max(1, maxW))).max(BigInt(1)).toInt
          data.repartitionByRange(width, idxCols: _*)
@@ -275,34 +253,25 @@ class Series(val collection: Collection, val label: String) {
         .select(schema.cols.map(c =>
           col(c.name).as(collection.physOf(c.name))): _*)
 
-    val tmpRel = s"tmp/${Hash.hextime()}-${java.util.UUID.randomUUID().toString.take(12)}"
     // ONE distributed job: every task writes its ~pageLen-row files
     // (engine parquet format: INT64-micros timestamps, v2 pages —
     // see graft.core.SegmentWriter) and returns that file's
     // (cnt, min, max, content hash) inline, so the write needs no
     // read-back scan, no footer probe, and no global Observation.
-    // Emptiness falls out of it: zero stat rows = empty write.
-    val stats = graft.core.SegmentWriter.writeJob(sorted, schema,
-      schema.names.map(collection.physOf), tmpRel, store.uri(tmpRel),
-      pageLen, segmentCodec, verifySorted = presorted)
-    if (stats.isEmpty) {
-      store.rm(tmpRel, recursive = true)
+    // Emptiness falls out of it: zero stat rows = empty write. A
+    // rejected presorted declaration (in-task, or an overlap at seal)
+    // leaves no staged file behind.
+    val rows = collection.staged(verifySorted = presorted) { p =>
+      val stats = SegmentWriter.writeJob(sorted, p).map(_._2)
+      if (stats.isEmpty) Seq.empty
+      else sealSegments(stats, startK, stopK, closed)
+    }
+    if (rows.isEmpty) {
       require(startK != null && stopK != null,
         "empty write needs explicit start/stop bounds")
       commitRows(Seq(SegmentMeta(label, startK, stopK, closed, 0L,
         Vector.empty)), root)
-      return
-    }
-
-    // a rejected presorted declaration (overlap at seal) must not
-    // leak the staged dataset — clean the tmp dir on ANY failure
-    val rows =
-      try sealSegments(stats, startK, stopK, closed)
-      catch {
-        case e: Throwable => store.rm(tmpRel, recursive = true); throw e
-      }
-    store.rm(tmpRel, recursive = true)
-    commitRows(rows, root)
+    } else commitRows(rows, root)
   }
 
   /** Per-file write stats → sorted, content-addressed segment rows
@@ -326,9 +295,10 @@ class Series(val collection: Collection, val label: String) {
       case _ => ()
     }
 
-    // content-address each part file into the segment store. Every
-    // path (inline probe, driver-local small file, bulk job,
-    // ingestGrouped read-back) computes `hash` as the SAME
+    // content-address each part file into the segment store. One
+    // writer, SegmentWriter.TaskSegmentWriter, computes every staged
+    // file's `hash` (driver-tier chunks, the bulk job, the grouped
+    // ingest and the DataSourceV2 writers alike) as the
     // order-insensitive sum(pmod(xxhash64(cols), 2^31-1)) over THAT
     // FILE's rows, so the digest identifies the file's actual
     // interior — identical content dedupes across paths and writes,
@@ -505,35 +475,13 @@ class Series(val collection: Collection, val label: String) {
     // metadata sum pushdown then cover fragmented tiny-write series)
     val valCols = srcIdx.zipWithIndex
       .collect { case ((c, _), j) if !c.idx => (c, j) }
-    var vstats = Map.empty[String, (Any, Any)]
-    var vsums = Map.empty[String, Long]
-    valCols.foreach { case (c, j) =>
-      val dt = c.dtype
-      var mnV: Any = null; var mxV: Any = null
-      var bad = false
-      var sum = 0L; var sumN = 0L; var sumBad = dt != GType.IntT
-      sortedRows.foreach { r =>
-        val v = r(j)
-        if (!bad && v != null) {
-          if (dt == GType.FloatT &&
-              java.lang.Double.isNaN(v.asInstanceOf[Double])) {
-            bad = true; mnV = null; mxV = null
-          } else {
-            if (mnV == null || dt.cmp(v, mnV) < 0) mnV = v
-            if (mxV == null || dt.cmp(v, mxV) > 0) mxV = v
-            if (!sumBad) {
-              try { sum = Math.addExact(sum, v.asInstanceOf[Long]);
-                sumN += 1 }
-              catch { case _: ArithmeticException => sumBad = true }
-            }
-          }
-        }
-      }
-      if (!bad && mnV != null)
-        vstats += collection.physOf(c.name) -> ((mnV, mxV))
-      if (!sumBad && sumN > 0)
-        vsums += collection.physOf(c.name) -> sum
-    }
+    val vals = new SegmentWriter.ValueStats(
+      valCols.map(_._1.dtype).toIndexedSeq,
+      valCols.map(c => collection.physOf(c._1.name)).toIndexedSeq)
+    sortedRows.foreach(r =>
+      valCols.indices.foreach(k => vals.observe(k, r(valCols(k)._2))))
+    val vstats = vals.stats
+    val vsums = vals.sums
     commitRows(Seq(SegmentMeta(label,
       Option(startK).getOrElse(mn), Option(stopK).getOrElse(mx),
       closed, sortedRows.length.toLong, Vector.empty,
@@ -543,46 +491,20 @@ class Series(val collection: Collection, val label: String) {
     true
   }
 
-  /** One driver-sorted single-file segment for a fully-collected small
-    * frame, written WITHOUT any Spark job: the rows are already on the
-    * driver, so both the content digest (the same order-insensitive
-    * xxhash64 aggregate as the bulk path, evaluated via the identical
-    * Catalyst expression) and the parquet bytes (parquet-mr writer,
-    * same INT64-micros/DATE/BINARY-UTF8 encodings Spark's own writer
-    * and vectorized reader use) are produced in-process. A tiny commit
-    * therefore costs one local parquet flush + one metadata commit —
-    * the regime the reference's bench_fragmentation.py measures, and
-    * the shape that keeps a high-frequency tiny-tick ingest from
-    * serializing on per-write job scheduling at cluster scale. Digest
-    * formula matches the bulk path, so identical content dedupes
-    * across both. */
-  private def writeSmallFile(probe: Array[Row], startK: IndexKey,
-      stopK: IndexKey, closed: Closed, root: Boolean,
-      verifySorted: Boolean = false): Unit = {
-    // physical column names, like the big-write path (the converter
-    // only consults field TYPES, which renames don't touch)
-    val physStruct = org.apache.spark.sql.types.StructType(
-      schema.sparkSchema.fields.map(f =>
-        f.copy(name = collection.physOf(f.name))))
-    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(physStruct)
-    writeSmallRows(Array(probe.map(r => toCatalyst(r)
-      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])),
-      startK, stopK, closed, root, verifySorted)
-  }
-
-  /** InternalRow core of the driver-local write — the driver-tier
-    * collect lands here directly (no external-Row round trip), one
-    * inner array per source partition. Digest formula and parquet
-    * format match the bulk path exactly, so identical content dedupes
-    * across tiers. */
+  /** The driver tier: a fully-collected small frame (one inner array
+    * per source partition) sorted on the driver and written WITHOUT
+    * any Spark job — a tiny commit costs one local parquet flush plus
+    * one metadata commit, the regime the reference's
+    * bench_fragmentation.py measures, and the shape that keeps a
+    * high-frequency tiny-tick ingest from serializing on per-write
+    * job scheduling at cluster scale. Each chunk is written by the
+    * same [[SegmentWriter.TaskSegmentWriter]] a bulk-job task uses,
+    * so parquet format, digest and value stats match the bulk path
+    * and identical content dedupes across tiers. */
   private def writeSmallRows(
       parts: Array[Array[org.apache.spark.sql.catalyst.InternalRow]],
       startK: IndexKey, stopK: IndexKey, closed: Closed, root: Boolean,
       verifySorted: Boolean, pageChunks: Boolean = false): Unit = {
-    val physStruct = org.apache.spark.sql.types.StructType(
-      schema.sparkSchema.fields.map(f =>
-        f.copy(name = collection.physOf(f.name))))
     val dtypes = schema.cols.map(_.dtype).toIndexedSeq
     val idxPos = schema.cols.zipWithIndex.filter(_._1.idx)
       .map(_._2).toArray
@@ -598,13 +520,6 @@ class Series(val collection: Collection, val label: String) {
           case GType.StrT   => ir.getUTF8String(i).toString
         }
       }.toVector)
-    val prof = sys.env.contains("GRAFT_SMALLWRITE_PROF")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (prof) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[smallwrite] $tag ${(t1 - t0) / 1e6}%.1f ms")
-      t0 = t1
-    }
     // the presorted contract is per PARTITION order + range
     // disjointness, not pid order: concatenating partitions by their
     // first key makes the global order check below equivalent to it
@@ -713,126 +628,49 @@ class Series(val collection: Collection, val label: String) {
             java.util.Comparator[Integer])
         boxed.map(_.intValue)
       }
-    lap("keys+sort")
     // Parquet ENCODE dominates this path (~100-200 ms for 10^5 rows
     // single-threaded): chunk the sorted rows into ≤ chunkRows files
     // written by PARALLEL driver threads — still no Spark job, and
-    // each chunk computes its own per-file stats + content hash
-    // exactly like one bulk-job task, so sealing + digests are
-    // identical to the distributed tier (straddled duplicate keys at
-    // chunk boundaries included, via the shared sealSegments).
+    // each chunk is one TaskSegmentWriter, exactly like one bulk-job
+    // task, so sealing + digests are identical to the distributed
+    // tier (straddled duplicate keys at chunk boundaries included,
+    // via the shared sealSegments).
     // chunk size: capped above (file granularity) AND sized down to
     // keep ~8 writer threads busy on mid-size frames — a 58k-row
     // frame writes 8 parallel ~7k-row files instead of 2 serial-ish
     // 32k ones, without exploding small-write file counts (≤ 8
     // files/write either way)
-    val chunkCap = spark.conf
-      .get("spark.graft.driverWriteChunkRows", "32768").toInt
     // pageChunks: maintenance rewrites (defrag) exist to COALESCE —
     // chunk at pageLen (the driver-tier gate already bounds n to one
     // page, so this is one file), never the throughput-oriented 8-way
     // split that would hand defrag's output right back to defrag
     val chunkRows =
       if (pageChunks) math.min(pageLen, Int.MaxValue.toLong).toInt.max(1)
-      else math.min(chunkCap.toLong, math.min(pageLen,
+      else math.min(Series.DriverWriteChunkRows.toLong, math.min(pageLen,
         math.max(4096L, (n + 7L) / 8L))).toInt.max(1)
     val nChunks = math.max(1, (n + chunkRows - 1) / chunkRows)
-    val fieldTypes = physStruct.fields.map(_.dataType)
-    val physNames = physStruct.fields.map(_.name).toSeq
     val hconf = spark.sessionState.newHadoopConf()
-    val M = 2147483647L
-    val tmpRel = s"tmp/${Hash.hextime()}-${java.util.UUID.randomUUID().toString.take(12)}"
-    def writeChunk(ci: Int): graft.core.SegmentWriter.FileStat = {
-      val lo = ci * chunkRows
-      val hi = math.min(n, lo + chunkRows)
-      var hash = 0L
-      // value-column (min, max) — same data-skipping stats as the
-      // bulk tier (NaN poisons a float column, nulls skipped)
-      val valPos = schema.cols.zipWithIndex.filterNot(_._1.idx)
-        .map(_._2).toArray
-      val vMin = new Array[Any](valPos.length)
-      val vMax = new Array[Any](valPos.length)
-      val vBad = new Array[Boolean](valPos.length)
-      val vSum = new Array[Long](valPos.length)
-      val vSumN = new Array[Long](valPos.length)
-      val vSumBad = new Array[Boolean](valPos.length)
-      var r = lo
-      while (r < hi) {
-        val ir = irows(order(r))
-        var h = 42L
-        var i = 0
-        while (i < fieldTypes.length) {
-          if (!ir.isNullAt(i))
-            h = org.apache.spark.sql.catalyst.expressions
-              .XxHash64Function.hash(ir.get(i, fieldTypes(i)),
-                fieldTypes(i), h)
-          i += 1
-        }
-        hash += ((h % M) + M) % M
-        var j = 0
-        while (j < valPos.length) {
-          val ci2 = valPos(j)
-          if (!vBad(j) && !ir.isNullAt(ci2)) {
-            val dt = schema.cols(ci2).dtype
-            val v: Any = dt match {
-              case graft.core.GType.TimestampT |
-                   graft.core.GType.IntT => ir.getLong(ci2)
-              case graft.core.GType.DateT => ir.getInt(ci2).toLong
-              case graft.core.GType.FloatT => ir.getDouble(ci2)
-              case graft.core.GType.StrT =>
-                ir.getUTF8String(ci2).toString
-            }
-            if (dt == graft.core.GType.FloatT &&
-                java.lang.Double.isNaN(v.asInstanceOf[Double])) {
-              vBad(j) = true; vMin(j) = null; vMax(j) = null
-            } else {
-              if (vMin(j) == null || dt.cmp(v, vMin(j)) < 0) vMin(j) = v
-              if (vMax(j) == null || dt.cmp(v, vMax(j)) > 0) vMax(j) = v
-              if (dt == graft.core.GType.IntT && !vSumBad(j)) {
-                try {
-                  vSum(j) = Math.addExact(vSum(j), v.asInstanceOf[Long])
-                  vSumN(j) += 1
-                } catch {
-                  case _: ArithmeticException => vSumBad(j) = true
-                }
-              }
-            }
-          }
-          j += 1
-        }
-        r += 1
+    val rows = collection.staged() { p =>
+      def writeChunk(ci: Int): SegmentWriter.FileStat = {
+        val tw = new SegmentWriter.TaskSegmentWriter(p, hconf, ci, 0L)
+        try {
+          var r = ci * chunkRows
+          val hi = math.min(n, r + chunkRows)
+          while (r < hi) { tw.write(irows(order(r))); r += 1 }
+          tw.finish().head._2
+        } finally tw.closeQuiet()
       }
-      val vs = valPos.indices.collect {
-        case j if !vBad(j) && vMin(j) != null =>
-          physNames(valPos(j)) -> ((vMin(j), vMax(j)))
-      }.toMap
-      val sums = valPos.indices.collect {
-        case j if !vSumBad(j) && vSumN(j) > 0 =>
-          physNames(valPos(j)) -> vSum(j)
-      }.toMap
-      val rel = f"$tmpRel/part-d-$ci%04d.parquet"
-      graft.core.SegmentWriter.writeFile(
-        (lo until hi).iterator.map(j => irows(order(j))),
-        schema.cols, physNames, store.uri(rel), hconf, segmentCodec)
-      graft.core.SegmentWriter.FileStat(rel, (hi - lo).toLong,
-        keyOf(order(lo)), keyOf(order(hi - 1)), hash, vs, sums)
+      val stats: Seq[SegmentWriter.FileStat] =
+        if (nChunks == 1) Seq(writeChunk(0))
+        else {
+          import scala.jdk.CollectionConverters._
+          (0 until nChunks).toList.asJava.parallelStream()
+            .map[SegmentWriter.FileStat](writeChunk(_))
+            .collect(java.util.stream.Collectors.toList[
+              SegmentWriter.FileStat]).asScala.toSeq
+        }
+      sealSegments(stats, startK, stopK, closed)
     }
-    val stats: Seq[graft.core.SegmentWriter.FileStat] =
-      if (nChunks == 1) Seq(writeChunk(0))
-      else {
-        import scala.jdk.CollectionConverters._
-        (0 until nChunks).toList.asJava.parallelStream()
-          .map[graft.core.SegmentWriter.FileStat](writeChunk(_))
-          .collect(java.util.stream.Collectors.toList[
-            graft.core.SegmentWriter.FileStat]).asScala.toSeq
-      }
-    lap(s"parquet x$nChunks")
-    val rows =
-      try sealSegments(stats, startK, stopK, closed)
-      catch {
-        case e: Throwable => store.rm(tmpRel, recursive = true); throw e
-      }
-    store.rm(tmpRel, recursive = true)
     commitRows(rows, root)
   }
 
@@ -1370,6 +1208,17 @@ class Series(val collection: Collection, val label: String) {
     * used to pick write-partition granularity. */
   def interval(size: Long = 500000L): Option[String] =
     period().flatMap(p => Interval.bisect(p * size))
+}
+
+object Series {
+  /** driver-tier size gate: only inputs the optimizer estimates under
+    * this many bytes are probed for the driver tier */
+  private val DriverWriteBytes = 32L << 20
+  /** driver-tier chunk cap: rows per file of the parallel chunk write */
+  private val DriverWriteChunkRows = 32768
+  /** auto-sort write width: one task per this many estimated input
+    * bytes, capped by the session's shuffle parallelism */
+  private val WriteTaskBytes = 2L << 20
 }
 
 /** Natural calendar partition units (reference lakota/utils.py:289-304). */

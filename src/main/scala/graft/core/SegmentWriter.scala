@@ -19,9 +19,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 
 /** The engine's own parquet writer for segment files — used on BOTH
-  * the driver (tiny single-file commits) and executors (the bulk
-  * write job), so every segment in a store carries one uniform
-  * format regardless of which path produced it:
+  * the driver (the driver tier's chunk files) and executors (the bulk
+  * write job and the DataSourceV2 writers), all through
+  * [[SegmentWriter.TaskSegmentWriter]], so every segment in a store
+  * carries one uniform format and one content digest regardless of
+  * which path produced it:
   *
   *  - INT64 TIMESTAMP(MICROS, UTC) timestamps — NOT Spark's INT96
   *    default: INT96 has no usable column statistics, cannot
@@ -270,60 +272,33 @@ object SegmentWriter {
     b.build()
   }
 
-  /** Write a driver-local row batch as ONE file (the tiny-commit
-    * path). Caller computes its own stats. */
-  def writeFile(rows: Iterator[InternalRow], cols: Seq[ColDef],
-      physNames: Seq[String], uri: String, conf: Configuration,
-      codec: String): Unit = {
-    val w = open(cols, physNames, uri, conf, codec)
-    try rows.foreach(w.write) finally w.close()
-  }
-
   /** The bulk write: one distributed job over `sorted` (already
     * range-partitioned + sorted within partitions on the index
     * columns, projected to physical names in schema order). Each task
-    * streams its rows into ≤ pageLen-row files under `tmpUri` and
+    * streams its rows into ≤ pageLen-row files under `p.tmpUri` and
     * emits one [[FileStat]] per file; the returned stats are the
     * write's ONLY metadata pass. At cluster scale this is
     * embarrassingly parallel: no driver coordination beyond the
     * final small collect of one stat row per ~pageLen rows.
+    *
+    * A `labeled` write ([[graft.api.Collection.ingestGrouped]])
+    * carries a leading STRING label column (row layout
+    * `[label, data cols…]`, sorted by (label, index…)): tasks roll
+    * files on label change OR pageLen, and each stat comes back
+    * tagged with its label — so "split this frame into 10^5 series"
+    * is ONE job with no read-back. Unlabeled stats carry a null
+    * label.
     */
-  def writeJob(sorted: DataFrame, gschema: GSchema,
-      physNames: Seq[String], tmpRel: String, tmpUri: String,
-      pageLen: Long, codec: String,
-      verifySorted: Boolean = false): Seq[FileStat] =
-    writeJobImpl(sorted, gschema, physNames, tmpRel, tmpUri, pageLen,
-      codec, verifySorted, labeled = false).map(_._2)
-
-  /** Multi-series variant for [[graft.api.Collection.ingestGrouped]]:
-    * the input carries a leading STRING label column (row layout
-    * `[label, data cols…]`, sorted by (label, index…)), tasks roll
-    * files on label change OR pageLen, and each [[FileStat]] comes
-    * back tagged with its label — so "split this frame into 10^5
-    * series" is ONE job with no read-back, no partitionBy directory
-    * escaping, and per-file metadata proportional to output files. */
-  def writeJobGrouped(sorted: DataFrame, gschema: GSchema,
-      physNames: Seq[String], tmpRel: String, tmpUri: String,
-      pageLen: Long, codec: String): Seq[(String, FileStat)] =
-    writeJobImpl(sorted, gschema, physNames, tmpRel, tmpUri, pageLen,
-      codec, verifySorted = false, labeled = true)
-
-  private def writeJobImpl(sorted: DataFrame, gschema: GSchema,
-      physNames: Seq[String], tmpRel: String, tmpUri: String,
-      pageLen: Long, codec: String, verifySorted: Boolean,
-      labeled: Boolean): Seq[(String, FileStat)] = {
-    val spark = sorted.sparkSession
-    val serConf = new SerConf(spark.sessionState.newHadoopConf())
-    val params = TaskParams(gschema, physNames.toIndexedSeq, tmpRel,
-      tmpUri, pageLen, codec, verifySorted, labeled)
-
+  def writeJob(sorted: DataFrame, p: TaskParams)
+      : Seq[(String, FileStat)] = {
+    val serConf = new SerConf(
+      sorted.sparkSession.sessionState.newHadoopConf())
     sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, iter) =>
       if (!iter.hasNext) Iterator.empty
       else {
         val attempt = Option(TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
-        val tw = new TaskSegmentWriter(params, serConf.value, pid,
-          attempt)
+        val tw = new TaskSegmentWriter(p, serConf.value, pid, attempt)
         try {
           while (iter.hasNext) tw.write(iter.next())
           tw.finish().iterator
@@ -332,27 +307,80 @@ object SegmentWriter {
     }.collect().toSeq
   }
 
-  /** Serializable bundle of everything one task-side rolling writer
-    * needs — shared by the bulk write job and the DataSourceV2
-    * BatchWrite's writer factory. */
+  /** Serializable bundle of everything one rolling writer needs —
+    * built by [[graft.api.Collection.taskParams]] for every write
+    * tier: the driver tier's chunks, the bulk job, the grouped
+    * ingest and the DataSourceV2 batch, streaming and copy-on-write
+    * writer factories. */
   final case class TaskParams(gschema: GSchema,
       phys: IndexedSeq[String], tmpRel: String, tmpUri: String,
       pageLen: Long, codec: String, verifySorted: Boolean,
       labeled: Boolean) extends Serializable
 
-  /** Task-side rolling segment writer: streams sorted InternalRows
-    * into ≤ pageLen-row engine-format parquet files under the staging
-    * dir, rolling on pageLen (and, for the grouped ingest, on label
-    * change), verifying row order when the input was declared
-    * presorted, and accumulating each file's
-    * (count, min key, max key, content hash) as it writes — the write
-    * IS the stats pass. One instance per task/partition. */
+  /** Per-file value-column statistics — the one policy every write
+    * tier records (the inline embed feeds it kernel scalars, the
+    * segment writer feeds it row values): a (min, max) per column,
+    * where a NaN poisons a float column (no safe bound) and an
+    * all-null column gets no entry; and a SUM per integer column
+    * (the metadata-only sum pushdown), where Long overflow poisons
+    * the sum but not the bounds. Maps are keyed by `names`, the
+    * columns' PHYSICAL names. */
+  private[graft] final class ValueStats(dtypes: IndexedSeq[GType],
+      names: IndexedSeq[String]) {
+    private val n = dtypes.length
+    private val mn = new Array[Any](n)
+    private val mx = new Array[Any](n)
+    private val bad = new Array[Boolean](n)
+    private val sum = new Array[Long](n)
+    private val sumN = new Array[Long](n)
+    private val sumBad = new Array[Boolean](n)
+
+    /** Fold one value of column `j` (kernel repr; null is skipped). */
+    def observe(j: Int, v: Any): Unit = if (v != null && !bad(j)) {
+      val dt = dtypes(j)
+      if (dt == GType.FloatT &&
+          java.lang.Double.isNaN(v.asInstanceOf[Double])) {
+        bad(j) = true; mn(j) = null; mx(j) = null
+      } else {
+        if (mn(j) == null || dt.cmp(v, mn(j)) < 0) mn(j) = v
+        if (mx(j) == null || dt.cmp(v, mx(j)) > 0) mx(j) = v
+        if (dt == GType.IntT && !sumBad(j)) {
+          try {
+            sum(j) = Math.addExact(sum(j), v.asInstanceOf[Long])
+            sumN(j) += 1
+          } catch {
+            case _: ArithmeticException => sumBad(j) = true
+          }
+        }
+      }
+    }
+
+    def stats: Map[String, (Any, Any)] = (0 until n).collect {
+      case j if !bad(j) && mn(j) != null => names(j) -> ((mn(j), mx(j)))
+    }.toMap
+
+    def sums: Map[String, Long] = (0 until n).collect {
+      case j if !sumBad(j) && sumN(j) > 0 => names(j) -> sum(j)
+    }.toMap
+  }
+
+  /** Rolling segment writer — the only code that turns rows into a
+    * staged segment file and its [[FileStat]]. Streams sorted
+    * InternalRows into ≤ pageLen-row engine-format parquet files
+    * under the staging dir, rolling on pageLen (and, for the grouped
+    * ingest, on label change), verifying row order when the input
+    * was declared presorted, and accumulating each file's
+    * (count, min key, max key, content hash, value stats) as it
+    * writes — the write IS the stats pass. One instance per task,
+    * or per chunk of the driver tier. */
   private[graft] final class TaskSegmentWriter(p: TaskParams,
       conf: Configuration, pid: Int, attempt: Long) {
     private val cols = p.gschema.cols
     private val off = if (p.labeled) 1 else 0
     private val idxPos =
       cols.zipWithIndex.filter(_._1.idx).map(_._2).toArray
+    private val valPos =
+      cols.zipWithIndex.filterNot(_._1.idx).map(_._2).toArray
     private val dtypes = cols.map(_.dtype).toIndexedSeq
     private val fieldTypes = p.gschema.sparkSchema.fields.map(_.dataType)
     private val nCols = cols.length
@@ -367,83 +395,16 @@ object SegmentWriter {
     private var maxK: IndexKey = null
     private var prevK: IndexKey = null
     private var label: String = null
+    private def newVals() = new ValueStats(
+      valPos.map(dtypes).toIndexedSeq, valPos.map(p.phys).toIndexedSeq)
+    private var vals = newVals()
 
-    // per-file value-column (min, max) — the data-skipping stats.
-    // NaN poisons a float column (no safe bound); all-null columns
-    // produce no entry.
-    private val valPos =
-      cols.zipWithIndex.filterNot(_._1.idx).map(_._2).toArray
-    private val vMin = new Array[Any](valPos.length)
-    private val vMax = new Array[Any](valPos.length)
-    private val vBad = new Array[Boolean](valPos.length)
-    // per-file SUM for integer value columns (metadata-only sum
-    // pushdown); Long-overflow poisons the column's sum, not its
-    // min/max
-    private val vSum = new Array[Long](valPos.length)
-    private val vSumN = new Array[Long](valPos.length)
-    private val vSumBad = new Array[Boolean](valPos.length)
-
-    private def vReset(): Unit = {
-      var j = 0
-      while (j < valPos.length) {
-        vMin(j) = null; vMax(j) = null; vBad(j) = false
-        vSum(j) = 0L; vSumN(j) = 0L; vSumBad(j) = false
-        j += 1
-      }
-    }
-
-    private def vObserve(ir: InternalRow): Unit = {
-      var j = 0
-      while (j < valPos.length) {
-        val i = valPos(j)
-        if (!vBad(j) && !ir.isNullAt(i + off)) {
-          val dt = dtypes(i)
-          val v: Any = dt match {
-            case GType.TimestampT | GType.IntT => ir.getLong(i + off)
-            case GType.DateT  => ir.getInt(i + off).toLong
-            case GType.FloatT => ir.getDouble(i + off)
-            case GType.StrT   => ir.getUTF8String(i + off).toString
-          }
-          val nan = dt == GType.FloatT &&
-            java.lang.Double.isNaN(v.asInstanceOf[Double])
-          if (nan) { vBad(j) = true; vMin(j) = null; vMax(j) = null }
-          else {
-            if (vMin(j) == null || dt.cmp(v, vMin(j)) < 0) vMin(j) = v
-            if (vMax(j) == null || dt.cmp(v, vMax(j)) > 0) vMax(j) = v
-            if (dt == GType.IntT && !vSumBad(j)) {
-              try {
-                vSum(j) = Math.addExact(vSum(j), v.asInstanceOf[Long])
-                vSumN(j) += 1
-              } catch {
-                case _: ArithmeticException => vSumBad(j) = true
-              }
-            }
-          }
-        }
-        j += 1
-      }
-    }
-
-    private def vStats(): Map[String, (Any, Any)] = {
-      val b = Map.newBuilder[String, (Any, Any)]
-      var j = 0
-      while (j < valPos.length) {
-        if (!vBad(j) && vMin(j) != null)
-          b += p.phys(valPos(j)) -> ((vMin(j), vMax(j)))
-        j += 1
-      }
-      b.result()
-    }
-
-    private def vSums(): Map[String, Long] = {
-      val b = Map.newBuilder[String, Long]
-      var j = 0
-      while (j < valPos.length) {
-        if (!vSumBad(j) && vSumN(j) > 0)
-          b += p.phys(valPos(j)) -> vSum(j)
-        j += 1
-      }
-      b.result()
+    /** column `i` of a non-null slot, in kernel repr */
+    private def kernelAt(ir: InternalRow, i: Int): Any = dtypes(i) match {
+      case GType.TimestampT | GType.IntT => ir.getLong(i + off)
+      case GType.DateT  => ir.getInt(i + off).toLong
+      case GType.FloatT => ir.getDouble(i + off)
+      case GType.StrT   => ir.getUTF8String(i + off).toString
     }
 
     private def keyAt(ir: InternalRow): IndexKey = IndexKey(
@@ -456,12 +417,7 @@ object SegmentWriter {
             s"null value in index column '${p.gschema.cols(i).name}' " +
               "— index " +
               "columns must be non-null")
-        dtypes(i) match {
-          case GType.TimestampT | GType.IntT => ir.getLong(i + off)
-          case GType.DateT  => ir.getInt(i + off).toLong
-          case GType.FloatT => ir.getDouble(i + off)
-          case GType.StrT   => ir.getUTF8String(i + off).toString
-        }
+        kernelAt(ir, i)
       }.toVector)
 
     private def fname(i: Int) = f"part-$pid%05d-$attempt-$i%04d.parquet"
@@ -470,9 +426,9 @@ object SegmentWriter {
       w.close()
       out += ((label,
         FileStat(s"${p.tmpRel}/${fname(fi)}", cnt, minK, maxK, hash,
-          vStats(), vSums())))
+          vals.stats, vals.sums)))
       w = null; cnt = 0L; hash = 0L; minK = null; maxK = null
-      vReset()
+      vals = newVals()
     }
 
     def write(ir: InternalRow): Unit = {
@@ -504,9 +460,9 @@ object SegmentWriter {
             s"presorted write got unsorted input: $prevK > $maxK")
         prevK = maxK
       }
-      // same digest hash the inline/driver-local paths compute
-      // (xxhash64(cols…), seed 42) via the interpreted hash function
-      // directly — no per-row Expression-tree eval
+      // the content digest's per-row hash (xxhash64(cols…), seed 42)
+      // via the interpreted hash function directly — no per-row
+      // Expression-tree eval
       var h = 42L
       var i = 0
       while (i < nCols) {
@@ -516,7 +472,12 @@ object SegmentWriter {
         i += 1
       }
       hash += ((h % M) + M) % M
-      vObserve(ir)
+      var j = 0
+      while (j < valPos.length) {
+        val c = valPos(j)
+        if (!ir.isNullAt(c + off)) vals.observe(j, kernelAt(ir, c))
+        j += 1
+      }
       cnt += 1
       if (cnt >= p.pageLen) roll()
     }

@@ -1007,28 +1007,11 @@ class GraftWrite(table: GraftTable, presorted: Boolean,
   override def requiredOrdering(): Array[SortOrder] =
     if (presorted) Array.empty else idxOrders
 
-  private def taskParams(): SegmentWriter.TaskParams = {
-    val s = table.series
-    val clct = s.collection
-    val store = clct.repo.store
-    val tmpRel = s"tmp/${graft.core.Hash.hextime()}-" +
-      java.util.UUID.randomUUID().toString.take(12)
-    SegmentWriter.TaskParams(table.gschema,
-      table.gschema.names.map(clct.physOf).toIndexedSeq,
-      tmpRel, store.uri(tmpRel), clct.pageLen,
-      {
-        val codec = clct.repo.spark.conf
-          .get("spark.graft.segment.codec", "zstd")
-        if (codec.toLowerCase(java.util.Locale.ROOT).endsWith("+bss"))
-          clct.enableBss() // sticky read-routing hint
-        codec
-      },
-      verifySorted = presorted, labeled = false)
-  }
-
   override def toBatch
       : org.apache.spark.sql.connector.write.BatchWrite =
-    new GraftBatchWrite(table, taskParams(), truncate, overwritePlan)
+    new GraftBatchWrite(table,
+      table.series.collection.taskParams(verifySorted = presorted),
+      truncate, overwritePlan)
 
   /** `df.writeStream.format("graft")` — each micro-batch commits as
     * ONE engine revision (the same staged write + manifest splice the
@@ -1042,7 +1025,7 @@ class GraftWrite(table: GraftTable, presorted: Boolean,
     * `outputMode("complete")` maps to the per-epoch series truncate. */
   override def toStreaming
       : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-    new GraftStreamingWrite(table, taskParams(), truncate, queryId)
+    new GraftStreamingWrite(table, presorted, truncate, queryId)
 }
 
 /** per-task stats travel back in the commit message — the write's
@@ -1114,12 +1097,12 @@ class GraftBatchWrite(table: GraftTable,
       recursive = true)
 }
 
-/** The streaming half of the connector write: per-epoch staging under
-  * `<tmp>/e<epoch>`, one changelog commit per micro-batch, replayed
+/** The streaming half of the connector write: fresh staging per
+  * epoch, one changelog commit per micro-batch, replayed
   * epochs skipped via the per-query marker (see GraftWrite.toStreaming
   * scaladoc for the exactly-once argument). */
-class GraftStreamingWrite(table: GraftTable,
-    base: SegmentWriter.TaskParams, truncate: Boolean, queryId: String)
+class GraftStreamingWrite(table: GraftTable, presorted: Boolean,
+    truncate: Boolean, queryId: String)
     extends org.apache.spark.sql.connector.write.streaming
       .StreamingWrite {
   import org.apache.spark.sql.connector.write.{PhysicalWriteInfo,
@@ -1130,23 +1113,21 @@ class GraftStreamingWrite(table: GraftTable,
   private def store = resolvedSeries.collection.repo.store
   private val qdir =
     s"streams/${queryId.replaceAll("[^A-Za-z0-9-]", "_")}"
-  // the CURRENT epoch's staging base (micro-batches are serial per
-  // query). Each epoch gets a FRESH hextime-named dir: gc's staging
-  // sweep ages dirs by their hextime prefix, so a long-running stream
-  // must not reuse one base dir across epochs — the sweep would reap
-  // it mid-flight once the query outlives the gc timeout.
-  @volatile private var currentRel: String = base.tmpRel
+  // the CURRENT epoch's staging dir (micro-batches are serial per
+  // query; null before the first epoch). Each epoch gets FRESH
+  // staging params: gc's staging sweep ages dirs by their hextime
+  // prefix, so a long-running stream must not reuse one dir across
+  // epochs — the sweep would reap it mid-flight once the query
+  // outlives the gc timeout.
+  @volatile private var currentRel: String = null
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming
         .StreamingDataWriterFactory = {
-    val rel = s"tmp/${graft.core.Hash.hextime()}-" +
-      java.util.UUID.randomUUID().toString.take(12)
-    currentRel = rel
-    new GraftStreamingWriterFactory(
-      base.copy(tmpRel = rel, tmpUri = store.uri(rel)),
-      new SegmentWriter.SerConf(
-        SparkSession.active.sessionState.newHadoopConf()))
+    val p = resolvedSeries.collection.taskParams(verifySorted = presorted)
+    currentRel = p.tmpRel
+    new GraftWriterFactory(p, new SegmentWriter.SerConf(
+      SparkSession.active.sessionState.newHadoopConf()))
   }
 
   override def commit(epochId: Long,
@@ -1167,37 +1148,32 @@ class GraftStreamingWrite(table: GraftTable,
       // markers are dead weight
       store.rm(s"$qdir/e${epochId - 1}")
       GraftScanProbe.lastWriteFiles = stats.length
-    } finally store.rm(currentRel, recursive = true)
+    } finally rmStaging()
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit =
-    store.rm(currentRel, recursive = true)
+      messages: Array[WriterCommitMessage]): Unit = rmStaging()
+
+  private def rmStaging(): Unit =
+    if (currentRel != null) store.rm(currentRel, recursive = true)
 }
 
-class GraftStreamingWriterFactory(base: SegmentWriter.TaskParams,
-    conf: SegmentWriter.SerConf)
-    extends org.apache.spark.sql.connector.write.streaming
-      .StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] = {
-    val p = base.copy(tmpRel = s"${base.tmpRel}/e$epochId",
-      tmpUri = s"${base.tmpUri}/e$epochId")
-    new GraftDataWriter(
-      new SegmentWriter.TaskSegmentWriter(p, conf.value, partitionId,
-        taskId))
-  }
-}
-
+/** Task-side writers of the batch write and of one streaming epoch
+  * (each epoch stages under its own [[GraftStreamingWrite]] params). */
 class GraftWriterFactory(params: SegmentWriter.TaskParams,
     conf: SegmentWriter.SerConf)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
+    extends org.apache.spark.sql.connector.write.DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming
+      .StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new GraftDataWriter(
       new SegmentWriter.TaskSegmentWriter(params, conf.value,
         partitionId, taskId))
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long)
+      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
+    createWriter(partitionId, taskId)
 }
 
 class GraftDataWriter(tw: SegmentWriter.TaskSegmentWriter)

@@ -417,25 +417,8 @@ class GraftCowWrite(table: GraftTable, op: GraftRowLevelOperation)
     if (totalRows <= table.series.collection.pageLen) 1 else 0
   }
 
-  override def toBatch: BatchWrite = {
-    val s = table.series
-    val clct = s.collection
-    val store = clct.repo.store
-    val tmpRel = s"tmp/${graft.core.Hash.hextime()}-" +
-      java.util.UUID.randomUUID().toString.take(12)
-    val params = SegmentWriter.TaskParams(table.gschema,
-      table.gschema.names.map(clct.physOf).toIndexedSeq,
-      tmpRel, store.uri(tmpRel), clct.pageLen,
-      {
-        val codec = clct.repo.spark.conf
-          .get("spark.graft.segment.codec", "zstd")
-        if (codec.toLowerCase(java.util.Locale.ROOT).endsWith("+bss"))
-          clct.enableBss() // sticky read-routing hint
-        codec
-      },
-      verifySorted = false, labeled = false)
-    new GraftCowBatchWrite(table, params, op)
-  }
+  override def toBatch: BatchWrite =
+    new GraftCowBatchWrite(table, table.series.collection.taskParams(), op)
 }
 
 class GraftCowBatchWrite(table: GraftTable,

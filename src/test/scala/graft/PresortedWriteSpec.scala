@@ -88,6 +88,8 @@ class PresortedWriteSpec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("unsorted")))
     assert(s.collection.manifest().isEmpty ||
       s.segments().isEmpty) // nothing committed
+    assert(repo.store.ls("tmp").isEmpty,
+      s"failed write leaked staged files: ${repo.store.walk("tmp")}")
   }
 
   test("driver-tier small write verifies the presorted declaration") {
