@@ -421,16 +421,7 @@ class Collection(val repo: Repo, val label: String, val path: String,
     }
 
   def manifest(beforeMs: Option[Long] = None): Option[Manifest] =
-    try changelog.leaf(beforeMs).map(decodeCached)
-    catch {
-      case _: java.io.FileNotFoundException =>
-        // a racing squash/trim rewrote history and deleted the
-        // revision under us — the data lives in the new root;
-        // re-list the leaf and retry once (a second miss is a real
-        // store fault and propagates)
-        changelog.refresh()
-        changelog.leaf(beforeMs).map(decodeCached)
-    }
+    retryStale(changelog.leaf(beforeMs).map(decodeCached))
 
   /** Series labels present at the current leaf. */
   def ls(beforeMs: Option[Long] = None): Seq[String] =
@@ -486,30 +477,26 @@ class Collection(val repo: Repo, val label: String, val path: String,
     * data; other series are untouched. */
   private[graft] def truncateWrite(label: String,
       rows: Seq[SegmentMeta]): Unit = synchronized {
-    val leaf = changelog.leaf()
-    val m0 = leaf match {
-      case Some(rev) => decodeCached(rev)
-      case None      => Manifest.empty(schema)
-    }
-    val m1 = m0.deleteLabels(Set(label))
-    val m2 =
+    commitOn(changelog.leaf()) { m =>
+      val m1 = m.deleteLabels(Set(label))
       if (rows.isEmpty) m1 else Manifest.spliceWrite(m1, rows)
-    commitManifest(m2,
-      parents = Seq(leaf.map(_.child).getOrElse(Changelog.Phi)))
+    }
+  }
+
+  /** Commit `f` of `base`'s manifest (empty for None) as ONE revision
+    * whose parent is `base`: the commit every manifest transform
+    * shares — writes, batches, truncates, series DDL and defrag. */
+  private[api] def commitOn(base: Option[Revision])(
+      f: Manifest => Manifest): Unit = {
+    commitManifest(f(base.map(decodeCached).getOrElse(
+      Manifest.empty(schema))),
+      parents = Seq(base.map(_.child).getOrElse(Changelog.Phi)))
     ()
   }
 
-  private def commitBatch(writes: Seq[Seq[SegmentMeta]]): Unit = {
-    val leaf = changelog.leaf()
-    var m = leaf match {
-      case Some(rev) => decodeCached(rev)
-      case None      => Manifest.empty(schema)
-    }
-    writes.foreach { w => m = Manifest.spliceWrite(m, w) }
-    commitManifest(m,
-      parents = Seq(leaf.map(_.child).getOrElse(Changelog.Phi)))
-    ()
-  }
+  private def commitBatch(writes: Seq[Seq[SegmentMeta]],
+      base: Option[Revision] = changelog.leaf()): Unit =
+    commitOn(base)(writes.foldLeft(_)(Manifest.spliceWrite))
 
   def refresh(): Unit = changelog.refresh()
 
@@ -517,27 +504,16 @@ class Collection(val repo: Repo, val label: String, val path: String,
   // series-level DDL (manifest transforms, no data movement)
   // ------------------------------------------------------------------
 
-  def deleteSeries(labels: String*): Unit = {
-    val leaf = changelog.leaf()
-    manifest() match {
-      case None => ()
-      case Some(m) =>
-        val m2 = m.deleteLabels(labels.toSet)
-        commitManifest(m2,
-          parents = Seq(leaf.map(_.child).getOrElse(Changelog.Phi)))
-        ()
-    }
+  // a revision a racing squash/trim deleted fails the decode before
+  // anything commits: retry on the fresh leaf
+  def deleteSeries(labels: String*): Unit = retryStale {
+    changelog.leaf().foreach(l =>
+      commitOn(Some(l))(_.deleteLabels(labels.toSet)))
   }
 
-  def renameSeries(from: String, to: String): Unit = {
-    val leaf = changelog.leaf()
-    manifest() match {
-      case None => ()
-      case Some(m) =>
-        commitManifest(m.renameLabel(from, to),
-          parents = Seq(leaf.map(_.child).getOrElse(Changelog.Phi)))
-        ()
-    }
+  def renameSeries(from: String, to: String): Unit = retryStale {
+    changelog.leaf().foreach(l =>
+      commitOn(Some(l))(_.renameLabel(from, to)))
   }
 
   // ------------------------------------------------------------------
@@ -673,41 +649,116 @@ class Collection(val repo: Repo, val label: String, val path: String,
     rev
   }
 
-  /** Compaction: for each series, find runs of small segments and
-    * rewrite them as page-sized ones (reference Collection.defrag,
-    * lakota/collection.py:364-403 — Delta OPTIMIZE analogue).
+  /** Compaction (reference Collection.defrag,
+    * lakota/collection.py:364-403 — Delta OPTIMIZE analogue), one
+    * pass over the whole collection:
+    *
+    *  - ONE PLAN. Every run of every label comes from one leaf
+    *    manifest: more than `maxChunk` contiguous data segments, each
+    *    under pageLen/2 rows. A large segment ends a run and is NEVER
+    *    rewritten (lakota's fast-forward rule).
+    *  - ONE JOB. Each run is one task that reads the run's visible
+    *    segments in order through the connector's readers (clip,
+    *    clone renames and defaults, BSS decode). Segment files are
+    *    sorted and a run's segments disjoint, so rows stream out
+    *    sorted — no shuffle, no sort — into the labeled
+    *    [[SegmentWriter.TaskSegmentWriter]], cut into balanced
+    *    page-sized files: none is under pageLen/2 rows unless the run
+    *    is, the cut depends only on the run's rows, and the next
+    *    defrag leaves them alone. An inline-only run that still fits
+    *    embedMaxSize is re-embedded on the driver, with no job.
+    *  - ONE COMMIT. Each run is sealed over its own bounds, and all
+    *    runs splice into one revision whose parent is the PLANNED
+    *    one: a write racing into a run's span forks the log and
+    *    merge() heals it, instead of the splice covering its rows.
     */
   def defrag(maxChunk: Int = 4): Unit = {
-    manifest() match {
-      case None => ()
-      case Some(m) =>
-        m.labels.foreach { lbl =>
-          val rows = m.rows.filter(r => r.label == lbl && r.hasData)
-          // contiguous runs of small segments only: a large segment
-          // fast-forwards the cursor and is NEVER rewritten (reference
-          // lakota/collection.py:386-403) — small segments sandwiching
-          // a 500k-row segment must not drag it into the rewrite
-          val runs = scala.collection.mutable.ArrayBuffer
-            .empty[Vector[SegmentMeta]]
-          var cur = Vector.empty[SegmentMeta]
-          rows.foreach { r =>
-            if (r.length < pageLen / 2) cur = cur :+ r
-            else { if (cur.nonEmpty) runs += cur; cur = Vector.empty }
-          }
-          if (cur.nonEmpty) runs += cur
-          val s = series(lbl)
-          runs.filter(_.length > maxChunk).foreach { run =>
-            val start = run.head.start
-            val stop = run.last.stop
-            val cl = Closed.Both.setLeft(run.head.closed.left)
-              .setRight(run.last.closed.right)
-            // read the fragmented run and rewrite it page-sized
-            // (pageChunks: the rewrite must coalesce, not re-split)
-            val df = s.frame(start, stop, closed = cl)
-            s.write(df, start, stop, cl, pageChunks = true)
-          }
+    val planned = retryStale(changelog.leaf().map(r => r -> decodeCached(r)))
+    planned.foreach { case (rev, m) =>
+      val runs = scala.collection.mutable.ArrayBuffer
+        .empty[Vector[SegmentMeta]]
+      var cur = Vector.empty[SegmentMeta]
+      def flush(): Unit = {
+        if (cur.length > maxChunk) runs += cur
+        cur = Vector.empty
+      }
+      // manifest rows are sorted by (label, start): a new label or a
+      // large segment ends the current run
+      m.rows.foreach { r =>
+        if (cur.nonEmpty && r.label != cur.head.label) flush()
+        if (r.hasData) {
+          if (r.length < pageLen / 2) cur :+= r else flush()
         }
+      }
+      flush()
+      if (runs.nonEmpty) commitBatch(rewriteRuns(m, runs.toSeq), Some(rev))
     }
+  }
+
+  /** [[defrag]]'s rewrite: the sealed segment rows of every run, in
+    * run order. */
+  private def rewriteRuns(m: Manifest, runs: Seq[Vector[SegmentMeta]])
+      : Seq[Seq[SegmentMeta]] = {
+    import graft.sources.GraftPlanning
+    final case class Run(s: Series, start: IndexKey, stop: IndexKey,
+        closed: Closed, read: GraftPlanning.Group, inlineOnly: Boolean) {
+      def seal(st: Seq[SegmentWriter.FileStat]): Seq[SegmentMeta] =
+        if (st.isEmpty)
+          Seq(SegmentMeta(s.label, start, stop, closed, 0L, Vector.empty))
+        else s.sealSegments(st, start, stop, closed)
+    }
+    val plans = runs.zipWithIndex.map { case (run, i) =>
+      // a plain Series even for KV collections: a rewrite of stored
+      // rows has no upsert to merge
+      val s = new Series(this, run.head.label)
+      val cl = Closed.Both.setLeft(run.head.closed.left)
+        .setRight(run.last.closed.right)
+      val segs = s.segments(run.head.start, run.last.stop, closed = cl,
+        from = Some(m)).filter(_.meta.hasData)
+      // the manifest knows an untruncated segment's row count; the
+      // task counts a clipped one from its index columns
+      val (whole, clipped) = segs.partition(GraftPlanning.covers(schema, _))
+      def parts(sr: SegmentRead, cols: Seq[String]) =
+        GraftPlanning.partitionsFor(s, schema, cols, sr, null)
+      Run(s, run.head.start, run.last.stop, cl,
+        GraftPlanning.Group(i.toString, segs.flatMap(parts(_, schema.names)),
+          pageLen, whole.map(_.meta.length).sum,
+          clipped.flatMap(parts(_, schema.idxNames))),
+        segs.forall(_.meta.inline.isDefined))
+    }
+    // inline-only runs that still fit embedMaxSize re-embed on the
+    // driver (clone-added defaults never embed, as in Series.write)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema.sparkSchema)
+    val embedded: Map[Int, Seq[SegmentMeta]] =
+      if (embedMaxSize <= 0 || defaults.nonEmpty) Map.empty
+      else plans.zipWithIndex.filter(_._1.inlineOnly).flatMap {
+        case (r, i) =>
+          val rows = GraftPlanning.readAll(r.read.parts,
+            GraftPlanning.readerFactory())
+            .map(ir => toRow(ir).asInstanceOf[org.apache.spark.sql.Row])
+            .toVector
+          if (rows.isEmpty) Some(i -> r.seal(Nil))
+          else r.s.inlineSegment(rows, r.start, r.stop, r.closed)
+            .map(row => i -> Seq(row))
+      }.toMap
+    // every other run in ONE job: one task per run, its chunk tags
+    // "<run>.<chunk>" roll the labeled writer's files
+    val jobRuns = plans.indices.filterNot(embedded.contains)
+    val written: Map[Int, Seq[SegmentMeta]] =
+      if (jobRuns.isEmpty) Map.empty
+      else staged(labeled = true) { p =>
+        import org.apache.spark.sql.types._
+        val df = GraftPlanning.groupedScan(repo.spark,
+          jobRuns.map(plans(_).read), StructType(
+            StructField("_graft_run", StringType) +:
+              schema.sparkSchema.fields))
+        val stats = SegmentWriter.writeJob(df, p)
+          .groupBy(_._1.takeWhile(_ != '.').toInt)
+        jobRuns.map(i =>
+          i -> plans(i).seal(stats.getOrElse(i, Nil).map(_._2))).toMap
+      }
+    plans.indices.map(i => embedded.getOrElse(i, written(i)))
   }
 
   /** 3-way merge of divergent changelog leaves: pick the oldest-branch

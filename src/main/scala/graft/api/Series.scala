@@ -91,7 +91,7 @@ class Series(val collection: Collection, val label: String) {
     * straight from its partitions into segment files. */
   def write(df: DataFrame, start: Any = null, stop: Any = null,
       closed: Closed = Closed.Both, root: Boolean = false,
-      presorted: Boolean = false, pageChunks: Boolean = false): Unit = {
+      presorted: Boolean = false): Unit = {
     val startK = boundKey(start)
     val stopK = boundKey(stop)
 
@@ -201,8 +201,7 @@ class Series(val collection: Collection, val label: String) {
           return
         }
         if (irows.length <= driverRows) {
-          writeSmallRows(parts, startK, stopK, closed, root, presorted,
-            pageChunks)
+          writeSmallRows(parts, startK, stopK, closed, root, presorted)
           return
         }
         // estimate was low and the frame overflowed the cap: fall
@@ -447,6 +446,16 @@ class Series(val collection: Collection, val label: String) {
         Vector.empty)), root)
       return true
     }
+    inlineSegment(probe.toSeq, startK, stopK, closed) match {
+      case Some(row) => commitRows(Seq(row), root); true
+      case None => false
+    }
+  }
+
+  /** The manifest-embedded segment row for non-empty `rows`, or None
+    * when they serialize over collection.embedMaxSize bytes. */
+  private[api] def inlineSegment(rows: Seq[Row], startK: IndexKey,
+      stopK: IndexKey, closed: Closed): Option[SegmentMeta] = {
     // embed only the non-default (source) columns, matching the file
     // path where added default columns are synthesized at read time;
     // nulls in non-index columns pass through
@@ -454,7 +463,7 @@ class Series(val collection: Collection, val label: String) {
       .filterNot { case (c, _) => collection.defaults.contains(c.name) }
     val idxPos = srcIdx.zipWithIndex
       .collect { case ((c, _), j) if c.idx => j }
-    val kernelRows = probe.map(r =>
+    val kernelRows = rows.map(r =>
       srcIdx.map { case (c, i) =>
         if (r.isNullAt(i)) {
           if (c.idx) throw new IllegalArgumentException(
@@ -467,7 +476,7 @@ class Series(val collection: Collection, val label: String) {
       schema.cmpKey(keyOfRow(a), keyOfRow(b)) < 0).toVector
     val approxBytes = sortedRows.iterator
       .map(_.map(Json.scalar).map(_.length + 1).sum).sum
-    if (approxBytes > collection.embedMaxSize) return false
+    if (approxBytes > collection.embedMaxSize) return None
     val mn = keyOfRow(sortedRows.head)
     val mx = keyOfRow(sortedRows.last)
     // inline rows are already kernel scalars on the driver — record
@@ -482,13 +491,12 @@ class Series(val collection: Collection, val label: String) {
       valCols.indices.foreach(k => vals.observe(k, r(valCols(k)._2))))
     val vstats = vals.stats
     val vsums = vals.sums
-    commitRows(Seq(SegmentMeta(label,
+    Some(SegmentMeta(label,
       Option(startK).getOrElse(mn), Option(stopK).getOrElse(mx),
       closed, sortedRows.length.toLong, Vector.empty,
       Some(mn), Some(mx), Some(sortedRows),
       vstats = if (vstats.nonEmpty) Some(vstats) else None,
-      vsums = if (vsums.nonEmpty) Some(vsums) else None)), root)
-    true
+      vsums = if (vsums.nonEmpty) Some(vsums) else None))
   }
 
   /** The driver tier: a fully-collected small frame (one inner array
@@ -504,7 +512,7 @@ class Series(val collection: Collection, val label: String) {
   private def writeSmallRows(
       parts: Array[Array[org.apache.spark.sql.catalyst.InternalRow]],
       startK: IndexKey, stopK: IndexKey, closed: Closed, root: Boolean,
-      verifySorted: Boolean, pageChunks: Boolean = false): Unit = {
+      verifySorted: Boolean): Unit = {
     val dtypes = schema.cols.map(_.dtype).toIndexedSeq
     val idxPos = schema.cols.zipWithIndex.filter(_._1.idx)
       .map(_._2).toArray
@@ -640,14 +648,8 @@ class Series(val collection: Collection, val label: String) {
     // frame writes 8 parallel ~7k-row files instead of 2 serial-ish
     // 32k ones, without exploding small-write file counts (≤ 8
     // files/write either way)
-    // pageChunks: maintenance rewrites (defrag) exist to COALESCE —
-    // chunk at pageLen (the driver-tier gate already bounds n to one
-    // page, so this is one file), never the throughput-oriented 8-way
-    // split that would hand defrag's output right back to defrag
-    val chunkRows =
-      if (pageChunks) math.min(pageLen, Int.MaxValue.toLong).toInt.max(1)
-      else math.min(Series.DriverWriteChunkRows.toLong, math.min(pageLen,
-        math.max(4096L, (n + 7L) / 8L))).toInt.max(1)
+    val chunkRows = math.min(Series.DriverWriteChunkRows.toLong,
+      math.min(pageLen, math.max(4096L, (n + 7L) / 8L))).toInt.max(1)
     val nChunks = math.max(1, (n + chunkRows - 1) / chunkRows)
     val hconf = spark.sessionState.newHadoopConf()
     val rows = collection.staged() { p =>
@@ -677,17 +679,9 @@ class Series(val collection: Collection, val label: String) {
   /** Splice one write's segment rows into the leaf manifest and append
     * a revision (or defer to an open multi() batch). */
   protected def commitRows(rows: Seq[SegmentMeta], root: Boolean): Unit =
-    collection.batchOr { () =>
-      val leaf = if (root) None else changelog.leaf()
-      val m = leaf match {
-        case Some(rev) => collection.decodeCached(rev)
-        case None      => Manifest.empty(schema)
-      }
-      val m2 = Manifest.spliceWrite(m, rows)
-      collection.commitManifest(m2,
-        parents = Seq(leaf.map(_.child).getOrElse(Changelog.Phi)))
-      ()
-    }(rows)
+    collection.batchOr(() => collection.commitOn(
+      if (root) None else changelog.leaf())(Manifest.spliceWrite(_, rows)))(
+      rows)
 
   /** Range delete: splice a row with no files over [start, stop] —
     * overlay hides the data, no data job at all. */
@@ -1241,8 +1235,7 @@ class KVSeries(collection: Collection, label: String)
   import collection.schema
 
   override def write(df: DataFrame, start: Any, stop: Any,
-      closed: Closed, root: Boolean, presorted: Boolean,
-      pageChunks: Boolean): Unit = {
+      closed: Closed, root: Boolean, presorted: Boolean): Unit = {
     // an upsert merges with stored rows, so presorted pass-through
     // ordering cannot be preserved — the merged frame re-sorts
     if (root || start != null || stop != null) {

@@ -160,30 +160,6 @@ final case class Manifest(schema: GSchema, rows: Vector[SegmentMeta]) {
   private def startCutAfter(leftClosed: Boolean): Boolean = !leftClosed
   private def stopCutAfter(rightClosed: Boolean): Boolean = rightClosed
 
-  /** first i in [0,n) where cmp(key(i), q) >= 0 */
-  private def bisectLeft(key: Int => (String, IndexKey),
-      ql: String, qk: IndexKey): Int = {
-    var lo = 0; var hi = rows.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      val (l, k) = key(mid)
-      if (cmpLK(l, k, ql, qk) < 0) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-
-  /** first i in [0,n) where cmp(key(i), q) > 0 */
-  private def bisectRight(key: Int => (String, IndexKey),
-      ql: String, qk: IndexKey): Int = {
-    var lo = 0; var hi = rows.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      val (l, k) = key(mid)
-      if (cmpLK(l, k, ql, qk) <= 0) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-
   /** (startPos, stopPos) bisect positions for a [start, stop] splice
     * (reference lakota/commit.py:235-244): startPos bisects right over
     * row *stop* keys, stopPos bisects left over row *start* keys.

@@ -281,9 +281,10 @@ object SegmentWriter {
     * embarrassingly parallel: no driver coordination beyond the
     * final small collect of one stat row per ~pageLen rows.
     *
-    * A `labeled` write ([[graft.api.Collection.ingestGrouped]])
-    * carries a leading STRING label column (row layout
-    * `[label, data cols…]`, sorted by (label, index…)): tasks roll
+    * A `labeled` write ([[graft.api.Collection.ingestGrouped]], and
+    * [[graft.api.Collection.defrag]]'s run chunks) carries a leading
+    * STRING label column (row layout `[label, data cols…]`, sorted
+    * by (label, index…)): tasks roll
     * files on label change OR pageLen, and each stat comes back
     * tagged with its label — so "split this frame into 10^5 series"
     * is ONE job with no read-back. Unlabeled stats carry a null
@@ -310,8 +311,8 @@ object SegmentWriter {
   /** Serializable bundle of everything one rolling writer needs —
     * built by [[graft.api.Collection.taskParams]] for every write
     * tier: the driver tier's chunks, the bulk job, the grouped
-    * ingest and the DataSourceV2 batch, streaming and copy-on-write
-    * writer factories. */
+    * ingest, defrag and the DataSourceV2 batch, streaming and
+    * copy-on-write writer factories. */
   final case class TaskParams(gschema: GSchema,
       phys: IndexedSeq[String], tmpRel: String, tmpUri: String,
       pageLen: Long, codec: String, verifySorted: Boolean,

@@ -82,7 +82,7 @@ object WebDataset {
         val tc = org.apache.spark.TaskContext.get()
         val attempt =
           if (tc == null) "local"
-          else s"${tc.stageId}-${tc.partitionId}-${tc.taskAttemptId}"
+          else s"${tc.stageId()}-${tc.partitionId()}-${tc.taskAttemptId()}"
         var cur = -1
         var out: org.apache.hadoop.fs.FSDataOutputStream = null
         def commit(): Unit = if (out != null) {

@@ -17,7 +17,8 @@ import org.apache.parquet.io.api.{Converter, GroupConverter,
 import org.apache.parquet.schema.{MessageType, Types}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow,
+  JoinedRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -1326,9 +1327,47 @@ private[graft] object GraftPlanning {
     * (partitionsFor bakes clip/renames/defaults). */
   def internalScan(spark: SparkSession, parts: Seq[InputPartition],
       schema: StructType): org.apache.spark.sql.DataFrame =
+    groupedScan(spark, parts.map(p => Group(null, Seq(p))), schema)
+
+  /** The partitions one task of a [[groupedScan]] reads, in order —
+    * a sorted segment run streams out sorted, with no shuffle.
+    *
+    * A tagged group (`tag` non-null) is cut into the fewest chunks of
+    * at most `pageRows` rows, whose sizes differ by at most one row;
+    * each row gets a leading string column `<tag>.<chunk>`, so none
+    * of a chunk-rolling writer's files is under pageRows/2 rows
+    * unless the whole group is. The cut depends only on the group's
+    * row count: `known` plus the rows of `count` (the parts whose
+    * count the manifest does not know), counted in the task before
+    * the group is read. */
+  final case class Group(tag: String, parts: Seq[InputPartition],
+      pageRows: Long = 0L, known: Long = 0L,
+      count: Seq[InputPartition] = Nil)
+
+  /** DataFrame over [[Group]]s of engine partitions, one Spark
+    * partition per group; `schema` starts with the tag column when
+    * the groups are tagged. */
+  def groupedScan(spark: SparkSession, groups: Seq[Group],
+      schema: StructType): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.GraftBridge.internalDf(spark,
-      new GraftFileRDD(spark.sparkContext, parts, readerFactory()),
+      new GraftFileRDD(spark.sparkContext, groups, readerFactory()),
       schema)
+
+  /** Rows of `parts`, read one partition after another by the
+    * connector's readers, task-side or on the driver. Each reader
+    * closes once drained, or when the task ends first; a row is valid
+    * until the next one is read (readers reuse their buffers). */
+  def readAll(parts: Seq[InputPartition],
+      factory: PartitionReaderFactory): Iterator[InternalRow] =
+    parts.iterator.flatMap { p =>
+      val r = factory.createReader(p)
+      var open = true
+      def close(): Unit = if (open) { open = false; r.close() }
+      Option(org.apache.spark.TaskContext.get())
+        .foreach(_.addTaskCompletionListener[Unit](_ => close()))
+      Iterator.continually(r).takeWhile(_.next() || { close(); false })
+        .map(_.get())
+    }
 
   /** DataFrame over the engine readers as an ANONYMOUS DSv2 relation,
     * the scan [[graft.api.Series.frame]] routes BSS-mode segments
@@ -1386,38 +1425,42 @@ private final class GraftSegmentsTable(s: graft.api.Series,
 }
 
 private final case class GraftRddPartition(index: Int,
-    part: InputPartition) extends org.apache.spark.Partition
+    group: GraftPlanning.Group) extends org.apache.spark.Partition
 
-/** RDD over connector [[InputPartition]]s — see
-  * [[GraftPlanning.internalScan]]. The reader factory ships to tasks
-  * (it carries only a serializable Hadoop conf). */
+/** RDD over [[GraftPlanning.Group]]s of connector [[InputPartition]]s
+  * — see [[GraftPlanning.groupedScan]]. The reader factory ships to
+  * tasks (it carries only a serializable Hadoop conf). */
 class GraftFileRDD(
     @transient private val sc: org.apache.spark.SparkContext,
-    @transient private val parts: Seq[InputPartition],
+    @transient private val groups: Seq[GraftPlanning.Group],
     factory: PartitionReaderFactory)
     extends org.apache.spark.rdd.RDD[InternalRow](sc, Nil) {
   override def getPartitions: Array[org.apache.spark.Partition] =
-    parts.zipWithIndex.map { case (p, i) =>
-      GraftRddPartition(i, p): org.apache.spark.Partition }.toArray
+    groups.zipWithIndex.map { case (g, i) =>
+      GraftRddPartition(i, g): org.apache.spark.Partition }.toArray
   override def compute(split: org.apache.spark.Partition,
       ctx: org.apache.spark.TaskContext): Iterator[InternalRow] = {
-    val r = factory.createReader(
-      split.asInstanceOf[GraftRddPartition].part)
-    ctx.addTaskCompletionListener[Unit](_ => r.close())
-    new Iterator[InternalRow] {
-      private var ready = false
-      private var done = false
-      override def hasNext: Boolean = {
-        if (!ready && !done) { ready = r.next(); done = !ready }
-        ready
+    val g = split.asInstanceOf[GraftRddPartition].group
+    val rows = GraftPlanning.readAll(g.parts, factory)
+    // downstream operators may hold references across next() calls
+    if (g.tag == null) return rows.map(_.copy())
+    val n = g.known + GraftPlanning.readAll(g.count, factory).size
+    val chunks = math.max(1L, (n + g.pageRows - 1) / g.pageRows)
+    // chunk j ends before row (j + 1) * n / chunks; rows past a short
+    // count stay in the last chunk
+    var i = 0L
+    var j = -1L
+    var end = 0L
+    var tag: InternalRow = null
+    rows.map { r =>
+      while (i >= end && j < chunks - 1) {
+        j += 1
+        end = (j + 1) * n / chunks
+        tag = new GenericInternalRow(
+          Array[Any](UTF8String.fromString(s"${g.tag}.$j")))
       }
-      override def next(): InternalRow = {
-        if (!hasNext) throw new NoSuchElementException("graft rdd")
-        ready = false
-        // readers reuse row/batch buffers; downstream operators may
-        // hold references across next() calls
-        r.get().copy()
-      }
+      i += 1
+      new JoinedRow(tag, r.copy())
     }
   }
 }
@@ -1463,7 +1506,7 @@ final case class GraftStreamOffset(n: Long, rev: String,
   * leaf FRONTIER and the served set diffs against every drained
   * branch. `option("stream.rewrites", "skip")` suppresses the
   * replay: a commit is classified as compaction from MANIFEST
-  * METADATA ONLY — every affected series keeps an identical merged
+  * METADATA ONLY — the stream's series keeps an identical merged
   * visible-window cover and total row count, with everything fully
   * visible on both sides — and its newly-referenced files/inline rows
   * are not served. An overlay update that preserves exactly its
@@ -1692,20 +1735,20 @@ class GraftMicroBatchStream(table: GraftTable, required: StructType,
     var prev: Option[graft.core.Manifest] =
       if (lo == 0) None
       else Some(series.collection.decodeCached(log(lo - 1)))
+    val label = series.label
     (lo until hi).foreach { i =>
       val cur = series.collection.decodeCached(log(i))
       val prevRows = prev.map(_.rows.toSet).getOrElse(Set.empty)
-      val labels = (cur.rows.map(_.label) ++
-        prev.toSeq.flatMap(_.rows.map(_.label))).distinct.filter { l =>
-        cur.rows.filter(_.label == l) !=
-          prev.map(_.rows.filter(_.label == l)).getOrElse(Vector.empty)
-      }
-      val isCompaction = labels.nonEmpty && prev.isDefined &&
-        labels.forall { l =>
-          val s1 = compactionSig(prev.get, l)
-          val s2 = compactionSig(cur, l)
-          s1.isDefined && s1 == s2
+      // only this stream's series counts: one defrag commit compacts
+      // every label at once, next to labels it may have rewritten
+      // in ways the metadata cannot classify
+      val isCompaction = prev.exists { p =>
+        cur.rows.filter(_.label == label) !=
+          p.rows.filter(_.label == label) && {
+          val s1 = compactionSig(p, label)
+          s1.isDefined && s1 == compactionSig(cur, label)
         }
+      }
       if (isCompaction) {
         val prevFiles = prev.map(_.allFiles).getOrElse(Set.empty)
         cur.rows.filterNot(prevRows.contains).foreach { r =>

@@ -87,17 +87,22 @@ class CrashConsistencySpec extends AnyFunSuite {
   }
 
   /** Logical state of the whole repo: every collection label with the
-    * sorted rows of its `_` series. Computed through a cold fresh
+    * sorted rows of each of its series (`_` always, present or not).
+    * Computed through a cold fresh
     * handle — any torn metadata or lost chunk shows up here as an
     * exception or a wrong row set. */
   private def fingerprint(root: String): String = {
     clearCaches()
     val repo = new Repo(root, spark)
     val live = repo.ls().sorted.map { l =>
-      val rows = repo.collection(l).get.series("_").frame()
-        .select("timestamp", "value").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted
-      s"$l=${rows.mkString(",")}"
+      val c = repo.collection(l).get
+      val series = ("_" +: c.ls()).distinct.sorted.map { sl =>
+        val rows = c.series(sl).frame()
+          .select("timestamp", "value").collect()
+          .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted
+        s"$sl:${rows.mkString(",")}"
+      }
+      s"$l=${series.mkString("/")}"
     }.mkString(";")
     live + repo.ls("archive").sorted.mkString("|arch[", ",", "]")
   }
@@ -143,8 +148,8 @@ class CrashConsistencySpec extends AnyFunSuite {
   }
 
   private def wr(repo: Repo, label: String, ts: Seq[Long],
-      mul: Double = 1.0): Unit =
-    coll(repo, label).series("_")
+      mul: Double = 1.0, series: String = "_"): Unit =
+    coll(repo, label).series(series)
       .write(TestSpark.frame(ts, ts.map(_ * mul)))
 
   def scenarios: Seq[Scenario] = Seq(
@@ -195,13 +200,24 @@ class CrashConsistencySpec extends AnyFunSuite {
           .foreach(ts => wr(r, "c", ts))
       },
       op = r => { val c = coll(r, "c"); c.refresh(); c.squash() }),
+    // two series with two runs each: every run lands in ONE commit
     Scenario("defrag (segment coalesce, fast-forward commit)",
       setup = r => {
         r.createCollection(schema, "c")
-        (0 until 6).foreach(i =>
-          wr(r, "c", (i * 10L) until (i * 10L + 10L)))
+        Seq("_", "b").foreach { sl =>
+          // at pageLen 20: runs of two 5-row segments on either side
+          // of a large 12-row one, which defrag never rewrites
+          Seq(0L, 5L).foreach(a => wr(r, "c", a until a + 5L, series = sl))
+          wr(r, "c", 10L until 22L, mul = 2.0, series = sl)
+          Seq(30L, 35L).foreach(a =>
+            wr(r, "c", a until a + 5L, mul = 3.0, series = sl))
+        }
       },
-      op = r => { val c = coll(r, "c"); c.refresh(); c.defrag(1) }),
+      op = r => {
+        val c = coll(r, "c")
+        c.pageLen = 20L
+        c.refresh(); c.defrag(1)
+      }),
     Scenario("gc (two-phase bury/resurrect after overwrite garbage)",
       setup = r => {
         r.createCollection(schema, "c")

@@ -927,6 +927,40 @@ class GraftSourceSpec extends AnyFunSuite {
     spark.catalog.dropTempView("cdc_skip")
   }
 
+  test("stream.rewrites skip judges a multi-series defrag commit per " +
+      "series") {
+    val root = Files.createTempDirectory("graft-cdc2").toString
+    val repo = new Repo(root, spark)
+    val clct = repo.createCollection(schema, "c")
+    clct.embedMaxSize = 0L
+    import spark.implicits._
+    def put(l: String, lo: Long, hi: Long): Unit =
+      clct.series(l).write(spark.range(lo, hi, 1, 1)
+        .select($"id".as("ts"), lit(1.0).as("value")), presorted = true)
+    Seq("a", "b").foreach(l =>
+      (0 until 5).foreach(i => put(l, i * 1000L, (i + 1) * 1000L)))
+    // b's run is overlay-clipped: its rewrite is not provably compaction
+    put("b", 1500L, 1600L)
+    val q = spark.readStream.format("graft").option("path", root)
+      .option("collection", "c").option("series", "a")
+      .option("stream.rewrites", "skip").load()
+      .writeStream.format("memory").queryName("cdc_skip_a")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("cdc_skip_a").count() == 5000L)
+      val revs = clct.changelog.log().length
+      clct.defrag()
+      clct.refresh()
+      // both runs in one commit
+      assert(clct.changelog.log().length == revs + 1)
+      assert(clct.manifest().get.rows.count(_.hasData) == 2)
+      q.processAllAvailable()
+      assert(spark.table("cdc_skip_a").count() == 5000L)
+    } finally q.stop()
+    spark.catalog.dropTempView("cdc_skip_a")
+  }
+
   test("clone renames and defaults resolve through the connector") {
     val root = Files.createTempDirectory("graft-dsv2c").toString
     val repo = new Repo(root, spark)

@@ -442,6 +442,124 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(rows(s.frame()) == expect)
   }
 
+  /** pageLen 100, files only; each label gets two defrag runs (eight
+    * 2-row writes, then five 1-row ones) split by one 60-row (large)
+    * write, then an overlay and a delete that clip its first run */
+  private def twoRunLabels(labels: Seq[String]): Collection = {
+    val clct = freshRepo().createCollection(schema, "c")
+    clct.embedMaxSize = 0L
+    clct.pageLen = 100L
+    labels.zipWithIndex.foreach { case (l, k) =>
+      val s = clct.series(l)
+      def put(ts: Seq[Long], v: Long => Double): Unit =
+        s.write(TestSpark.frame(ts, ts.map(v)))
+      (0 until 8).foreach(i =>
+        put(Seq(10L * i, 10L * i + 1), _.toDouble + k))
+      put(1000L until 1060L, _ * 2.0 + k)
+      (0 until 5).foreach(i => put(Seq(2000L + 10L * i), _.toDouble + k))
+      put(Seq(11L, 21L), _ => -1.0 - k)
+      s.delete(30L, 31L)
+    }
+    clct
+  }
+
+  test("defrag: one commit and at most two jobs for every run of " +
+      "every label, rows unchanged") {
+    val labels = Seq("a", "b", "c")
+    val clct = twoRunLabels(labels)
+    val before = labels.map(l => rows(clct.series(l).frame()))
+    val revs = clct.changelog.log().length
+    clct.refresh()
+    val (_, jobs, _) = TestSpark.work(clct.defrag())
+    clct.refresh()
+    assert(clct.changelog.log().length == revs + 1,
+      "defrag must commit exactly one revision")
+    assert(jobs <= 2, s"defrag ran $jobs Spark jobs")
+    val m = clct.manifest().get
+    labels.foreach { l =>
+      val segs = m.rows.filter(r => r.label == l && r.hasData)
+      // each label: run 1, the large segment, run 2
+      assert(segs.length == 3, s"$l: ${segs.map(_.length)}")
+      assert(segs(1).length == 60L)
+    }
+    assert(labels.map(l => rows(clct.series(l).frame())) == before)
+  }
+
+  test("defrag writes page-sized segments: only a run's last one is " +
+      "under pageLen/2, and a second defrag writes no file") {
+    val repo = freshRepo()
+    val clct = repo.createCollection(schema, "c")
+    clct.embedMaxSize = 0L
+    clct.pageLen = 800000L
+    val s = clct.series("_")
+    // 400k rows in eight writes: each lands as the driver tier's
+    // ~6k-row chunks, and the run's ~3 MB of (incompressible) values
+    // is large enough that an auto-sorted rewrite would spread it
+    // over several write tasks
+    (0 until 8).foreach { i =>
+      s.write(spark.range(i * 50000L, (i + 1) * 50000L, 1, 2)
+        .selectExpr("id AS timestamp", "rand(7) AS value"))
+    }
+    val expect = rows(s.frame())
+    clct.refresh()
+    clct.defrag()
+    clct.refresh()
+    def dataSegs = clct.manifest().get.rows.filter(_.hasData)
+    val after = dataSegs
+    assert(after.init.forall(_.length >= clct.pageLen / 2),
+      s"sub-page segments: ${after.map(_.length)}")
+    assert(after.map(_.length).sum == 400000L)
+    assert(rows(s.frame()) == expect)
+    // a fresh page-sized layout gives the next defrag nothing to do
+    def files: Set[String] = repo.store.walk("").toSet
+    val segFiles = files
+    clct.defrag()
+    clct.refresh()
+    assert(files == segFiles, "a second defrag wrote files")
+    assert(dataSegs == after)
+  }
+
+  test("defrag cuts a long run into balanced page-sized segments") {
+    val clct = freshRepo().createCollection(schema, "c")
+    clct.embedMaxSize = 0L
+    clct.pageLen = 1000L
+    val s = clct.series("_")
+    (0 until 10).foreach { i =>
+      val ts = (i * 310L until (i + 1) * 310L)
+      s.write(TestSpark.frame(ts, ts.map(_ * 0.5)))
+    }
+    // clip two segments: their rows are counted from the files
+    s.write(TestSpark.frame(Seq(600L, 1001L), Seq(-1.0, -2.0)))
+    val expect = rows(s.frame())
+    assert(expect.length == 2700)
+    clct.defrag()
+    clct.refresh()
+    // 2700 rows: three pages of 900, none a sub-half-page tail
+    assert(clct.manifest().get.rows.filter(_.hasData).map(_.length) ==
+      Seq(900L, 900L, 900L))
+    assert(rows(s.frame()) == expect)
+  }
+
+  test("defrag re-embeds an inline-only run on the driver, no job") {
+    val clct = freshRepo().createCollection(schema, "c")
+    clct.embedMaxSize = 4096L
+    val s = clct.series("_")
+    (0 until 6).foreach(i =>
+      s.write(TestSpark.frame(Seq(10L * i, 10L * i + 1),
+        Seq(i * 1.0, i + 0.5))))
+    s.delete(20L, 20L)
+    val expect = rows(s.frame())
+    clct.refresh()
+    val (_, jobs, _) = TestSpark.work(clct.defrag())
+    clct.refresh()
+    val segs = clct.manifest().get.rows.filter(_.hasData)
+    assert(segs.length == 1 && segs.head.inline.isDefined &&
+      segs.head.files.isEmpty, s"$segs")
+    assert(segs.head.length == 11L)
+    assert(jobs == 0, s"inline re-embed ran $jobs Spark jobs")
+    assert(rows(s.frame()) == expect)
+  }
+
   test("collection rename and delete") {
     val repo = freshRepo()
     repo.createCollection(schema, "a").series("_")
