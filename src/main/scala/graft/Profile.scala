@@ -8,9 +8,9 @@ import org.apache.spark.sql.{DataFrame => DataFrameLike}
   * it itself).
   *
   * Run: `sbt "runMain graft.Profile q188_sql_update 3"` — optionally
-  * `SPARK_GRAFT_SF_DIR` to pick the scale (default sf0.1) and
-  * `GRAFT_PROF=1` to enable the env-gated per-stage prints some
-  * queries carry.
+  * `SPARK_GRAFT_SF_DIR` to pick the scale (default sf0.1). Per-job,
+  * per-stage and per-SQL-execution attribution comes from Spark's own
+  * surfaces: `SPARK_GRAFT_EVENTLOG=true` (see [[Bench]]) or the UI.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -20,94 +20,6 @@ object Profile {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Bench.buildSession(cpus)
-    // job-level accounting: one line per Spark job (duration + stages)
-    if (sys.env.contains("GRAFT_PROF_JOBS"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val t0 = new java.util.concurrent.ConcurrentHashMap[
-            Int, Long]()
-          private val desc = new java.util.concurrent.ConcurrentHashMap[
-            Int, String]()
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart)
-              : Unit = {
-            t0.put(js.jobId, System.nanoTime())
-            desc.put(js.jobId, Option(js.properties.getProperty(
-              "spark.job.description")).getOrElse("")
-              .replaceAll("\\s+", " ").take(90))
-          }
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val si = sc.stageInfo
-            System.err.println(f"[stage] ${si.stageId}%4d " +
-              f"${si.taskMetrics.executorRunTime}%6d ms-task " +
-              f"${si.numTasks}%3d tasks  ${si.name.take(80)}")
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd)
-              : Unit = {
-            val start = Option(t0.remove(je.jobId)).getOrElse(0L)
-            System.err.println(f"[job] ${je.jobId}%4d " +
-              f"${(System.nanoTime() - start) / 1e6}%7.0f ms  " +
-              Option(desc.remove(je.jobId)).getOrElse(""))
-          }
-        })
-    // SQL-execution accounting (GRAFT_PROF_SQL=1): one line per SQL
-    // execution — wall clock, Spark-job time inside it, and the
-    // DRIVER GAP (optimizer + physical planning + codegen + connector
-    // commit work between jobs). The q188 floor hunt runs on this.
-    if (sys.env.contains("GRAFT_PROF_SQL"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          import org.apache.spark.sql.execution.ui.{
-            SparkListenerSQLExecutionStart, SparkListenerSQLExecutionEnd}
-          private val t0 = new java.util.concurrent.ConcurrentHashMap[
-            Long, (Long, String)]()
-          private val jobMs = new java.util.concurrent.ConcurrentHashMap[
-            Long, java.util.concurrent.atomic.LongAdder]()
-          private val jobExec = new java.util.concurrent.ConcurrentHashMap[
-            Int, (Long, Long)]()
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart)
-              : Unit = {
-            val eid = Option(js.properties.getProperty(
-              "spark.sql.execution.id")).map(_.toLong).getOrElse(-1L)
-            jobExec.put(js.jobId, (eid, System.nanoTime()))
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd)
-              : Unit = {
-            val se = jobExec.remove(je.jobId)
-            // guard on the execution still being tracked: the bus is
-            // async, and a job ending AFTER its SQLExecutionEnd would
-            // otherwise re-insert a LongAdder nothing ever removes
-            if (se != null && se._1 >= 0 && t0.containsKey(se._1)) {
-              jobMs.computeIfAbsent(se._1,
-                _ => new java.util.concurrent.atomic.LongAdder)
-                .add((System.nanoTime() - se._2) / 1000000L)
-            }
-          }
-          override def onOtherEvent(
-              e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-            e match {
-              case s: SparkListenerSQLExecutionStart =>
-                t0.put(s.executionId,
-                  (System.nanoTime(), s.description.replaceAll("\\s+", " ")
-                    .take(70)))
-              case s: SparkListenerSQLExecutionEnd =>
-                val st = t0.remove(s.executionId)
-                if (st != null) {
-                  val wall = (System.nanoTime() - st._1) / 1e6
-                  val jm = Option(jobMs.remove(s.executionId))
-                    .map(_.sum()).getOrElse(0L)
-                  System.err.println(f"[sqlexec] ${s.executionId}%3d " +
-                    f"wall=$wall%6.0f ms jobs=$jm%5d ms " +
-                    f"gap=${wall - jm}%6.0f ms  ${st._2}")
-                }
-              case _ =>
-            }
-        })
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Tables.registerAll(spark, sfDir)
     // the bench-only text-slope rows are profilable too (same views +

@@ -223,8 +223,6 @@ object QueriesPipe {
             .agg(min(col("comp")).as("comp")).localCheckpoint()
           cur = labelSum()
           rounds += 1
-          if (sys.env.contains("GRAFT_PROF"))
-            System.err.println(s"[q54dist] round $rounds sum=$cur")
         }
         require(cur == prev || cur.isEmpty,
           s"component propagation did not converge within $rounds rounds")

@@ -719,24 +719,16 @@ object QueriesRag {
   def q128_incremental_index(s: SparkSession, dir: String): DataFrame = {
     import graft.api.Repo
     import graft.core.GSchema
-    def phase[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (sys.env.contains("GRAFT_PROF"))
-        System.err.println(f"[q128] $what ${(System.nanoTime()-t0)/1e6}%.0f ms")
-      r
-    }
-    phase("termView")(QueriesPipe.termView(s, dir))
+    QueriesPipe.termView(s, dir)
     val root = java.nio.file.Files
       .createTempDirectory("graft-idx").toString
     val schema = GSchema("term" -> "str*", "doc_id" -> "int*",
       "lang" -> "str", "cnt" -> "int")
     val sr = new Repo(root, s).createCollection(schema, "postings")
       .series("_")
-    phase("write")(sr.write(s.table("doc_terms").filter("doc_id % 2 = 0")
-      .selectExpr("term", "doc_id", "lang", "cnt")))
-    phase("frameView")(
-      sr.frame().createOrReplaceTempView("graft_idx_stored"))
+    sr.write(s.table("doc_terms").filter("doc_id % 2 = 0")
+      .selectExpr("term", "doc_id", "lang", "cnt"))
+    sr.frame().createOrReplaceTempView("graft_idx_stored")
     s.sql(
       """SELECT term, cast(doc_id AS bigint) AS doc_id, lang,
         |  cast(cnt AS bigint) AS cnt
@@ -749,7 +741,7 @@ object QueriesRag {
     // union per CTE. Pinned PER CALL, inside the timed region — the
     // previous call's blocks are released, nothing is reused across
     // bench reps (each rep still pays write + union + pin + query).
-    phase("unionPin") {
+    locally {
       val union = s.sql(
         """SELECT doc_id, lang, term, cnt FROM graft_idx_stored
           |UNION ALL

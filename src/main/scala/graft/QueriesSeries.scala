@@ -28,6 +28,14 @@ object QueriesSeries {
     repo.createCollection(eventsSchema, "events").series("_")
   }
 
+  // what an executed connector query's scan decided (self-checks)
+  private def statSkipped(df: DataFrame): Long =
+    graft.sources.GraftMetrics.of(df)
+      .getOrElse(graft.sources.GraftMetrics.SegmentsStatSkipped, -1L)
+  private def aggFromManifest(df: DataFrame): Boolean =
+    graft.sources.GraftMetrics.of(df)
+      .get(graft.sources.GraftMetrics.AggFromManifest).contains(1L)
+
   private val out = Seq("event_id", "ts", "value")
 
   /** write through the engine, range-read back [Jan10, Jan20) */
@@ -625,27 +633,6 @@ object QueriesSeries {
     * beyond the series tail — then the aggregate must equal the
     * oracle's CASE/UNION recompute of the same three mutations. */
   def q188_sql_update(s: SparkSession, dir: String): DataFrame = {
-    // env-gated stage timing (GRAFT_PROF=1): per-verb wall clock on
-    // stderr, outside the oracle contract. The planning-tracker line
-    // splits each verb into Catalyst phases (parse/analyze/optimize/
-    // plan) vs execution — the attribution the q188 driver-floor work
-    // runs on.
-    def staged(tag: String)(body: => DataFrame): DataFrame = {
-      if (!sys.env.contains("GRAFT_PROF")) body
-      else {
-        val st = s.sparkContext.statusTracker
-        val j0 = st.getJobIdsForGroup(null).length
-        val t0 = System.nanoTime()
-        val r = body
-        val wall = (System.nanoTime() - t0) / 1e6
-        val jobs = st.getJobIdsForGroup(null).length - j0
-        val phases = r.queryExecution.tracker.phases
-          .map { case (p, t) => f"$p=${t.endTimeMs - t.startTimeMs}ms" }
-          .mkString(" ")
-        System.err.println(f"[q188] $tag: $wall%.0f ms  jobs=$jobs  $phases")
-        r
-      }
-    }
     val root = java.nio.file.Files
       .createTempDirectory("graft-q").toString
     val cat = "gq188_" + java.util.UUID.randomUUID().toString
@@ -664,24 +651,17 @@ object QueriesSeries {
     // three more times — re-deriving the parquet scan per consumer
     // paid four decode passes per statement sequence. A production
     // batch mutation holds its incoming batch in memory too.
-    locally {
-      val t0 = System.nanoTime()
-      QueriesSim.materializeDf(s, dir, "gq188_src")(eventsDf(s, dir))
-      if (sys.env.contains("GRAFT_PROF"))
-        System.err.println(f"[q188] materialize+create: ${
-          (System.nanoTime() - t0) / 1e6}%.0f ms")
-    }
-    staged("insert")(
-      s.sql(s"INSERT INTO $cat.events.ev SELECT * FROM gq188_src"))
-    staged("update")(s.sql(
+    QueriesSim.materializeDf(s, dir, "gq188_src")(eventsDf(s, dir))
+    s.sql(s"INSERT INTO $cat.events.ev SELECT * FROM gq188_src")
+    s.sql(
       s"""UPDATE $cat.events.ev SET value = value * 2
          |WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'
-         |  AND ts < TIMESTAMP '2024-01-12 00:00:00'""".stripMargin))
-    staged("delete")(s.sql(
+         |  AND ts < TIMESTAMP '2024-01-12 00:00:00'""".stripMargin)
+    s.sql(
       s"""DELETE FROM $cat.events.ev
          |WHERE value < 0.1
-         |  AND ts >= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin))
-    staged("merge")(s.sql(
+         |  AND ts >= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin)
+    s.sql(
       s"""MERGE INTO $cat.events.ev t USING (
          |  SELECT ts, event_id, cast(-1.0 AS DOUBLE) AS value,
          |    event_type
@@ -695,13 +675,7 @@ object QueriesSeries {
          |  WHERE ts < TIMESTAMP '2024-01-02 00:00:00'
          |) src ON t.ts = src.ts AND t.event_id = src.event_id
          |WHEN MATCHED THEN UPDATE SET value = src.value
-         |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
-    if (sys.env.contains("GRAFT_PROF")) { // profile the final agg too
-      val t0 = System.nanoTime()
-      s.sql(s"SELECT count(*) FROM $cat.events.ev").collect()
-      System.err.println(f"[q188] final-scan-count: ${
-        (System.nanoTime() - t0) / 1e6}%.0f ms")
-    }
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     s.sql(
       s"""SELECT event_type, count(*) AS cnt,
          |  sum(cast(round(value * 1000000, 0) AS bigint)) AS val_micro
@@ -816,18 +790,16 @@ object QueriesSeries {
     s.read.format("graft").option("path", root)
       .option("collection", "events").option("series", "_").load()
       .createOrReplaceTempView("gq191")
-    graft.sources.GraftScanProbe.lastStatSkipped = -1
     val out = s.sql(
       """SELECT event_type, count(*) AS cnt,
         |  sum(cast(round(vband * 1000000, 0) AS bigint)) AS v_micro
         |FROM gq191
         |WHERE vband >= 3000.0 AND vband < 4000.0
         |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    val n = out.count() // force planning + execution once
-    require(n > 0, "day-3 band must be non-empty")
-    require(graft.sources.GraftScanProbe.lastStatSkipped >= 3,
-      s"value stats should skip the other windows, skipped=" +
-        s"${graft.sources.GraftScanProbe.lastStatSkipped}")
+    require(out.collect().nonEmpty, "day-3 band must be non-empty")
+    val skipped = statSkipped(out)
+    require(skipped >= 3,
+      s"value stats should skip the other windows, skipped=$skipped")
     out
   }
 
@@ -924,17 +896,15 @@ object QueriesSeries {
     s.read.format("graft").option("path", root)
       .option("collection", "events").option("series", "_").load()
       .createOrReplaceTempView("gq193")
-    graft.sources.GraftScanProbe.lastStatSkipped = -1
     val out = s.sql(
       """SELECT event_type, count(*) AS cnt,
         |  sum(cast(round(vband * 1000000, 0) AS bigint)) AS v_micro
         |FROM gq193
         |WHERE vband >= 3000.0 AND vband < 4000.0
         |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    require(out.count() > 0)
-    require(graft.sources.GraftScanProbe.lastStatSkipped >= 3,
-      s"backfilled stats should skip, skipped=" +
-        s"${graft.sources.GraftScanProbe.lastStatSkipped}")
+    require(out.collect().nonEmpty)
+    val skipped = statSkipped(out)
+    require(skipped >= 3, s"backfilled stats should skip, skipped=$skipped")
     out
   }
 
@@ -1029,12 +999,11 @@ object QueriesSeries {
     s.read.format("graft").option("path", root)
       .option("collection", "budget").option("series", "_").load()
       .createOrReplaceTempView("gq195")
-    graft.sources.GraftScanProbe.lastAggPushed = false
     val out = s.sql(
       """SELECT count(*) AS docs, sum(tokens) AS total_tokens
         |FROM gq195""".stripMargin)
-    require(out.count() == 1)
-    require(graft.sources.GraftScanProbe.lastAggPushed,
+    require(out.collect().length == 1)
+    require(aggFromManifest(out),
       "token budget must answer from manifest metadata")
     out
   }
@@ -1233,10 +1202,9 @@ object QueriesSeries {
     s.read.format("graft").option("path", root)
       .option("collection", "release").option("series", "_").load()
       .createOrReplaceTempView("gq200_rel")
-    graft.sources.GraftScanProbe.lastAggPushed = false
-    val budget = s.sql(
-      "SELECT count(*), sum(tokens) FROM gq200_rel").collect()(0)
-    require(graft.sources.GraftScanProbe.lastAggPushed,
+    val budgetDf = s.sql("SELECT count(*), sum(tokens) FROM gq200_rel")
+    val budget = budgetDf.collect()(0)
+    require(aggFromManifest(budgetDf),
       "the release's token budget must answer from metadata")
     require(budget.getLong(0) > 0L && budget.getLong(1) > 0L)
     s.sql(
@@ -1491,9 +1459,7 @@ object QueriesSeries {
     require(nSegs >= expect && nSegs <= expect + subFull,
       s"expected $expect..${expect + subFull} segments of <=2000 " +
         s"rows for $nRows rows, got $nSegs")
-    graft.sources.GraftScanProbe.lastRuntimeScanned = -1
-    graft.sources.GraftScanProbe.lastSegmentsTotal = -1
-    s.sql(
+    val update = s.sql(
       s"""UPDATE $cat.events.ev SET value = value * 3
          |WHERE ts >= TIMESTAMP '2024-01-05 00:00:00'
          |  AND ts < TIMESTAMP '2024-01-07 00:00:00'""".stripMargin)
@@ -1503,12 +1469,14 @@ object QueriesSeries {
     // its condition is a pure index range, the selection must have
     // been STATIC (manifest bound, no runtime subquery planned)
     if (nSegs >= 8) {
-      val scanned = graft.sources.GraftScanProbe.lastRuntimeScanned
-      val total = graft.sources.GraftScanProbe.lastSegmentsTotal
+      import graft.sources.GraftMetrics
+      val m = GraftMetrics.of(update)
+      val scanned = m(GraftMetrics.SegmentsKept)
+      val total = m(GraftMetrics.SegmentsTotal)
       require(scanned > 0 && scanned < total,
         s"COW UPDATE must rewrite a strict segment subset, " +
           s"scanned $scanned of $total")
-      require(graft.sources.GraftScanProbe.lastCowStatic,
+      require(m(GraftMetrics.GroupsStatic) == 1,
         "index-range UPDATE must select groups statically")
     }
     s.sql(

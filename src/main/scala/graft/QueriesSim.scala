@@ -105,13 +105,8 @@ object QueriesSim {
     * cache, same checkpoint durability semantics. The builder is
     * by-name: it only evaluates on a cache miss. */
   private[graft] def materializeDf(s: SparkSession, dir: String,
-      view: String)(build: => DataFrame): Unit = {
-    val t0 = System.nanoTime()
+      view: String)(build: => DataFrame): Unit =
     materialize0(s, dir, () => build, view)
-    if (sys.env.contains("SPARK_GRAFT_MAT_TIMING"))
-      System.err.println(f"[mat] $view ${(System.nanoTime()-t0)/1e9}%.3f s " +
-        s"${s.table(view).count()} rows")
-  }
 
   private def materialize0(s: SparkSession, dir: String,
       build: () => DataFrame, view: String): Unit = {

@@ -483,6 +483,9 @@ object SegmentWriter {
       if (cnt >= p.pageLen) roll()
     }
 
+    /** files opened so far, the open one included (each holds a row) */
+    def files: Int = fi + 1
+
     /** Close the open file and return every file's stats. */
     def finish(): Seq[(String, FileStat)] = { roll(); out.toSeq }
 

@@ -381,35 +381,6 @@ class GraftTable(rootUri: String, collectionName: String,
   }
 }
 
-/** Test/diagnostic probe: records how the LAST planned graft scan
-  * pruned (covering vs total manifest segments). */
-object GraftScanProbe {
-  @volatile var lastSegmentsScanned: Int = -1
-  @volatile var lastSegmentsTotal: Int = -1
-  @volatile var lastPushed: Seq[String] = Nil
-  @volatile var lastLimit: Int = -1
-  /** staged files sealed by the LAST connector batch write */
-  @volatile var lastWriteFiles: Int = -1
-  /** the LAST planned scan answered its aggregate from the manifest */
-  @volatile var lastAggPushed: Boolean = false
-  /** segments surviving the LAST runtime (DPP) filter, -1 = none ran */
-  @volatile var lastRuntimeScanned: Int = -1
-  /** the LAST COW scan's group selection was fully static (index
-    * bound covered the whole condition; no runtime subquery planned) */
-  @volatile var lastCowStatic: Boolean = false
-  /** the LAST COW scan skipped the runtime group-filter subquery for
-    * ECONOMY (candidate cover ≤ spark.graft.cow.runtimeFilterMinSegments
-    * — rewriting every candidate is cheaper than the subquery that
-    * would choose among them), NOT because exactness was claimed */
-  @volatile var lastCowTinySkip: Boolean = false
-  /** segments dropped by VALUE-column stats in the LAST planned scan */
-  @volatile var lastStatSkipped: Int = -1
-  /** segment files opened per decode tier (local-mode visible;
-    * diagnostics only) */
-  val vectorizedOpens = new java.util.concurrent.atomic.AtomicLong
-  val columnarOpens = new java.util.concurrent.atomic.AtomicLong
-}
-
 class GraftScanBuilder(table: GraftTable, beforeMs: Option[Long],
     streamStartLatest: Boolean = false,
     streamSkipRewrites: Boolean = false,
@@ -738,6 +709,10 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
   override def estimateStatistics(): Statistics =
     GraftPlanning.manifestStatistics(plannedSegments, table.gschema)
 
+  /** The plan node's label: segments planned of the manifest's total,
+    * the pushed filters, the pushed limit and whether the aggregate is
+    * answered from the manifest. The same counts, and the pruning
+    * steps behind them, are the scan's metrics ([[GraftMetrics]]). */
   override def description(): String = {
     val segs = plannedSegments
     s"GraftScan ${table.name()} segments=${segs.length}/" +
@@ -754,8 +729,8 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
     * metadata loads once instead of once per planning step. */
   private lazy val resolvedSeries: graft.api.Series = table.series
 
-  private lazy val (plannedSegments, totalSegments):
-      (Seq[SegmentRead], Int) = {
+  private lazy val (plannedSegments, totalSegments, statSkipped):
+      (Seq[SegmentRead], Int, Option[Int]) = {
     val s = resolvedSeries
     // O(touched), not O(manifest): enumerating every segment (and
     // thus parsing every manifest chunk) to display a denominator
@@ -792,7 +767,6 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
               }
             }
           }
-          GraftScanProbe.lastStatSkipped = covering1.length - kept.length
           kept
         }
       }
@@ -819,11 +793,8 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
         if (limitReversed) run.reverse else run
       case None => covering0
     }
-    GraftScanProbe.lastSegmentsScanned = covering.length
-    GraftScanProbe.lastSegmentsTotal = total
-    GraftScanProbe.lastPushed = pushedDesc
-    GraftScanProbe.lastLimit = limit.getOrElse(-1)
-    (covering, total)
+    (covering, total,
+      if (vquery.isEmpty) None else Some(covering1.length - covering0.length))
   }
 
   // ---- runtime filtering (DPP-style): a join's build side delivers
@@ -870,7 +841,6 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
           val hi = s.stop.values(0)
           vals.exists(v => dt.cmp(v, lo) >= 0 && dt.cmp(v, hi) <= 0)
         }
-        GraftScanProbe.lastRuntimeScanned = kept.length
         kept
     }
 
@@ -882,7 +852,6 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
   override def planInputPartitions(): Array[InputPartition] = {
     val parts = aggPush match {
       case Some((_, values)) =>
-        GraftScanProbe.lastAggPushed = true
         Array[InputPartition](GraftAggPartition(values.toVector))
       case None =>
         runtimePruned(plannedSegments).flatMap(seg =>
@@ -891,6 +860,26 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
     }
     plannedParts = parts
     parts
+  }
+
+  override def supportedCustomMetrics() = {
+    import GraftMetrics._
+    declare(Seq(SegmentsTotal, SegmentsKept, FilesVectorized,
+      FilesColumnar) ++
+      Option.when(vquery.nonEmpty)(SegmentsStatSkipped) ++
+      Option.when(filterAttributes().nonEmpty)(SegmentsRuntimeKept) ++
+      Option.when(aggPush.isDefined)(AggFromManifest): _*)
+  }
+
+  /** Called by Spark once the batch's partitions are planned. */
+  override def reportDriverMetrics() = {
+    import GraftMetrics._
+    (Seq(value(SegmentsTotal, totalSegments),
+      value(SegmentsKept, plannedSegments.length)) ++
+      statSkipped.map(value(SegmentsStatSkipped, _)) ++
+      runtimeKeep.map(_ =>
+        value(SegmentsRuntimeKept, runtimePruned(plannedSegments).length)) ++
+      aggPush.map(_ => value(AggFromManifest, 1))).toArray
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -1008,6 +997,9 @@ class GraftWrite(table: GraftTable, presorted: Boolean,
   override def requiredOrdering(): Array[SortOrder] =
     if (presorted) Array.empty else idxOrders
 
+  override def supportedCustomMetrics() =
+    GraftMetrics.declare(GraftMetrics.FilesWritten)
+
   override def toBatch
       : org.apache.spark.sql.connector.write.BatchWrite =
     new GraftBatchWrite(table,
@@ -1090,7 +1082,6 @@ class GraftBatchWrite(table: GraftTable,
     }
     finally series.collection.repo.store.rm(params.tmpRel,
       recursive = true)
-    GraftScanProbe.lastWriteFiles = stats.length
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -1148,7 +1139,6 @@ class GraftStreamingWrite(table: GraftTable, presorted: Boolean,
       // only the latest epoch can replay after a restart — older
       // markers are dead weight
       store.rm(s"$qdir/e${epochId - 1}")
-      GraftScanProbe.lastWriteFiles = stats.length
     } finally rmStaging()
   }
 
@@ -1179,7 +1169,11 @@ class GraftWriterFactory(params: SegmentWriter.TaskParams,
 
 class GraftDataWriter(tw: SegmentWriter.TaskSegmentWriter)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
+  // Spark polls this every few rows and once before the commit
+  private val metrics =
+    Array(GraftMetrics.value(GraftMetrics.FilesWritten, tw.files))
   override def write(row: InternalRow): Unit = tw.write(row)
+  override def currentMetricsValues() = metrics
   override def commit()
       : org.apache.spark.sql.connector.write.WriterCommitMessage =
     GraftCommitMessage(tw.finish().map(_._2))
@@ -1416,6 +1410,8 @@ private final class GraftSegmentsTable(s: graft.api.Series,
         // row-group batches feed Spark's codegen'd ColumnarToRow
         // directly, skipping the per-row DSv2 iterator tax.
         override def planInputPartitions(): Array[InputPartition] = parts
+        override def supportedCustomMetrics() = GraftMetrics.declare(
+          GraftMetrics.FilesVectorized, GraftMetrics.FilesColumnar)
         override def createReaderFactory(): PartitionReaderFactory =
           if (GraftPlanning.columnarEligible(parts))
             GraftPlanning.columnarReaderFactory()
@@ -1903,7 +1899,8 @@ private object GraftRead {
     * [[GraftColumnarScan]] when any of them uses an encoding in
     * [[vectorizedUnsupported]], Spark's VectorizedParquetRecordReader
     * otherwise. The chosen reader takes over the footer and the open
-    * stream. */
+    * stream; the result names its tier as the metric that counts it
+    * ([[SegmentBatches.tier]]). */
   def open(uri: String, physNames: Seq[String], dtypes: Array[GType],
       conf: Configuration): SegmentBatches = {
     val status = graft.core.Store.statOrResurrect(uri, conf)
@@ -1918,16 +1915,13 @@ private object GraftRead {
         .exists(c => wanted(c.getPath.toDotString) &&
           c.getEncodings.asScala.exists(vectorizedUnsupported)))
       opened =
-        if (columnar) {
-          GraftScanProbe.columnarOpens.incrementAndGet()
+        if (columnar)
           new GraftColumnarScan(
             new ParquetFileReader(input, footer, options, stream),
             physNames, dtypes)
-        } else {
-          GraftScanProbe.vectorizedOpens.incrementAndGet()
+        else
           vectorized(status, input, stream, footer, physNames, dtypes,
             conf)
-        }
       opened
     } finally if (opened == null) stream.close()
   }
@@ -1964,7 +1958,7 @@ private object GraftRead {
       "CORRECTED", "UTC", false, 4096)
     r.initialize(split, ctx, Some(input), Some(stream), Some(footer))
     r.initBatch(StructType(Nil), InternalRow.empty)
-    new SegmentBatches {
+    new SegmentBatches(GraftMetrics.FilesVectorized) {
       def nextBatch(): ColumnarBatch =
         if (r.nextBatch()) r.resultBatch() else null
       def close(): Unit = r.close()
@@ -2028,8 +2022,9 @@ private object GraftRead {
 
 /** A segment file opened by [[GraftRead.open]]: its rows as column
   * batches in the requested (physNames) order. A batch stays valid
-  * until the next call (the DSv2 buffer-reuse contract). */
-private abstract class SegmentBatches {
+  * until the next call (the DSv2 buffer-reuse contract). `tier` is the
+  * [[GraftMetrics]] name counting the files its decode tier opened. */
+private abstract class SegmentBatches(val tier: String) {
   /** the next batch, or null at the end of the file */
   def nextBatch(): ColumnarBatch
   def close(): Unit
@@ -2046,7 +2041,8 @@ private abstract class SegmentBatches {
   * callbacks, no slot boxing. Requested columns absent from the file
   * (pre-clone segments) serve null vectors. */
 private final class GraftColumnarScan(reader: ParquetFileReader,
-    physNames: Seq[String], dtypes: Array[GType]) extends SegmentBatches {
+    physNames: Seq[String], dtypes: Array[GType])
+    extends SegmentBatches(GraftMetrics.FilesColumnar) {
   import org.apache.parquet.column.impl.ColumnReadStoreImpl
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 
@@ -2163,9 +2159,11 @@ private final class GraftColumnarFileReader(p: GraftFilePartition,
     conf: SegmentWriter.SerConf) extends PartitionReader[ColumnarBatch] {
   private val file = GraftRead.open(p.uri, p.physNames,
     p.dtypeNames.map(GraftRead.dtypeOf).toArray, conf.value)
+  private val metrics = Array(GraftMetrics.value(file.tier, 1))
   private var cur: ColumnarBatch = _
   override def next(): Boolean = { cur = file.nextBatch(); cur != null }
   override def get(): ColumnarBatch = cur
+  override def currentMetricsValues() = metrics
   override def close(): Unit = file.close()
 }
 
@@ -2204,6 +2202,9 @@ class GraftFileReader(p: GraftFilePartition, conf: SegmentWriter.SerConf)
     p.outPos.indices.forall(i => p.outPos(i) == i)
 
   private val file = open(p.uri, p.physNames, dtypes, conf.value)
+  // one file per reader, so its count is final at open: Spark polls
+  // this every few rows and gets the same preallocated array back
+  private val metrics = Array(GraftMetrics.value(file.tier, 1))
   private var rows: java.util.Iterator[InternalRow] =
     java.util.Collections.emptyIterator()
   private var current: InternalRow = _
@@ -2254,6 +2255,7 @@ class GraftFileReader(p: GraftFilePartition, conf: SegmentWriter.SerConf)
     false
   }
   override def get(): InternalRow = current
+  override def currentMetricsValues() = metrics
   override def close(): Unit = file.close()
 }
 

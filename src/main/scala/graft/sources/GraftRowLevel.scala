@@ -56,7 +56,7 @@ class GraftRowLevelOperation(table: GraftTable,
       : Seq[(IndexKey, IndexKey, Closed)] = null
 
   /** ONE manifest snapshot per OPERATION: the scan's group planning
-    * (bounded AND unbounded), the probe totals, the write's
+    * (bounded AND unbounded), the metric totals, the write's
     * roll-window computation and the sort-width decision all query
     * this one decoded manifest — one label-span walk per statement
     * instead of three, and no concurrent commit can slip a different
@@ -244,7 +244,7 @@ class GraftCowScan(table: GraftTable, op: GraftRowLevelOperation,
     start: Any = null, stop: Any = null, closed: Closed = Closed.Both,
     skipRuntimeFilter: Boolean = false,
     /** filter skipped because static selection was EXACT (vs skipped
-      * for economy on a tiny candidate cover) — probe attribution */
+      * for economy on a tiny candidate cover) — reported as a metric */
     staticExact: Boolean = false)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
@@ -345,16 +345,6 @@ class GraftCowScan(table: GraftTable, op: GraftRowLevelOperation,
       }
     }
     op.replacedRanges = kept.map(s => (s.start, s.stop, s.closed))
-    // probe semantics: "scanned" counts groups kept by EITHER pruning
-    // mechanism (static index bound or runtime matched-value filter);
-    // "total" is always the table's full segment count
-    val statik = start != null || stop != null
-    GraftScanProbe.lastCowStatic = staticExact
-    GraftScanProbe.lastCowTinySkip = skipRuntimeFilter && !staticExact
-    GraftScanProbe.lastRuntimeScanned =
-      if (runtimeKeep.isDefined || statik) kept.length else -1
-    GraftScanProbe.lastSegmentsScanned = kept.length
-    GraftScanProbe.lastSegmentsTotal = tableSegmentCount
     val reqNames = table.gschema.names
     kept.flatMap(seg => GraftPlanning.partitionsFor(resolvedSeries,
       table.gschema, reqNames, seg, null)).toArray
@@ -362,6 +352,26 @@ class GraftCowScan(table: GraftTable, op: GraftRowLevelOperation,
 
   override def createReaderFactory(): PartitionReaderFactory =
     GraftPlanning.readerFactory()
+
+  override def supportedCustomMetrics() = {
+    import GraftMetrics._
+    declare(Seq(SegmentsTotal, SegmentsKept, GroupsStatic, GroupsTinySkip,
+      FilesVectorized, FilesColumnar) ++
+      Option.when(!skipRuntimeFilter)(SegmentsRuntimeKept): _*)
+  }
+
+  /** Called by Spark once the groups are planned: "kept" counts the
+    * groups left by either pruning step (static index bound, runtime
+    * matched-value filter); "total" is the table's segment count. */
+  override def reportDriverMetrics() = {
+    import GraftMetrics._
+    val kept = op.replacedRanges.length
+    (Seq(value(SegmentsTotal, tableSegmentCount),
+      value(SegmentsKept, kept),
+      value(GroupsStatic, if (staticExact) 1 else 0),
+      value(GroupsTinySkip, if (skipRuntimeFilter && !staticExact) 1 else 0)) ++
+      runtimeKeep.map(_ => value(SegmentsRuntimeKept, kept))).toArray
+  }
 }
 
 /** The copy-on-write write: the engine's one-job staged write (same
@@ -417,6 +427,9 @@ class GraftCowWrite(table: GraftTable, op: GraftRowLevelOperation)
     if (totalRows <= table.series.collection.pageLen) 1 else 0
   }
 
+  override def supportedCustomMetrics() =
+    GraftMetrics.declare(GraftMetrics.FilesWritten)
+
   override def toBatch: BatchWrite =
     new GraftCowBatchWrite(table, table.series.collection.taskParams(), op)
 }
@@ -463,7 +476,6 @@ class GraftCowBatchWrite(table: GraftTable,
     try series.commitReplace(stats, op.replacedRanges)
     finally series.collection.repo.store.rm(params.tmpRel,
       recursive = true)
-    GraftScanProbe.lastWriteFiles = stats.length
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -507,6 +519,9 @@ class GraftCowDataWriter(tw: SegmentWriter.TaskSegmentWriter,
   private var started = false
   private var shift = -1
   private val shifted = new ShiftedInternalRow(nCols)
+  private val metrics =
+    Array(GraftMetrics.value(GraftMetrics.FilesWritten, tw.files))
+  override def currentMetricsValues() = metrics
 
   private def keyAt(ir: InternalRow): IndexKey = IndexKey(
     idxPos.map { i =>

@@ -71,29 +71,29 @@ class BssCodecSpec extends AnyFunSuite {
     assert(!encodings("plain").contains("BYTE_STREAM_SPLIT"))
 
     // 2. reads take the COLUMNAR tier and return identical values
-    val probe = graft.sources.GraftScanProbe
-    val cf0 = probe.columnarOpens.get()
-    val got = spark.read.format("graft").option("path", root)
+    import graft.sources.GraftMetrics._
+    val (got, m) = TestSpark.graftMetrics(spark.read.format("graft")
+      .option("path", root)
       .option("collection", "c").option("series", "bss").load()
       .agg(org.apache.spark.sql.functions.count($"v"),
-        org.apache.spark.sql.functions.sum($"v")).collect()(0)
+        org.apache.spark.sql.functions.sum($"v")).collect()(0))
     assert(got.getLong(0) == 50000L)
-    assert(probe.columnarOpens.get() > cf0,
-      "BSS files must take the columnar tier")
+    assert(m(FilesColumnar) > 0, "BSS files must take the columnar tier")
     val want = df.agg(org.apache.spark.sql.functions.sum($"v"))
       .collect()(0).getDouble(0)
     assert(math.abs(got.getDouble(1) - want) < 1e-6,
       s"${got.getDouble(1)} vs $want")
 
     // 3. the choice is per file: the plain series still vectorizes
-    val v0 = probe.vectorizedOpens.get()
     // a VALUE aggregate, not count(): count(*) answers from the
     // manifest (metadata-only) and would open no file at all
-    assert(spark.read.format("graft").option("path", root)
+    val (plainSum, m2) = TestSpark.graftMetrics(spark.read.format("graft")
+      .option("path", root)
       .option("collection", "c").option("series", "plain").load()
       .agg(org.apache.spark.sql.functions.sum($"v")).collect()(0)
-      .getDouble(0) != 0.0)
-    assert(probe.vectorizedOpens.get() > v0,
+      .getDouble(0))
+    assert(plainSum != 0.0)
+    assert(m2(FilesVectorized) > 0,
       "plain files must stay on the vectorized path")
 
     // 4. Series.frame(): the sticky registry hint routes the API scan
@@ -175,19 +175,18 @@ class BssCodecSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.segment.codec", "zstd+bss")
     try clct.series("_").write(df, presorted = true)
     finally spark.conf.set("spark.graft.segment.codec", "zstd")
-    val probe = graft.sources.GraftScanProbe
-    val v0 = probe.vectorizedOpens.get()
-    val c0 = probe.columnarOpens.get()
-    val got = spark.read.format("graft").option("path", root)
+    val (got, m) = TestSpark.graftMetrics(spark.read.format("graft")
+      .option("path", root)
       .option("collection", "c").option("series", "_").load()
       .agg(org.apache.spark.sql.functions.sum($"v")).collect()(0)
-      .getDouble(0)
+      .getDouble(0))
     val want = df.agg(org.apache.spark.sql.functions.sum($"v"))
       .collect()(0).getDouble(0)
     assert(math.abs(got - want) < 1e-6, s"$got vs $want")
-    assert(probe.vectorizedOpens.get() == v0,
+    import graft.sources.GraftMetrics._
+    assert(m(FilesVectorized) == 0,
       "a BSS file must not be opened by the vectorized reader")
-    assert(probe.columnarOpens.get() > c0,
+    assert(m(FilesColumnar) > 0,
       "the columnar tier must serve the BSS file")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.api.Repo
 import graft.core.{ColDef, GSchema, GType}
-import graft.sources.GraftScanProbe
+import graft.sources.GraftMetrics._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -162,12 +162,11 @@ class DecodeTierSpec extends AnyFunSuite {
     // the same content-addressed name, its original bytes again: the
     // next read decodes vectorized, like any plain file
     Files.write(path, orig)
-    val v0 = GraftScanProbe.vectorizedOpens.get()
-    val c0 = GraftScanProbe.columnarOpens.get()
-    assert(sumF() == want)
-    assert(GraftScanProbe.vectorizedOpens.get() > v0,
+    val (restored, m) = TestSpark.graftMetrics(sumF())
+    assert(restored == want)
+    assert(m(FilesVectorized) > 0,
       "a restored plain file must decode vectorized")
-    assert(GraftScanProbe.columnarOpens.get() == c0,
+    assert(m(FilesColumnar) == 0,
       "a failed read must not route later reads to the columnar tier")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.api._
 import graft.core._
-import graft.sources.GraftScanProbe
+import graft.sources.GraftMetrics._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -128,30 +128,27 @@ class GraftCatalogSpec extends AnyFunSuite {
     val s = repo.collection("c").get.series("s")
     s.write(spark.range(0, 80000, 1, 8)
       .select($"id".as("ts"), ($"id" * 1.5).as("v")), presorted = true)
-    GraftScanProbe.lastAggPushed = false
-    val got = spark.sql(
+    val (got, m) = TestSpark.graftMetrics(spark.sql(
       s"SELECT count(*), count(ts), min(ts), max(ts) FROM $cat.c.s")
-      .collect()(0)
+      .collect()(0))
     assert(got.getLong(0) == 80000L)
     assert(got.getLong(1) == 80000L)
     assert(got.getLong(2) == 0L)
     assert(got.getLong(3) == 79999L)
-    assert(GraftScanProbe.lastAggPushed,
+    assert(m.get(AggFromManifest).contains(1L),
       "aggregate was not answered from the manifest")
     // an overlay CLIP makes metadata inexact -> normal scan, exact
     s.delete(100L, 200L)
-    GraftScanProbe.lastAggPushed = false
-    val after = spark.sql(s"SELECT count(*) FROM $cat.c.s")
-      .collect()(0).getLong(0)
+    val (after, m2) = TestSpark.graftMetrics(
+      spark.sql(s"SELECT count(*) FROM $cat.c.s").collect()(0).getLong(0))
     assert(after == 80000L - 101L)
-    assert(!GraftScanProbe.lastAggPushed)
+    assert(!m2.get(AggFromManifest).contains(1L))
     // filtered aggregates never push (WHERE stays residual)
-    GraftScanProbe.lastAggPushed = false
-    val filtered = spark.sql(
+    val (filtered, m3) = TestSpark.graftMetrics(spark.sql(
       s"SELECT count(*) FROM $cat.c.s WHERE ts >= 70000")
-      .collect()(0).getLong(0)
+      .collect()(0).getLong(0))
     assert(filtered == 10000L)
-    assert(!GraftScanProbe.lastAggPushed)
+    assert(!m3.get(AggFromManifest).contains(1L))
   }
 
   test("SQL DELETE maps to manifest tombstones (metadata-only)") {
@@ -470,12 +467,13 @@ class GraftCatalogSpec extends AnyFunSuite {
     val rtf = scan.asInstanceOf[
       org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
     assert(rtf.filterAttributes().head.fieldNames().toSeq == Seq("ts"))
-    GraftScanProbe.lastRuntimeScanned = -1
     rtf.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("ts", Array(5L, 15000L))))
     val parts = scan.toBatch.planInputPartitions()
-    assert(GraftScanProbe.lastRuntimeScanned == 2,
-      s"runtime filter kept ${GraftScanProbe.lastRuntimeScanned}")
+    // what Spark reads off the scan once its partitions are planned
+    val kept = scan.reportDriverMetrics()
+      .find(_.name() == SegmentsRuntimeKept).map(_.value())
+    assert(kept.contains(2L), s"runtime filter kept $kept")
     assert(parts.length == 2)
     // values outside every segment range -> nothing planned
     val scan2 = new graft.sources.GraftScanBuilder(t, None).build()
@@ -659,16 +657,13 @@ class GraftCatalogSpec extends AnyFunSuite {
       s"INSERT INTO $cat.c.ev SELECT id, id * 0.5 FROM range(0, 8000)")
     // pure index-range condition: the manifest bound selects the two
     // covering segments statically — no group-filter subquery planned
-    GraftScanProbe.lastCowStatic = false
-    GraftScanProbe.lastRuntimeScanned = -1
-    spark.sql(
-      s"UPDATE $cat.c.ev SET v = -1.0 WHERE ts >= 2500 AND ts < 3500")
-    assert(GraftScanProbe.lastCowStatic,
+    val (_, upd) = TestSpark.graftMetrics(spark.sql(
+      s"UPDATE $cat.c.ev SET v = -1.0 WHERE ts >= 2500 AND ts < 3500"))
+    assert(upd(GroupsStatic) == 1,
       "index-range UPDATE must select groups statically")
-    assert(GraftScanProbe.lastRuntimeScanned == 2,
-      s"expected 2 covering segments, " +
-        s"kept ${GraftScanProbe.lastRuntimeScanned}")
-    assert(GraftScanProbe.lastSegmentsTotal == 8)
+    assert(upd(SegmentsKept) == 2,
+      s"expected 2 covering segments, kept ${upd(SegmentsKept)}")
+    assert(upd(SegmentsTotal) == 8)
     // groups were read WHOLE: unmatched rows in the rewritten
     // segments survive with their original values
     val r = spark.sql(
@@ -682,12 +677,11 @@ class GraftCatalogSpec extends AnyFunSuite {
       "must survive the COW rewrite")
     // value predicate: not index-expressible — the static bound can't
     // cover it, so the runtime group filter must stay in the plan
-    GraftScanProbe.lastCowStatic = true
-    GraftScanProbe.lastRuntimeScanned = -1
-    spark.sql(s"DELETE FROM $cat.c.ev WHERE v = 123.5")
-    assert(!GraftScanProbe.lastCowStatic,
+    val (_, del) = TestSpark.graftMetrics(
+      spark.sql(s"DELETE FROM $cat.c.ev WHERE v = 123.5"))
+    assert(del(GroupsStatic) == 0,
       "value-predicate DELETE must keep the runtime group filter")
-    assert(GraftScanProbe.lastRuntimeScanned >= 0,
+    assert(del.getOrElse(SegmentsRuntimeKept, -1L) >= 0,
       "runtime filter should have run for the value-predicate DELETE")
     assert(spark.sql(s"SELECT count(*) FROM $cat.c.ev")
       .collect()(0).getLong(0) == 7999L)
@@ -706,51 +700,48 @@ class GraftCatalogSpec extends AnyFunSuite {
          |FROM range(0, 8000)""".stripMargin)
     // eq on the leading column + range on the second: the prefix
     // consumes BOTH bounds — fully static, no runtime subquery
-    GraftScanProbe.lastCowStatic = false
-    spark.sql(s"UPDATE $cat.m.ev SET v = -1.0 " +
-      s"WHERE a = 3 AND b >= 200 AND b < 300")
-    assert(GraftScanProbe.lastCowStatic,
+    val (_, eqRange) = TestSpark.graftMetrics(
+      spark.sql(s"UPDATE $cat.m.ev SET v = -1.0 " +
+        s"WHERE a = 3 AND b >= 200 AND b < 300"))
+    assert(eqRange(GroupsStatic) == 1,
       "eq-prefix + range condition must select groups statically")
-    assert(GraftScanProbe.lastRuntimeScanned == 1,
-      s"expected the one a=3 segment, " +
-        s"kept ${GraftScanProbe.lastRuntimeScanned}")
+    assert(eqRange(SegmentsKept) == 1,
+      s"expected the one a=3 segment, kept ${eqRange(SegmentsKept)}")
     // range on the SECOND column alone cannot prune through the
     // lexicographic prefix: static selection must stand down (scan
     // unbounded) and the runtime group filter stays available
-    GraftScanProbe.lastCowStatic = true
-    spark.sql(s"UPDATE $cat.m.ev SET v = -2.0 WHERE b = 998")
-    assert(!GraftScanProbe.lastCowStatic,
+    val (_, second) = TestSpark.graftMetrics(
+      spark.sql(s"UPDATE $cat.m.ev SET v = -2.0 WHERE b = 998"))
+    assert(second(GroupsStatic) == 0,
       "a second-column-only condition must not claim exactness")
     // range (not eq) on the leading column + bound on the second:
     // the prefix ends at the first range column, so the second
     // column's bound is NOT consumed — static bound applies but
     // exactness must not be claimed
-    GraftScanProbe.lastCowStatic = true
-    spark.sql(s"UPDATE $cat.m.ev SET v = -3.0 " +
-      s"WHERE a >= 5 AND a < 7 AND b = 4")
-    assert(!GraftScanProbe.lastCowStatic,
+    val (_, below) = TestSpark.graftMetrics(
+      spark.sql(s"UPDATE $cat.m.ev SET v = -3.0 " +
+        s"WHERE a >= 5 AND a < 7 AND b = 4"))
+    assert(below(GroupsStatic) == 0,
       "a bound below the terminated prefix must not claim exactness")
     // <= 3, not 2: segment stops are stretched to the successor's
     // start, so the a=4 segment's window [(4,0),(5,0)) intersects
     // the (5) closed start bound as a degenerate sliver the prune
     // cannot drop without knowing b's domain — a conservative cover
     // that COW handles by rewriting the group unchanged
-    assert(GraftScanProbe.lastRuntimeScanned <= 3,
+    assert(below(SegmentsKept) <= 3,
       "the leading-column range must still bound the scan statically")
     // MERGE with a target-only index conjunct in its ON clause: the
     // pushed bound caps the cover but matched groups are decided by
     // the JOIN — exactness must never be claimed, so the runtime
     // group filter stays and prunes to the segments the source
     // actually matches
-    GraftScanProbe.lastCowStatic = true
-    GraftScanProbe.lastRuntimeScanned = -1
-    spark.sql(
+    val (_, merge) = TestSpark.graftMetrics(spark.sql(
       s"""MERGE INTO $cat.m.ev t USING (
          |  SELECT cast(2 AS BIGINT) AS a, cast(id AS BIGINT) AS b,
          |    -9.0 AS v FROM range(10, 20)) src
          |ON t.a = src.a AND t.b = src.b AND t.a >= 1 AND t.a < 6
-         |WHEN MATCHED THEN UPDATE SET v = src.v""".stripMargin)
-    assert(!GraftScanProbe.lastCowStatic,
+         |WHEN MATCHED THEN UPDATE SET v = src.v""".stripMargin))
+    assert(merge(GroupsStatic) == 0,
       "MERGE must never claim static exactness")
     assert(spark.sql(s"SELECT count(*) FROM $cat.m.ev WHERE v = -9.0")
       .collect()(0).getLong(0) == 10L)
@@ -766,6 +757,47 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(r.getLong(1) == 8L, s"b=998 across 8 a-groups: ${r.getLong(1)}")
     assert(r.getLong(2) == 2L, s"a in [5,7),b=4: ${r.getLong(2)}")
     assert(r.getLong(3) == 8000L)
+  }
+
+  test("graft metrics reach Spark's SQL status store (UI, event log)") {
+    val (cat, _) = newCatalog()
+    spark.sql(
+      s"""CREATE TABLE $cat.c.ui (ts BIGINT, v DOUBLE)
+         |PARTITIONED BY (ts)
+         |TBLPROPERTIES ('page_len' = '1000')""".stripMargin)
+    // what the SQL tab shows: per metric label (the metric's
+    // description), the aggregated value on each node that carries it
+    def shown(r: TestSpark.Recorded[_]): Map[String, Seq[String]] = {
+      val store = spark.sharedState.statusStore
+      r.ids.flatMap { id =>
+        val deadline = System.nanoTime() + 10000000000L
+        while (!store.execution(id).exists(_.completionTime.isDefined) &&
+            System.nanoTime() < deadline) Thread.sleep(20)
+        val values = store.executionMetrics(id)
+        store.execution(id).toSeq.flatMap(_.metrics)
+          .filter(_.name.startsWith("graft ")).distinctBy(_.accumulatorId)
+          .flatMap(m => values.get(m.accumulatorId).map(m.name -> _))
+      }.groupMap(_._1)(_._2)
+    }
+    val insert = TestSpark.record(spark.sql(
+      s"INSERT INTO $cat.c.ui SELECT id, id * 0.5 FROM range(0, 8000)"))
+    assert(shown(insert)("graft files written") == Seq("8"), shown(insert))
+    val read = TestSpark.record(spark.sql(
+      s"""SELECT count(*) FROM $cat.c.ui
+         |WHERE ts >= 1000 AND ts < 5000 AND v >= 1000""".stripMargin)
+      .collect())
+    val r = shown(read)
+    assert(r("graft segments in manifest") == Seq("8"), r)
+    // [1000, 5000) covers 4 segments; v >= 1000 drops [1000, 2000)
+    assert(r("graft segments kept") == Seq("3"), r)
+    assert(r("graft segments skipped by value stats") == Seq("1"), r)
+    val update = TestSpark.record(
+      spark.sql(s"UPDATE $cat.c.ui SET v = 0.0 WHERE v = 2100.0"))
+    // the copy-on-write scan's nodes, next to its group-filter
+    // subquery's scan of the same table
+    val u = shown(update)
+    assert(u("graft groups chosen statically") == Seq("0"), u)
+    assert(u("graft segments kept by runtime filter").contains("1"), u)
   }
 
   test("page_len property: persisted, honored, alterable") {

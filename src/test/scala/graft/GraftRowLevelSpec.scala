@@ -1,7 +1,6 @@
 package graft
 
 import graft.api._
-import graft.sources.GraftScanProbe
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -246,53 +245,29 @@ class GraftRowLevelSpec extends AnyFunSuite {
 
   test("plan gate: rewrite-DELETE plans no exchange, UPDATE keeps " +
       "its range sort") {
-    // capture each DML statement's PHYSICAL plan via the SQL
-    // execution listener (DML returns a CommandResult; .explain
-    // can't reach the rewrite plan)
-    val plans = new java.util.concurrent.ConcurrentHashMap[
-      String, String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case s: org.apache.spark.sql.execution.ui
-              .SparkListenerSQLExecutionStart =>
-            val d = s.physicalPlanDescription
-            if (d.contains("ReplaceData") || d.contains("GraftCowScan"))
-              plans.put(s.description.replaceAll("\\s+", " ").take(40)
-                + "#" + s.executionId, d)
-          case _ =>
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (cat, _) = seeded()
+    // capture each DML statement's PHYSICAL plan as logged at its
+    // execution start (DML returns a CommandResult; .explain can't
+    // reach the rewrite plan)
+    val (cat, _) = seeded()
+    val ordered = TestSpark.record {
       spark.sql(s"DELETE FROM $cat.c.s WHERE v % 100 = 7") // rewrite
       spark.sql(s"UPDATE $cat.c.s SET v = v + 1 " +
         s"WHERE ts >= 120 AND ts < 140")
-      // the listener bus is async: poll briefly until both plans land
-      val deadline = System.nanoTime() + 10000000000L
-      while (plans.size < 2 && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      import scala.jdk.CollectionConverters._
-      // the description is the callsite, not the SQL text: order the
-      // captured rewrite plans by executionId (DELETE ran first)
-      val ordered = plans.asScala.toSeq
-        .sortBy(_._1.split('#').last.toLong).map(_._2)
-      assert(ordered.length == 2,
-        s"expected 2 captured DML plans, got ${plans.keySet()}")
-      val (del, upd) = (Some(ordered(0)), Some(ordered(1)))
-      // DELETE: narrow scan -> filter -> write; any Exchange in the
-      // MAIN plan would be the per-statement sample+shuffle this path
-      // exists to avoid (the runtime group-filter SUBQUERY legitimately
-      // aggregates — strip the subquery section before asserting)
-      val delMain = del.get.split("===== Subqueries =====")(0)
-      assert(!delMain.contains("Exchange"),
-        s"rewrite-DELETE planned an exchange:\n${delMain.take(2000)}")
-      // UPDATE keeps the global range sort (it may SET index columns)
-      val updMain = upd.get.split("===== Subqueries =====")(0)
-      assert(updMain.contains("Exchange") && updMain.contains("Sort"),
-        s"UPDATE lost its ordered write:\n${updMain.take(2000)}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }.plans.filter(d => d.contains("ReplaceData") ||
+      d.contains("GraftCowScan")) // in start order: DELETE ran first
+    assert(ordered.length == 2,
+      s"expected 2 captured DML plans, got ${ordered.length}")
+    val (del, upd) = (Some(ordered(0)), Some(ordered(1)))
+    // DELETE: narrow scan -> filter -> write; any Exchange in the
+    // MAIN plan would be the per-statement sample+shuffle this path
+    // exists to avoid (the runtime group-filter SUBQUERY legitimately
+    // aggregates — strip the subquery section before asserting)
+    val delMain = del.get.split("===== Subqueries =====")(0)
+    assert(!delMain.contains("Exchange"),
+      s"rewrite-DELETE planned an exchange:\n${delMain.take(2000)}")
+    // UPDATE keeps the global range sort (it may SET index columns)
+    val updMain = upd.get.split("===== Subqueries =====")(0)
+    assert(updMain.contains("Exchange") && updMain.contains("Sort"),
+      s"UPDATE lost its ordered write:\n${updMain.take(2000)}")
   }
 }

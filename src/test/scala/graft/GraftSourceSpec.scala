@@ -2,7 +2,8 @@ package graft
 
 import graft.api._
 import graft.core._
-import graft.sources.GraftScanProbe
+import graft.sources.GraftMetrics
+import graft.sources.GraftMetrics._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -39,31 +40,59 @@ class GraftSourceSpec extends AnyFunSuite {
       .option("path", root).option("collection", "c")
       .option("series", "_").load()
 
+  /** `sql`'s single count and the graft metrics of its scan */
+  private def countWith(sql: String): (Long, Map[String, Long]) =
+    TestSpark.graftMetrics(spark.sql(sql).collect()(0).getLong(0))
+
   test("index WHERE prunes to the covering segments") {
     val (_, s, root) = fixture()
     assert(s.segments().length == 8)
     table(root).createOrReplaceTempView("g")
-    GraftScanProbe.vectorizedOpens.set(0)
-    val got = spark.sql(
+    val q = spark.sql(
       "SELECT count(*) AS n, sum(ts) AS st FROM g WHERE ts < 10000")
-      .collect()(0)
+    val (got, m) = TestSpark.graftMetrics(q.collect()(0))
     assert(got.getLong(0) == 10000L)
     assert(got.getLong(1) == (0L until 10000L).sum)
-    assert(GraftScanProbe.lastSegmentsTotal == 8)
-    assert(GraftScanProbe.lastSegmentsScanned == 1,
-      s"expected 1 covering segment, scanned " +
-        s"${GraftScanProbe.lastSegmentsScanned}")
-    assert(GraftScanProbe.lastPushed.exists(_.contains("ts")))
+    assert(m(SegmentsTotal) == 8)
+    assert(m(SegmentsKept) == 1,
+      s"expected 1 covering segment, scanned ${m(SegmentsKept)}")
+    // pushed filters are on the scan's description
+    assert("pushed=\\[[^\\]]*ts".r
+      .findFirstIn(q.queryExecution.executedPlan.toString).isDefined)
 
     // range in the middle: 2 covering segments
-    val mid = spark.sql(
+    val (mid, m2) = countWith(
       "SELECT count(*) AS n FROM g WHERE ts >= 15000 AND ts < 25000")
-      .collect()(0).getLong(0)
     assert(mid == 10000L)
-    assert(GraftScanProbe.lastSegmentsScanned == 2)
+    assert(m2(SegmentsKept) == 2)
     // the file partitions must decode through the VECTORIZED reader
-    assert(GraftScanProbe.vectorizedOpens.get() >= 3,
-      s"vectorized=${GraftScanProbe.vectorizedOpens.get()}")
+    val vectorized = m(FilesVectorized) + m2(FilesVectorized)
+    assert(vectorized >= 3, s"vectorized=$vectorized")
+  }
+
+  test("concurrent range reads each report their own scan metrics") {
+    // two tables (8 and 10 segments), two bounds, two threads planning
+    // and running at once: each query's metrics are its own
+    val (_, _, rootA) = fixture()
+    val (_, sB, rootB) = fixture()
+    import spark.implicits._
+    sB.write(spark.range(80000, 100000, 1, 2)
+      .select($"id".as("ts"), ($"id" * 1.5).as("value")), presorted = true)
+    val reads = Seq(
+      table(rootA).filter(col("ts") < 10000).agg(count(col("value"))),
+      table(rootB).filter(col("ts") >= 15000 && col("ts") < 45000)
+        .agg(count(col("value"))))
+    val start = new java.util.concurrent.CyclicBarrier(reads.length)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val counts =
+      try reads.map(df => pool.submit(() => {
+        start.await(); df.collect()(0).getLong(0)
+      })).map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      finally pool.shutdown()
+    assert(counts == Seq(10000L, 30000L))
+    val ms = reads.map(GraftMetrics.of(_))
+    assert(ms.map(_(SegmentsKept)) == Seq(1L, 4L), ms)
+    assert(ms.map(_(SegmentsTotal)) == Seq(8L, 10L), ms)
   }
 
   test("manifest statistics let a pruned scan broadcast") {
@@ -465,47 +494,51 @@ class GraftSourceSpec extends AnyFunSuite {
     spark.read.format("graft").option("path", root)
       .option("collection", "c").option("series", "_").load()
       .createOrReplaceTempView("gm")
-    val got = spark.sql(
+    val (got, m) = countWith(
       "SELECT count(*) AS n FROM gm WHERE day = 2 AND id >= 15000")
-      .collect()(0).getLong(0)
     assert(got == 5000L)
-    assert(GraftScanProbe.lastSegmentsScanned == 1,
-      s"expected 1 segment, got ${GraftScanProbe.lastSegmentsScanned}")
+    assert(m(SegmentsKept) == 1,
+      s"expected 1 segment, got ${m(SegmentsKept)}")
     // equality on day alone: the day's 4 segments plus the preceding
     // boundary row [ (1,15000), (2,0) ) — its right-open stop could
     // in principle cover day-2 keys with negative ids, so the
     // manifest must keep it (the residual clip drops its rows)
-    assert(spark.sql("SELECT count(*) FROM gm WHERE day = 2")
-      .collect()(0).getLong(0) == 20000L)
-    assert(GraftScanProbe.lastSegmentsScanned == 5)
+    val (day2, m2) = countWith("SELECT count(*) FROM gm WHERE day = 2")
+    assert(day2 == 20000L)
+    assert(m2(SegmentsKept) == 5)
     // a bound on id WITHOUT day cannot prune (not a prefix)
-    assert(spark.sql("SELECT count(*) FROM gm WHERE id < 100")
-      .collect()(0).getLong(0) == 400L)
-    assert(GraftScanProbe.lastSegmentsScanned == 16)
+    val (low, m3) = countWith("SELECT count(*) FROM gm WHERE id < 100")
+    assert(low == 400L)
+    assert(m3(SegmentsKept) == 16)
   }
 
   test("LIMIT and ORDER BY idx LIMIT push to a prefix-covering scan") {
     val (_, _, root) = fixture()
     table(root).createOrReplaceTempView("gl")
-    assert(spark.sql("SELECT * FROM gl LIMIT 100").collect().length
-      == 100)
-    assert(GraftScanProbe.lastLimit == 100)
-    assert(GraftScanProbe.lastSegmentsScanned == 1,
-      s"limit scan read ${GraftScanProbe.lastSegmentsScanned} segments")
+    val limited = spark.sql("SELECT * FROM gl LIMIT 100")
+    val (rows, m) = TestSpark.graftMetrics(limited.collect())
+    assert(rows.length == 100)
+    // the pushed limit is on the scan's description
+    assert(limited.queryExecution.executedPlan.toString
+      .contains("limit=100"))
+    assert(m(SegmentsKept) == 1,
+      s"limit scan read ${m(SegmentsKept)} segments")
     // ascending top-k: leading segment only
-    val lo = spark.sql("SELECT ts FROM gl ORDER BY ts LIMIT 5")
-      .collect().map(_.getLong(0)).toSeq
+    val (lo, m2) = TestSpark.graftMetrics(
+      spark.sql("SELECT ts FROM gl ORDER BY ts LIMIT 5")
+        .collect().map(_.getLong(0)).toSeq)
     assert(lo == Seq(0L, 1L, 2L, 3L, 4L))
-    assert(GraftScanProbe.lastSegmentsScanned == 1)
+    assert(m2(SegmentsKept) == 1)
     // descending top-k: trailing segment only
-    val hi = spark.sql("SELECT ts FROM gl ORDER BY ts DESC LIMIT 3")
-      .collect().map(_.getLong(0)).toSeq
+    val (hi, m3) = TestSpark.graftMetrics(
+      spark.sql("SELECT ts FROM gl ORDER BY ts DESC LIMIT 3")
+        .collect().map(_.getLong(0)).toSeq)
     assert(hi == Seq(79999L, 79998L, 79997L))
-    assert(GraftScanProbe.lastSegmentsScanned == 1)
+    assert(m3(SegmentsKept) == 1)
     // an unlimited read must NOT inherit the pushed limit
-    assert(spark.sql("SELECT count(*) FROM gl").collect()(0)
-      .getLong(0) == 80000L)
-    assert(GraftScanProbe.lastSegmentsScanned == 8)
+    val (all, m4) = countWith("SELECT count(*) FROM gl")
+    assert(all == 80000L)
+    assert(m4(SegmentsKept) == 8)
   }
 
   test("reported ordering elides within-partition index sorts") {
@@ -579,14 +612,15 @@ class GraftSourceSpec extends AnyFunSuite {
     import spark.implicits._
     val add = spark.range(80000, 90000, 1, 2)
       .select($"id".as("ts"), lit(7.0).as("value"))
-    val (_, jobs, _) = TestSpark.work {
+    val append = TestSpark.record {
       add.write.format("graft")
         .option("path", root).option("collection", "c")
         .option("series", "_").option("presorted", "true")
         .mode("append").save()
     }
-    assert(jobs == 1, s"presorted connector append ran $jobs jobs")
-    assert(graft.sources.GraftScanProbe.lastWriteFiles == 2)
+    assert(append.jobs == 1,
+      s"presorted connector append ran ${append.jobs} jobs")
+    assert(append.graftMetrics(FilesWritten) == 2)
     // visible through BOTH the API and the connector
     assert(s.frame().count() == 90000L)
     assert(table(root).filter(col("value") === 7.0).count() == 10000L)

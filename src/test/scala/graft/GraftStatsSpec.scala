@@ -2,7 +2,7 @@ package graft
 
 import graft.api._
 import graft.core._
-import graft.sources.GraftScanProbe
+import graft.sources.GraftMetrics._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -32,6 +32,10 @@ class GraftStatsSpec extends AnyFunSuite {
     (root, sr)
   }
 
+  /** `sql`'s single count and the graft metrics of its scan */
+  private def countWith(sql: String): (Long, Map[String, Long]) =
+    TestSpark.graftMetrics(spark.sql(sql).collect()(0).getLong(0))
+
   private def view(root: String): Unit =
     spark.read.format("graft").option("path", root)
       .option("collection", "c").option("series", "_").load()
@@ -43,26 +47,22 @@ class GraftStatsSpec extends AnyFunSuite {
     assert(sr.segments().forall(_.meta.vstats.isDefined),
       "write paths must record value stats")
     view(root)
-    GraftScanProbe.lastStatSkipped = -1
-    val n = spark.sql(
+    val (n, m) = countWith(
       "SELECT count(v) FROM gstats WHERE v >= 1000 AND v < 1100")
-      .collect()(0).getLong(0)
     assert(n == 100L)
-    assert(GraftScanProbe.lastStatSkipped == 2,
-      s"skipped=${GraftScanProbe.lastStatSkipped}")
-    assert(GraftScanProbe.lastSegmentsScanned == 1)
+    assert(m(SegmentsStatSkipped) == 2,
+      s"skipped=${m(SegmentsStatSkipped)}")
+    assert(m(SegmentsKept) == 1)
     // equality + IN-list bounds skip too
-    GraftScanProbe.lastStatSkipped = -1
-    assert(spark.sql(
+    val (in, m2) = countWith(
       "SELECT count(v) FROM gstats WHERE v IN (2000.0, 2099.0)")
-      .collect()(0).getLong(0) == 2L)
-    assert(GraftScanProbe.lastStatSkipped == 2)
+    assert(in == 2L)
+    assert(m2(SegmentsStatSkipped) == 2)
     // disjoint from everything: all three skip, zero rows
-    GraftScanProbe.lastStatSkipped = -1
-    assert(spark.sql(
+    val (none, m3) = countWith(
       "SELECT count(v) FROM gstats WHERE v > 50000")
-      .collect()(0).getLong(0) == 0L)
-    assert(GraftScanProbe.lastStatSkipped == 3)
+    assert(none == 0L)
+    assert(m3(SegmentsStatSkipped) == 3)
   }
 
   test("NaN poisons a float column's stats (no unsafe skip)") {
@@ -84,10 +84,9 @@ class GraftStatsSpec extends AnyFunSuite {
     view(root)
     // Spark orders NaN greatest: v > 100 matches the NaN row — the
     // segment must NOT be skipped
-    GraftScanProbe.lastStatSkipped = -1
-    assert(spark.sql("SELECT count(*) FROM gstats WHERE v > 100.0")
-      .collect()(0).getLong(0) == 1L)
-    assert(GraftScanProbe.lastStatSkipped <= 0)
+    val (nan, m) = countWith("SELECT count(*) FROM gstats WHERE v > 100.0")
+    assert(nan == 1L)
+    assert(m.getOrElse(SegmentsStatSkipped, -1L) <= 0)
   }
 
   test("default-bearing columns are exempt (stored nulls read as default)") {
@@ -126,11 +125,10 @@ class GraftStatsSpec extends AnyFunSuite {
     c.refresh()
     assert(sr.segments().forall(_.meta.vstats.isEmpty))
     view(root)
-    GraftScanProbe.lastStatSkipped = -1
-    assert(spark.sql(
+    val (before, m1) = countWith(
       "SELECT count(v) FROM gstats WHERE v >= 1000 AND v < 1100")
-      .collect()(0).getLong(0) == 100L)
-    assert(GraftScanProbe.lastStatSkipped <= 0,
+    assert(before == 100L)
+    assert(m1.getOrElse(SegmentsStatSkipped, -1L) <= 0,
       "stats-less segments must not skip")
 
     val cat = "gan" + java.util.UUID.randomUUID().toString
@@ -144,11 +142,10 @@ class GraftStatsSpec extends AnyFunSuite {
     val sr2 = new Repo(root, spark).collection("c").get.series("_")
     assert(sr2.segments().forall(_.meta.vstats.isDefined))
     view(root)
-    GraftScanProbe.lastStatSkipped = -1
-    assert(spark.sql(
+    val (after, m2) = countWith(
       "SELECT count(v) FROM gstats WHERE v >= 1000 AND v < 1100")
-      .collect()(0).getLong(0) == 100L)
-    assert(GraftScanProbe.lastStatSkipped == 2)
+    assert(after == 100L)
+    assert(m2(SegmentsStatSkipped) == 2)
     // idempotent: nothing left to analyze
     assert(spark.sql(s"CALL $cat.sys.analyze('c')").collect()(0)
       .getLong(1) == 0L)
@@ -172,17 +169,15 @@ class GraftStatsSpec extends AnyFunSuite {
     spark.read.format("graft").option("path", root)
       .option("collection", "c").option("series", "_").load()
       .createOrReplaceTempView("gsums")
-    GraftScanProbe.lastAggPushed = false
-    val got = spark.sql("SELECT sum(tokens) FROM gsums")
-      .collect()(0).getLong(0)
+    val (got, m) = countWith("SELECT sum(tokens) FROM gsums")
     assert(got == 2L * (0 until 100).map(_ % 7).sum)
-    assert(GraftScanProbe.lastAggPushed,
+    assert(m.get(AggFromManifest).contains(1L),
       "integer sum must answer from the manifest")
     // float sums are order-dependent: never pushed
-    GraftScanProbe.lastAggPushed = false
-    assert(spark.sql("SELECT sum(v) FROM gsums")
-      .collect()(0).getDouble(0) == 2 * (0 until 100).map(_ * 0.5).sum)
-    assert(!GraftScanProbe.lastAggPushed)
+    val (fsum, m2) = TestSpark.graftMetrics(
+      spark.sql("SELECT sum(v) FROM gsums").collect()(0).getDouble(0))
+    assert(fsum == 2 * (0 until 100).map(_ * 0.5).sum)
+    assert(!m2.get(AggFromManifest).contains(1L))
   }
 
   test("driver-tier (small) writes record the same stats") {

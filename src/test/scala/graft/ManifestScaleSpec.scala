@@ -457,16 +457,17 @@ class ManifestScaleSpec extends AnyFunSuite {
     val planMs = (System.nanoTime() - t0) / 1e6
     val row = df.collect()(0)
     val execMs = (System.nanoTime() - t0) / 1e6 - planMs
+    val m = graft.sources.GraftMetrics.of(df)
     // correctness: exactly the 300 rows of the window
     assert(row.getLong(1) == 300L)
     assert(math.abs(row.getDouble(0) -
       (70000000L to 70000299L).map(_.toDouble).sum) < 1e-3)
     // segments OPENED == the pruned answer (3 covering, +1 possible
     // straddle-widen) out of 1e6
-    val scanned = graft.sources.GraftScanProbe.lastSegmentsScanned
+    val scanned = m(graft.sources.GraftMetrics.SegmentsKept)
     assert(scanned >= 3 && scanned <= 4,
       s"scan opened $scanned of $n10 segments")
-    assert(graft.sources.GraftScanProbe.lastSegmentsTotal == n10)
+    assert(m(graft.sources.GraftMetrics.SegmentsTotal) == n10)
     // planning parsed only the covering manifest chunks, not ~245
     val parses = ManifestCodec.chunkCache.misses - p0
     assert(parses <= 3,
