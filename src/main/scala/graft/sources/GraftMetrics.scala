@@ -13,10 +13,7 @@ import org.apache.spark.sql.execution.datasources.v2.{
   * (README "Connector metrics" says what each one counts): they show
   * on the scan or write node in the UI's SQL tab, in the event log, and
   * in the executed plan's `.metrics` ([[of]]). Every metric sums over
-  * tasks (a driver-side metric has one value); flags read 1 when set.
-  *
-  * Spark re-instantiates a metric by class name to aggregate it, so
-  * each one is its own class with a no-arg constructor. */
+  * tasks (a driver-side metric has one value); flags read 1 when set. */
 object GraftMetrics {
   // scan, driver side
   final val SegmentsTotal = "segmentsTotal"
@@ -32,36 +29,28 @@ object GraftMetrics {
   // write, task side
   final val FilesWritten = "filesWritten"
 
-  sealed abstract class Sum(n: String, d: String) extends CustomSumMetric {
+  /** Every graft metric is a sum. Spark re-instantiates a metric by
+    * class name only to aggregate it, through the no-arg constructor;
+    * the name and label come from the declared instance. */
+  final class GraftSum(n: String, d: String) extends CustomSumMetric {
+    def this() = this("", "")
     override def name(): String = n
     override def description(): String = "graft " + d
   }
-  final class SegmentsTotalMetric
-      extends Sum(SegmentsTotal, "segments in manifest")
-  final class SegmentsKeptMetric extends Sum(SegmentsKept, "segments kept")
-  final class SegmentsStatSkippedMetric
-      extends Sum(SegmentsStatSkipped, "segments skipped by value stats")
-  final class SegmentsRuntimeKeptMetric
-      extends Sum(SegmentsRuntimeKept, "segments kept by runtime filter")
-  final class AggFromManifestMetric
-      extends Sum(AggFromManifest, "aggregate from manifest")
-  final class GroupsStaticMetric
-      extends Sum(GroupsStatic, "groups chosen statically")
-  final class GroupsTinySkipMetric
-      extends Sum(GroupsTinySkip, "group filter skipped (tiny cover)")
-  final class FilesVectorizedMetric
-      extends Sum(FilesVectorized, "files decoded vectorized")
-  final class FilesColumnarMetric
-      extends Sum(FilesColumnar, "files decoded columnar")
-  final class FilesWrittenMetric extends Sum(FilesWritten, "files written")
 
   // metrics are stateless: one shared instance each
-  private val all: Map[String, CustomMetric] = Seq(new SegmentsTotalMetric,
-    new SegmentsKeptMetric, new SegmentsStatSkippedMetric,
-    new SegmentsRuntimeKeptMetric, new AggFromManifestMetric,
-    new GroupsStaticMetric, new GroupsTinySkipMetric,
-    new FilesVectorizedMetric, new FilesColumnarMetric,
-    new FilesWrittenMetric).map(m => m.name() -> m).toMap
+  private val all: Map[String, CustomMetric] = Seq(
+    SegmentsTotal -> "segments in manifest",
+    SegmentsKept -> "segments kept",
+    SegmentsStatSkipped -> "segments skipped by value stats",
+    SegmentsRuntimeKept -> "segments kept by runtime filter",
+    AggFromManifest -> "aggregate from manifest",
+    GroupsStatic -> "groups chosen statically",
+    GroupsTinySkip -> "group filter skipped (tiny cover)",
+    FilesVectorized -> "files decoded vectorized",
+    FilesColumnar -> "files decoded columnar",
+    FilesWritten -> "files written"
+  ).map { case (n, d) => n -> new GraftSum(n, d) }.toMap
 
   /** the declarations for a scan's or write's `supportedCustomMetrics` */
   def declare(names: String*): Array[CustomMetric] = names.map(all).toArray
@@ -77,7 +66,8 @@ object GraftMetrics {
     * statement's `CommandResult`, not into subqueries (a row-level
     * operation's group-filter subquery scans the table a second time to
     * choose groups; its facts are its own). A metric is present when a
-    * node declared it, so a missing name means "did not apply". */
+    * node declared it, so a missing name means "did not apply"; a
+    * declared metric nothing reported reads 0. */
   def of(df: DataFrame): Map[String, Long] = of(df.queryExecution.executedPlan)
 
   def of(plan: SparkPlan): Map[String, Long] = {

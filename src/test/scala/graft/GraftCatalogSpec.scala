@@ -681,8 +681,11 @@ class GraftCatalogSpec extends AnyFunSuite {
       spark.sql(s"DELETE FROM $cat.c.ev WHERE v = 123.5"))
     assert(del(GroupsStatic) == 0,
       "value-predicate DELETE must keep the runtime group filter")
-    assert(del.getOrElse(SegmentsRuntimeKept, -1L) >= 0,
-      "runtime filter should have run for the value-predicate DELETE")
+    // v = 123.5 is the one row ts = 247: the group filter ran and kept
+    // only its segment (a declared metric that no filter reached reads 0)
+    assert(del(SegmentsRuntimeKept) == 1,
+      s"runtime filter should keep 1 segment, kept ${del(SegmentsRuntimeKept)}")
+    assert(del(SegmentsKept) == 1)
     assert(spark.sql(s"SELECT count(*) FROM $cat.c.ev")
       .collect()(0).getLong(0) == 7999L)
   }
