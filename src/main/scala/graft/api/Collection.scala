@@ -142,7 +142,7 @@ class Collection(val repo: Repo, val label: String, val path: String,
 
   /** `body` over fresh [[taskParams]], with the staging dir removed on
     * every path: sealing moved the files `body` kept, and a failed
-    * write (a rejected presorted declaration, a failed task or chunk)
+    * write (a rejected presorted declaration, a failed task)
     * leaves nothing behind for gc to age out. */
   private[graft] def staged[T](verifySorted: Boolean = false,
       labeled: Boolean = false)(body: SegmentWriter.TaskParams => T): T = {

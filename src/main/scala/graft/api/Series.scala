@@ -137,22 +137,20 @@ class Series(val collection: Collection, val label: String) {
         }
       }
 
-      // DRIVER-TIER gate: a frame under a single segment
-      // (≤ driverWriteRows ≤ pageLen) pays Spark's per-job scheduling
-      // floor twice on the distributed path (sample + write) for work
-      // one thread finishes in tens of ms — the reference's
-      // bulk_write-at-100k regime. Gate on the OPTIMIZER'S size
-      // estimate so big inputs never pay a wasted probe: only plans
-      // estimated under DriverWriteBytes (cached relations report
-      // measured cache size, file scans their on-disk bytes) are
-      // probed — with ONE incremental CollectLimit of InternalRows
-      // that subsumes the tiny probe. Both tiers write through
+      // DRIVER-TIER gate: a frame of at most one page (≤ pageLen rows)
+      // pays Spark's per-job scheduling floor twice on the distributed
+      // path (sample + write) for work one thread finishes in tens of
+      // ms — the reference's bulk_write-at-100k regime — and lands as
+      // one segment file here, lakota's write unit. Gate on the
+      // OPTIMIZER'S size estimate so big inputs never pay a wasted
+      // probe: only plans estimated under DriverWriteBytes (cached
+      // relations report measured cache size, file scans their on-disk
+      // bytes) are probed — with ONE collect job of InternalRows that
+      // subsumes the tiny probe. Both tiers write through
       // SegmentWriter.TaskSegmentWriter, so content addresses still
       // dedupe across them. At cluster scale this is strictly the right
-      // trade: a sub-segment write was never parallel work.
-      val driverRows = math.min(pageLen, spark.conf
-        .get("spark.graft.driverWriteRows", "250000").toLong)
-      val sizeGated = driverRows > collection.embedProbeRows && {
+      // trade: a sub-page write was never parallel work.
+      val sizeGated = pageLen > collection.embedProbeRows && {
         val estBytes =
           try data.queryExecution.optimizedPlan.stats.sizeInBytes
           catch { case scala.util.control.NonFatal(_) =>
@@ -172,14 +170,14 @@ class Series(val collection: Collection, val label: String) {
 
       if (sizeGated) {
         // Collect INTERNAL rows (no external-Row round trip) in ONE
-        // job over every partition, each capped at driverRows+1 —
+        // job over every partition, each capped at pageLen+1 —
         // CollectLimit's incremental partition escalation costs 3-4
         // job round-trips here (it expects to stop early; this path
         // expects to take everything), and the size gate already
         // bounds the data. A misestimate falls through to the
         // distributed path below, cost bounded by the per-partition
         // cap.
-        val cap = driverRows.toInt + 1
+        val cap = math.min(pageLen, Int.MaxValue - 1L).toInt + 1
         val rdd = data.queryExecution.toRdd
         val parts = Array.fill(math.max(rdd.getNumPartitions, 1))(
           Array.empty[org.apache.spark.sql.catalyst.InternalRow])
@@ -200,7 +198,7 @@ class Series(val collection: Collection, val label: String) {
           tinyWrite(irows.map(ir => conv(ir).asInstanceOf[Row]))
           return
         }
-        if (irows.length <= driverRows) {
+        if (irows.length <= pageLen) {
           writeSmallRows(parts, startK, stopK, closed, root, presorted)
           return
         }
@@ -296,7 +294,7 @@ class Series(val collection: Collection, val label: String) {
 
     // content-address each part file into the segment store. One
     // writer, SegmentWriter.TaskSegmentWriter, computes every staged
-    // file's `hash` (driver-tier chunks, the bulk job, the grouped
+    // file's `hash` (the driver tier's file, the bulk job, the grouped
     // ingest and the DataSourceV2 writers alike) as the
     // order-insensitive sum(pmod(xxhash64(cols), 2^31-1)) over THAT
     // FILE's rows, so the digest identifies the file's actual
@@ -499,16 +497,16 @@ class Series(val collection: Collection, val label: String) {
       vsums = if (vsums.nonEmpty) Some(vsums) else None))
   }
 
-  /** The driver tier: a fully-collected small frame (one inner array
-    * per source partition) sorted on the driver and written WITHOUT
-    * any Spark job — a tiny commit costs one local parquet flush plus
-    * one metadata commit, the regime the reference's
-    * bench_fragmentation.py measures, and the shape that keeps a
-    * high-frequency tiny-tick ingest from serializing on per-write
-    * job scheduling at cluster scale. Each chunk is written by the
-    * same [[SegmentWriter.TaskSegmentWriter]] a bulk-job task uses,
-    * so parquet format, digest and value stats match the bulk path
-    * and identical content dedupes across tiers. */
+  /** The driver tier: a fully-collected frame of at most `pageLen`
+    * rows (one inner array per source partition) sorted on the driver
+    * and written WITHOUT any Spark job as ONE segment file — a tiny
+    * commit costs one local parquet flush plus one metadata commit,
+    * the regime the reference's bench_fragmentation.py measures, and
+    * the shape that keeps a high-frequency tiny-tick ingest from
+    * serializing on per-write job scheduling at cluster scale. The
+    * file is written by the same [[SegmentWriter.TaskSegmentWriter]]
+    * a bulk-job task uses, so parquet format, digest and value stats
+    * match the bulk path and identical content dedupes across tiers. */
   private def writeSmallRows(
       parts: Array[Array[org.apache.spark.sql.catalyst.InternalRow]],
       startK: IndexKey, stopK: IndexKey, closed: Closed, root: Boolean,
@@ -540,7 +538,7 @@ class Series(val collection: Collection, val label: String) {
     // Index keys as per-COLUMN typed arrays (one pass, null-checked),
     // not an IndexKey/Vector per row: the sort below compares via
     // primitive array loads instead of boxed Vector[Any] dispatch —
-    // profiled 5-10x on the 10^5-row driver-tier ceiling. String
+    // profiled 5-10x on a 10^5-row driver-tier write. String
     // columns keep String.compareTo, matching cmpKey / manifest order.
     val n = irows.length
     val keyCols: Array[AnyRef] = idxPos.map { i =>
@@ -636,41 +634,14 @@ class Series(val collection: Collection, val label: String) {
             java.util.Comparator[Integer])
         boxed.map(_.intValue)
       }
-    // Parquet ENCODE dominates this path (~100-200 ms for 10^5 rows
-    // single-threaded): chunk the sorted rows into ≤ chunkRows files
-    // written by PARALLEL driver threads — still no Spark job, and
-    // each chunk is one TaskSegmentWriter, exactly like one bulk-job
-    // task, so sealing + digests are identical to the distributed
-    // tier (straddled duplicate keys at chunk boundaries included,
-    // via the shared sealSegments).
-    // chunk size: capped above (file granularity) AND sized down to
-    // keep ~8 writer threads busy on mid-size frames — a 58k-row
-    // frame writes 8 parallel ~7k-row files instead of 2 serial-ish
-    // 32k ones, without exploding small-write file counts (≤ 8
-    // files/write either way)
-    val chunkRows = math.min(Series.DriverWriteChunkRows.toLong,
-      math.min(pageLen, math.max(4096L, (n + 7L) / 8L))).toInt.max(1)
-    val nChunks = math.max(1, (n + chunkRows - 1) / chunkRows)
     val hconf = spark.sessionState.newHadoopConf()
     val rows = collection.staged() { p =>
-      def writeChunk(ci: Int): SegmentWriter.FileStat = {
-        val tw = new SegmentWriter.TaskSegmentWriter(p, hconf, ci, 0L)
+      val tw = new SegmentWriter.TaskSegmentWriter(p, hconf, 0, 0L)
+      val stats =
         try {
-          var r = ci * chunkRows
-          val hi = math.min(n, r + chunkRows)
-          while (r < hi) { tw.write(irows(order(r))); r += 1 }
-          tw.finish().head._2
+          order.foreach(r => tw.write(irows(r)))
+          tw.finish().map(_._2)
         } finally tw.closeQuiet()
-      }
-      val stats: Seq[SegmentWriter.FileStat] =
-        if (nChunks == 1) Seq(writeChunk(0))
-        else {
-          import scala.jdk.CollectionConverters._
-          (0 until nChunks).toList.asJava.parallelStream()
-            .map[SegmentWriter.FileStat](writeChunk(_))
-            .collect(java.util.stream.Collectors.toList[
-              SegmentWriter.FileStat]).asScala.toSeq
-        }
       sealSegments(stats, startK, stopK, closed)
     }
     commitRows(rows, root)
@@ -754,17 +725,11 @@ class Series(val collection: Collection, val label: String) {
     * content-addressed file never changes, so Spark gets the statuses
     * through the index's status cache: it never globs or lists the
     * paths, and never launches its parallel listing job (which it
-    * would for more than 32 paths). The lookups run on parallel driver
-    * threads: on an object store each one is a round trip. */
+    * would for more than 32 paths). */
   private def scanFiles(files: Seq[String]): DataFrame = {
     import org.apache.spark.sql.execution.datasources._
-    import scala.jdk.CollectionConverters._
-    val hconf = spark.sessionState.newHadoopConf()
-    val statuses = files.distinct.asJava.parallelStream()
-      .map[org.apache.hadoop.fs.FileStatus](f =>
-        graft.core.Store.statOrResurrect(store.uri(f), hconf))
-      .collect(java.util.stream.Collectors.toList[
-        org.apache.hadoop.fs.FileStatus]).asScala.toSeq
+    val statuses = graft.core.Store.statAllOrResurrect(
+      files.distinct.map(store.uri), spark.sessionState.newHadoopConf())
     val seeded = statuses.map(st => st.getPath -> Array(st)).toMap
     val known = new FileStatusCache {
       override def getLeafFiles(p: org.apache.hadoop.fs.Path) = seeded.get(p)
@@ -1208,8 +1173,6 @@ object Series {
   /** driver-tier size gate: only inputs the optimizer estimates under
     * this many bytes are probed for the driver tier */
   private val DriverWriteBytes = 32L << 20
-  /** driver-tier chunk cap: rows per file of the parallel chunk write */
-  private val DriverWriteChunkRows = 32768
   /** auto-sort write width: one task per this many estimated input
     * bytes, capped by the session's shuffle parallelism */
   private val WriteTaskBytes = 2L << 20

@@ -19,8 +19,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 
 /** The engine's own parquet writer for segment files — used on BOTH
-  * the driver (the driver tier's chunk files) and executors (the bulk
-  * write job and the DataSourceV2 writers), all through
+  * the driver (the driver tier's one file per write) and executors
+  * (the bulk write job and the DataSourceV2 writers), all through
   * [[SegmentWriter.TaskSegmentWriter]], so every segment in a store
   * carries one uniform format and one content digest regardless of
   * which path produced it:
@@ -166,9 +166,9 @@ object SegmentWriter {
     * the JVM loses its checksums. */
   // the raw-local write Configuration, memoized per SOURCE conf: a
   // Configuration copy clones the full property map, and paying that
-  // per rolled file (~105 files on the 53M-row write, 8 per driver-
-  // tier write) is pure waste — the derived conf never varies within
-  // a task. Weak keys: task confs die with their tasks.
+  // per rolled file (~105 files on the 53M-row write) is pure waste —
+  // the derived conf never varies within a task. Weak keys: task
+  // confs die with their tasks.
   private val fileWriteConfCache =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[Configuration, Configuration]())
@@ -310,7 +310,7 @@ object SegmentWriter {
 
   /** Serializable bundle of everything one rolling writer needs —
     * built by [[graft.api.Collection.taskParams]] for every write
-    * tier: the driver tier's chunks, the bulk job, the grouped
+    * tier: the driver tier, the bulk job, the grouped
     * ingest, defrag and the DataSourceV2 batch, streaming and
     * copy-on-write writer factories. */
   final case class TaskParams(gschema: GSchema,
@@ -373,7 +373,7 @@ object SegmentWriter {
     * was declared presorted, and accumulating each file's
     * (count, min key, max key, content hash, value stats) as it
     * writes — the write IS the stats pass. One instance per task,
-    * or per chunk of the driver tier. */
+    * or per driver-tier write. */
   private[graft] final class TaskSegmentWriter(p: TaskParams,
       conf: Configuration, pid: Int, attempt: Long) {
     private val cols = p.gschema.cols

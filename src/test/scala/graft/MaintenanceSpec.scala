@@ -492,19 +492,21 @@ class MaintenanceSpec extends AnyFunSuite {
     clct.embedMaxSize = 0L
     clct.pageLen = 800000L
     val s = clct.series("_")
-    // 400k rows in eight writes: each lands as the driver tier's
-    // ~6k-row chunks, and the run's ~3 MB of (incompressible) values
-    // is large enough that an auto-sorted rewrite would spread it
-    // over several write tasks
+    // 400k rows in eight writes: each lands as the driver tier's one
+    // 50k-row file (under pageLen/2, so the eight form one run), and
+    // the run's ~3 MB of (incompressible) values is large enough that
+    // an auto-sorted rewrite would spread it over several write tasks
     (0 until 8).foreach { i =>
       s.write(spark.range(i * 50000L, (i + 1) * 50000L, 1, 2)
         .selectExpr("id AS timestamp", "rand(7) AS value"))
     }
     val expect = rows(s.frame())
     clct.refresh()
+    def dataSegs = clct.manifest().get.rows.filter(_.hasData)
+    assert(dataSegs.map(m => (m.length, m.files.length)) ==
+      Seq.fill(8)((50000L, 1)))
     clct.defrag()
     clct.refresh()
-    def dataSegs = clct.manifest().get.rows.filter(_.hasData)
     val after = dataSegs
     assert(after.init.forall(_.length >= clct.pageLen / 2),
       s"sub-page segments: ${after.map(_.length)}")

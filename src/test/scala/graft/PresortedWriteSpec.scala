@@ -3,6 +3,7 @@ package graft
 import graft.api._
 import graft.core._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -20,14 +21,13 @@ class PresortedWriteSpec extends AnyFunSuite {
   private def freshRepo(): Repo =
     new Repo(Files.createTempDirectory("graft-presort").toString, spark)
 
-  /** pin the DISTRIBUTED write path: the driver-tier small-write
-    * fast path (spark.graft.driverWriteRows) would otherwise absorb
-    * these sub-segment frames and verify on the driver instead */
-  private def distributedOnly[T](body: => T): T = {
-    spark.conf.set("spark.graft.driverWriteRows", "0")
-    try body
-    finally spark.conf.unset("spark.graft.driverWriteRows")
-  }
+  /** pin the DISTRIBUTED write path: the driver tier would otherwise
+    * absorb these sub-page frames and verify on the driver instead. An
+    * RDD-backed copy (same partitions) has no size estimate of its own
+    * (its LogicalRDD reports spark.sql.defaultSizeInBytes), so the
+    * driver tier cannot size it and never collects it. */
+  private def distributedOnly(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.rdd, df.schema)
 
   private val schema = GSchema("ts" -> "int*", "value" -> "float")
 
@@ -42,11 +42,13 @@ class PresortedWriteSpec extends AnyFunSuite {
   }
 
   test("presorted write round-trips and matches the sorted write") {
-    distributedOnly {
     val repo = freshRepo()
     val a = repo.createCollection(schema, "a").series("_")
-    a.write(sortedFrame(), presorted = true)
+    a.write(distributedOnly(sortedFrame()), presorted = true)
     assert(a.frame().count() == 40000L)
+    // the distributed job wrote one file per input partition (the
+    // driver tier would have written one for the whole frame)
+    assert(a.segments().map(_.meta.files.length).sum == 4)
     val got = a.frame(1000L, 1004L, closed = Closed.Both)
       .select("ts").collect()
       .map(_.getLong(0)).sorted.toSeq
@@ -56,7 +58,7 @@ class PresortedWriteSpec extends AnyFunSuite {
     // digests, so a second presorted write of the same frame dedupes
     // against the first write's segment files in the store
     val b = repo.createCollection(schema, "b").series("_")
-    b.write(sortedFrame(), presorted = true)
+    b.write(distributedOnly(sortedFrame()), presorted = true)
     val filesA = a.segments().flatMap(_.meta.files).toSet
     val filesB = b.segments().flatMap(_.meta.files).toSet
     assert(filesA == filesB,
@@ -66,11 +68,10 @@ class PresortedWriteSpec extends AnyFunSuite {
     // the auto-sort path must agree on CONTENT (file splits may
     // differ, so addresses may differ — the digest is per file)
     val c = repo.createCollection(schema, "cc").series("_")
-    c.write(sortedFrame())
+    c.write(distributedOnly(sortedFrame()))
     val av = a.frame()
     val cv = c.frame()
     assert(av.exceptAll(cv).isEmpty && cv.exceptAll(av).isEmpty)
-    }
   }
 
   test("unsorted rows inside a partition fail loudly") {
@@ -82,7 +83,7 @@ class PresortedWriteSpec extends AnyFunSuite {
       .select((lit(50000L) - $"id").as("ts"),
         lit(1.0).as("value"))
     val e = intercept[org.apache.spark.SparkException] {
-      distributedOnly { s.write(df, presorted = true) }
+      s.write(distributedOnly(df), presorted = true)
     }
     assert(e.getMessage.contains("unsorted") ||
       Option(e.getCause).exists(_.getMessage.contains("unsorted")))
@@ -105,13 +106,13 @@ class PresortedWriteSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("unsorted"))
     assert(s.collection.manifest().isEmpty || s.segments().isEmpty)
-    // and a correct declaration round-trips through the driver tier's
-    // parallel chunk files (40k rows / 32k-row chunks = 2)
+    // and a correct declaration round-trips through the driver tier
+    // as one segment file
     s.write(sortedFrame(), presorted = true)
     assert(s.frame().count() == 40000L)
     val segs = s.segments()
-    assert(segs.nonEmpty && segs.forall(_.meta.files.length == 1))
-    assert(segs.map(_.meta.length).sum == 40000L)
+    assert(segs.map(m => (m.meta.length, m.meta.files.length)) ==
+      Seq((40000L, 1)), s"${segs.map(_.meta)}")
   }
 
   test("overlapping partition ranges fail loudly at seal") {
@@ -123,7 +124,7 @@ class PresortedWriteSpec extends AnyFunSuite {
     val df = spark.range(0, 40000, 1, 2)
       .select(($"id" % 20000L).as("ts"), lit(1.0).as("value"))
     val e = intercept[IllegalArgumentException] {
-      distributedOnly { s.write(df, presorted = true) }
+      s.write(distributedOnly(df), presorted = true)
     }
     assert(e.getMessage.contains("overlapping"))
     assert(s.collection.manifest().isEmpty || s.segments().isEmpty)

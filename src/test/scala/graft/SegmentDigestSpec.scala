@@ -41,9 +41,20 @@ class SegmentDigestSpec extends AnyFunSuite {
       setup(c)
       val s = c.series("_")
       if (tier == "distributed") {
-        spark.conf.set("spark.graft.driverWriteRows", "0")
-        try s.write(rows())
-        finally spark.conf.unset("spark.graft.driverWriteRows")
+        // an RDD-backed copy has no size estimate of its own (its
+        // LogicalRDD reports spark.sql.defaultSizeInBytes), so the
+        // driver tier cannot size it; one shuffle partition in the
+        // frame's session makes the auto-sorted write one file
+        val df = rows()
+        val one = spark.newSession()
+        one.conf.set("spark.sql.shuffle.partitions", "1")
+        val (_, jobs, _) =
+          TestSpark.work(s.write(one.createDataFrame(df.rdd, df.schema)))
+        // probe, range sample and write job; the driver tier runs one
+        assert(jobs >= 3, s"$tier: $jobs jobs")
+      } else if (tier == "driver") {
+        val (_, jobs, _) = TestSpark.work(s.write(rows()))
+        assert(jobs == 1, s"$tier: $jobs jobs")
       } else s.write(rows())
       val segs = s.segments().filter(_.meta.hasData)
       assert(segs.length == 1, s"$tier: ${segs.map(_.meta)}")

@@ -605,6 +605,52 @@ class SeriesSpec extends SeriesSpecBase(embedOn = true) {
     val s = freshSeries()
     assert(s.collection.manifest().get.rows.forall(_.inline.isDefined))
   }
+
+  private def fileSegs(s: Series) = s.segments().map(_.meta)
+    .filter(_.files.nonEmpty)
+
+  test("an append of at most one page is one segment file and one job") {
+    import org.apache.spark.sql.functions._
+    val s = freshSeries()
+    assert(s.pageLen == 500000L)
+    // 300k rows past the end, in descending order: the driver sorts
+    val n = 300000L
+    val df = spark.range(0, n, 1, 4).select(
+      (lit(origTs.last + n) - col("id")).as("timestamp"),
+      (col("id") * 0.5).as("value"))
+    val (_, jobs, _) = TestSpark.work(s.write(df))
+    assert(jobs == 1, s"$jobs jobs: the driver tier runs one collect")
+    val segs = fileSegs(s)
+    assert(segs.map(m => (m.length, m.files.length)) == Seq((n, 1)),
+      s"${segs.map(_.files)}")
+    assert(s.frame().count() == n + origTs.length)
+  }
+
+  test("a write of pageLen + 1 rows takes the distributed tier") {
+    import org.apache.spark.sql.functions._
+    val s = freshSeries()
+    s.collection.pageLen = 20000L
+    def frame(from: Long, n: Long) = spark.range(0, n, 1, 4).select(
+      (lit(from + n) - col("id")).as("timestamp"),
+      (col("id") * 0.5).as("value"))
+    // exactly one page: still the driver tier's one file
+    val (_, jobs1, _) = TestSpark.work(s.write(frame(2000000000L, 20000L)))
+    assert(jobs1 == 1, s"$jobs1 jobs for one page")
+    assert(fileSegs(s).map(_.files.length) == Seq(1))
+    // one row over: the collect is thrown away and the distributed
+    // job writes page-sized files
+    val base = 3000000000L
+    val (_, jobs2, _) = TestSpark.work(s.write(frame(base, 20001L)))
+    assert(jobs2 > 1, s"$jobs2 jobs: the distributed tier did not run")
+    val big = s.segments(start = base).map(_.meta).filter(_.files.nonEmpty)
+    assert(big.forall(_.length <= 20000L) && big.length >= 2,
+      s"${big.map(_.length)}")
+    assert(big.map(_.length).sum == 20001L)
+    val got = s.frame(start = base).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted
+    assert(got == (0L until 20001L).map(i => (base + 20001L - i, i * 0.5))
+      .sorted)
+  }
 }
 
 /** forced-file mode: every write goes through parquet segments */
