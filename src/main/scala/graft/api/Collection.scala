@@ -717,7 +717,7 @@ class Collection(val repo: Repo, val label: String, val path: String,
         from = Some(m)).filter(_.meta.hasData)
       // the manifest knows an untruncated segment's row count; the
       // task counts a clipped one from its index columns
-      val (whole, clipped) = segs.partition(GraftPlanning.covers(schema, _))
+      val (whole, clipped) = segs.partition(_.coversData(schema))
       def parts(sr: SegmentRead, cols: Seq[String]) =
         GraftPlanning.partitionsFor(s, schema, cols, sr, null)
       Run(s, run.head.start, run.last.stop, cl,

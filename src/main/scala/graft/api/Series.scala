@@ -514,18 +514,7 @@ class Series(val collection: Collection, val label: String) {
     val dtypes = schema.cols.map(_.dtype).toIndexedSeq
     val idxPos = schema.cols.zipWithIndex.filter(_._1.idx)
       .map(_._2).toArray
-    def keyAt(ir: org.apache.spark.sql.catalyst.InternalRow): IndexKey =
-      IndexKey(idxPos.map { i =>
-        if (ir.isNullAt(i)) throw new IllegalArgumentException(
-          s"null value in index column '${schema.cols(i).name}' — " +
-            "index columns must be non-null")
-        dtypes(i) match {
-          case GType.TimestampT | GType.IntT => ir.getLong(i)
-          case GType.DateT  => ir.getInt(i).toLong
-          case GType.FloatT => ir.getDouble(i)
-          case GType.StrT   => ir.getUTF8String(i).toString
-        }
-      }.toVector)
+    val keyAt = new SegmentWriter.RowKeys(schema)
     // the presorted contract is per PARTITION order + range
     // disjointness, not pid order: concatenating partitions by their
     // first key makes the global order check below equivalent to it
@@ -745,21 +734,6 @@ class Series(val collection: Collection, val label: String) {
       .select(readProjection: _*)
   }
 
-  /** a segment needs no residual filter when its visible range still
-    * covers the data range recorded at write time (the common case:
-    * never truncated by later overlays) — those can share ONE
-    * multi-file scan instead of exploding the plan into filtered unions
-    */
-  private def coversData(s: SegmentRead): Boolean =
-    (s.meta.dataStart, s.meta.dataStop) match {
-      case (Some(ds), Some(de)) =>
-        val l = schema.cmpKey(s.start, ds)
-        val r = schema.cmpKey(s.stop, de)
-        (l < 0 || (l == 0 && s.closed.left)) &&
-          (r > 0 || (r == 0 && s.closed.right))
-      case _ => false
-    }
-
   /** manifest-embedded rows -> local DataFrame (no store access).
     * Inline vectors are positional over the SOURCE columns (clones may
     * add default-valued columns, which are synthesized here). */
@@ -787,7 +761,7 @@ class Series(val collection: Collection, val label: String) {
 
   private def inlineDf(s: SegmentRead): DataFrame = {
     val df = localDf(inlineRows(s))
-    if (coversData(s)) df
+    if (s.coversData(schema)) df
     else df.filter(SparkVals.rangePredicate(schema.idx, idxCols, s.start,
       s.stop, s.closed))
   }
@@ -807,7 +781,7 @@ class Series(val collection: Collection, val label: String) {
   private def segDf(s: SegmentRead): DataFrame =
     if (s.meta.inline.isDefined) inlineDf(s)
     else if (collection.bssMode) internalScanDf(Seq(s))
-    else if (coversData(s)) scanFiles(s.meta.files)
+    else if (s.coversData(schema)) scanFiles(s.meta.files)
     else scanFiles(s.meta.files)
       .filter(SparkVals.rangePredicate(schema.idx, idxCols, s.start,
         s.stop, s.closed))
@@ -817,14 +791,14 @@ class Series(val collection: Collection, val label: String) {
     * — their scans unioned, each row tagged with its segment's
     * position, grouped and counted together. */
   private def visibleLens(segs: IndexedSeq[SegmentRead]): IndexedSeq[Long] = {
-    val clipped = segs.indices.filterNot(i => coversData(segs(i)))
+    val clipped = segs.indices.filterNot(i => segs(i).coversData(schema))
     val counted =
       if (clipped.isEmpty) Map.empty[Int, Long]
       else clipped.map(i => segDf(segs(i)).select(lit(i).as("_seg")))
         .reduce(_ union _).groupBy("_seg").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
     segs.indices.map(i =>
-      if (coversData(segs(i))) segs(i).meta.length
+      if (segs(i).coversData(schema)) segs(i).meta.length
       else counted.getOrElse(i, 0L))
   }
 
@@ -850,7 +824,7 @@ class Series(val collection: Collection, val label: String) {
       if (segs(i).meta.files.nonEmpty) segs(i).meta.files
       else segs(i).meta.inline
     private def clippedIn(from: Int, until: Int): Seq[Int] =
-      (from until until).filterNot(i => coversData(segs(i)))
+      (from until until).filterNot(i => segs(i).coversData(schema))
     private lazy val lastPart: Map[AnyRef, Int] =
       clippedIn(0, segs.length).map(i => stored(i) -> i).toMap
     private val bounded = scala.collection.mutable.HashSet.empty[AnyRef]
@@ -861,7 +835,7 @@ class Series(val collection: Collection, val label: String) {
         var end = resolved
         var bound = rows
         while (bound < n && end < segs.length) {
-          if (coversData(segs(end)) || bounded.add(stored(end)))
+          if (segs(end).coversData(schema) || bounded.add(stored(end)))
             bound += segs(end).meta.length
           end += 1
         }
@@ -927,7 +901,7 @@ class Series(val collection: Collection, val label: String) {
     }
     val (inlineSegs, fileSegs) =
       segs.partition(_.meta.inline.isDefined)
-    val (unclipped, clipped) = fileSegs.partition(coversData)
+    val (unclipped, clipped) = fileSegs.partition(_.coversData(schema))
     val grouped =
       if (unclipped.isEmpty) Nil
       else if (collection.bssMode) Seq(internalScanDf(unclipped))
@@ -936,7 +910,7 @@ class Series(val collection: Collection, val label: String) {
     // relation: a heavily fragmented series (the reference's
     // bench_fragmentation case, hundreds of manifest-embedded
     // micro-writes) must not become a hundred-way union plan
-    val (coveredInl, clippedInl) = inlineSegs.partition(coversData)
+    val (coveredInl, clippedInl) = inlineSegs.partition(_.coversData(schema))
     val inlParts =
       (if (coveredInl.isEmpty) Nil
        else Seq(localDf(coveredInl.flatMap(inlineRows)))) ++

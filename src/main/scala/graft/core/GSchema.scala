@@ -138,6 +138,16 @@ final case class GSchema(cols: Seq[ColDef], kv: Boolean = false)
     0
   }
 
+  /** Is every key of [lo, hi] inside the interval from `start` to
+    * `stop` whose ends `closed` includes? A null `start` or `stop` is
+    * unbounded on that side; keys compare by [[cmpKey]]. */
+  def within(lo: IndexKey, hi: IndexKey, start: IndexKey, stop: IndexKey,
+      closed: Closed): Boolean = {
+    val l = if (start == null) 1 else cmpKey(lo, start)
+    val r = if (stop == null) -1 else cmpKey(hi, stop)
+    (l > 0 || (l == 0 && closed.left)) && (r < 0 || (r == 0 && closed.right))
+  }
+
   /** Python-tuple TOTAL order over (possibly partial) keys: prefix
     * compare, then shorter-before-longer — `(5,) < (5, 0)`, exactly
     * what the reference's splice algebra inherits from raw tuple

@@ -60,7 +60,16 @@ final case class SegmentMeta(
 }
 
 final case class SegmentRead(meta: SegmentMeta, start: IndexKey,
-    stop: IndexKey, closed: Closed)
+    stop: IndexKey, closed: Closed) {
+  /** the visible window still covers the data range recorded at write
+    * time (the common case: never truncated by later overlays), so the
+    * segment reads whole with no residual clip */
+  def coversData(gs: GSchema): Boolean =
+    (meta.dataStart, meta.dataStop) match {
+      case (Some(ds), Some(de)) => gs.within(ds, de, start, stop, closed)
+      case _ => false
+    }
+}
 
 /** Sorted manifest of segments + the interval splice algebra giving
   * last-write-wins overlay semantics (reference lakota/commit.py).
@@ -205,7 +214,10 @@ final case class Manifest(schema: GSchema, rows: Vector[SegmentMeta]) {
     * from reference lakota/commit.py:263-359.
     */
   def update(row: SegmentMeta): Manifest = {
-    require(cmpLK(row.label, row.start, row.label, row.stop) <= 0,
+    // bounds order as CUTS: start (4, 6) to stop (4), right-closed, is
+    // the rest of group 4 — valid, though (4, 6) sorts after (4)
+    require(cmpCut(row.start, startCutAfter(row.closed.left), row.stop,
+      stopCutAfter(row.closed.right)) <= 0,
       s"Invalid range ${row.start} -> ${row.stop}")
     if (rows.isEmpty) return Manifest(schema, Vector(row))
 

@@ -30,11 +30,7 @@ final class RangeRegions(gs: GSchema,
     }
     if (cand >= 0) {
       val (a, b, cl) = ranges(cand)
-      val c1 = gs.cmpKey(k, a)
-      val c2 = gs.cmpKey(k, b)
-      val in = (c1 > 0 || (c1 == 0 && cl.left)) &&
-        (c2 < 0 || (c2 == 0 && cl.right))
-      if (in) cand else -(cand + 2)
+      if (gs.within(k, k, a, b, cl)) cand else -(cand + 2)
     } else -1
   }
 }

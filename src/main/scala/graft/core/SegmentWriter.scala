@@ -365,6 +365,34 @@ object SegmentWriter {
     }.toMap
   }
 
+  /** Reads index keys out of InternalRows laid out as `gs`'s columns
+    * after `off` leading ones (a labeled write's group column): the one
+    * row-to-IndexKey conversion of every write path. A null index slot
+    * would silently read as 0/"" and record a phantom key in the
+    * manifest stats (and corrupt the REQUIRED parquet field) — it is
+    * rejected with the offending column named. */
+  private[graft] final class RowKeys(gs: GSchema, off: Int = 0) {
+    private val dtypes = gs.cols.map(_.dtype).toArray
+    private val idxPos = gs.cols.indices.filter(gs.cols(_).idx).toArray
+
+    /** column `i` of a non-null slot, in kernel repr */
+    def kernelAt(ir: InternalRow, i: Int): Any = dtypes(i) match {
+      case GType.TimestampT | GType.IntT => ir.getLong(i + off)
+      case GType.DateT  => ir.getInt(i + off).toLong
+      case GType.FloatT => ir.getDouble(i + off)
+      case GType.StrT   => ir.getUTF8String(i + off).toString
+    }
+
+    def apply(ir: InternalRow): IndexKey = IndexKey(
+      idxPos.map { i =>
+        if (ir.isNullAt(i + off))
+          throw new IllegalArgumentException(
+            s"null value in index column '${gs.cols(i).name}' — index " +
+              "columns must be non-null")
+        kernelAt(ir, i)
+      }.toVector)
+  }
+
   /** Rolling segment writer — the only code that turns rows into a
     * staged segment file and its [[FileStat]]. Streams sorted
     * InternalRows into ≤ pageLen-row engine-format parquet files
@@ -378,11 +406,9 @@ object SegmentWriter {
       conf: Configuration, pid: Int, attempt: Long) {
     private val cols = p.gschema.cols
     private val off = if (p.labeled) 1 else 0
-    private val idxPos =
-      cols.zipWithIndex.filter(_._1.idx).map(_._2).toArray
+    private val keys = new RowKeys(p.gschema, off)
     private val valPos =
       cols.zipWithIndex.filterNot(_._1.idx).map(_._2).toArray
-    private val dtypes = cols.map(_.dtype).toIndexedSeq
     private val fieldTypes = p.gschema.sparkSchema.fields.map(_.dataType)
     private val nCols = cols.length
     private val M = 2147483647L
@@ -397,29 +423,8 @@ object SegmentWriter {
     private var prevK: IndexKey = null
     private var label: String = null
     private def newVals() = new ValueStats(
-      valPos.map(dtypes).toIndexedSeq, valPos.map(p.phys).toIndexedSeq)
+      valPos.map(cols(_).dtype).toIndexedSeq, valPos.map(p.phys).toIndexedSeq)
     private var vals = newVals()
-
-    /** column `i` of a non-null slot, in kernel repr */
-    private def kernelAt(ir: InternalRow, i: Int): Any = dtypes(i) match {
-      case GType.TimestampT | GType.IntT => ir.getLong(i + off)
-      case GType.DateT  => ir.getInt(i + off).toLong
-      case GType.FloatT => ir.getDouble(i + off)
-      case GType.StrT   => ir.getUTF8String(i + off).toString
-    }
-
-    private def keyAt(ir: InternalRow): IndexKey = IndexKey(
-      idxPos.map { i =>
-        // a null index slot would silently read as 0/"" and record a
-        // phantom key in the manifest stats (and corrupt the REQUIRED
-        // parquet field) — reject it with the offending column named
-        if (ir.isNullAt(i + off))
-          throw new IllegalArgumentException(
-            s"null value in index column '${p.gschema.cols(i).name}' " +
-              "— index " +
-              "columns must be non-null")
-        kernelAt(ir, i)
-      }.toVector)
 
     private def fname(i: Int) = f"part-$pid%05d-$attempt-$i%04d.parquet"
 
@@ -447,11 +452,11 @@ object SegmentWriter {
         fi += 1
         w = open(cols, p.phys, s"${p.tmpUri}/${fname(fi)}", conf,
           p.codec, off)
-        minK = keyAt(ir)
+        minK = keys(ir)
         label = rowLabel
       }
       w.write(ir)
-      maxK = keyAt(ir)
+      maxK = keys(ir)
       if (p.verifySorted) {
         // presorted-input contract (the reference requires sorted
         // frames on write, lakota/frame.py): verify per row, fail the
@@ -476,7 +481,7 @@ object SegmentWriter {
       var j = 0
       while (j < valPos.length) {
         val c = valPos(j)
-        if (!ir.isNullAt(c + off)) vals.observe(j, kernelAt(ir, c))
+        if (!ir.isNullAt(c + off)) vals.observe(j, keys.kernelAt(ir, c))
         j += 1
       }
       cnt += 1

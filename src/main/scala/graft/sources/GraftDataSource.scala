@@ -214,9 +214,9 @@ class GraftTable(rootUri: String, collectionName: String,
   // ---- SQL DELETE — the engine's native delete IS metadata-only
   // (a manifest tombstone row, no data job), so `DELETE FROM g WHERE
   // <index range>` maps 1:1 onto `Series.delete`. Accepted only when
-  // the WHERE is EXACTLY expressible as tombstones: a conjunction of
-  // comparisons forming one lexicographic interval over an index
-  // prefix (equalities extend the prefix, the first range column
+  // the WHERE is EXACTLY expressible as tombstones: a conjunction
+  // that folds into one exact index interval ([[IndexInterval]]:
+  // equalities extend an index prefix, the first range column
   // terminates it), or a single IN/= list on the head column (one
   // tombstone per value, one batched commit). Anything else — a
   // value-column predicate, disjunctions — is declined here and
@@ -231,8 +231,8 @@ class GraftTable(rootUri: String, collectionName: String,
 
   private[sources] sealed trait DeletePlan
   private[sources] case object DeleteAll extends DeletePlan
-  private[sources] case class DeleteRange(start: IndexKey,
-      stop: IndexKey, closed: Closed) extends DeletePlan
+  private[sources] case class DeleteRange(range: IndexInterval.Interval)
+      extends DeletePlan
   private[sources] case class DeleteKeys(values: Seq[Any])
       extends DeletePlan
 
@@ -240,83 +240,17 @@ class GraftTable(rootUri: String, collectionName: String,
       : Option[DeletePlan] = {
     val real = filters.filterNot(_.isInstanceOf[AlwaysTrue])
     if (real.isEmpty) return Some(DeleteAll)
-    val gs = gschema
-    val head = gs.idx.head
-    // IN / = list on the head column, as the only predicate
+    val head = gschema.idx.head
     real match {
       case Array(In(c, vs)) if c == head.name && vs.nonEmpty &&
           !vs.contains(null) =>
-        return Some(DeleteKeys(vs.toSeq.map(v =>
+        Some(DeleteKeys(vs.toSeq.map(v =>
           SparkVals.parseBound(head.dtype, v)).distinct))
-      case _ => ()
+      case _ =>
+        val range = new IndexInterval.Fold(gschema, real.toSeq,
+          values = false).interval
+        Option.when(range.exact)(DeleteRange(range))
     }
-    // conjunction of comparisons over an index prefix
-    final class B(val dt: GType) {
-      var lo: Any = null; var loC = true
-      var hi: Any = null; var hiC = true
-      def k(v: Any): Any = SparkVals.parseBound(dt, v)
-      def tighten(lo0: Any, loC0: Boolean, hi0: Any,
-          hiC0: Boolean): Unit = {
-        if (lo0 != null && (lo == null || dt.cmp(k(lo0), k(lo)) > 0 ||
-            (dt.cmp(k(lo0), k(lo)) == 0 && !loC0))) {
-          lo = lo0; loC = loC0
-        }
-        if (hi0 != null && (hi == null || dt.cmp(k(hi0), k(hi)) < 0 ||
-            (dt.cmp(k(hi0), k(hi)) == 0 && !hiC0))) {
-          hi = hi0; hiC = hiC0
-        }
-      }
-      def eq: Boolean = lo != null && hi != null && loC && hiC &&
-        dt.cmp(k(lo), k(hi)) == 0
-    }
-    val bounds = gs.idx.map(c => c.name -> new B(c.dtype)).toMap
-    real.foreach {
-      case GreaterThan(c, v) if bounds.contains(c) && v != null =>
-        bounds(c).tighten(v, false, null, true)
-      case GreaterThanOrEqual(c, v) if bounds.contains(c) && v != null =>
-        bounds(c).tighten(v, true, null, true)
-      case LessThan(c, v) if bounds.contains(c) && v != null =>
-        bounds(c).tighten(null, true, v, false)
-      case LessThanOrEqual(c, v) if bounds.contains(c) && v != null =>
-        bounds(c).tighten(null, true, v, true)
-      case EqualTo(c, v) if bounds.contains(c) && v != null =>
-        bounds(c).tighten(v, true, v, true)
-      case _ => return None // not exactly expressible — refuse
-    }
-    // eq-prefix, then at most ONE range column, nothing deeper
-    val prefix = Vector.newBuilder[Any]
-    var rangeCol: Option[B] = None
-    var depth = 0
-    val it = gs.idx.iterator
-    var stop = false
-    while (!stop && it.hasNext) {
-      val b = bounds(it.next().name)
-      if (b.eq) { prefix += b.k(b.lo); depth += 1 }
-      else {
-        if (b.lo != null || b.hi != null) rangeCol = Some(b)
-        stop = true
-      }
-    }
-    // any bound BELOW the terminating column is inexpressible
-    val deeper = gs.idx.drop(depth + 1)
-      .exists(c => bounds(c.name).lo != null || bounds(c.name).hi != null)
-    if (deeper) return None
-    val p = prefix.result()
-    val (startK, closedL) = rangeCol match {
-      case Some(b) if b.lo != null =>
-        (IndexKey(p :+ b.k(b.lo)), b.loC)
-      case _ if p.nonEmpty => (IndexKey(p), true)
-      case _ => (null, true)
-    }
-    val (stopK, closedR) = rangeCol match {
-      case Some(b) if b.hi != null =>
-        (IndexKey(p :+ b.k(b.hi)), b.hiC)
-      case _ if p.nonEmpty => (IndexKey(p), true)
-      case _ => (null, true)
-    }
-    if (startK == null && stopK == null) return None
-    Some(DeleteRange(startK, stopK,
-      Closed.Both.setLeft(closedL).setRight(closedR)))
   }
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
@@ -344,7 +278,7 @@ class GraftTable(rootUri: String, collectionName: String,
     case DeleteKeys(vs) =>
       vs.foreach(v => s.delete(IndexKey(Vector(v)),
         IndexKey(Vector(v))))
-    case DeleteRange(startK, stopK, closed) =>
+    case DeleteRange(IndexInterval.Interval(startK, stopK, closed, _)) =>
       // one-sided range: substitute the manifest's recorded extreme
       // (exact for the rows this snapshot holds). Head/tail pruned
       // walks against ONE revision snapshot, NOT a full decode — a
@@ -393,91 +327,22 @@ class GraftScanBuilder(table: GraftTable, beforeMs: Option[Long],
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
-  /** per-index-column bound state, tightest-seen (kernel-compared) */
-  private final class ColBound(val dt: GType) {
-    var lo: Any = null; var loClosed = true
-    var hi: Any = null; var hiClosed = true
-    def hasEq: Boolean = lo != null && hi != null && loClosed &&
-      hiClosed && dt.cmp(k(lo), k(hi)) == 0
-    private def k(v: Any) = SparkVals.parseBound(dt, v)
-    def tighten(lo0: Any = null, loC: Boolean = true,
-        hi0: Any = null, hiC: Boolean = true): Unit = {
-      if (lo0 != null) {
-        if (lo == null || dt.cmp(k(lo0), k(lo)) > 0 ||
-            (dt.cmp(k(lo0), k(lo)) == 0 && !loC)) {
-          lo = lo0; loClosed = loC
-        }
-      }
-      if (hi0 != null) {
-        if (hi == null || dt.cmp(k(hi0), k(hi)) < 0 ||
-            (dt.cmp(k(hi0), k(hi)) == 0 && !hiC)) {
-          hi = hi0; hiClosed = hiC
-        }
-      }
-    }
-  }
-
   private val idxCols: Seq[ColDef] = table.gschema.idx
-  private val bounds: Map[String, ColBound] =
-    idxCols.map(c => c.name -> new ColBound(c.dtype)).toMap
-  // value-column bounds drive SEGMENT-STATS data skipping (the
-  // manifest's per-segment value min/max) — no range structure, just
-  // per-column disjointness tests
-  private val vbounds: Map[String, ColBound] =
-    table.gschema.cols.filterNot(_.idx)
-      .map(c => c.name -> new ColBound(c.dtype)).toMap
-  private var pushed: Array[Filter] = Array.empty
+  // predicates on ANY index column collect per-column bounds (the
+  // interval build() passes on); value-column comparisons and IN lists
+  // collect bounds for segment-stats skipping
+  private var fold =
+    new IndexInterval.Fold(table.gschema, Nil, values = true)
   private var required: Option[StructType] = None
   private var limitN: Option[Int] = None
   private var limitReversed = false
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val usable = ArrayBuffer.empty[Filter]
-    // predicates on ANY index column collect per-column bounds; the
-    // lexicographic prefix assembly in build() uses columns 2..n only
-    // below an unbroken run of equalities, matching what
-    // `Series.frame`'s full-tuple pruning resolves. Value-column
-    // comparisons collect bounds for stats-based skipping. The
-    // `v != null` guards are unreachable after constant folding (a
-    // null-literal comparison folds to null first) but keep a
-    // hand-built filter from reaching SparkVals.parseBound.
-    def on(c: String): Option[ColBound] =
-      bounds.get(c).orElse(vbounds.get(c))
-    filters.foreach {
-      case f @ GreaterThan(c, v) if on(c).isDefined && v != null =>
-        usable += f; on(c).get.tighten(lo0 = v, loC = false)
-      case f @ GreaterThanOrEqual(c, v)
-          if on(c).isDefined && v != null =>
-        usable += f; on(c).get.tighten(lo0 = v, loC = true)
-      case f @ LessThan(c, v) if on(c).isDefined && v != null =>
-        usable += f; on(c).get.tighten(hi0 = v, hiC = false)
-      case f @ LessThanOrEqual(c, v)
-          if on(c).isDefined && v != null =>
-        usable += f; on(c).get.tighten(hi0 = v, hiC = true)
-      case f @ EqualTo(c, v) if on(c).isDefined && v != null =>
-        usable += f
-        on(c).get.tighten(lo0 = v, loC = true)
-        on(c).get.tighten(hi0 = v, hiC = true)
-      case f @ In(c, vs) if vbounds.contains(c) && vs.nonEmpty &&
-          !vs.contains(null) =>
-        // an IN list bounds the column by its own min/max — enough
-        // for segment disjointness (membership stays residual)
-        usable += f
-        val dt = vbounds(c).dt
-        def k(v: Any) = SparkVals.parseBound(dt, v)
-        val raw = vs.toSeq
-        val lo = raw.reduce((a, b) =>
-          if (dt.cmp(k(a), k(b)) <= 0) a else b)
-        val hi = raw.reduce((a, b) =>
-          if (dt.cmp(k(a), k(b)) >= 0) a else b)
-        vbounds(c).tighten(lo0 = lo, loC = true)
-        vbounds(c).tighten(hi0 = hi, hiC = true)
-      case _ => ()
-    }
-    pushed = usable.toArray
+    fold = new IndexInterval.Fold(table.gschema, filters.toSeq,
+      values = true)
     filters // everything stays residual: Spark re-applies above scan
   }
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedFilters(): Array[Filter] = fold.accepted
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = Some(requiredSchema)
@@ -557,7 +422,7 @@ class GraftScanBuilder(table: GraftTable, beforeMs: Option[Long],
     val series = table.series
     val segs = series.segments(null, null, beforeMs)
       .filter(_.meta.hasData)
-    if (!segs.forall(s => GraftPlanning.covers(table.gschema, s)))
+    if (!segs.forall(_.coversData(table.gschema)))
       return false
     val cnt: java.lang.Long = segs.map(_.meta.length).sum
     // SUM over an integer value column answers from per-segment
@@ -616,51 +481,17 @@ class GraftScanBuilder(table: GraftTable, beforeMs: Option[Long],
     true
   }
 
-  /** Assemble the lexicographic prefix bound: equalities on leading
-    * index columns extend the prefix; the first non-equality column
-    * contributes its own bound and terminates it (anything deeper
-    * cannot prune without the full tuple — it stays residual). */
-  private def prefixBound(lower: Boolean): (Seq[Any], Boolean) = {
-    val prefix = Vector.newBuilder[Any]
-    var closed = true
-    var n = 0
-    var stop = false
-    val it = idxCols.iterator
-    while (!stop && it.hasNext) {
-      val b = bounds(it.next().name)
-      if (b.hasEq) { prefix += b.lo; n += 1 }
-      else {
-        val (v, cl) = if (lower) (b.lo, b.loClosed) else (b.hi, b.hiClosed)
-        if (v != null) { prefix += v; closed = cl; n += 1 }
-        stop = true // anything deeper than the first range column
-                    // cannot prune without the full tuple
-      }
-    }
-    (if (n == 0) null else prefix.result(), closed)
-  }
-
   override def build(): Scan = {
-    val (startB, startClosed) = prefixBound(lower = true)
-    val (stopB, stopClosed) = prefixBound(lower = false)
-    val closed = Closed.Both.setLeft(startClosed).setRight(stopClosed)
-    // value-column bounds, kernel-parsed: the stats-skipping query
-    val vquery = vbounds.toSeq.flatMap { case (n, b) =>
-      if (b.lo == null && b.hi == null) None
-      else Some((n, b.dt,
-        if (b.lo == null) null
-        else SparkVals.parseBound(b.dt, b.lo), b.loClosed,
-        if (b.hi == null) null
-        else SparkVals.parseBound(b.dt, b.hi), b.hiClosed))
-    }
-    new GraftScan(table, startB, stopB, closed, beforeMs,
+    val range = fold.interval
+    new GraftScan(table, range.start, range.stop, range.closed, beforeMs,
       aggPush.map(_._1).orElse(required).getOrElse(table.schema()),
-      pushed.map(_.toString).toSeq, streamStartLatest,
+      fold.accepted.map(_.toString).toSeq, streamStartLatest,
       limitN, limitReversed, streamSkipRewrites, streamMaxRevs,
-      aggPush, vquery, streamStartTs, streamForkDedup)
+      aggPush, fold.valueQuery, streamStartTs, streamForkDedup)
   }
 }
 
-class GraftScan(table: GraftTable, start: Any, stop: Any,
+class GraftScan(table: GraftTable, start: IndexKey, stop: IndexKey,
     closed: Closed, beforeMs: Option[Long], required: StructType,
     pushedDesc: Seq[String], streamStartLatest: Boolean = false,
     limit: Option[Int] = None, limitReversed: Boolean = false,
@@ -691,14 +522,9 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
     * no single-partition shortcut for v2 scans). Top-k `ORDER BY idx
     * LIMIT k` is already served by the pushed-TopN prefix cover. */
   override def outputOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.{Expressions,
-      SortDirection}
-    val present = required.fieldNames.toSet
-    table.gschema.idx.map(_.name).takeWhile(present.contains)
-      .map(n => Expressions.sort(Expressions.column(n),
-        SortDirection.ASCENDING)).toArray
-  }
+      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+    GraftPlanning.indexOrdering(table.gschema,
+      required.fieldNames.toSet)
 
   /** Post-pruning statistics from the MANIFEST (no file IO): row
     * counts are recorded per segment at write time, so the join
@@ -786,7 +612,7 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
         while (guaranteed < k && it.hasNext) {
           val seg = it.next()
           out += seg
-          if (GraftPlanning.covers(table.gschema, seg))
+          if (seg.coversData(table.gschema))
             guaranteed += seg.meta.length
         }
         val run = out.result()
@@ -797,11 +623,7 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
       if (vquery.isEmpty) None else Some(covering1.length - covering0.length))
   }
 
-  // ---- runtime filtering (DPP-style): a join's build side delivers
-  // the head index column's value set AT RUNTIME; segments whose
-  // recorded range contains none of the values drop before any file
-  // opens. Pruning only — Spark still applies the join, so over-keep
-  // is safe and the coarse head-component containment check suffices.
+  // ---- runtime filtering (DPP-style, [[IndexInterval.headValues]])
   private var runtimeKeep: Option[Seq[Any]] = None
 
   override def filterAttributes()
@@ -817,32 +639,12 @@ class GraftScan(table: GraftTable, start: Any, stop: Any,
     else Array.empty
   }
 
-  override def filter(filters: Array[Filter]): Unit = {
-    val head = table.gschema.idx.head.name
-    val dt = table.gschema.idx.head.dtype
-    val vals = filters.toSeq.flatMap {
-      case In(c, vs) if c == head =>
-        Some(vs.toSeq.filter(_ != null).map(v =>
-          SparkVals.parseBound(dt, v)))
-      case EqualTo(c, v) if c == head && v != null =>
-        Some(Seq(SparkVals.parseBound(dt, v)))
-      case _ => None
-    }
-    if (vals.nonEmpty) runtimeKeep = Some(vals.flatten.distinct)
-  }
+  override def filter(filters: Array[Filter]): Unit =
+    IndexInterval.headValues(table.gschema, filters)
+      .foreach(v => runtimeKeep = Some(v))
 
   private def runtimePruned(segs: Seq[SegmentRead]): Seq[SegmentRead] =
-    runtimeKeep match {
-      case None => segs
-      case Some(vals) =>
-        val dt = table.gschema.idx.head.dtype
-        val kept = segs.filter { s =>
-          val lo = s.start.values(0)
-          val hi = s.stop.values(0)
-          vals.exists(v => dt.cmp(v, lo) >= 0 && dt.cmp(v, hi) <= 0)
-        }
-        kept
-    }
+    IndexInterval.headPruned(table.gschema, segs, runtimeKeep)
 
   // retained for createReaderFactory's columnar-eligibility decision
   // (Spark calls planInputPartitions before the factory on the same
@@ -980,12 +782,10 @@ class GraftWrite(table: GraftTable, presorted: Boolean,
       .RequiresDistributionAndOrdering {
   import org.apache.spark.sql.connector.distributions.{Distribution,
     Distributions}
-  import org.apache.spark.sql.connector.expressions.{Expressions,
-    SortDirection, SortOrder}
+  import org.apache.spark.sql.connector.expressions.SortOrder
 
   private def idxOrders: Array[SortOrder] =
-    table.gschema.idx.map(c => Expressions.sort(
-      Expressions.column(c.name), SortDirection.ASCENDING)).toArray
+    GraftPlanning.indexOrdering(table.gschema)
 
   // presorted = the caller's declaration that the input is already
   // globally sorted (lakota's own write precondition): no shuffle, no
@@ -1027,6 +827,17 @@ final case class GraftCommitMessage(
     stats: Seq[SegmentWriter.FileStat])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
+object GraftCommitMessage {
+  /** the staged files' stats of every task of one write */
+  def stats(messages: Array[
+      org.apache.spark.sql.connector.write.WriterCommitMessage])
+      : Seq[SegmentWriter.FileStat] = messages.toSeq.flatMap {
+    case GraftCommitMessage(s) => s
+    case other => throw new IllegalStateException(
+      s"unexpected commit message: $other")
+  }
+}
+
 class GraftBatchWrite(table: GraftTable,
     params: SegmentWriter.TaskParams, truncate: Boolean,
     overwritePlan: Option[GraftTable#DeletePlan] = None)
@@ -1040,11 +851,7 @@ class GraftBatchWrite(table: GraftTable,
       SparkSession.active.sessionState.newHadoopConf()))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val stats = messages.toSeq.flatMap {
-      case GraftCommitMessage(s) => s
-      case other => throw new IllegalStateException(
-        s"unexpected commit message: $other")
-    }
+    val stats = GraftCommitMessage.stats(messages)
     val series = table.series
     try overwritePlan match {
       case None => series.commitStaged(stats, truncate)
@@ -1052,26 +859,15 @@ class GraftBatchWrite(table: GraftTable,
         // replaceWhere: the written rows must fall within the
         // declared range — refuse before anything commits
         plan match {
-          case r: table.DeleteRange if stats.nonEmpty =>
+          case table.DeleteRange(range) if stats.nonEmpty =>
             val gs = table.gschema
             val mn = stats.map(_.min).reduce((a, b) =>
               if (gs.cmpKey(a, b) <= 0) a else b)
             val mx = stats.map(_.max).reduce((a, b) =>
               if (gs.cmpKey(a, b) >= 0) a else b)
-            def inside: Boolean = {
-              val okL = r.start == null || {
-                val c = gs.cmpKey(mn, r.start)
-                c > 0 || (c == 0 && r.closed.left)
-              }
-              val okR = r.stop == null || {
-                val c = gs.cmpKey(mx, r.stop)
-                c < 0 || (c == 0 && r.closed.right)
-              }
-              okL && okR
-            }
-            require(inside,
+            require(range.contains(gs, mn, mx),
               s"graft overwrite: written rows [$mn, $mx] fall " +
-                s"outside the replace range [${r.start}, ${r.stop}]")
+                s"outside the replace range [${range.start}, ${range.stop}]")
           case _ => ()
         }
         series.collection.multi {
@@ -1127,11 +923,7 @@ class GraftStreamingWrite(table: GraftTable, presorted: Boolean,
     val marker = s"$qdir/e$epochId"
     try {
       if (store.exists(marker)) return // replayed epoch: already in
-      val stats = messages.toSeq.flatMap {
-        case GraftCommitMessage(s) => s
-        case other => throw new IllegalStateException(
-          s"unexpected commit message: $other")
-      }
+      val stats = GraftCommitMessage.stats(messages)
       val series = table.series
       if (stats.nonEmpty || truncate)
         series.commitStaged(stats, truncate)
@@ -1204,15 +996,16 @@ private[graft] object GraftPlanning {
       java.util.OptionalLong.of(rows)
   }
 
-  def covers(gs: GSchema, s: SegmentRead): Boolean =
-    (s.meta.dataStart, s.meta.dataStop) match {
-      case (Some(ds), Some(de)) =>
-        val l = gs.cmpKey(s.start, ds)
-        val r = gs.cmpKey(s.stop, de)
-        (l < 0 || (l == 0 && s.closed.left)) &&
-          (r > 0 || (r == 0 && s.closed.right))
-      case _ => false
-    }
+  /** Ascending index order over the leading index columns in
+    * `present` (all of them by default): what a graft scan partition
+    * serves and what a graft write requires. */
+  def indexOrdering(gs: GSchema, present: String => Boolean = _ => true)
+      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
+    import org.apache.spark.sql.connector.expressions.{Expressions,
+      SortDirection}
+    gs.idxNames.takeWhile(present).map(n => Expressions.sort(
+      Expressions.column(n), SortDirection.ASCENDING)).toArray
+  }
 
   /** the hidden provenance metadata column (SupportsMetadataColumns):
     * the store-relative segment file serving each row (null for
@@ -1231,7 +1024,7 @@ private[graft] object GraftPlanning {
       reqNames0: Seq[String], seg: SegmentRead,
       onlyFiles: Set[String]): Seq[InputPartition] = {
     val clct = s.collection
-    val clip = !covers(gs, seg)
+    val clip = !seg.coversData(gs)
     val dataReq = reqNames0.filterNot(_ == FileCol)
     // `SELECT _file` alone still needs one stored column to drive
     // row iteration
@@ -1664,7 +1457,7 @@ class GraftMicroBatchStream(table: GraftTable, required: StructType,
       : Option[(Vector[(String, Boolean, String, Boolean)], Long)] = {
     val gs = table.gschema
     val segs = m.segments(label).filter(_.meta.hasData)
-    if (!segs.forall(s => GraftPlanning.covers(gs, s))) return None
+    if (!segs.forall(_.coversData(gs))) return None
     // key-adjacent both-closed windows ([0,999] then [1000,…]) merge
     // too when the last index component is a DISCRETE dtype (int /
     // timestamp-micros / date-days — every engine dtype except float

@@ -11,9 +11,8 @@ import org.apache.spark.sql.connector.write.{BatchWrite,
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{Closed, GType, IndexKey, RangeRegions, SegmentRead,
+import graft.core.{Closed, IndexKey, RangeRegions, SegmentRead,
   SegmentWriter}
-import graft.engine.SparkVals
 
 /** SQL `UPDATE` / `MERGE INTO` / rewrite-`DELETE` on graft tables —
   * Spark 4's group-based copy-on-write row-level operations
@@ -103,115 +102,46 @@ class GraftRowLevelOperation(table: GraftTable,
 /** Group-selection pushdown for the copy-on-write scan
   * (`GroupBasedRowLevelOperationScanPlanning` pushes the command's
   * condition here, exactly as it does for Iceberg): index-range
-  * conjuncts assemble a lexicographic prefix bound that selects the
-  * covering GROUPS straight from the manifest — O(segments) driver
-  * work, no table-scan subquery. Rows are never filtered (a group is
-  * read whole so unmatched rows survive the rewrite; the returned
-  * post-scan filters keep every predicate residual).
+  * conjuncts fold into one index interval ([[IndexInterval]]) that
+  * selects the covering GROUPS straight from the manifest —
+  * O(segments) driver work, no table-scan subquery. Rows are never
+  * filtered (a group is read whole so unmatched rows survive the
+  * rewrite; the returned post-scan filters keep every predicate
+  * residual).
   *
-  * When EVERY pushed conjunct folded into the index bound, the
-  * static cover already contains all matched groups, and the scan
+  * When the interval is EXACT (every pushed conjunct folded into it),
+  * the static cover already contains all matched groups, and the scan
   * reports no runtime-filter attributes — Spark then skips planning
   * the `RowLevelOperationRuntimeGroupFiltering` subquery entirely
   * (three AQE jobs per statement at bench scale; a full table scan's
-  * worth of IO at 100 TB). Any non-index conjunct (a value predicate,
-  * an IN list) keeps the runtime filter: static bounds still cap the
-  * cover, and the matched-row value set prunes it finer. */
+  * worth of IO at 100 TB). Any other conjunct (a value predicate, an
+  * IN list, a bound below the interval's range column) keeps the
+  * runtime filter: static bounds still cap the cover, and the
+  * matched-row value set prunes it finer. */
 class GraftCowScanBuilder(table: GraftTable, op: GraftRowLevelOperation)
     extends ScanBuilder with SupportsPushDownFilters {
-  import org.apache.spark.sql.sources.{EqualTo, GreaterThan,
-    GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual}
 
-  private val idxCols = table.gschema.idx
-  private final class B(val dt: GType) {
-    var lo: Any = null; var loClosed = true
-    var hi: Any = null; var hiClosed = true
-    private def k(v: Any) = SparkVals.parseBound(dt, v)
-    def hasEq: Boolean = lo != null && hi != null && loClosed &&
-      hiClosed && dt.cmp(k(lo), k(hi)) == 0
-    def tighten(lo0: Any, loC: Boolean, hi0: Any, hiC: Boolean): Unit = {
-      if (lo0 != null && (lo == null || dt.cmp(k(lo0), k(lo)) > 0 ||
-          (dt.cmp(k(lo0), k(lo)) == 0 && !loC))) { lo = lo0; loClosed = loC }
-      if (hi0 != null && (hi == null || dt.cmp(k(hi0), k(hi)) < 0 ||
-          (dt.cmp(k(hi0), k(hi)) == 0 && !hiC))) { hi = hi0; hiClosed = hiC }
-    }
-  }
-  private val bounds: Map[String, B] =
-    idxCols.map(c => c.name -> new B(c.dtype)).toMap
-  private var accepted: Array[Filter] = Array.empty
-  // true only while every conjunct Spark handed over folded into the
-  // index bound — the condition under which the runtime group filter
-  // can prune nothing the static cover didn't
-  private var allIndexRange = true
+  private var fold =
+    new IndexInterval.Fold(table.gschema, Nil, values = false)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val usable = scala.collection.mutable.ArrayBuffer.empty[Filter]
-    filters.foreach {
-      case f @ GreaterThan(c, v) if bounds.contains(c) && v != null =>
-        usable += f; bounds(c).tighten(v, false, null, true)
-      case f @ GreaterThanOrEqual(c, v)
-          if bounds.contains(c) && v != null =>
-        usable += f; bounds(c).tighten(v, true, null, true)
-      case f @ LessThan(c, v) if bounds.contains(c) && v != null =>
-        usable += f; bounds(c).tighten(null, true, v, false)
-      case f @ LessThanOrEqual(c, v)
-          if bounds.contains(c) && v != null =>
-        usable += f; bounds(c).tighten(null, true, v, true)
-      case f @ EqualTo(c, v) if bounds.contains(c) && v != null =>
-        usable += f; bounds(c).tighten(v, true, v, true)
-      case IsNotNull(c) if bounds.contains(c) =>
-        () // index columns are non-null by schema: vacuous, not a miss
-      case _ => allIndexRange = false
-    }
-    accepted = usable.toArray
+    fold = new IndexInterval.Fold(table.gschema, filters.toSeq,
+      values = false)
     filters // ALL residual: COW groups must be read whole
   }
-  override def pushedFilters(): Array[Filter] = accepted
-
-  /** equalities on leading index columns extend the prefix; the first
-    * range column contributes its bound and terminates it (same
-    * lexicographic-prefix rule as [[GraftScanBuilder]]). A bound on a
-    * column BELOW the terminated prefix was accepted but cannot
-    * prune — it drops out of the assembled bound, so exactness also
-    * requires every bounded column to have been consumed. */
-  private def prefix(lower: Boolean): (Seq[Any], Boolean, Int) = {
-    val out = Vector.newBuilder[Any]
-    var closed = true
-    var n = 0
-    var consumed = 0
-    var stop = false
-    val it = idxCols.iterator
-    while (!stop && it.hasNext) {
-      val b = bounds(it.next().name)
-      if (b.hasEq) { out += b.lo; n += 1; consumed += 1 }
-      else {
-        val (v, cl) = if (lower) (b.lo, b.loClosed) else (b.hi, b.hiClosed)
-        if (v != null) {
-          out += v; closed = cl; n += 1
-          if (b.lo != null || b.hi != null) consumed += 1
-        }
-        stop = true
-      }
-    }
-    (if (n == 0) null else out.result(), closed, consumed)
-  }
+  override def pushedFilters(): Array[Filter] = fold.accepted
 
   override def build(): Scan = {
-    val (startB, startClosed, usedLo) = prefix(lower = true)
-    val (stopB, stopClosed, usedHi) = prefix(lower = false)
-    val bounded = bounds.valuesIterator
-      .count(b => b.lo != null || b.hi != null)
+    val range = fold.interval
     // UPDATE/DELETE only: their condition is a pure predicate over
-    // the target, so an all-consumed index bound IS the matched-group
+    // the target, so an exact index interval IS the matched-group
     // cover. A MERGE's matched groups are decided by the JOIN with
     // the source — a target-only conjunct in its ON clause (pushed
     // here all the same) caps the cover but can never make it exact,
     // and dropping the runtime filter would rewrite every covered
     // segment even when the source matches two of them.
     val exact = op.command() != RowLevelOperation.Command.MERGE &&
-      allIndexRange && (startB != null || stopB != null) &&
-      math.max(usedLo, usedHi) == bounded
-    val cl = Closed.Both.setLeft(startClosed).setRight(stopClosed)
+      range.exact
     // A handful of candidate groups can never pay for the runtime
     // group-filter subquery: Spark plans it as an extra target-scan +
     // join (2-3 AQE jobs, ~300-400 ms at bench scale) whose only
@@ -221,18 +151,22 @@ class GraftCowScanBuilder(table: GraftTable, op: GraftRowLevelOperation)
     // based, so a real table (10^4-10^5 segments at 100 TB) always
     // keeps the filter; only toy/tail tables skip it. Candidates are
     // counted against the operation's ONE snapshot manifest.
-    val minSeg = table.series.collection.repo.spark.conf
-      .get("spark.graft.cow.runtimeFilterMinSegments", "4").toInt
     val candidates =
-      if (startB == null && stopB == null) op.tableSegments.length
+      if (!range.bounded) op.tableSegments.length
       else if (op.tableManifest.isEmpty) 0 // no leaf: nothing to prune
-      else table.series
-        .segments(startB, stopB, None, cl, from = op.tableManifest)
-        .count(_.meta.hasData)
-    new GraftCowScan(table, op, startB, stopB, cl,
-      skipRuntimeFilter = exact || candidates <= minSeg,
+      else table.series.segments(range.start, range.stop, None,
+        range.closed, from = op.tableManifest).count(_.meta.hasData)
+    new GraftCowScan(table, op, range.start, range.stop, range.closed,
+      skipRuntimeFilter =
+        exact || candidates <= GraftCowScanBuilder.RuntimeFilterMinSegments,
       staticExact = exact)
   }
+}
+
+object GraftCowScanBuilder {
+  /** at most this many candidate groups: rewrite them all rather than
+    * plan the runtime group-filter subquery */
+  val RuntimeFilterMinSegments = 4
 }
 
 /** The copy-on-write scan: serves ENTIRE visible windows (no row
@@ -241,7 +175,8 @@ class GraftCowScanBuilder(table: GraftTable, op: GraftRowLevelOperation)
   * bound and dynamically through the runtime group filter, and
   * records what it planned for the write side. */
 class GraftCowScan(table: GraftTable, op: GraftRowLevelOperation,
-    start: Any = null, stop: Any = null, closed: Closed = Closed.Both,
+    start: IndexKey = null, stop: IndexKey = null,
+    closed: Closed = Closed.Both,
     skipRuntimeFilter: Boolean = false,
     /** filter skipped because static selection was EXACT (vs skipped
       * for economy on a tiny candidate cover) — reported as a metric */
@@ -255,12 +190,8 @@ class GraftCowScan(table: GraftTable, op: GraftRowLevelOperation,
     * reported so the rewrite-DELETE's in-partition sort requirement
     * is satisfied by the scan itself (`RemoveRedundantSorts`) */
   override def outputOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    import org.apache.spark.sql.connector.expressions.{Expressions,
-      SortDirection}
-    table.gschema.idx.map(c => Expressions.sort(
-      Expressions.column(c.name), SortDirection.ASCENDING)).toArray
-  }
+      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+    GraftPlanning.indexOrdering(table.gschema)
 
   private lazy val resolvedSeries: graft.api.Series = table.series
   /** covering segments for the static bound, as FULL visible windows
@@ -319,31 +250,13 @@ class GraftCowScan(table: GraftTable, op: GraftRowLevelOperation,
     else Array(org.apache.spark.sql.connector.expressions.Expressions
       .column(table.gschema.idx.head.name))
 
-  override def filter(filters: Array[Filter]): Unit = {
-    import org.apache.spark.sql.sources.{EqualTo, In}
-    val head = table.gschema.idx.head.name
-    val dt = table.gschema.idx.head.dtype
-    val vals = filters.toSeq.flatMap {
-      case In(c, vs) if c == head =>
-        Some(vs.toSeq.filter(_ != null).map(v =>
-          SparkVals.parseBound(dt, v)))
-      case EqualTo(c, v) if c == head && v != null =>
-        Some(Seq(SparkVals.parseBound(dt, v)))
-      case _ => None
-    }
-    if (vals.nonEmpty) runtimeKeep = Some(vals.flatten.distinct)
-  }
+  override def filter(filters: Array[Filter]): Unit =
+    IndexInterval.headValues(table.gschema, filters)
+      .foreach(v => runtimeKeep = Some(v))
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val dt: GType = table.gschema.idx.head.dtype
-    val kept = runtimeKeep match {
-      case None => allSegments
-      case Some(vals) => allSegments.filter { s =>
-        val lo = s.start.values(0)
-        val hi = s.stop.values(0)
-        vals.exists(v => dt.cmp(v, lo) >= 0 && dt.cmp(v, hi) <= 0)
-      }
-    }
+    val kept = IndexInterval.headPruned(table.gschema, allSegments,
+      runtimeKeep)
     op.replacedRanges = kept.map(s => (s.start, s.stop, s.closed))
     val reqNames = table.gschema.names
     kept.flatMap(seg => GraftPlanning.partitionsFor(resolvedSeries,
@@ -383,12 +296,10 @@ class GraftCowWrite(table: GraftTable, op: GraftRowLevelOperation)
       .RequiresDistributionAndOrdering {
   import org.apache.spark.sql.connector.distributions.{Distribution,
     Distributions}
-  import org.apache.spark.sql.connector.expressions.{Expressions,
-    SortDirection, SortOrder}
+  import org.apache.spark.sql.connector.expressions.SortOrder
 
   private def idxOrders: Array[SortOrder] =
-    table.gschema.idx.map(c => Expressions.sort(
-      Expressions.column(c.name), SortDirection.ASCENDING)).toArray
+    GraftPlanning.indexOrdering(table.gschema)
 
   /** Rewrite-DELETE needs NO distribution: its output is a strict
     * SUBSET of the scanned rows under narrow operators (scan →
@@ -467,11 +378,7 @@ class GraftCowBatchWrite(table: GraftTable,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val stats = messages.toSeq.flatMap {
-      case GraftCommitMessage(s) => s
-      case other => throw new IllegalStateException(
-        s"unexpected commit message: $other")
-    }
+    val stats = GraftCommitMessage.stats(messages)
     val series = table.series
     try series.commitReplace(stats, op.replacedRanges)
     finally series.collection.repo.store.rm(params.tmpRel,
@@ -511,9 +418,7 @@ class GraftCowDataWriter(tw: SegmentWriter.TaskSegmentWriter,
     params: SegmentWriter.TaskParams, regions: RangeRegions)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
 
-  private val idxPos = params.gschema.cols.zipWithIndex
-    .filter(_._1.idx).map(_._2).toArray
-  private val dtypes = params.gschema.cols.map(_.dtype).toIndexedSeq
+  private val keyAt = new SegmentWriter.RowKeys(params.gschema)
   private val nCols = params.gschema.cols.length
   private var region = Int.MinValue
   private var started = false
@@ -522,16 +427,6 @@ class GraftCowDataWriter(tw: SegmentWriter.TaskSegmentWriter,
   private val metrics =
     Array(GraftMetrics.value(GraftMetrics.FilesWritten, tw.files))
   override def currentMetricsValues() = metrics
-
-  private def keyAt(ir: InternalRow): IndexKey = IndexKey(
-    idxPos.map { i =>
-      dtypes(i) match {
-        case GType.TimestampT | GType.IntT => ir.getLong(i)
-        case GType.DateT  => ir.getInt(i).toLong
-        case GType.FloatT => ir.getDouble(i)
-        case GType.StrT   => ir.getUTF8String(i).toString
-      }
-    }.toVector)
 
   override def write(row: InternalRow): Unit = {
     if (shift < 0) {

@@ -146,4 +146,165 @@ class RowLevelPropertySpec extends AnyFunSuite {
   test("randomized DML scenarios match the model (seeds 1-6)") {
     (1 to 6).foreach(runScenario)
   }
+
+  /** One drawn conjunction over `(a, b, v)` with index `(a, b)`: its SQL
+    * text, the same predicate on a model row, and whether it is one
+    * EXACT index interval (an equality prefix, then at most one range
+    * column, nothing on index columns deeper and no other conjunct). */
+  private final case class Conj(sql: String,
+      pred: ((Long, Long), Double) => Boolean, exact: Boolean)
+
+  private def drawConj(kind: Int, rnd: Random): Conj = {
+    def cmp(x: Long, op: String, y: Long): Boolean = op match {
+      case ">" => x > y
+      case ">=" => x >= y
+      case "<" => x < y
+      case "<=" => x <= y
+      case "=" => x == y
+    }
+    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.length))
+    val a = rnd.nextInt(6).toLong
+    val lo = rnd.nextInt(30).toLong
+    val hi = lo + 1 + rnd.nextInt(15)
+    kind match {
+      case 0 => // eq prefix + range on the second column
+        Conj(s"a = $a AND b >= $lo AND b < $hi",
+          { case ((x, y), _) => x == a && y >= lo && y < hi }, true)
+      case 1 => // one-sided: a bound on one end only
+        val op = pick(">", ">=", "<", "<=")
+        if (rnd.nextBoolean())
+          Conj(s"a $op $a", { case ((x, _), _) => cmp(x, op, a) }, true)
+        else
+          Conj(s"a = $a AND b $op $lo", { case ((x, y), _) =>
+            x == a && cmp(y, op, lo) }, true)
+      case 2 => // open and closed ends on both sides
+        val (l, h) = (pick(">", ">="), pick("<", "<="))
+        if (rnd.nextBoolean()) {
+          val a2 = a + 1 + rnd.nextInt(3)
+          Conj(s"a $l $a AND a $h $a2", { case ((x, _), _) =>
+            cmp(x, l, a) && cmp(x, h, a2) }, true)
+        } else
+          Conj(s"a = $a AND b $l $lo AND b $h $hi", { case ((x, y), _) =>
+            x == a && cmp(y, l, lo) && cmp(y, h, hi) }, true)
+      case 3 => // second column only: no prefix to extend
+        if (rnd.nextBoolean())
+          Conj(s"b = $lo", { case ((_, y), _) => y == lo }, false)
+        else
+          Conj(s"b >= $lo AND b < $hi", { case ((_, y), _) =>
+            y >= lo && y < hi }, false)
+      case 4 => // a bound below the terminating range column
+        val a2 = a + 1 + rnd.nextInt(3)
+        Conj(s"a >= $a AND a < $a2 AND b = $lo", { case ((x, y), _) =>
+          x >= a && x < a2 && y == lo }, false)
+      case 5 => // a value predicate next to an exact index range
+        val t = (a * 100 + lo).toDouble
+        Conj(s"a = $a AND v > $t", { case ((x, _), v) =>
+          x == a && v > t }, false)
+    }
+  }
+
+  /** Multi-column index intervals through every SQL route: each drawn
+    * conjunction runs through SELECT, UPDATE, REPLACE WHERE and DELETE
+    * against a model, and the route is asserted with the rows — an
+    * exact conjunction deletes by metadata alone (no Spark job) and
+    * selects the UPDATE's groups statically; any other takes the
+    * copy-on-write rewrite with the runtime group filter and is refused
+    * by REPLACE WHERE. */
+  private def runMultiColumnScenario(seed: Int): Unit = {
+    import graft.sources.GraftMetrics.GroupsStatic
+    import org.apache.spark.sql.functions.expr
+    import spark.implicits._
+    val rnd = new Random(seed)
+    val cat = newCatalog()
+    val t = s"$cat.c.m"
+    spark.sql(s"CREATE TABLE $t (a BIGINT, b BIGINT, v DOUBLE) " +
+      "PARTITIONED BY (a, b)")
+    type K = (Long, Long)
+    var model = Map.empty[K, Double]
+    def rows(df: org.apache.spark.sql.DataFrame): Map[K, Double] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+        .toMap
+    def check(step: String): Unit = {
+      val got = rows(spark.sql(s"SELECT a, b, v FROM $t"))
+      assert(got == model, s"seed=$seed after $step: " +
+        s"extra=${(got.keySet -- model.keySet).toSeq.sorted.take(5)} " +
+        s"missing=${(model.keySet -- got.keySet).toSeq.sorted.take(5)} " +
+        s"diff=${model.keySet.intersect(got.keySet)
+          .filter(k => got(k) != model(k)).toSeq.sorted.take(5)}")
+    }
+    // one a-group per insert: the write splices over [(a,0), (a,39)],
+    // replacing exactly that group
+    def refill(a: Long): Unit = {
+      val batch = (0L until 40L).map(b => (a, b) -> (a * 100 + b + 0.5))
+      batch.map { case ((x, y), v) => (x, y, v) }.toDF("a", "b", "v")
+        .writeTo(t).append()
+      model = model.filterNot(_._1._1 == a) ++ batch
+    }
+    (0L until 6L).foreach(refill)
+    check("seed")
+
+    // UPDATEs whose route was seen: a statement that matches no group
+    // plans an empty scan, and AQE drops it with its metrics
+    var routed = 0
+    rnd.shuffle((0 until 6).flatMap(k => Seq(k, k))).foreach { kind =>
+      (0L until 6L).filterNot(a => model.keys.exists(_._1 == a))
+        .foreach(refill)
+      val c = drawConj(kind, rnd)
+      val step = s"kind $kind [${c.sql}]"
+      def hit(m: Map[K, Double]) = m.filter { case (k, v) => c.pred(k, v) }
+
+      assert(rows(spark.sql(s"SELECT a, b, v FROM $t WHERE ${c.sql}")) ==
+        hit(model), s"seed=$seed SELECT $step")
+
+      val add = 1 + rnd.nextInt(9)
+      val (_, upd) = TestSpark.graftMetrics(
+        spark.sql(s"UPDATE $t SET v = v + $add WHERE ${c.sql}"))
+      val route = upd.get(GroupsStatic)
+      assert(route.forall(_ == (if (c.exact) 1L else 0L)) &&
+        (route.isDefined || hit(model).isEmpty),
+        s"seed=$seed UPDATE $step: groupsStatic $route")
+      if (route.isDefined) routed += 1
+      model = model.map { case (k, v) =>
+        k -> (if (c.pred(k, v)) v + add else v) }
+      check(s"UPDATE $step")
+
+      if (c.exact) {
+        // an exact conjunction is on the index alone: replacement rows
+        // drawn from the keys it holds fall inside its interval
+        val inside = for (x <- 0L until 6L; y <- 0L until 40L
+          if c.pred((x, y), 0.0)) yield (x, y)
+        val repl = (inside.take(1) ++ inside.drop(1)
+          .filter(_ => rnd.nextBoolean()))
+          .map(k => k -> -(k._1 * 100 + k._2 + 0.25))
+        repl.map { case ((x, y), v) => (x, y, v) }.toDF("a", "b", "v")
+          .writeTo(t).overwrite(expr(c.sql))
+        model = model.filterNot { case (k, v) => c.pred(k, v) } ++ repl
+      } else {
+        val e = intercept[Exception](Seq((0L, 0L, 0.0))
+          .toDF("a", "b", "v").writeTo(t).overwrite(expr(c.sql)))
+        def chain(x: Throwable): Seq[String] =
+          if (x == null) Nil
+          else Option(x.getMessage).toSeq ++ chain(x.getCause)
+        assert(chain(e).exists(_.contains("index-range")),
+          s"seed=$seed REPLACE WHERE $step: $e")
+      }
+      check(s"REPLACE WHERE $step")
+
+      val (_, jobs, _) = TestSpark.work(
+        spark.sql(s"DELETE FROM $t WHERE ${c.sql}"))
+      if (c.exact) assert(jobs == 0,
+        s"seed=$seed exact DELETE $step ran $jobs Spark jobs")
+      model = model.filterNot { case (k, v) => c.pred(k, v) }
+      check(s"DELETE $step")
+
+      refill(rnd.nextInt(6).toLong)
+      check(s"refill after $step")
+    }
+    assert(routed >= 10, s"seed=$seed: only $routed UPDATE routes seen")
+  }
+
+  test("multi-column index intervals: SELECT, UPDATE, REPLACE WHERE " +
+      "and DELETE match the model and take the exact route (seeds 1-2)") {
+    (1 to 2).foreach(runMultiColumnScenario)
+  }
 }
