@@ -148,6 +148,35 @@ final case class GSchema(cols: Seq[ColDef], kv: Boolean = false)
     (l > 0 || (l == 0 && closed.left)) && (r < 0 || (r == 0 && closed.right))
   }
 
+  /** A range BOUND as a CUT in full-key space: a partial-arity key
+    * is a position AROUND its group of extensions — `after = false`
+    * cuts before every extension, `after = true` cuts after all of
+    * them. Which side a bound cuts follows the engine's query-side
+    * convention (same as `Manifest.segments` prefix resolution):
+    * start bound → after iff left-open; stop bound → after iff
+    * right-closed — so a stop of (m), closed, takes ALL of group m
+    * while a right-open one spares it. Equal-arity comparisons ignore
+    * the flags entirely (exact reference tuple parity — full-key
+    * behavior unchanged); a cut never coincides with a longer real
+    * key. */
+  def cmpCut(aK: IndexKey, aAfter: Boolean,
+      bK: IndexKey, bAfter: Boolean): Int = {
+    val c = cmpKey(aK, bK)
+    if (c != 0) c
+    else {
+      val (al, bl) = (aK.values.length, bK.values.length)
+      if (al == bl) 0
+      else if (al < bl) { if (aAfter) 1 else -1 }
+      else { if (bAfter) -1 else 1 }
+    }
+  }
+
+  /** Does the range from `start` to `stop` cut its start after its
+    * stop ([[cmpCut]])? Such a range holds no key: start (5) left-open
+    * to stop (5, 39) begins after all of group 5. */
+  def inverted(start: IndexKey, stop: IndexKey, closed: Closed): Boolean =
+    cmpCut(start, !closed.left, stop, closed.right) > 0
+
   /** Python-tuple TOTAL order over (possibly partial) keys: prefix
     * compare, then shorter-before-longer — `(5,) < (5, 0)`, exactly
     * what the reference's splice algebra inherits from raw tuple

@@ -142,37 +142,16 @@ final case class Manifest(schema: GSchema, rows: Vector[SegmentMeta]) {
     if (c != 0) c else schema.cmpKeyTotal(k1, k2)
   }
 
-  /** A splice BOUND as a CUT in full-key space: a partial-arity key
-    * is a position AROUND its group of extensions — `after = false`
-    * cuts before every extension, `after = true` cuts after all of
-    * them. Which side a bound cuts follows the engine's query-side
-    * convention (same as [[segments]] prefix resolution):
-    * start bound → before iff left-closed; stop bound → after iff
-    * right-closed — so `delete(stop = (m), Closed.Both)` removes ALL
-    * of group m while `delete(stop = (m), right-open)` spares it.
-    * Stored rows' own bounds resolve by their own closed flags the
-    * same way. Equal-arity comparisons ignore the flags entirely
-    * (exact reference tuple parity — full-key behavior unchanged);
-    * a cut never coincides with a longer real key, so remnant
-    * closedness at a mixed-arity cut cannot flip a row's content. */
-  private def cmpCut(aK: IndexKey, aAfter: Boolean,
-      bK: IndexKey, bAfter: Boolean): Int = {
-    val c = schema.cmpKey(aK, bK)
-    if (c != 0) c
-    else {
-      val (al, bl) = (aK.values.length, bK.values.length)
-      if (al == bl) 0
-      else if (al < bl) { if (aAfter) 1 else -1 }
-      else { if (bAfter) -1 else 1 }
-    }
-  }
+  // splice bounds and stored rows' own bounds order as CUTS, each
+  // resolved by its own closed flags
+  import schema.cmpCut
   private def startCutAfter(leftClosed: Boolean): Boolean = !leftClosed
   private def stopCutAfter(rightClosed: Boolean): Boolean = rightClosed
 
   /** (startPos, stopPos) bisect positions for a [start, stop] splice
     * (reference lakota/commit.py:235-244): startPos bisects right over
     * row *stop* keys, stopPos bisects left over row *start* keys.
-    * Bounds and row keys compare as CUTS ([[cmpCut]]); equal-arity
+    * Bounds and row keys compare as CUTS ([[GSchema.cmpCut]]); equal-arity
     * behavior is the reference's exactly.
     */
   def split(label: String, start: IndexKey, stop: IndexKey): (Int, Int) =
@@ -216,8 +195,7 @@ final case class Manifest(schema: GSchema, rows: Vector[SegmentMeta]) {
   def update(row: SegmentMeta): Manifest = {
     // bounds order as CUTS: start (4, 6) to stop (4), right-closed, is
     // the rest of group 4 — valid, though (4, 6) sorts after (4)
-    require(cmpCut(row.start, startCutAfter(row.closed.left), row.stop,
-      stopCutAfter(row.closed.right)) <= 0,
+    require(!schema.inverted(row.start, row.stop, row.closed),
       s"Invalid range ${row.start} -> ${row.stop}")
     if (rows.isEmpty) return Manifest(schema, Vector(row))
 

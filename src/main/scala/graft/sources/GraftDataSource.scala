@@ -247,8 +247,7 @@ class GraftTable(rootUri: String, collectionName: String,
         Some(DeleteKeys(vs.toSeq.map(v =>
           SparkVals.parseBound(head.dtype, v)).distinct))
       case _ =>
-        val range = new IndexInterval.Fold(gschema, real.toSeq,
-          values = false).interval
+        val range = new IndexInterval.Fold(gschema, real.toSeq).interval
         Option.when(range.exact)(DeleteRange(range))
     }
   }
@@ -304,7 +303,10 @@ class GraftTable(rootUri: String, collectionName: String,
           if (tail.isEmpty) return
           tail.last.stop
         }
-      if (gschema.cmpKey(st, sp) > 0) return // empty range: no-op
+      // empty range: no-op. Cut order, as the splice checks it: a > 5
+      // over a table ending at (5, 39) runs from (5), left-open, to
+      // (5, 39) — past all of group 5 before it starts
+      if (gschema.inverted(st, sp, closed)) return
       s.delete(st, sp, closed)
   }
 
@@ -332,14 +334,13 @@ class GraftScanBuilder(table: GraftTable, beforeMs: Option[Long],
   // interval build() passes on); value-column comparisons and IN lists
   // collect bounds for segment-stats skipping
   private var fold =
-    new IndexInterval.Fold(table.gschema, Nil, values = true)
+    new IndexInterval.Fold(table.gschema, Nil)
   private var required: Option[StructType] = None
   private var limitN: Option[Int] = None
   private var limitReversed = false
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    fold = new IndexInterval.Fold(table.gschema, filters.toSeq,
-      values = true)
+    fold = new IndexInterval.Fold(table.gschema, filters.toSeq)
     filters // everything stays residual: Spark re-applies above scan
   }
   override def pushedFilters(): Array[Filter] = fold.accepted
@@ -865,7 +866,8 @@ class GraftBatchWrite(table: GraftTable,
               if (gs.cmpKey(a, b) <= 0) a else b)
             val mx = stats.map(_.max).reduce((a, b) =>
               if (gs.cmpKey(a, b) >= 0) a else b)
-            require(range.contains(gs, mn, mx),
+            require(gs.within(mn, mx, range.start, range.stop,
+              range.closed),
               s"graft overwrite: written rows [$mn, $mx] fall " +
                 s"outside the replace range [${range.start}, ${range.stop}]")
           case _ => ()

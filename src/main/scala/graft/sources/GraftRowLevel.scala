@@ -121,15 +121,15 @@ class GraftRowLevelOperation(table: GraftTable,
 class GraftCowScanBuilder(table: GraftTable, op: GraftRowLevelOperation)
     extends ScanBuilder with SupportsPushDownFilters {
 
-  private var fold =
-    new IndexInterval.Fold(table.gschema, Nil, values = false)
+  private var fold = new IndexInterval.Fold(table.gschema, Nil)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    fold = new IndexInterval.Fold(table.gschema, filters.toSeq,
-      values = false)
+    fold = new IndexInterval.Fold(table.gschema, filters.toSeq)
     filters // ALL residual: COW groups must be read whole
   }
+  // only index bounds select groups; value bounds prune nothing here
   override def pushedFilters(): Array[Filter] = fold.accepted
+    .filter(_.references.forall(table.gschema.idxNames.contains))
 
   override def build(): Scan = {
     val range = fold.interval
@@ -152,7 +152,8 @@ class GraftCowScanBuilder(table: GraftTable, op: GraftRowLevelOperation)
     // keeps the filter; only toy/tail tables skip it. Candidates are
     // counted against the operation's ONE snapshot manifest.
     val candidates =
-      if (!range.bounded) op.tableSegments.length
+      if (range.start == null && range.stop == null)
+        op.tableSegments.length
       else if (op.tableManifest.isEmpty) 0 // no leaf: nothing to prune
       else table.series.segments(range.start, range.stop, None,
         range.closed, from = op.tableManifest).count(_.meta.hasData)

@@ -38,23 +38,16 @@ private[sources] object IndexInterval {
     * `closed` naming the inclusive ends. `exact` when the interval is
     * the whole pushed predicate, not just a cover of it. */
   final case class Interval(start: IndexKey, stop: IndexKey,
-      closed: Closed, exact: Boolean) {
-    def bounded: Boolean = start != null || stop != null
-    /** does it hold every key of [lo, hi]? */
-    def contains(gs: GSchema, lo: IndexKey, hi: IndexKey): Boolean =
-      gs.within(lo, hi, start, stop, closed)
-  }
+      closed: Closed, exact: Boolean)
 
   /** `filters`, a conjunction, folded into bounds on every index column
-    * and, when `values`, on every value column (the scan's
-    * segment-stats skipping). */
-  final class Fold(gs: GSchema, filters: Seq[Filter], values: Boolean) {
+    * and every value column (the scan's segment-stats skipping). */
+  final class Fold(gs: GSchema, filters: Seq[Filter]) {
     private val idx: IndexedSeq[Bound] =
       gs.idx.map(c => new Bound(c.dtype)).toIndexedSeq
     private val idxOf: Map[String, Bound] = gs.idxNames.zip(idx).toMap
     private val valueBounds: Map[String, Bound] =
-      if (!values) Map.empty
-      else gs.nonIdx.map(c => c.name -> new Bound(c.dtype)).toMap
+      gs.nonIdx.map(c => c.name -> new Bound(c.dtype)).toMap
 
     private def tighten(c: String, lo: Any, loC: Boolean, hi: Any,
         hiC: Boolean): Boolean =

@@ -246,10 +246,7 @@ class RowLevelPropertySpec extends AnyFunSuite {
     // UPDATEs whose route was seen: a statement that matches no group
     // plans an empty scan, and AQE drops it with its metrics
     var routed = 0
-    rnd.shuffle((0 until 6).flatMap(k => Seq(k, k))).foreach { kind =>
-      (0L until 6L).filterNot(a => model.keys.exists(_._1 == a))
-        .foreach(refill)
-      val c = drawConj(kind, rnd)
+    def run(kind: String, c: Conj): Unit = {
       val step = s"kind $kind [${c.sql}]"
       def hit(m: Map[K, Double]) = m.filter { case (k, v) => c.pred(k, v) }
 
@@ -270,8 +267,9 @@ class RowLevelPropertySpec extends AnyFunSuite {
 
       if (c.exact) {
         // an exact conjunction is on the index alone: replacement rows
-        // drawn from the keys it holds fall inside its interval
-        val inside = for (x <- 0L until 6L; y <- 0L until 40L
+        // drawn from the keys it holds fall inside its interval, and
+        // may open a group on either side of the table
+        val inside = for (x <- -1L until 7L; y <- 0L until 40L
           if c.pred((x, y), 0.0)) yield (x, y)
         val repl = (inside.take(1) ++ inside.drop(1)
           .filter(_ => rnd.nextBoolean()))
@@ -300,7 +298,20 @@ class RowLevelPropertySpec extends AnyFunSuite {
       refill(rnd.nextInt(6).toLong)
       check(s"refill after $step")
     }
+    rnd.shuffle((0 until 6).flatMap(k => Seq(k, k))).foreach { kind =>
+      (0L until 6L).filterNot(a => model.keys.exists(_._1 == a))
+        .foreach(refill)
+      run(kind.toString, drawConj(kind, rnd))
+    }
     assert(routed >= 10, s"seed=$seed: only $routed UPDATE routes seen")
+
+    // one-sided bounds AT the table's first and last head values: the
+    // delete range then starts after, or stops before, every key
+    val (mn, mx) = (model.keys.map(_._1).min, model.keys.map(_._1).max)
+    run("end", Conj(s"a > $mx", { case ((x, _), _) => x > mx }, true))
+    run("end", Conj(s"a < $mn", { case ((x, _), _) => x < mn }, true))
+    run("end", Conj(s"a = $mx AND b > 39", { case ((x, y), _) =>
+      x == mx && y > 39 }, true))
   }
 
   test("multi-column index intervals: SELECT, UPDATE, REPLACE WHERE " +

@@ -61,11 +61,8 @@ class IndexIntervalSpec extends AnyFunSuite {
 
   test("pushed filters fold into one interval and its exactness") {
     cases.foreach { case (name, filters, want) =>
-      Seq(false, true).foreach { values =>
-        val iv = new IndexInterval.Fold(gs, filters, values).interval
-        assert((iv.start, iv.stop, iv.closed, iv.exact) == want,
-          s"$name (values=$values)")
-      }
+      val iv = new IndexInterval.Fold(gs, filters).interval
+      assert((iv.start, iv.stop, iv.closed, iv.exact) == want, name)
     }
   }
 
@@ -73,14 +70,11 @@ class IndexIntervalSpec extends AnyFunSuite {
     val fs = Seq(EqualTo("a", 3L), GreaterThan("v", 1.0),
       In("v", Array[Any](4.0, 2.0, 3.0)), IsNotNull("a"),
       In("a", Array[Any](1L)))
-    val scan = new IndexInterval.Fold(gs, fs, values = true)
-    assert(scan.accepted.toSeq == fs.take(3))
+    val fold = new IndexInterval.Fold(gs, fs)
+    assert(fold.accepted.toSeq == fs.take(3))
     // the IN list bounds v by its own min/max, tighter than v > 1.0
-    assert(scan.valueQuery == Seq(("v", GType.FloatT, 2.0, true, 4.0,
+    assert(fold.valueQuery == Seq(("v", GType.FloatT, 2.0, true, 4.0,
       true)))
-    val cow = new IndexInterval.Fold(gs, fs, values = false)
-    assert(cow.accepted.toSeq == fs.take(1))
-    assert(cow.valueQuery.isEmpty)
   }
 
   test("runtime head filter parses once and prunes by head range") {
@@ -98,13 +92,12 @@ class IndexIntervalSpec extends AnyFunSuite {
 
   test("containment: closed ends include, open ends exclude, null is " +
       "unbounded") {
-    val iv = IndexInterval.Interval(k(1), k(5), Closed.Left, exact = true)
-    assert(iv.contains(gs, k(1, 0), k(4, 9)))
-    assert(!iv.contains(gs, k(1, 0), k(5, 0)))
-    assert(iv.copy(closed = Closed.Both).contains(gs, k(1, 0), k(5, 0)))
-    assert(!iv.copy(closed = Closed.Right).contains(gs, k(1, 0), k(2)))
-    assert(iv.copy(start = null).contains(gs, k(-100), k(2)))
-    assert(iv.copy(stop = null).contains(gs, k(2), k(100)))
+    assert(gs.within(k(1, 0), k(4, 9), k(1), k(5), Closed.Left))
+    assert(!gs.within(k(1, 0), k(5, 0), k(1), k(5), Closed.Left))
+    assert(gs.within(k(1, 0), k(5, 0), k(1), k(5), Closed.Both))
+    assert(!gs.within(k(1, 0), k(2), k(1), k(5), Closed.Right))
+    assert(gs.within(k(-100), k(2), null, k(5), Closed.Left))
+    assert(gs.within(k(2), k(100), k(1), null, Closed.Left))
   }
 
   private lazy val spark = TestSpark.spark
@@ -156,5 +149,33 @@ class IndexIntervalSpec extends AnyFunSuite {
       (a, b) -> 1.0).toMap -- (6L until 10L).map((1L, _)) -
       ((2L, 8L)) + ((2L, 9L) -> 5.0)
     assert(got == want)
+  }
+
+  test("a one-sided DELETE or REPLACE WHERE past either end of the " +
+      "table is a no-op delete") {
+    import spark.implicits._
+    val (cat, _) = newTable()
+    spark.sql(s"INSERT INTO $cat.c.m " +
+      "SELECT id DIV 10, id % 10, 1.0 FROM range(0, 30)")
+    def rows(): Map[(Long, Long), Double] =
+      spark.sql(s"SELECT a, b, v FROM $cat.c.m").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val table0 = (for (a <- 0L until 3L; b <- 0L until 10L) yield
+      (a, b) -> 1.0).toMap
+    // a > 2 runs from (2), left-open, to the last key (2, 9): its
+    // start cuts after all of group 2, so the range holds no key;
+    // a < 0 runs from the first key (0, 0) to (0), right-open
+    Seq("a > 2", "a >= 3", "a < 0", "a <= -1").foreach { cond =>
+      val (_, jobs, _) = TestSpark.work(
+        spark.sql(s"DELETE FROM $cat.c.m WHERE $cond"))
+      assert(jobs == 0, s"$cond: metadata delete ran $jobs Spark jobs")
+      assert(rows() == table0, cond)
+    }
+    val over = org.apache.spark.sql.functions.expr _
+    Seq((3L, 0L, 5.0)).toDF("a", "b", "v").writeTo(s"$cat.c.m")
+      .overwrite(over("a > 2"))
+    Seq((-1L, 4L, 6.0)).toDF("a", "b", "v").writeTo(s"$cat.c.m")
+      .overwrite(over("a < 0"))
+    assert(rows() == table0 + ((3L, 0L) -> 5.0) + ((-1L, 4L) -> 6.0))
   }
 }
