@@ -21,19 +21,7 @@ class Collection(val repo: Repo, val label: String, val path: String,
       * reads prune tighter and SQL row-level operations (group-based
       * copy-on-write) rewrite only the covering segments. None =
       * engine default. */
-    val pageLenCfg: Option[Long] = None,
-    /** registry-seeded sticky BSS storage hint (Repo.RegEntry.bss) */
-    bssHint: Boolean = false) {
-
-  /** Live view of the BSS hint: seeded from the registry, flipped by
-    * the first `+bss` write through THIS handle too, so the same
-    * handle's frame() reads route row-based immediately (a fresh
-    * handle reads the persisted hint). */
-  @volatile private[graft] var bssMode: Boolean = bssHint
-  private[graft] def enableBss(): Unit = if (!bssMode) {
-    repo.markBss(path)
-    bssMode = true
-  }
+    val pageLenCfg: Option[Long] = None) {
 
   val changelog = new Changelog(repo.store, s"$path/changelog")
   var pageLen: Long = pageLenCfg.getOrElse(500000L)
@@ -117,13 +105,9 @@ class Collection(val repo: Repo, val label: String, val path: String,
     * a 100 TB corpus is storage- and scan-IO-bound, and zstd buys ~2x
     * the ratio of snappy at comparable decode speed — the reference
     * makes the same call with blosc(zstd) per column
-    * (lakota/schema.py). Reads are codec-agnostic (parquet footers
-    * name the codec per column chunk) EXCEPT for the `+bss` encoding
-    * mode (BYTE_STREAM_SPLIT float pages), which Spark's vectorized
-    * reader cannot decode: a `+bss` codec flips the collection's
-    * sticky registry hint so every frame() read routes through the
-    * engine's row-capable reader — BEFORE anything is written, so a
-    * failure is pessimistic, never a crash-on-read.
+    * (lakota/schema.py). Reads are codec-agnostic: the connector's
+    * readers pick each file's decode tier from its footer, the
+    * engine's page decoder for `+bss` (BYTE_STREAM_SPLIT) float pages.
     *
     * The staging dir is a fresh `tmp/<hextime>-<uuid>`: the hextime
     * prefix is its creation time, which gc's staging sweep
@@ -131,8 +115,6 @@ class Collection(val repo: Repo, val label: String, val path: String,
   private[graft] def taskParams(verifySorted: Boolean = false,
       labeled: Boolean = false): SegmentWriter.TaskParams = {
     val codec = repo.spark.conf.get("spark.graft.segment.codec", "zstd")
-    if (codec.toLowerCase(java.util.Locale.ROOT).endsWith("+bss"))
-      enableBss()
     val tmpRel = s"tmp/${Hash.hextime()}-" +
       java.util.UUID.randomUUID().toString.take(12)
     SegmentWriter.TaskParams(schema,
@@ -182,7 +164,7 @@ class Collection(val repo: Repo, val label: String, val path: String,
     else Manifest.decode(bytes)
 
   private[graft] def readChunk(sha: String): Array[Byte] = {
-    // gc-buried fallback, mirroring segment reads (Series.scanFiles):
+    // gc-buried fallback, mirroring segment reads (GraftRead.open):
     // a referenced chunk soft-deleted by a racing gc still exists
     // under its hextime suffix — resurrect it. Best-effort with a
     // bounded loop: concurrent resurrectors (another reader, gc's own
@@ -890,12 +872,6 @@ class Collection(val repo: Repo, val label: String, val path: String,
           cd.name -> graft.engine.SparkVals.parseBound(cd.dtype, v) }.toMap
     val target = repo.createCollection(targetSchema, targetLabel,
       tgtColMap, tgtDefaults, pageLen = pageLenCfg)
-    // clones SHARE the source's segment files, so a bss-mode source
-    // makes the clone bss-mode too: without the sticky hint the
-    // clone's reads would route through Spark's vectorized reader
-    // and die on the first BYTE_STREAM_SPLIT page (found by the
-    // zstd+bss full-oracle pass, q59)
-    if (bssMode) target.enableBss()
     manifest().foreach { m =>
       val tm = Manifest(targetSchema, m.rows)
       target.commitManifest(tm, parents = Seq(Changelog.Phi))

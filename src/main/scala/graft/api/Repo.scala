@@ -156,9 +156,8 @@ class Repo(val rootUri: String, val spark: SparkSession,
           val (ns, lbl) = parseKey(label0)
           val pageLen = vm.get("page_len")
             .map(_.asInstanceOf[Number].longValue())
-          val bss = vm.get("enc").contains("bss")
           mkKey(ns, lbl) -> RegEntry(vm("path").asInstanceOf[String],
-            schema, colMap, defaults, pageLen, bss)
+            schema, colMap, defaults, pageLen)
         }
 
   /** Registry chunk read with the gc-buried resurrect fallback,
@@ -382,7 +381,7 @@ class Repo(val rootUri: String, val spark: SparkSession,
           s"collection $label exists with page_len ${e.pageLen
             .getOrElse("default")}, requested ${pageLen.get}")
         new Collection(this, label, e.path, e.schema, e.colMap,
-          e.defaults, e.pageLen, e.bss)
+          e.defaults, e.pageLen)
       case None =>
         // Path is DERIVED from the key (not random like the reference)
         // so two processes racing to create the same label converge on
@@ -445,7 +444,7 @@ class Repo(val rootUri: String, val spark: SparkSession,
     val droppedSrc = oldPhysAll -- newPhysAll -- defaultPhys
     if (droppedSrc.nonEmpty) {
       val c = new Collection(this, label, e.path, e.schema, e.colMap,
-        e.defaults, e.pageLen, e.bss)
+        e.defaults, e.pageLen)
       val hasInline = c.changelog.log().exists(r =>
         c.decodePayload(c.changelog.payload(r)).rows
           .exists(_.inline.isDefined))
@@ -459,11 +458,10 @@ class Repo(val rootUri: String, val spark: SparkSession,
     // in ONE registry write, so a failing half can never leave the
     // other half applied
     val newPageLen = pageLenChange.getOrElse(e.pageLen)
-    val ne = RegEntry(e.path, schema, colMap, defaults, newPageLen,
-      e.bss)
+    val ne = RegEntry(e.path, schema, colMap, defaults, newPageLen)
     writeRegDelta(state, Seq(key -> ne), Nil)
     new Collection(this, label, e.path, schema, colMap, defaults,
-      e.pageLen, e.bss)
+      e.pageLen)
   }
 
   /** Re-point a collection's persisted page length (rows per segment
@@ -482,29 +480,14 @@ class Repo(val rootUri: String, val spark: SparkSession,
     val ne = e.copy(pageLen = pageLen)
     writeRegDelta(state, Seq(key -> ne), Nil)
     new Collection(this, label, e.path, e.schema, e.colMap, e.defaults,
-      pageLen, e.bss)
-  }
-
-  /** Flip the sticky BSS storage hint for the collection at `path`
-    * (see [[Repo.RegEntry]].bss) — idempotent, one registry commit on
-    * the false->true transition only. Located by PATH, which is
-    * unique per entry, so namespaced labels need no reverse lookup. */
-  private[graft] def markBss(path: String): Unit =
-      Repo.ddlLock(rootUri).synchronized {
-    val state = regStateCurrent()
-    state.find(_._2.path == path) match {
-      case Some((k, e)) if !e.bss =>
-        val ne = e.copy(bss = true)
-        writeRegDelta(state, Seq(k -> ne), Nil)
-      case _ => ()
-    }
+      pageLen)
   }
 
   def collection(label: String,
       namespace: String = DefaultNs): Option[Collection] =
     regState().get(mkKey(namespace, label)).map { e =>
       new Collection(this, label, e.path, e.schema, e.colMap,
-        e.defaults, e.pageLen, e.bss) }
+        e.defaults, e.pageLen) }
 
   def ls(namespace: String = DefaultNs): Seq[String] =
     regState().keys.toSeq.map(parseKey)
@@ -615,7 +598,7 @@ class Repo(val rootUri: String, val spark: SparkSession,
       val added = remoteState.collect {
         case (l, c) if !state.contains(mkKey(DefaultNs, l)) =>
           mkKey(DefaultNs, l) -> RegEntry(c.path, c.schema, c.colMap,
-            c.defaults, c.pageLenCfg, c.bssMode) }.toSeq
+            c.defaults, c.pageLenCfg) }.toSeq
       if (added.nonEmpty)
         writeRegDelta(state, added, Nil)
     }
@@ -816,15 +799,7 @@ object Repo {
     * optional persisted page length (rows per segment file) */
   final case class RegEntry(path: String, schema: GSchema,
       colMap: Map[String, String], defaults: Map[String, Any],
-      pageLen: Option[Long] = None,
-      /** STICKY storage hint: some segment of this collection was
-        * written with the `+bss` (BYTE_STREAM_SPLIT) codec mode, so
-        * Series.frame() must route scans through the engine's own
-        * row-capable reader (Spark's vectorized parquet reader has no
-        * BSS decoder). Pessimistic by design: once set, plain files
-        * also read row-based — correct, and the mode targets
-        * cold/archival collections where that trade was chosen. */
-      bss: Boolean = false)
+      pageLen: Option[Long] = None)
 
   /** JVM-wide registry DECODE cache, content-addressed by the leaf
     * revision id (`hextime-sha1(payload)`): a payload never changes
@@ -854,7 +829,7 @@ object Repo {
       paths: Set[String])
 
   /** Per-root DDL monitor: serializes registry WRITERS (create /
-    * delete / rename / alter / markBss / pull-delta) across every
+    * delete / rename / alter / pull-delta) across every
     * Repo HANDLE in this JVM — [[regDecodeCache]] is JVM-global per
     * root, so two handles' unsynchronized DDLs could interleave a
     * commit between one another's regState() read and the delta
@@ -939,9 +914,8 @@ object Repo {
     val dm = e.defaults.toSeq.sortBy(_._1).map { case (k, v) =>
       s"${Json.str(k)}:${Json.scalar(v)}" }.mkString("{", ",", "}")
     val pl = e.pageLen.map(n => s""","page_len":$n""").getOrElse("")
-    val enc = if (e.bss) s""","enc":"bss"""" else ""
     s"""{"path":${Json.str(e.path)},"schema":${Json.str(
-      e.schema.serialize)},"colmap":$cm,"defaults":$dm$pl$enc}"""
+      e.schema.serialize)},"colmap":$cm,"defaults":$dm$pl}"""
   }
 
   /** `http(s)://` roots open as HTTP-POD clients (a repo served by

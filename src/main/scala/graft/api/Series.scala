@@ -2,6 +2,7 @@ package graft.api
 
 import graft.core._
 import graft.engine.SparkVals
+import graft.sources.GraftPlanning
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   * Write path: sort + range-partition to ~pageLen-row parquet segments,
   * content-address them, splice rows into the leaf manifest, append a
   * changelog revision. Read path: resolve snapshot manifest, prune
-  * segments by index interval, scan pruned parquet with residual range
-  * predicates (pushed to parquet by Catalyst), union in index order.
+  * segments by index interval, then one columnar scan that slices each
+  * clipped segment by bisecting its sorted index.
   *
   * Behavioral reference: lakota/series.py (write 82-157, frame 314-338,
   * tail 261-312, update 159-190, delete 227-229).
@@ -682,180 +683,51 @@ class Series(val collection: Collection, val label: String) {
           Option(boundKey(stop)), closed, beforeMs)
     }
 
-  /** Assemble the series DataFrame over [start, stop].
-    *
-    * Row order across segments follows the manifest (sorted), but no
-    * global sort is imposed — add `.orderBy` downstream where total
-    * order matters. limit/offset imply a sort.
-    */
-  // clone support: every segment file stores PHYSICAL column names
-  // (renamed columns under their source name, clone-added columns
-  // under their own); pre-clone files simply lack the added columns.
-  // One read-time projection resolves both: rename physical → target,
-  // and added columns fall back to their default where a file has no
-  // stored value (post-clone writes' stored values win). Every column
-  // reads as nullable, as Spark's own file sources read them.
-  private def readSchemaStruct: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      schema.cols.map(c => org.apache.spark.sql.types.StructField(
-        collection.physOf(c.name), c.dtype.sparkType)))
+  /** The one read planner's scan over `srcs` (see
+    * [[graft.sources.GraftPlanning.scanDf]]): clone renames and defaults,
+    * overlay clips and skip/take are baked into its partitions. */
+  private def scan(srcs: Seq[GraftPlanning.Source], ordered: Boolean,
+      what: String): DataFrame =
+    GraftPlanning.scanDf(spark, this, schema, srcs, ordered,
+      s"GraftSegments $label $what sources=${srcs.length}")
 
-  private def readProjection: Seq[Column] =
-    schema.cols.map { c =>
-      collection.defaults.get(c.name) match {
-        case Some(v) => coalesce(col(collection.physOf(c.name)),
-          SparkVals.toLiteral(c.dtype, v)).as(c.name)
-        case None => col(collection.physOf(c.name)).as(c.name)
-      }
-    }
+  private def sourcesOf(segs: Seq[SegmentRead]): IndexedSeq[GraftPlanning.Source] =
+    segs.filter(_.meta.hasData).flatMap(GraftPlanning.sources).toIndexedSeq
 
-  /** One parquet relation over segment files, built from file statuses
-    * looked up here on the driver. The manifest names every file and a
-    * content-addressed file never changes, so Spark gets the statuses
-    * through the index's status cache: it never globs or lists the
-    * paths, and never launches its parallel listing job (which it
-    * would for more than 32 paths). */
-  private def scanFiles(files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources._
-    val statuses = graft.core.Store.statAllOrResurrect(
-      files.distinct.map(store.uri), spark.sessionState.newHadoopConf())
-    val seeded = statuses.map(st => st.getPath -> Array(st)).toMap
-    val known = new FileStatusCache {
-      override def getLeafFiles(p: org.apache.hadoop.fs.Path) = seeded.get(p)
-      def putLeafFiles(p: org.apache.hadoop.fs.Path,
-          st: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
-      def invalidateAll(): Unit = ()
-    }
-    val index = new InMemoryFileIndex(spark, statuses.map(_.getPath),
-      Map.empty, None, known, Some(PartitionSpec.emptySpec))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index,
-      org.apache.spark.sql.types.StructType(Nil), readSchemaStruct, None,
-      new parquet.ParquetFileFormat, Map.empty)(spark))
-      .select(readProjection: _*)
-  }
+  private def bounds(start: Any, stop: Any, closed: Closed): String =
+    s"bounds=${boundKey(start)}..${boundKey(stop)} closed=$closed"
 
-  /** manifest-embedded rows -> local DataFrame (no store access).
-    * Inline vectors are positional over the SOURCE columns (clones may
-    * add default-valued columns, which are synthesized here). */
-  private def inlineRows(s: SegmentRead): Seq[Row] = {
-    val srcCols = schema.cols.filterNot(c =>
-      collection.defaults.contains(c.name))
-    s.meta.inline.get.map { v =>
-      val bySrc = srcCols.map(_.name).zip(
-        v.zip(srcCols).map { case (x, c) =>
-          if (x == null) null else SparkVals.fromKernel(c.dtype, x) }).toMap
-      Row.fromSeq(schema.cols.map { c =>
-        collection.defaults.get(c.name) match {
-          case Some(d) => SparkVals.fromKernel(c.dtype, d)
-          case None    => bySrc(c.name)
-        }
-      })
-    }
-  }
-
-  private def localDf(rows: Seq[Row]): DataFrame = {
-    val jlist = new java.util.ArrayList[Row](rows.length)
-    rows.foreach(jlist.add)
-    spark.createDataFrame(jlist, schema.sparkSchema)
-  }
-
-  private def inlineDf(s: SegmentRead): DataFrame = {
-    val df = localDf(inlineRows(s))
-    if (s.coversData(schema)) df
-    else df.filter(SparkVals.rangePredicate(schema.idx, idxCols, s.start,
-      s.stop, s.closed))
-  }
-
-  /** Engine-reader scan (`+bss` storage mode): Spark's builtin
-    * parquet source has no BYTE_STREAM_SPLIT decoder and no
-    * per-relation row-mode toggle, so BSS-hinted collections route
-    * frame() scans through the connector's own partitions + reader
-    * (which decodes a file's BSS chunks with its own page decoder,
-    * chosen from the footer). Clip,
-    * clone renames and defaults are baked into the partitions. */
-  private def internalScanDf(segs: Seq[SegmentRead]): DataFrame =
-    graft.sources.GraftPlanning.internalScanTable(spark, this,
-      schema, segs)
-
-  /** single-segment DataFrame, residual range filter only if clipped */
-  private def segDf(s: SegmentRead): DataFrame =
-    if (s.meta.inline.isDefined) inlineDf(s)
-    else if (collection.bssMode) internalScanDf(Seq(s))
-    else if (s.coversData(schema)) scanFiles(s.meta.files)
-    else scanFiles(s.meta.files)
-      .filter(SparkVals.rangePredicate(schema.idx, idxCols, s.start,
-        s.stop, s.closed))
-
-  /** Rows visible through each segment read: straight from the
-    * manifest when untruncated, and ONE query for all the clipped ones
-    * — their scans unioned, each row tagged with its segment's
-    * position, grouped and counted together. */
-  private def visibleLens(segs: IndexedSeq[SegmentRead]): IndexedSeq[Long] = {
-    val clipped = segs.indices.filterNot(i => segs(i).coversData(schema))
-    val counted =
-      if (clipped.isEmpty) Map.empty[Int, Long]
-      else clipped.map(i => segDf(segs(i)).select(lit(i).as("_seg")))
-        .reduce(_ union _).groupBy("_seg").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    segs.indices.map(i =>
-      if (segs(i).coversData(schema)) segs(i).meta.length
-      else counted.getOrElse(i, 0L))
-  }
-
-  /** Visible row offsets over `segs` (in walk order), resolved on
-    * demand: `cum(k)` is the number of rows before `segs(k)`.
-    *
-    * A clipped segment's stored length bounds its visible rows from
-    * above, so the manifest alone names the candidates that `n` rows
-    * can reach, and ONE [[visibleLens]] query counts them. Two widenings
-    * keep that bound from falling short in the usual shapes: one
-    * look-ahead segment covers a first segment the read's own bound
-    * cut, and a segment an overlay split in two is counted with all
-    * its parts (they share its files, so its stored length bounds
-    * them together, once). Another query runs only if the exact sum
-    * still falls short; none runs while every candidate is
-    * untruncated. */
-  private final class RowCursor(segs: IndexedSeq[SegmentRead]) {
+  /** Visible row offsets over the scan sources `srcs` (in walk order),
+    * resolved on demand on the driver with no Spark job: `cum(k)` is
+    * the number of rows before `srcs(k)`. The manifest counts an
+    * untruncated segment; [[GraftPlanning.visibleRows]] counts a
+    * clipped one from its page statistics and a bisect of its boundary
+    * pages. */
+  private final class RowCursor(srcs: IndexedSeq[GraftPlanning.Source]) {
     val cum = scala.collection.mutable.ArrayBuffer(0L)
+    private lazy val conf = spark.sessionState.newHadoopConf()
     def resolved: Int = cum.length - 1
     def rows: Long = cum.last
 
-    private def stored(i: Int): AnyRef =
-      if (segs(i).meta.files.nonEmpty) segs(i).meta.files
-      else segs(i).meta.inline
-    private def clippedIn(from: Int, until: Int): Seq[Int] =
-      (from until until).filterNot(i => segs(i).coversData(schema))
-    private lazy val lastPart: Map[AnyRef, Int] =
-      clippedIn(0, segs.length).map(i => stored(i) -> i).toMap
-    private val bounded = scala.collection.mutable.HashSet.empty[AnyRef]
-
-    /** resolve segments until `n` rows are covered or none is left */
+    /** resolve sources until `n` rows are covered or none is left */
     def reach(n: Long): Unit =
-      while (rows < n && resolved < segs.length) {
-        var end = resolved
-        var bound = rows
-        while (bound < n && end < segs.length) {
-          if (segs(end).coversData(schema) || bounded.add(stored(end)))
-            bound += segs(end).meta.length
-          end += 1
-        }
-        if (clippedIn(resolved, end).nonEmpty) {
-          end = math.min(end + 1, segs.length)
-          end = clippedIn(resolved, end).map(i => lastPart(stored(i)) + 1)
-            .foldLeft(end)(math.max)
-        }
-        visibleLens(segs.slice(resolved, end)).foreach(l => cum += rows + l)
-      }
-  }
+      while (rows < n && resolved < srcs.length)
+        cum += rows + GraftPlanning.visibleRows(Series.this, schema,
+          srcs(resolved), conf)
 
-  /** shortest prefix of `segs` covering `need` rows (manifest order =
-    * index order, so limit/offset never have to scan past it) */
-  private def prefixCovering(segs: Seq[SegmentRead], need: Long)
-      : Seq[SegmentRead] = {
-    val c = new RowCursor(segs.toIndexedSeq)
-    c.reach(need)
-    val k = c.cum.indexWhere(_ >= need)
-    segs.take(if (k < 0) c.resolved else k)
+    /** the sources cut to the visible rows [from, until) */
+    def slice(from: Long, until: Long): Seq[GraftPlanning.Source] = {
+      reach(until)
+      (0 until resolved).flatMap { k =>
+        val (a, b) = (cum(k), cum(k + 1))
+        if (b <= from || a >= until || a == b) None
+        else {
+          val skip = math.max(0L, from - a)
+          Some(srcs(k).copy(skip = skip,
+            take = math.min(b, until) - a - skip))
+        }
+      }
+    }
   }
 
   /** Output dtype mapping styles (reference lakota/schema.py:25-38
@@ -886,56 +758,39 @@ class Series(val collection: Collection, val label: String) {
       closed: Closed = Closed.Left): GFrame =
     GFrame(frame(start, stop, beforeMs, closed), schema)
 
+  /** Assemble the series DataFrame over [start, stop]: one scan of the
+    * visible segments, packed into index-sorted read tasks. Row order
+    * across tasks is not a global sort — add `.orderBy` downstream
+    * where total order matters. `limit`/`offset` cut the exact visible
+    * rows on the driver (no Spark job) and serve them in order, in one
+    * task.
+    */
   def frame(start: Any = null, stop: Any = null,
       beforeMs: Option[Long] = None, closed: Closed = Closed.Left,
       limit: Option[Long] = None, offset: Option[Long] = None,
       select: Seq[String] = Nil, style: String = "default",
       from: Option[Manifest] = None): DataFrame = {
-    val segs0 = segments(start, stop, beforeMs, closed, from)
-      .filter(_.meta.hasData)
-    // a bounded read only needs the manifest-prefix covering
-    // offset+limit rows — at 10k segments a limit-100 read scans 1
-    val segs = limit match {
-      case Some(l) => prefixCovering(segs0, offset.getOrElse(0L) + l)
-      case None => segs0
+    Seq("offset" -> offset, "limit" -> limit).foreach { case (what, v) =>
+      v.foreach(x => require(x >= 0 && x <= Int.MaxValue,
+        s"$what must be in [0, ${Int.MaxValue}], got $x"))
     }
-    val (inlineSegs, fileSegs) =
-      segs.partition(_.meta.inline.isDefined)
-    val (unclipped, clipped) = fileSegs.partition(_.coversData(schema))
-    val grouped =
-      if (unclipped.isEmpty) Nil
-      else if (collection.bssMode) Seq(internalScanDf(unclipped))
-      else Seq(scanFiles(unclipped.flatMap(_.meta.files)))
-    // fully-visible inline segments concatenate into ONE local
-    // relation: a heavily fragmented series (the reference's
-    // bench_fragmentation case, hundreds of manifest-embedded
-    // micro-writes) must not become a hundred-way union plan
-    val (coveredInl, clippedInl) = inlineSegs.partition(_.coversData(schema))
-    val inlParts =
-      (if (coveredInl.isEmpty) Nil
-       else Seq(localDf(coveredInl.flatMap(inlineRows)))) ++
-        clippedInl.map(inlineDf)
-    val parts = grouped ++ clipped.map(segDf) ++ inlParts
-    var df = parts.reduceOption(_ union _).getOrElse(emptyDf)
-    if (offset.isDefined || limit.isDefined) {
-      // Spark's limit/offset operators take Int — reject out-of-range
-      // values instead of letting .toInt wrap negative
-      def asInt(what: String, v: Long): Int = {
-        require(v >= 0 && v <= Int.MaxValue,
-          s"$what must be in [0, ${Int.MaxValue}], got $v")
-        v.toInt
+    val srcs = sourcesOf(segments(start, stop, beforeMs, closed, from))
+    val what = bounds(start, stop, closed)
+    var df =
+      if (limit.isEmpty && offset.isEmpty) scan(srcs, ordered = false, what)
+      else {
+        val o = offset.getOrElse(0L)
+        val until = limit.map(o + _).getOrElse(Long.MaxValue)
+        scan(new RowCursor(srcs).slice(o, until), ordered = true,
+          s"$what offset=$o" + limit.map(l => s" limit=$l").getOrElse(""))
       }
-      df = df.orderBy(idxCols: _*)
-      offset.foreach(o => df = df.offset(asInt("offset", o)))
-      limit.foreach(l => df = df.limit(asInt("limit", l)))
-    }
     if (select.nonEmpty) df = df.select(select.map(col): _*)
     styled(df, style)
   }
 
-  /** Last `n` rows by index order (optionally pre-filtered). Only the
-    * trailing manifest segments covering `n` rows are scanned — the
-    * reference walks segments backwards the same way
+  /** Last `n` rows by index order (optionally pre-filtered), in order.
+    * Only the trailing manifest segments covering `n` rows are counted
+    * and scanned — the reference walks segments backwards the same way
     * (lakota/series.py:261-312). */
   def tail(n: Long, start: Any = null, stop: Any = null,
       beforeMs: Option[Long] = None, closed: Closed = Closed.Left,
@@ -946,53 +801,49 @@ class Series(val collection: Collection, val label: String) {
     // trailing chunks guaranteeing n rows are decoded (the full-
     // decode path walked every chunk of the label — the last
     // O(label-metadata) cold read)
-    val segs = collection.prunedTailSegments(label,
+    val srcs = sourcesOf(collection.prunedTailSegments(label,
       Option(boundKey(start)), Option(boundKey(stop)), closed,
-      beforeMs, n).filter(_.meta.hasData)
-    val keep = prefixCovering(segs.reverse, n).reverse
-    val base = keep.map(segDf).reduceOption(_ union _).getOrElse(emptyDf)
-    val desc = schema.idxNames.map(c => col(c).desc)
-    var df = base.orderBy(desc: _*).limit(n.toInt).orderBy(idxCols: _*)
+      beforeMs, n)).reverse
+    val c = new RowCursor(srcs)
+    c.reach(n)
+    // the walked sources back in index order, the first one cut to the
+    // rows the tail still needs
+    val keep = (0 until c.resolved).map { k =>
+      val v = c.cum(k + 1) - c.cum(k)
+      val need = math.min(v, n - c.cum(k))
+      srcs(k).copy(skip = v - need, take = need)
+    }.filter(_.take > 0).reverse
+    var df = scan(keep, ordered = true,
+      s"${bounds(start, stop, closed)} tail=$n")
     if (select.nonEmpty) df = df.select(select.map(col): _*)
     df
   }
 
   /** Fixed-size pages in index order, driven by the manifest cursor:
-    * per-segment lengths come straight from the manifest, resolved page
-    * by page (one batched count only when the page reaches
-    * overlay-clipped segments), and each page scans + sorts ONLY the
-    * 1-2 segments it overlaps — no per-page global sort (reference
-    * lakota/series.py:396-447 Paginate.loop).
+    * per-segment visible lengths come from the manifest and, for
+    * overlay-clipped segments, from their page statistics, resolved
+    * page by page with no Spark job; each page is the exact slices of
+    * the 1-2 segments it overlaps, read in order in one task — no sort
+    * (reference lakota/series.py:396-447 Paginate.loop).
     */
   def paginate(step: Long = 500000L, start: Any = null, stop: Any = null,
       beforeMs: Option[Long] = None,
       closed: Closed = Closed.Left): Iterator[DataFrame] = {
     require(step > 0 && step <= Int.MaxValue,
       s"step must be in [1, ${Int.MaxValue}], got $step")
-    val segs = segments(start, stop, beforeMs, closed)
-      .filter(_.meta.hasData).toIndexedSeq
-    val cursor = new RowCursor(segs)
+    val cursor = new RowCursor(sourcesOf(segments(start, stop, beforeMs,
+      closed)))
+    val what = bounds(start, stop, closed)
     new Iterator[DataFrame] {
       private var off = 0L
       def hasNext: Boolean = { cursor.reach(off + step); cursor.rows > off }
       def next(): DataFrame = {
         if (!hasNext) throw new NoSuchElementException("no more pages")
-        val cum = cursor.cum
         val hi = math.min(off + step, cursor.rows)
-        val i0 = cum.indexWhere(_ > off) - 1
-        val i1 = cum.indexWhere(_ >= hi) - 1
-        // a duplicated index key straddling a segment boundary must keep
-        // segment order under the page sort (the cum-based offsets
-        // assume it), so the segment ordinal joins the sort key as a
-        // tiebreaker
-        val page = segs.slice(i0, i1 + 1).zipWithIndex
-          .map { case (s, k) => segDf(s).withColumn("_seg", lit(k)) }
-          .reduce(_ union _)
-          .orderBy(idxCols :+ col("_seg"): _*)
-        val out = page.offset((off - cum(i0)).toInt)
-          .limit((hi - off).toInt).drop("_seg")
+        val page = scan(cursor.slice(off, hi), ordered = true,
+          s"$what page=$off..$hi")
         off = hi
-        out
+        page
       }
     }
   }
@@ -1075,11 +926,14 @@ class Series(val collection: Collection, val label: String) {
     ()
   }
 
-  /** Row count from the manifest: per-segment lengths are metadata for
-    * untruncated segments; the overlay-clipped ones cost one batched
-    * count. */
-  def length(): Long =
-    visibleLens(segments().filter(_.meta.hasData).toIndexedSeq).sum
+  /** Visible row count with no Spark job: per-segment lengths are
+    * metadata for untruncated segments; an overlay-clipped one is
+    * counted from its page statistics and boundary pages. */
+  def length(): Long = {
+    val c = new RowCursor(sourcesOf(segments()))
+    c.reach(Long.MaxValue)
+    c.rows
+  }
 
   // ------------------------------------------------------------------
   // bulk import/export (reference Repo.import_/export_ series,

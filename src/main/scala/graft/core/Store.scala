@@ -40,8 +40,8 @@ object Store {
     * still exists under its hextime suffix (reference
     * lakota/commit.py:549-557) and is renamed back first. A rename
     * that finds nothing to move lost the race to another resurrector:
-    * the second stat decides. Any other I/O error propagates. Shared by
-    * [[statAllOrResurrect]] and the connector's segment readers. */
+    * the second stat decides. Any other I/O error propagates. The
+    * connector's segment readers open every file through it. */
   def statOrResurrect(uri: String, conf: Configuration)
       : org.apache.hadoop.fs.FileStatus = {
     val path = new Path(uri)
@@ -59,17 +59,6 @@ object Store {
       stat().getOrElse(throw new FileNotFoundException(
         s"segment file $uri is missing and has no gc-buried copy"))
     }
-  }
-
-  /** [[statOrResurrect]] of every uri, on parallel driver threads: on
-    * an object store each stat is a round trip. */
-  def statAllOrResurrect(uris: Seq[String], conf: Configuration)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    import scala.jdk.CollectionConverters._
-    uris.asJava.parallelStream()
-      .map[org.apache.hadoop.fs.FileStatus](statOrResurrect(_, conf))
-      .collect(java.util.stream.Collectors.toList[
-        org.apache.hadoop.fs.FileStatus]).asScala.toSeq
   }
 
   /** Which of `shas` are absent from the chunk directory `dir`

@@ -41,19 +41,6 @@ object SparkVals {
     case GType.StrT => v.asInstanceOf[String]
   }
 
-  /** kernel scalar -> external JVM value accepted by
-    * SparkSession.createDataFrame Rows for the dtype's Spark type. */
-  def fromKernel(dt: GType, v: Any): Any = dt match {
-    case GType.TimestampT =>
-      val us = v.asInstanceOf[Long]
-      val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-      t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-      t
-    case GType.DateT =>
-      java.sql.Date.valueOf(LocalDate.ofEpochDay(v.asInstanceOf[Long]))
-    case _ => v
-  }
-
   /** kernel scalar -> Spark literal Column of the right type. */
   def toLiteral(dt: GType, v: Any): Column = dt match {
     case GType.TimestampT =>

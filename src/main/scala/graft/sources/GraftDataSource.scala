@@ -3,18 +3,8 @@ package graft.sources
 import java.util
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.column.Encoding
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.SeekableInputStream
-import org.apache.parquet.io.api.{Converter, GroupConverter,
-  PrimitiveConverter}
-import org.apache.parquet.schema.{MessageType, Types}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow,
@@ -22,16 +12,13 @@ import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow,
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.execution.datasources.parquet
-  .VectorizedParquetRecordReader
 import org.apache.spark.sql.connector.read.{Batch, InputPartition,
-  PartitionReader, PartitionReaderFactory, Scan, ScanBuilder,
+  PartitionReaderFactory, Scan, ScanBuilder,
   Statistics, SupportsPushDownFilters,
   SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Closed, ColDef, GType, GSchema, IndexKey,
@@ -52,10 +39,11 @@ import graft.engine.SparkVals
   * `before` (optional time travel — epoch millis or ISO-8601, the
   * changelog revision clock of `Series.frame(beforeMs)`).
   *
-  * Semantics = `Series.frame()`: overlay (splice-clipped segments
-  * get their residual range filter applied IN the reader),
-  * manifest-inline micro-segments served from the plan, clone
-  * renames/defaults resolved per file. Pushed filters are used for
+  * Semantics = `Series.frame()`, through the same read planner
+  * ([[GraftPlanning.packed]]): splice-clipped segments are sliced IN
+  * the reader by a bisect of their sorted index, manifest-inline
+  * micro-segments are served as one batch each, clone renames/defaults
+  * are resolved per file. Pushed filters are used for
   * pruning and REMAIN residual — Spark re-applies every predicate
   * above the scan, so a partially-usable filter can never change
   * results.
@@ -511,8 +499,9 @@ class GraftScan(table: GraftTable, start: IndexKey, stop: IndexKey,
   override def toBatch: Batch = this
 
   /** Per-PARTITION ordering, declared to Catalyst: every planned
-    * partition serves one index-sorted segment file (or inline run),
-    * and residual filters / default fills preserve that order — so
+    * partition serves index-sorted slices of segment files (or inline
+    * runs) that never go back in index order ([[GraftPlanning.packed]]),
+    * and slicing / default fills preserve that order — so
     * the scan reports the longest prefix of index columns that
     * survives column pruning, ascending (nulls-first, the engine's
     * index order). `RemoveRedundantSorts` then drops any
@@ -647,28 +636,19 @@ class GraftScan(table: GraftTable, start: IndexKey, stop: IndexKey,
   private def runtimePruned(segs: Seq[SegmentRead]): Seq[SegmentRead] =
     IndexInterval.headPruned(table.gschema, segs, runtimeKeep)
 
-  // retained for createReaderFactory's columnar-eligibility decision
-  // (Spark calls planInputPartitions before the factory on the same
-  // Batch instance)
-  @volatile private var plannedParts: Array[InputPartition] = null
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val parts = aggPush match {
+  override def planInputPartitions(): Array[InputPartition] =
+    aggPush match {
       case Some((_, values)) =>
         Array[InputPartition](GraftAggPartition(values.toVector))
       case None =>
-        runtimePruned(plannedSegments).flatMap(seg =>
-          GraftPlanning.partitionsFor(resolvedSeries, table.gschema,
-            required.fields.map(_.name).toSeq, seg, null)).toArray
+        GraftPlanning.packed(resolvedSeries, table.gschema,
+          required.fields.map(_.name).toSeq,
+          runtimePruned(plannedSegments).flatMap(GraftPlanning.sources))
     }
-    plannedParts = parts
-    parts
-  }
 
   override def supportedCustomMetrics() = {
     import GraftMetrics._
-    declare(Seq(SegmentsTotal, SegmentsKept, FilesVectorized,
-      FilesColumnar) ++
+    declare(Seq(SegmentsTotal, SegmentsKept) ++ readMetrics ++
       Option.when(vquery.nonEmpty)(SegmentsStatSkipped) ++
       Option.when(filterAttributes().nonEmpty)(SegmentsRuntimeKept) ++
       Option.when(aggPush.isDefined)(AggFromManifest): _*)
@@ -691,19 +671,8 @@ class GraftScan(table: GraftTable, start: IndexKey, stop: IndexKey,
       streamSkipRewrites, streamMaxRevs, streamStartTs,
       streamForkDedup)
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // COLUMNAR whenever every partition is a plain full-file decode
-    // (no clip/defaults/projection/inline/agg work): whole
-    // ColumnarBatches flow from the decode tier each file's footer
-    // picks (GraftRead.open) into codegen's ColumnarToRow, skipping
-    // the per-row DSv2 iterator tax. Anything needing per-row work —
-    // boundary-clipped range scans, clone defaults, `_file` — keeps
-    // the row path.
-    val parts = plannedParts
-    if (parts != null && GraftPlanning.columnarEligible(parts))
-      GraftPlanning.columnarReaderFactory()
-    else GraftPlanning.readerFactory()
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftPlanning.readerFactory()
 }
 
 /** `INSERT INTO` / `df.write.format("graft").mode(...)` — the
@@ -987,13 +956,8 @@ private[graft] object GraftPlanning {
   def manifestStatistics(segs: => Seq[SegmentRead], gs: GSchema)
       : Statistics = new Statistics {
     private lazy val rows: Long = segs.map(_.meta.length).sum
-    private val rowWidth: Long = gs.cols.map(_.dtype match {
-      case GType.StrT => 24L
-      case GType.DateT => 4L
-      case _ => 8L
-    }).sum
     override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(rows * rowWidth)
+      java.util.OptionalLong.of(rows * rowWidth(gs))
     override def numRows(): java.util.OptionalLong =
       java.util.OptionalLong.of(rows)
   }
@@ -1014,75 +978,161 @@ private[graft] object GraftPlanning {
     * manifest-inline rows) — joinable against `.segments`.files */
   val FileCol = "_file"
 
-  /** Partitions for one visible segment. `onlyFiles` (null = all)
-    * restricts a multi-file segment row to a subset — the streaming
-    * diff uses it to serve just the NEWLY-appeared files of a row.
-    * Residual clip needs the index values even when pruned away:
-    * read (requested ∪ index-if-clipping), emit requested positions.
-    * A requested `_file` metadata column is never read from parquet:
-    * it projects as a per-partition constant (outPos sentinel -1).
-    */
-  def partitionsFor(s: graft.api.Series, gs: GSchema,
-      reqNames0: Seq[String], seg: SegmentRead,
-      onlyFiles: Set[String]): Seq[InputPartition] = {
+  /** A scan input: the visible rows of one stored source of `seg` —
+    * its file `file`, or its manifest-inline rows when `file` is null —
+    * of which `skip` are dropped and at most `take` kept (negative =
+    * all). */
+  final case class Source(seg: SegmentRead, file: String,
+      skip: Long = 0L, take: Long = -1L)
+
+  /** the stored sources of a visible segment, in index order */
+  def sources(seg: SegmentRead): Seq[Source] =
+    if (seg.meta.inline.isDefined) Seq(Source(seg, null))
+    else seg.meta.files.map(Source(seg, _))
+
+  /** The part reading `src` as the columns `reqNames0`. A segment whose
+    * visible window no longer covers its stored rows is clipped: the
+    * part also decodes the index columns, which the reader bisects. A
+    * requested `_file` metadata column is never read from parquet: it
+    * projects as a constant (outPos sentinel -1). */
+  def partOf(s: graft.api.Series, gs: GSchema, reqNames0: Seq[String],
+      src: Source): GraftPart = {
     val clct = s.collection
-    val clip = !seg.coversData(gs)
-    val dataReq = reqNames0.filterNot(_ == FileCol)
-    // `SELECT _file` alone still needs one stored column to drive
-    // row iteration
-    val reqNames =
-      if (dataReq.isEmpty && reqNames0.nonEmpty) Seq(gs.idxNames.head)
-      else dataReq
+    val seg = src.seg
+    val clips =
+      if (seg.coversData(gs)) Vector.empty
+      else Vector(GraftClip(seg.start, seg.stop, seg.closed))
+    val reqNames = reqNames0.filterNot(_ == FileCol)
     val readNames =
-      if (clip) (reqNames ++ gs.idxNames.filterNot(reqNames.contains))
-      else reqNames
-    val cols = readNames.map(n => gs(n))
-    val outPos = reqNames0.map(n =>
-      if (n == FileCol) -1 else readNames.indexOf(n)).toArray
-    // only meaningful when clipping (idx cols are then in readNames)
-    val idxPos =
-      if (clip) gs.idxNames.map(readNames.indexOf).toArray
-      else Array.empty[Int]
-    val defaults = readNames.map(n => clct.defaults.get(n).orNull)
-    val bounds =
-      if (clip) GraftClip(seg.start, seg.stop, seg.closed) else null
-    if (seg.meta.inline.isDefined) {
-      val srcCols = gs.cols.filterNot(c =>
-        clct.defaults.contains(c.name)).map(_.name)
-      Seq(GraftInlinePartition(seg.meta.inline.get,
-        srcCols.toVector, readNames.toVector,
-        cols.map(_.dtype.name).toVector,
-        defaults.toVector, outPos, idxPos, bounds))
-    } else seg.meta.files
-      .filter(f => onlyFiles == null || onlyFiles.contains(f))
-      .map { f =>
-        GraftFilePartition(clct.repo.store.uri(f),
-          readNames.toVector, cols.map(n => clct.physOf(n.name)).toVector,
-          cols.map(_.dtype.name).toVector, defaults.toVector,
-          outPos, idxPos, bounds, fileLabel = f)
-      }
+      if (clips.isEmpty) reqNames
+      else reqNames ++ gs.idxNames.filterNot(reqNames.contains)
+    val cols = GraftCols(readNames.toVector,
+      readNames.map(clct.physOf).toVector,
+      readNames.map(gs(_).dtype.name).toVector,
+      readNames.map(n => clct.defaults.get(n).orNull).toVector,
+      reqNames0.map(n =>
+        if (n == FileCol) -1 else readNames.indexOf(n)).toArray,
+      if (clips.isEmpty) Array.empty[Int]
+      else gs.idxNames.map(readNames.indexOf).toArray)
+    if (src.file == null)
+      GraftInlinePart(seg.meta.inline.get, gs.cols.filterNot(c =>
+        clct.defaults.contains(c.name)).map(_.name).toVector, cols, clips,
+        src.skip, src.take)
+    else
+      GraftFilePart(clct.repo.store.uri(src.file), src.file,
+        if (seg.meta.files.length == 1) seg.meta.length else -1L, cols,
+        clips, src.skip, src.take)
   }
 
-  def readerFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(serConf())
+  /** One partition per stored source of a visible segment. `onlyFiles`
+    * (null = all) restricts a multi-file segment row to a subset — the
+    * streaming diff uses it to serve just the NEWLY-appeared files of a
+    * row. */
+  def partitionsFor(s: graft.api.Series, gs: GSchema,
+      reqNames0: Seq[String], seg: SegmentRead,
+      onlyFiles: Set[String]): Seq[InputPartition] =
+    sources(seg).filter(src => onlyFiles == null || src.file == null ||
+      onlyFiles.contains(src.file))
+      .map(src => GraftPartition(Vector(partOf(s, gs, reqNames0, src))))
 
-  /** Columnar serving is planned only when EVERY partition is a plain
-    * full-file decode: no clip, no defaults, identity projection, no
-    * `_file` column, no inline rows — anything needing per-row work
-    * routes the whole scan row-based. */
-  private[sources] def columnarEligible(
-      parts: Array[InputPartition]): Boolean =
-    parts.nonEmpty && parts.forall {
-      case fp: GraftFilePartition =>
-        fp.clip == null && fp.readNames.nonEmpty &&
-          fp.defaults.forall(_ == null) &&
-          fp.outPos.length == fp.readNames.length &&
-          fp.outPos.indices.forall(i => fp.outPos(i) == i)
-      case _ => false
+  /** The read tasks of a scan over `srcs` (index order), packed the way
+    * Spark's FileSourceScanExec packs files: up to
+    * `spark.sql.files.maxPartitionBytes`, a file costing its estimated
+    * size plus `spark.sql.files.openCostInBytes`, and no smaller than
+    * the total over the leaf parallelism allows. The clipped parts of
+    * one file (an overlay split its segment) merge into one read at
+    * the file's first place. A task's parts never go back in index
+    * order, so every task serves index-sorted rows. */
+  def packed(s: graft.api.Series, gs: GSchema, reqNames: Seq[String],
+      srcs: Seq[Source]): Array[InputPartition] = {
+    val spark = SparkSession.active
+    val conf = spark.sessionState.conf
+    val openCost = conf.filesOpenCostInBytes
+    val width = rowWidth(gs)
+    final case class Unit0(lo: IndexKey, hi: IndexKey, bytes: Long,
+        open: Long, part: GraftPart)
+    val units = scala.collection.mutable.LinkedHashMap.empty[Any, Unit0]
+    srcs.foreach { src =>
+      val p = partOf(s, gs, reqNames, src)
+      val key: Any = p match {
+        case f: GraftFilePart if f.clips.nonEmpty && f.skip == 0 &&
+            f.take < 0 => f.uri
+        case _ => src
+      }
+      units.get(key) match {
+        case Some(u) =>
+          val f = u.part.asInstanceOf[GraftFilePart]
+          units(key) = u.copy(hi = src.seg.stop,
+            part = f.copy(clips = f.clips ++ p.clips))
+        case None =>
+          val (rows, open) = p match {
+            case f: GraftFilePart =>
+              (if (f.rows >= 0) f.rows
+               else src.seg.meta.length / src.seg.meta.files.length,
+               openCost)
+            case i: GraftInlinePart => (i.data.length.toLong, 0L)
+          }
+          units(key) = Unit0(src.seg.start, src.seg.stop, rows * width,
+            open, p)
+      }
+    }
+    val total = units.values.map(u => u.bytes + u.open).sum
+    val par = conf.filesMinPartitionNum
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val maxSplit = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, total / math.max(1, par)))
+    val out = ArrayBuffer.empty[InputPartition]
+    var bin = Vector.empty[GraftPart]
+    var size = 0L
+    var hi: IndexKey = null
+    units.values.foreach { u =>
+      val fits = bin.nonEmpty && size + u.bytes <= maxSplit &&
+        hi != null && u.lo != null && gs.cmpKeyTotal(u.lo, hi) >= 0
+      if (bin.nonEmpty && !fits) {
+        out += GraftPartition(bin)
+        bin = Vector.empty
+        size = 0L
+      }
+      bin :+= u.part
+      size += u.bytes + u.open
+      hi = u.hi
+    }
+    if (bin.nonEmpty) out += GraftPartition(bin)
+    out.toArray
+  }
+
+  /** the coarse per-row width estimates are made with */
+  private def rowWidth(gs: GSchema): Long = gs.cols.map(_.dtype match {
+    case GType.StrT => 24L
+    case GType.DateT => 4L
+    case _ => 8L
+  }).sum
+
+  /** The rows `src` serves before its skip and take, counted on the
+    * calling thread with no Spark job: the manifest's count for an
+    * unclipped single-file segment, the footer's for another unclipped
+    * file, [[SliceLocator.count]] for a clipped file and a bisect of the
+    * inline rows otherwise. `conf` is the session's Hadoop conf. */
+  def visibleRows(s: graft.api.Series, gs: GSchema, src: Source,
+      conf: Configuration): Long =
+    partOf(s, gs, gs.idxNames, src.copy(skip = 0L, take = -1L)) match {
+      case f: GraftFilePart if f.clips.isEmpty =>
+        if (f.rows >= 0) f.rows else GraftRead.footerRows(f.uri, conf)
+      case f: GraftFilePart =>
+        SliceLocator.count(f.uri, conf, f.cols.physNames,
+          f.cols.dtypeNames.map(GraftRead.dtypeOf).toArray, f.clips)
+      case i: GraftInlinePart if i.clips.isEmpty => i.data.length.toLong
+      case i: GraftInlinePart =>
+        val dts = i.cols.dtypeNames.map(GraftRead.dtypeOf).toArray
+        val b = GraftRead.inlineBatch(i, dts)
+        val r = SliceLocator.slices(i.cols.idxPos.map(b.column),
+          i.cols.idxPos.map(dts(_)), b.numRows, i.clips)
+        r.grouped(2).map(x => (x(1) - x(0)).toLong).sum
     }
 
-  private[sources] def columnarReaderFactory(): PartitionReaderFactory =
-    new GraftColumnarReaderFactory(serConf())
+  def readerFactory(): PartitionReaderFactory =
+    new GraftReaderFactory(
+      SparkSession.active.sparkContext.broadcast(serConf()))
 
   private def serConf(): SegmentWriter.SerConf = {
     val session = SparkSession.active
@@ -1107,13 +1157,11 @@ private[graft] object GraftPlanning {
     new SegmentWriter.SerConf(c)
   }
 
-  /** DataFrame over engine partitions decoded by the connector's own
-    * readers ([[GraftFileReader]]/[[GraftInlineReader]]). Spark's
-    * builtin parquet source cannot decode BYTE_STREAM_SPLIT pages (no
-    * vectorized BSS reader, no per-relation row-mode toggle), while
-    * GraftFileReader picks each file's decode tier from its footer
-    * ([[GraftRead.open]]). Rows arrive in `schema` order
-    * (partitionsFor bakes clip/renames/defaults). */
+  /** DataFrame over engine partitions, one task each, decoded by the
+    * connector's readers ([[GraftBatchReader]], whose tier follows each
+    * file's footer: [[GraftRead.open]]) and served as row views. Rows
+    * arrive in `schema` order (partitionsFor bakes clip/renames/
+    * defaults). */
   def internalScan(spark: SparkSession, parts: Seq[InputPartition],
       schema: StructType): org.apache.spark.sql.DataFrame =
     groupedScan(spark, parts.map(p => Group(null, Seq(p))), schema)
@@ -1158,29 +1206,27 @@ private[graft] object GraftPlanning {
         .map(_.get())
     }
 
-  /** DataFrame over the engine readers as an ANONYMOUS DSv2 relation,
-    * the scan [[graft.api.Series.frame]] routes BSS-mode segments
-    * through. Unlike [[internalScan]]'s LogicalRDD, this participates
-    * in Catalyst column pruning: an aggregate over one column of a
-    * BSS-mode frame() decodes one column, not the whole schema
-    * (partitions are re-planned with the pruned name set, so both the
-    * footer's tier choice and the page-level decode itself narrow,
-    * same as the builtin parquet source's ReadSchema). */
-  def internalScanTable(spark: SparkSession, s: graft.api.Series,
-      gs: GSchema, segs: Seq[SegmentRead])
+  /** The one read planner's DataFrame: `srcs` as an anonymous DSv2
+    * relation over the connector's partitions and readers, built from
+    * its logical plan. Catalyst prunes its columns, so the decode
+    * narrows to what the query reads. `ordered` serves every source in
+    * one task, in order (an exact page, limit or tail: no sort and no
+    * exchange); otherwise the sources are [[packed]]. `desc` labels the
+    * scan node. */
+  def scanDf(spark: SparkSession, s: graft.api.Series, gs: GSchema,
+      srcs: Seq[Source], ordered: Boolean, desc: String)
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.GraftBridge.internalDsv2(spark,
-      new GraftSegmentsTable(s, gs, segs))
+      new GraftSegmentsTable(s, gs, srcs, ordered, desc))
 }
 
-/** Anonymous single-use DSv2 table over a fixed set of segment reads
-  * (the BSS-mode [[graft.api.Series.frame]] scan) — see
-  * [[GraftPlanning.internalScanTable]]. Driver-side objects (Series,
-  * SegmentReads) never leave the driver; only the planned
-  * [[InputPartition]]s ship. */
+/** Anonymous single-use DSv2 table over planned scan sources (the
+  * [[graft.api.Series]] read verbs) — see [[GraftPlanning.scanDf]].
+  * Driver-side objects (Series, SegmentReads) never leave the driver;
+  * only the planned [[InputPartition]]s ship. */
 private final class GraftSegmentsTable(s: graft.api.Series,
-    gs: GSchema, segs: Seq[SegmentRead]) extends Table
-    with SupportsRead {
+    gs: GSchema, srcs: Seq[GraftPlanning.Source], ordered: Boolean,
+    desc: String) extends Table with SupportsRead {
   override def name(): String = s"graft_segments_${s.label}"
   override def schema(): StructType = gs.sparkSchema
   override def capabilities(): util.Set[TableCapability] =
@@ -1193,24 +1239,25 @@ private final class GraftSegmentsTable(s: graft.api.Series,
         req = st.fieldNames.toSeq
         ()
       }
-      override def build(): Scan = new Scan with Batch {
+      override def build(): Scan = new Scan with Batch
+          with SupportsReportStatistics {
         override def readSchema(): StructType = StructType(
           req.map(n => org.apache.spark.sql.types.StructField(
             n, gs(n).dtype.sparkType, nullable = true)))
         override def toBatch: Batch = this
-        private lazy val parts: Array[InputPartition] =
-          segs.flatMap(sr =>
-            GraftPlanning.partitionsFor(s, gs, req, sr, null)).toArray
-        // COLUMNAR when every partition is a plain full-file decode:
-        // row-group batches feed Spark's codegen'd ColumnarToRow
-        // directly, skipping the per-row DSv2 iterator tax.
-        override def planInputPartitions(): Array[InputPartition] = parts
-        override def supportedCustomMetrics() = GraftMetrics.declare(
-          GraftMetrics.FilesVectorized, GraftMetrics.FilesColumnar)
+        override def description(): String = desc
+        override def estimateStatistics(): Statistics =
+          GraftPlanning.manifestStatistics(
+            srcs.map(_.seg).distinct, gs)
+        override def planInputPartitions(): Array[InputPartition] =
+          if (!ordered) GraftPlanning.packed(s, gs, req, srcs)
+          else if (srcs.isEmpty) Array.empty
+          else Array(GraftPartition(srcs.map(
+            GraftPlanning.partOf(s, gs, req, _)).toVector))
+        override def supportedCustomMetrics() =
+          GraftMetrics.declare(GraftMetrics.readMetrics: _*)
         override def createReaderFactory(): PartitionReaderFactory =
-          if (GraftPlanning.columnarEligible(parts))
-            GraftPlanning.columnarReaderFactory()
-          else GraftPlanning.readerFactory()
+          GraftPlanning.readerFactory()
       }
     }
 }
@@ -1635,456 +1682,3 @@ class GraftMicroBatchStream(table: GraftTable, required: StructType,
     GraftPlanning.readerFactory()
 }
 
-/** residual overlay-clip bounds, evaluated per row in the reader */
-final case class GraftClip(start: IndexKey, stop: IndexKey,
-    closed: Closed) extends Serializable
-
-final case class GraftFilePartition(uri: String,
-    readNames: Vector[String], physNames: Vector[String],
-    dtypeNames: Vector[String], defaults: Vector[Any],
-    outPos: Array[Int], idxPos: Array[Int], clip: GraftClip,
-    /** store-relative segment path served as the `_file` metadata
-      * column (joins against `.segments`.files) */
-    fileLabel: String = "")
-    extends InputPartition
-
-final case class GraftInlinePartition(rows: Vector[Vector[Any]],
-    srcCols: Vector[String], readNames: Vector[String],
-    dtypeNames: Vector[String], defaults: Vector[Any],
-    outPos: Array[Int], idxPos: Array[Int], clip: GraftClip)
-    extends InputPartition
-
-/** one pre-computed row: the manifest-answered aggregate (values are
-  * already in InternalRow representation) */
-final case class GraftAggPartition(values: Vector[Any])
-    extends InputPartition
-
-class GraftReaderFactory(conf: SegmentWriter.SerConf)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = p match {
-    case fp: GraftFilePartition => new GraftFileReader(fp, conf)
-    case ip: GraftInlinePartition => new GraftInlineReader(ip)
-    case ap: GraftAggPartition =>
-      new PartitionReader[InternalRow] {
-        private var served = false
-        override def next(): Boolean =
-          if (served) false else { served = true; true }
-        override def get(): InternalRow =
-          new GenericInternalRow(ap.values.toArray)
-        override def close(): Unit = ()
-      }
-  }
-}
-
-private object GraftRead {
-  def dtypeOf(name: String): GType =
-    GType.all.find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(s"bad dtype $name"))
-
-  /** Page encodings Spark 4.1's vectorized parquet reader cannot decode
-    * (its value-reader switch covers PLAIN, RLE and DELTA_* only, see
-    * VectorizedColumnReader.getValuesReader): `<codec>+bss` segments
-    * carry BYTE_STREAM_SPLIT float chunks. */
-  val vectorizedUnsupported: Set[Encoding] = Set(Encoding.BYTE_STREAM_SPLIT)
-
-  /** Open one segment file for decoding. The file is stat'ed once
-    * (resurrecting a gc-buried copy) and its footer parsed once; the
-    * decode tier follows from the requested column chunks' encodings:
-    * [[GraftColumnarScan]] when any of them uses an encoding in
-    * [[vectorizedUnsupported]], Spark's VectorizedParquetRecordReader
-    * otherwise. The chosen reader takes over the footer and the open
-    * stream; the result names its tier as the metric that counts it
-    * ([[SegmentBatches.tier]]). */
-  def open(uri: String, physNames: Seq[String], dtypes: Array[GType],
-      conf: Configuration): SegmentBatches = {
-    val status = graft.core.Store.statOrResurrect(uri, conf)
-    val input = HadoopInputFile.fromStatus(status, conf)
-    val options = HadoopReadOptions.builder(conf, status.getPath).build()
-    val stream = input.newStream()
-    var opened: SegmentBatches = null
-    try {
-      val footer = ParquetFileReader.readFooter(input, options, stream)
-      val wanted = physNames.toSet
-      val columnar = footer.getBlocks.asScala.exists(_.getColumns.asScala
-        .exists(c => wanted(c.getPath.toDotString) &&
-          c.getEncodings.asScala.exists(vectorizedUnsupported)))
-      opened =
-        if (columnar)
-          new GraftColumnarScan(
-            new ParquetFileReader(input, footer, options, stream),
-            physNames, dtypes)
-        else
-          vectorized(status, input, stream, footer, physNames, dtypes,
-            conf)
-      opened
-    } finally if (opened == null) stream.close()
-  }
-
-  private def vectorized(status: org.apache.hadoop.fs.FileStatus,
-      input: HadoopInputFile, stream: SeekableInputStream,
-      footer: ParquetMetadata, physNames: Seq[String],
-      dtypes: Array[GType], conf: Configuration): SegmentBatches = {
-    val c = new Configuration(conf)
-    val reqStruct = StructType(physNames.zip(dtypes).map { case (n, dt) =>
-      org.apache.spark.sql.types.StructField(n, dt.sparkType,
-        nullable = true) })
-    // the conf keys ParquetReadSupport/SpecificParquetRecordReaderBase
-    // consult when initialized from an InputSplit
-    c.set("org.apache.spark.sql.parquet.row.requested_schema",
-      reqStruct.json)
-    c.set("parquet.read.support.class",
-      "org.apache.spark.sql.execution.datasources.parquet" +
-        ".ParquetReadSupport")
-    c.setBoolean("spark.sql.parquet.binaryAsString", false)
-    c.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
-    c.setBoolean("spark.sql.caseSensitive", false)
-    // NOTE: Spark's SpecificParquetRecordReaderBase casts to the
-    // OLD mapred FileSplit, not the mapreduce one
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      status.getPath, 0, status.getLen, Array.empty[String])
-    val ctx = new org.apache.hadoop.mapreduce.task
-      .TaskAttemptContextImpl(c,
-        new org.apache.hadoop.mapreduce.TaskAttemptID())
-    // engine files store proleptic INT64 micros (CORRECTED); the
-    // INT96 branch only matters for pre-round-8 files of modern
-    // timestamps, where CORRECTED and LEGACY agree
-    val r = new VectorizedParquetRecordReader(null, "CORRECTED", "UTC",
-      "CORRECTED", "UTC", false, 4096)
-    r.initialize(split, ctx, Some(input), Some(stream), Some(footer))
-    r.initBatch(StructType(Nil), InternalRow.empty)
-    new SegmentBatches(GraftMetrics.FilesVectorized) {
-      def nextBatch(): ColumnarBatch =
-        if (r.nextBatch()) r.resultBatch() else null
-      def close(): Unit = r.close()
-    }
-  }
-
-  /** kernel scalar -> InternalRow slot value for a dtype */
-  def kernelToInternal(dt: GType, v: Any): Any =
-    if (v == null) null
-    else dt match {
-      case GType.DateT => v.asInstanceOf[Long].toInt
-      case GType.StrT  => UTF8String.fromString(v.asInstanceOf[String])
-      case _           => v
-    }
-
-  /** InternalRow slot value -> kernel scalar */
-  def internalToKernel(dt: GType, v: Any): Any = dt match {
-    case GType.DateT => v.asInstanceOf[Int].toLong
-    case GType.StrT  => v.toString
-    case _           => v
-  }
-
-  /** does the row's index key fall inside the clip bounds? */
-  def inClip(gs: Array[GType], key: Array[Any], clip: GraftClip): Boolean = {
-    if (clip == null) return true
-    def cmp(k: IndexKey): Int = {
-      val n = math.min(key.length, k.values.length)
-      var i = 0
-      while (i < n) {
-        val c = gs(i).cmp(key(i), k.values(i))
-        if (c != 0) return c
-        i += 1
-      }
-      0
-    }
-    val l = cmp(clip.start)
-    val r = cmp(clip.stop)
-    (l > 0 || (l == 0 && clip.closed.left)) &&
-      (r < 0 || (r == 0 && clip.closed.right))
-  }
-
-  /** assemble the output row; outPos sentinel -1 = the partition's
-    * `_file` constant (null for manifest-inline partitions) */
-  def project(slots: Array[Any], outPos: Array[Int],
-      fileConst: UTF8String): InternalRow = {
-    if (outPos.length == slots.length &&
-        outPos.indices.forall(i => outPos(i) == i))
-      new GenericInternalRow(slots.clone())
-    else {
-      val out = new Array[Any](outPos.length)
-      var i = 0
-      while (i < outPos.length) {
-        val pos = outPos(i)
-        out(i) = if (pos == -1) fileConst else slots(pos)
-        i += 1
-      }
-      new GenericInternalRow(out)
-    }
-  }
-}
-
-/** A segment file opened by [[GraftRead.open]]: its rows as column
-  * batches in the requested (physNames) order. A batch stays valid
-  * until the next call (the DSv2 buffer-reuse contract). `tier` is the
-  * [[GraftMetrics]] name counting the files its decode tier opened. */
-private abstract class SegmentBatches(val tier: String) {
-  /** the next batch, or null at the end of the file */
-  def nextBatch(): ColumnarBatch
-  def close(): Unit
-}
-
-/** Column-at-a-time decode over parquet-mr's page machinery, for files
-  * Spark's vectorized reader cannot decode (BYTE_STREAM_SPLIT pages
-  * from the `<codec>+bss` storage mode; [[GraftRead.open]] picks it
-  * from the footer). parquet-mr's
-  * [[org.apache.parquet.column.ColumnReader]] dispatches every page
-  * encoding (its ByteStreamSplitValuesReader included), and filling
-  * one [[OnHeapColumnVector]] per column in a tight typed loop keeps
-  * the batch shape: no record assembly, no per-row converter
-  * callbacks, no slot boxing. Requested columns absent from the file
-  * (pre-clone segments) serve null vectors. */
-private final class GraftColumnarScan(reader: ParquetFileReader,
-    physNames: Seq[String], dtypes: Array[GType])
-    extends SegmentBatches(GraftMetrics.FilesColumnar) {
-  import org.apache.parquet.column.impl.ColumnReadStoreImpl
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-
-  private val fileMeta = reader.getFooter.getFileMetaData
-  private val fileSchema = fileMeta.getSchema
-  private val byName = fileSchema.getFields.asScala
-    .map(f => f.getName -> f).toMap
-  // projected schema: requested columns present in the file, in
-  // request order
-  private val presentIdx: Array[Int] = {
-    var k = -1
-    physNames.map(n =>
-      if (byName.contains(n)) { k += 1; k } else -1).toArray
-  }
-  private val proj: MessageType = {
-    val b = Types.buildMessage()
-    physNames.foreach(n => byName.get(n).foreach(b.addField))
-    b.named(fileSchema.getName)
-  }
-  if (proj.getFieldCount > 0) reader.setRequestedSchema(proj)
-  private val descs = proj.getColumns.asScala.toArray
-  private val sparkTypes = dtypes.map(_.sparkType)
-  // ColumnReaderImpl requires a converter tree even when values are
-  // pulled via the typed getters; dictionary support stays off so
-  // dictionary-encoded pages materialize per value
-  private val dummyConverter = new GroupConverter {
-    override def getConverter(i: Int): Converter =
-      new PrimitiveConverter {}
-    override def start(): Unit = ()
-    override def end(): Unit = ()
-  }
-  // no requested column in the file (a zero-column request, or a
-  // pre-clone segment): the footer's row counts size all-null batches
-  // of physNames.length columns, with no page IO at all
-  private val rowCounts: Iterator[Long] =
-    reader.getRowGroups.asScala.iterator.map(_.getRowCount)
-
-  private var batch: ColumnarBatch = null
-  private var vecs: Array[OnHeapColumnVector] = null
-  private var vecCap: Int = 0
-
-  def nextBatch(): ColumnarBatch = {
-    val pages = if (descs.isEmpty) null else reader.readNextRowGroup()
-    val n =
-      if (pages != null) pages.getRowCount
-      else if (descs.isEmpty && rowCounts.hasNext) rowCounts.next()
-      else return null
-    require(n <= Int.MaxValue, s"row group of $n rows")
-    val rows = n.toInt
-    ensureBatch(rows)
-    val crs = if (pages == null) null
-      else new ColumnReadStoreImpl(pages, dummyConverter, proj,
-        fileMeta.getCreatedBy)
-    var i = 0
-    while (i < physNames.length) {
-      val v = vecs(i)
-      v.reset()
-      if (presentIdx(i) < 0) v.putNulls(0, rows)
-      else fill(v, crs, descs(presentIdx(i)), dtypes(i), rows)
-      i += 1
-    }
-    batch.setNumRows(rows)
-    batch
-  }
-
-  /** REUSE vectors across row groups (downstream consumes each batch
-    * before the next load): a fresh-allocation-per-group scan churned
-    * ~8 MB of vector garbage per 500k-row group and showed up as GC
-    * tax inside the full bench suite. */
-  private def ensureBatch(rows: Int): Unit =
-    if (vecs == null || rows > vecCap) {
-      if (batch != null) batch.close()
-      vecs = Array.tabulate(physNames.length)(i =>
-        new OnHeapColumnVector(rows, sparkTypes(i)))
-      vecCap = rows
-      batch = new ColumnarBatch(
-        vecs.asInstanceOf[Array[org.apache.spark.sql.vectorized
-          .ColumnVector]], rows)
-    }
-
-  private def fill(v: OnHeapColumnVector,
-      crs: ColumnReadStoreImpl,
-      cd: org.apache.parquet.column.ColumnDescriptor, dt: GType,
-      rows: Int): Unit = {
-    val cr = crs.getColumnReader(cd)
-    val maxDef = cd.getMaxDefinitionLevel
-    var r = 0
-    while (r < rows) {
-      if (cr.getCurrentDefinitionLevel < maxDef) v.putNull(r)
-      else dt match {
-        case GType.FloatT => v.putDouble(r, cr.getDouble)
-        case GType.IntT | GType.TimestampT => v.putLong(r, cr.getLong)
-        case GType.DateT => v.putInt(r, cr.getInteger)
-        case GType.StrT =>
-          val b = cr.getBinary.getBytes
-          v.putByteArray(r, b, 0, b.length)
-      }
-      cr.consume()
-      r += 1
-    }
-  }
-
-  def close(): Unit = {
-    if (batch != null) batch.close()
-    reader.close()
-  }
-}
-
-/** Columnar partition reader: decoded batches flow straight into
-  * Spark's codegen'd ColumnarToRow, so the per-row DSv2 iterator tax
-  * disappears. Only planned for partitions with no
-  * clip/defaults/projection work ([[GraftPlanning.columnarEligible]]). */
-private final class GraftColumnarFileReader(p: GraftFilePartition,
-    conf: SegmentWriter.SerConf) extends PartitionReader[ColumnarBatch] {
-  private val file = GraftRead.open(p.uri, p.physNames,
-    p.dtypeNames.map(GraftRead.dtypeOf).toArray, conf.value)
-  private val metrics = Array(GraftMetrics.value(file.tier, 1))
-  private var cur: ColumnarBatch = _
-  override def next(): Boolean = { cur = file.nextBatch(); cur != null }
-  override def get(): ColumnarBatch = cur
-  override def currentMetricsValues() = metrics
-  override def close(): Unit = file.close()
-}
-
-private final class GraftColumnarReaderFactory(
-    conf: SegmentWriter.SerConf) extends PartitionReaderFactory {
-  override def supportColumnarReads(p: InputPartition): Boolean = true
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] =
-    throw new IllegalStateException(
-      "graft columnar factory: row reads not planned here")
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[ColumnarBatch] =
-    new GraftColumnarFileReader(p.asInstanceOf[GraftFilePartition], conf)
-}
-
-/** Row partition reader for one segment file: the batches of
-  * [[GraftRead.open]] iterated as row views. Rows pass through the
-  * shared clip/defaults/projection step only when the partition needs
-  * one; the common unclipped, no-defaults, no-extra-columns case emits
-  * the batch's row views untouched. Missing columns (pre-clone files)
-  * arrive as nulls, which the default injection fills. */
-class GraftFileReader(p: GraftFilePartition, conf: SegmentWriter.SerConf)
-    extends PartitionReader[InternalRow] {
-  import GraftRead._
-
-  private val fileConst: UTF8String =
-    if (p.fileLabel.isEmpty) null else UTF8String.fromString(p.fileLabel)
-  private val dtypes = p.dtypeNames.map(dtypeOf).toArray
-  private val idxDts = p.idxPos.map(i => dtypes(i))
-  private val slots = new Array[Any](p.readNames.length)
-  private val kernelDefaults: Array[Any] =
-    p.defaults.toArray
-  private val hasDefaults = kernelDefaults.exists(_ != null)
-  private val identityOut = p.clip == null && !hasDefaults &&
-    p.outPos.length == p.readNames.length &&
-    p.outPos.indices.forall(i => p.outPos(i) == i)
-
-  private val file = open(p.uri, p.physNames, dtypes, conf.value)
-  // one file per reader, so its count is final at open: Spark polls
-  // this every few rows and gets the same preallocated array back
-  private val metrics = Array(GraftMetrics.value(file.tier, 1))
-  private var rows: java.util.Iterator[InternalRow] =
-    java.util.Collections.emptyIterator()
-  private var current: InternalRow = _
-
-  /** defaults + clip + projection over a row in readNames layout */
-  private def finish(): Boolean = {
-    var i = 0
-    while (i < slots.length) {
-      if (slots(i) == null && kernelDefaults(i) != null)
-        slots(i) = kernelToInternal(dtypes(i), kernelDefaults(i))
-      i += 1
-    }
-    if (p.clip != null) {
-      val key = p.idxPos.map(j => internalToKernel(dtypes(j), slots(j)))
-      if (!inClip(idxDts, key, p.clip)) return false
-    }
-    current = project(slots, p.outPos, fileConst)
-    true
-  }
-
-  private def fillSlots(row: InternalRow): Unit = {
-    var i = 0
-    while (i < slots.length) {
-      slots(i) =
-        if (row.isNullAt(i)) null
-        else dtypes(i) match {
-          case GType.TimestampT | GType.IntT => row.getLong(i)
-          case GType.DateT  => row.getInt(i)
-          case GType.FloatT => row.getDouble(i)
-          case GType.StrT   => row.getUTF8String(i)
-        }
-      i += 1
-    }
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      while (!rows.hasNext) {
-        val b = file.nextBatch()
-        if (b == null) return false
-        rows = b.rowIterator()
-      }
-      val row = rows.next()
-      if (identityOut) { current = row; return true }
-      fillSlots(row)
-      if (finish()) return true
-    }
-    false
-  }
-  override def get(): InternalRow = current
-  override def currentMetricsValues() = metrics
-  override def close(): Unit = file.close()
-}
-
-class GraftInlineReader(p: GraftInlinePartition)
-    extends PartitionReader[InternalRow] {
-  import GraftRead._
-
-  private val dtypes = p.dtypeNames.map(dtypeOf).toArray
-  private val idxDts = p.idxPos.map(i => dtypes(i))
-  private val srcIdx: Array[Int] =
-    p.readNames.map(n => p.srcCols.indexOf(n)).toArray
-  private val it = p.rows.iterator
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (it.hasNext) {
-      val v = it.next()
-      val slots = new Array[Any](p.readNames.length)
-      var i = 0
-      while (i < slots.length) {
-        val kernel =
-          if (srcIdx(i) >= 0) v(srcIdx(i)) else p.defaults(i)
-        slots(i) = kernelToInternal(dtypes(i), kernel)
-        i += 1
-      }
-      val key = p.idxPos.map(j => internalToKernel(dtypes(j), slots(j)))
-      if (inClip(idxDts, key, p.clip)) {
-        // inline rows have no backing file: `_file` projects null
-        current = project(slots, p.outPos, null)
-        return true
-      }
-    }
-    false
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}

@@ -23,9 +23,13 @@ object GraftMetrics {
   final val AggFromManifest = "aggFromManifest"
   final val GroupsStatic = "groupsStatic"
   final val GroupsTinySkip = "groupsTinySkip"
-  // scan, task side: segment files opened per decode tier
+  // scan, task side: segment files opened per decode tier, rows
+  // decoded and served after the slice, head-column pages skipped
   final val FilesVectorized = "filesVectorized"
   final val FilesColumnar = "filesColumnar"
+  final val RowsDecoded = "rowsDecoded"
+  final val RowsServed = "rowsServed"
+  final val PagesSkipped = "pagesSkipped"
   // write, task side
   final val FilesWritten = "filesWritten"
 
@@ -49,11 +53,18 @@ object GraftMetrics {
     GroupsTinySkip -> "group filter skipped (tiny cover)",
     FilesVectorized -> "files decoded vectorized",
     FilesColumnar -> "files decoded columnar",
+    RowsDecoded -> "rows decoded",
+    RowsServed -> "rows served",
+    PagesSkipped -> "pages skipped by statistics",
     FilesWritten -> "files written"
   ).map { case (n, d) => n -> new GraftSum(n, d) }.toMap
 
   /** the declarations for a scan's or write's `supportedCustomMetrics` */
   def declare(names: String*): Array[CustomMetric] = names.map(all).toArray
+
+  /** the task-side metrics every graft read reports */
+  val readMetrics: Seq[String] = Seq(FilesVectorized, FilesColumnar,
+    RowsDecoded, RowsServed, PagesSkipped)
 
   /** a reported value, read each time Spark asks */
   def value(n: String, v: => Long): CustomTaskMetric = new CustomTaskMetric {

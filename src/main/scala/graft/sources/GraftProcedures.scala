@@ -294,8 +294,8 @@ private final class Push(rootUri: String) extends ProcBase(rootUri) {
 
 /** Backfill per-segment VALUE-column (min, max) statistics for
   * manifest rows written before stats existed (or imported): ONE
-  * Spark job reads every stats-less segment file grouped by
-  * `input_file_name`, aggregates each value column's min/max (NaN
+  * Spark job reads every stats-less segment file grouped by its
+  * `_file` provenance, aggregates each value column's min/max (NaN
   * poisons a float column, exactly like the write-time collector),
   * and ONE metadata commit attaches the stats to the manifest rows —
   * after which value-predicate data skipping covers the old data
@@ -313,7 +313,6 @@ private final class Analyze(rootUri: String) extends ProcBase(rootUri) {
     import org.apache.spark.sql.functions._
     val label = in.getUTF8String(0).toString
     val c = collection(label)
-    val store = c.repo.store
     val leaf = c.changelog.leaf()
     val m = leaf.map(c.decodeCached)
       .getOrElse(graft.core.Manifest.empty(c.schema))
@@ -322,53 +321,31 @@ private final class Analyze(rootUri: String) extends ProcBase(rootUri) {
     if (missing.isEmpty) return Seq(str(label), 0L)
     val valCols = c.schema.cols.filterNot(_.idx)
     val physOf = valCols.map(cd => cd.name -> c.physOf(cd.name)).toMap
-    val readStruct = StructType(valCols.map(cd => StructField(
-      physOf(cd.name), cd.dtype.sparkType, nullable = true)))
-    val files = missing.flatMap(_.files).distinct
-    def aggsOver(nameOf: graft.core.ColDef => String) =
-      valCols.flatMap { cd =>
-        val p = physOf(cd.name)
-        val n = nameOf(cd)
-        val nan =
-          if (cd.dtype == graft.core.GType.FloatT)
-            max(isnan(col(n))).as(s"__nan_$p")
-          else lit(false).as(s"__nan_$p")
-        Seq(min(col(n)).as(s"__mn_$p"), max(col(n)).as(s"__mx_$p"), nan)
-      }
-    val perFile =
-      if (c.bssMode) {
-        // engine-reader scan: Spark's builtin parquet source cannot
-        // decode this collection's BYTE_STREAM_SPLIT pages (found by
-        // the zstd+bss full-oracle pass, q193). One partition per
-        // file, `_file` provenance as the group key, logical column
-        // names in the scan output.
-        val segs = missing.map(r =>
-          graft.core.SegmentRead(r, r.start, r.stop, r.closed))
-        val parts = segs.flatMap(sr => GraftPlanning.partitionsFor(
-          new graft.api.Series(c, sr.meta.label), c.schema,
-          GraftPlanning.FileCol +: valCols.map(_.name), sr, null))
-        val struct = StructType(
-          StructField(GraftPlanning.FileCol, StringType, nullable = true) +:
-            valCols.map(cd => StructField(cd.name, cd.dtype.sparkType,
-              nullable = true)))
-        val aggs = aggsOver(_.name)
-        GraftPlanning.internalScan(spark, parts, struct)
-          .groupBy(col(GraftPlanning.FileCol).as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-      } else {
-        val aggs = aggsOver(cd => physOf(cd.name))
-        spark.read.schema(readStruct)
-          .parquet(files.map(store.uri): _*)
-          .groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-      }
-    // full URI -> store-relative path (match by longest suffix)
+    val aggs = valCols.flatMap { cd =>
+      val p = physOf(cd.name)
+      val nan =
+        if (cd.dtype == graft.core.GType.FloatT)
+          max(isnan(col(cd.name))).as(s"__nan_$p")
+        else lit(false).as(s"__nan_$p")
+      Seq(min(col(cd.name)).as(s"__mn_$p"), max(col(cd.name)).as(s"__mx_$p"),
+        nan)
+    }
+    // the connector's readers (every storage mode, BSS pages included),
+    // one partition per file, `_file` provenance as the group key
+    val parts = missing.flatMap(r => GraftPlanning.partitionsFor(
+      new graft.api.Series(c, r.label), c.schema,
+      GraftPlanning.FileCol +: valCols.map(_.name),
+      graft.core.SegmentRead(r, r.start, r.stop, r.closed), null))
+    val struct = StructType(
+      StructField(GraftPlanning.FileCol, StringType, nullable = true) +:
+        valCols.map(cd => StructField(cd.name, cd.dtype.sparkType,
+          nullable = true)))
+    val perFile = GraftPlanning.internalScan(spark, parts, struct)
+      .groupBy(col(GraftPlanning.FileCol).as("__f"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
     val byRel: Map[String, org.apache.spark.sql.Row] =
-      files.flatMap { rel =>
-        perFile.find(_.getString(0).endsWith(rel)).map(rel -> _)
-      }.toMap
+      perFile.map(r => r.getString(0) -> r).toMap
     def statsOf(fs: Seq[String]): Map[String, (Any, Any)] =
       valCols.flatMap { cd =>
         val p = physOf(cd.name)

@@ -54,6 +54,26 @@ class GraftRowLevelOperation(table: GraftTable,
   @volatile private[sources] var replacedRanges
       : Seq[(IndexKey, IndexKey, Closed)] = null
 
+  /** the copy-on-write scan's group choice: (static and exact, runtime
+    * filter skipped on a tiny cover) */
+  @volatile private[sources] var groupChoice: (Boolean, Boolean) =
+    (false, false)
+
+  /** The group metrics, reported by the write: a statement whose scan
+    * plans no group loses the scan node to AQE's empty-relation
+    * pruning, and its metrics with it, while the write always runs.
+    * "kept" counts the groups left by either pruning step (static index
+    * bound, runtime matched-value filter); "total" is the table's
+    * segment count. */
+  private[sources] def groupMetrics
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    import GraftMetrics._
+    Array(value(SegmentsTotal, tableSegments.length),
+      value(SegmentsKept, Option(replacedRanges).fold(0L)(_.length.toLong)),
+      value(GroupsStatic, if (groupChoice._1) 1 else 0),
+      value(GroupsTinySkip, if (groupChoice._2) 1 else 0))
+  }
+
   /** ONE manifest snapshot per OPERATION: the scan's group planning
     * (bounded AND unbounded), the metric totals, the write's
     * roll-window computation and the sort-width decision all query
@@ -205,22 +225,19 @@ class GraftCowScan(table: GraftTable, op: GraftRowLevelOperation,
     * to the unbounded list by manifest row keeps whole groups; a
     * window whose meta is shared by another visible window over-keeps
     * that sibling — a superset, safe for copy-on-write. */
-  private lazy val (allSegments, tableSegmentCount)
-      : (Seq[SegmentRead], Int) = {
+  private lazy val allSegments: Seq[SegmentRead] = {
     val full = op.tableSegments // the operation's one snapshot
-    val kept =
-      if (start == null && stop == null) full
-      else {
-        // bounded query against the SAME snapshot manifest: reading
-        // the live changelog here would let a concurrent commit land
-        // between the two reads — its new metas would match nothing
-        // in `full` and covered groups would silently drop out
-        val hit = resolvedSeries
-          .segments(start, stop, None, closed, from = op.tableManifest)
-          .filter(_.meta.hasData).map(_.meta).toSet
-        full.filter(s => hit.contains(s.meta))
-      }
-    (kept, full.length)
+    if (start == null && stop == null) full
+    else {
+      // bounded query against the SAME snapshot manifest: reading
+      // the live changelog here would let a concurrent commit land
+      // between the two reads — its new metas would match nothing
+      // in `full` and covered groups would silently drop out
+      val hit = resolvedSeries
+        .segments(start, stop, None, closed, from = op.tableManifest)
+        .filter(_.meta.hasData).map(_.meta).toSet
+      full.filter(s => hit.contains(s.meta))
+    }
   }
 
   /** Post-static-pruning statistics from the MANIFEST (no file IO),
@@ -267,25 +284,19 @@ class GraftCowScan(table: GraftTable, op: GraftRowLevelOperation,
   override def createReaderFactory(): PartitionReaderFactory =
     GraftPlanning.readerFactory()
 
+  op.groupChoice = (staticExact, skipRuntimeFilter && !staticExact)
+
+  /** the group choice itself is the write's ([[GraftRowLevelOperation
+    * .groupMetrics]]); the scan reports what the runtime filter kept */
   override def supportedCustomMetrics() = {
     import GraftMetrics._
-    declare(Seq(SegmentsTotal, SegmentsKept, GroupsStatic, GroupsTinySkip,
-      FilesVectorized, FilesColumnar) ++
+    declare(readMetrics ++
       Option.when(!skipRuntimeFilter)(SegmentsRuntimeKept): _*)
   }
 
-  /** Called by Spark once the groups are planned: "kept" counts the
-    * groups left by either pruning step (static index bound, runtime
-    * matched-value filter); "total" is the table's segment count. */
-  override def reportDriverMetrics() = {
-    import GraftMetrics._
-    val kept = op.replacedRanges.length
-    (Seq(value(SegmentsTotal, tableSegmentCount),
-      value(SegmentsKept, kept),
-      value(GroupsStatic, if (staticExact) 1 else 0),
-      value(GroupsTinySkip, if (skipRuntimeFilter && !staticExact) 1 else 0)) ++
-      runtimeKeep.map(_ => value(SegmentsRuntimeKept, kept))).toArray
-  }
+  override def reportDriverMetrics() =
+    runtimeKeep.map(_ => GraftMetrics.value(
+      GraftMetrics.SegmentsRuntimeKept, op.replacedRanges.length)).toArray
 }
 
 /** The copy-on-write write: the engine's one-job staged write (same
@@ -339,8 +350,13 @@ class GraftCowWrite(table: GraftTable, op: GraftRowLevelOperation)
     if (totalRows <= table.series.collection.pageLen) 1 else 0
   }
 
-  override def supportedCustomMetrics() =
-    GraftMetrics.declare(GraftMetrics.FilesWritten)
+  override def supportedCustomMetrics() = {
+    import GraftMetrics._
+    declare(FilesWritten, SegmentsTotal, SegmentsKept, GroupsStatic,
+      GroupsTinySkip)
+  }
+
+  override def reportDriverMetrics() = op.groupMetrics
 
   override def toBatch: BatchWrite =
     new GraftCowBatchWrite(table, table.series.collection.taskParams(), op)

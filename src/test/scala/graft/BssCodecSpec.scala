@@ -96,30 +96,22 @@ class BssCodecSpec extends AnyFunSuite {
     assert(m2(FilesVectorized) > 0,
       "plain files must stay on the vectorized path")
 
-    // 4. Series.frame(): the sticky registry hint routes the API scan
-    //    through the engine reader (Spark's builtin parquet source
-    //    would throw on the BSS pages) — same values, and a FRESH
-    //    handle picks the hint up from the registry
+    // 4. Series.frame() plans the connector's scan, whose readers pick
+    //    the tier per file — same values, from a FRESH handle too
     val viaFrame = clct.series("bss").frame()
       .agg(org.apache.spark.sql.functions.sum($"v")).collect()(0)
       .getDouble(0)
     assert(math.abs(viaFrame - want) < 1e-6, s"$viaFrame vs $want")
     val fresh = new Repo(root, spark).collection("c").get
-    assert(fresh.bssMode,
-      "a fresh handle must see the persisted registry hint")
     assert(fresh.series("bss").frame().count() == 50000L)
     // clipped range read through the engine path (overlay truncation)
     assert(clct.series("bss").frame(100L, 200L).count() == 100L)
 
-    // 5. clones SHARE the source's segment files, so the bss hint
-    //    must travel: without it the clone's reads routed through
-    //    the vectorized reader and died on the first BSS page
-    //    (found by the zstd+bss full-oracle pass, q59)
-    val cl = clct.cloneTo("c2", rename = Map("v" -> "w"))
-    assert(cl.bssMode, "clone must inherit the bss routing hint")
+    // 5. clones SHARE the source's segment files: a clone's reads
+    //    meet the BSS pages too (found by the zstd+bss full-oracle
+    //    pass, q59)
+    clct.cloneTo("c2", rename = Map("v" -> "w"))
     val freshClone = new Repo(root, spark).collection("c2").get
-    assert(freshClone.bssMode,
-      "a fresh handle on the clone must see the persisted hint")
     val viaClone = freshClone.series("bss").frame()
       .agg(org.apache.spark.sql.functions.sum($"w")).collect()(0)
       .getDouble(0)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Physical-plan quality gates: the series read path must keep its
-  * range predicate pushed into the parquet scan and prune unselected
+  * range bounds pushed into the graft scan and prune unselected
   * columns — the properties that make manifest-pruned reads scale.
   */
 class PlanSpec extends AnyFunSuite {
@@ -27,13 +27,15 @@ class PlanSpec extends AnyFunSuite {
       closed = Closed.Left, select = Seq("ts", "value"))
     val plan = df.queryExecution.executedPlan.toString
 
-    assert(plan.contains("PushedFilters"), plan.take(2000))
-    assert(plan.contains("GreaterThanOrEqual(ts") ||
-      plan.contains("GreaterThanOrEqual(`ts`"), plan.take(2000))
-    // column pruning: unselected columns absent from the read schema
-    val readSchema = "ReadSchema: [^\\n]*".r.findFirstIn(plan).getOrElse("")
-    assert(readSchema.contains("ts") && readSchema.contains("value"))
-    assert(!readSchema.contains("event_type"), readSchema)
+    // the bounds are pushed into the graft scan (its clips), so no
+    // residual Filter runs above it
+    val scan = "BatchScan [^\\n]*".r.findFirstIn(plan).getOrElse("")
+    assert(scan.contains("bounds=(") && scan.contains("closed=Left"),
+      plan.take(2000))
+    assert("(^|[\\s)])Filter ".r.findFirstIn(plan).isEmpty, plan.take(2000))
+    // column pruning: unselected columns absent from the scan output
+    assert(scan.contains("ts#") && scan.contains("value#"), scan)
+    assert(!scan.contains("event_type"), scan)
   }
 
   test("flagship join aggregates broadcast the dimension side") {
@@ -54,8 +56,9 @@ class PlanSpec extends AnyFunSuite {
     (0 until 5).foreach(i => s.write(TestSpark.frame(
       Seq(100L * i, 100L * i + 1), Seq(i * 1.0, i * 1.0 + 0.5))))
     val plan = s.frame().queryExecution.executedPlan.toString
-    val scans = "Scan parquet".r.findAllIn(plan).length
+    val scans = "BatchScan".r.findAllIn(plan).length
     assert(scans == 1, s"expected 1 grouped scan, got $scans")
+    assert(plan.contains("ColumnarToRow"), plan)
     assert(s.frame().count() == 10L)
   }
 
@@ -73,7 +76,7 @@ class PlanSpec extends AnyFunSuite {
     // segment scan takes its file statuses from graft instead
     val (df, jobs, _) = TestSpark.work(s.frame())
     assert(jobs == 0, s"$jobs jobs while building the frame")
-    assert("Scan parquet".r.findAllIn(
+    assert("BatchScan".r.findAllIn(
       df.queryExecution.executedPlan.toString).length == 1)
     assert(df.orderBy("timestamp").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
@@ -81,7 +84,7 @@ class PlanSpec extends AnyFunSuite {
         (10L * i + 1, i + 0.5))))
   }
 
-  test("tail compiles to TakeOrdered (no full sort)") {
+  test("tail plans an exact slice: no sort, no exchange") {
     val root = Files.createTempDirectory("graft-plan2").toString
     val repo = new Repo(root, spark)
     val schema = GSchema("timestamp" -> "int*", "value" -> "float")
@@ -89,7 +92,32 @@ class PlanSpec extends AnyFunSuite {
     s.write(TestSpark.frame((1L to 100L).toSeq,
       (1 to 100).map(_ * 1.0)))
     val plan = s.tail(5).queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"), plan.take(1500))
+    assert(!plan.contains("Sort") && !plan.contains("Exchange") &&
+      !plan.contains("TakeOrdered"), plan.take(1500))
+    assert(s.tail(5).collect().map(_.getLong(0)).toSeq ==
+      (96L to 100L))
+  }
+
+  test("a page plans one ordered task: no sort, no range exchange") {
+    val root = Files.createTempDirectory("graft-plan6").toString
+    val repo = new Repo(root, spark)
+    val schema = GSchema("timestamp" -> "int*", "value" -> "float")
+    val clct = repo.createCollection(schema, "c")
+    clct.embedMaxSize = 0L
+    val s = clct.series("_")
+    (0 until 4).foreach(i => s.write(TestSpark.frame(
+      (100L * i until 100L * i + 50).toSeq,
+      (0 until 50).map(j => i + j * 0.01))))
+    // an overlay splits the second segment: a page crosses the split
+    s.write(TestSpark.frame(Seq(120L), Seq(-1.0)))
+    val page = s.paginate(step = 60, start = 20L).next()
+    page.collect()
+    val plan = page.queryExecution.executedPlan.toString
+    assert(!plan.contains("Sort") && !plan.contains("Exchange"),
+      plan.take(1500))
+    assert(page.rdd.getNumPartitions == 1)
+    assert(page.collect().map(_.getLong(0)).toSeq ==
+      ((20L until 50L) ++ (100L until 130L)))
   }
 
   test("tail and limit scan only the manifest segments they need") {
@@ -103,13 +131,19 @@ class PlanSpec extends AnyFunSuite {
       Seq(100L * i, 100L * i + 1, 100L * i + 2),
       Seq(i * 1.0, i + 0.1, i + 0.2))))
     // tail(2) fits in the last segment -> exactly one scan
+    def files(df: org.apache.spark.sql.DataFrame): Long = {
+      val (_, m) = TestSpark.graftMetrics(df.collect())
+      m("filesVectorized") + m("filesColumnar")
+    }
     val tailPlan = s.tail(2).queryExecution.executedPlan.toString
-    assert("Scan parquet".r.findAllIn(tailPlan).length == 1, tailPlan.take(800))
+    assert("BatchScan".r.findAllIn(tailPlan).length == 1, tailPlan.take(800))
+    assert(files(s.tail(2)) == 1)
     assert(s.tail(2).collect().map(_.getLong(0)).toSeq == Seq(501L, 502L))
     // limit(3) covers the first segment only
     val limPlan = s.frame(limit = Some(3L))
       .queryExecution.executedPlan.toString
-    assert("Scan parquet".r.findAllIn(limPlan).length == 1, limPlan.take(800))
+    assert("BatchScan".r.findAllIn(limPlan).length == 1, limPlan.take(800))
+    assert(files(s.frame(limit = Some(3L))) == 1)
     assert(s.frame(limit = Some(3L)).collect().map(_.getLong(0)).toSeq ==
       Seq(0L, 1L, 2L))
   }
